@@ -281,8 +281,8 @@ def dsir_weights(
     # also ran one action, but its 1-row build side went through a
     # broadcast exchange whose builder thread raced the stream side
     # into the not-yet-materialized persisted subtrees — the same
-    # failure mode as the broadcast-scalar fold scripts/r13_ab_dsir.py
-    # falsified, and the driver's clean r14 baseline flagged it
+    # failure mode as the broadcast-scalar fold falsified in commit
+    # ce6750b, and the clean r14 baseline run flagged it
     # (1.013 → 1.612 s cold).  Union children are independent stages of
     # one job: they overlap across cores with no broadcast thread and
     # no shared subtree (the t-side never touches doc_b).  Cold

@@ -5,11 +5,21 @@ Columnar parquet replaces the reference's single-file row-store SQLite
 full pushdown freedom: filters and projections written downstream reach
 the scan (PushedFilters / ReadSchema), which is the 100 TB-scale
 contract — never pre-materialize, never collect.
+
+Resolution is memoized: each table is read (file listing plus the
+schema-inference job over the parquet footer) once per live
+SparkSession, and later calls return that same lazy DataFrame while
+the table's files are unchanged. Staleness is an ``os.stat`` signature
+of ``<sf_dir>/<name>.parquet`` — ``(st_mtime_ns, st_size)`` of a file,
+or of every entry under a directory — taken on every call; a changed
+signature, another session or a stopped one means a fresh read. No
+data is materialized unless ``SPARK_GRAFT_CACHE_TABLES=1`` asks for it.
 """
 
 from __future__ import annotations
 
 import os
+import stat
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -18,16 +28,45 @@ from market_insights_app_spark.schemas import TESTDATA_TABLES
 
 DEFAULT_SF_DIR = "/root/testdata/sf0.001"
 
-# Opt-in hot-table cache (SPARK_GRAFT_CACHE_TABLES=1): repeated reads of
-# the same table within one process return one shared, Spark-cached
-# DataFrame — the local-mode stand-in for a cluster's hot page cache /
-# cached view over a repeatedly-scanned table. Default OFF so
-# correctness runs measure the true cold path.
-_TABLE_CACHE: dict[tuple[str, str], DataFrame] = {}
+# Resolved tables: absolute parquet path -> (session, stat signature,
+# frame). Each value is a complete tuple stored in one assignment, so a
+# concurrent caller sees the old entry or the new one, never half of
+# one; two threads racing on a miss both read and the last store wins.
+# With SPARK_GRAFT_CACHE_TABLES=1 the memoized frame is also
+# Spark-cached — the local-mode stand-in for a cluster's hot page cache
+# over a repeatedly-scanned table. Data caching stays opt-in so
+# correctness runs scan parquet.
+_RESOLVED: dict[str, tuple[SparkSession, object, DataFrame]] = {}
 
 
 def sf_dir_from_env(default: str = DEFAULT_SF_DIR) -> str:
     return os.environ.get("SPARK_GRAFT_SF_DIR", default)
+
+
+def _signature(path: str) -> object:
+    """``(st_mtime_ns, st_size)`` of a file; for a directory, each
+    entry's name with its own signature. Raises OSError if missing."""
+    st = os.stat(path)
+    if not stat.S_ISDIR(st.st_mode):
+        return st.st_mtime_ns, st.st_size
+    return tuple(sorted((e.name, _signature(e.path)) for e in os.scandir(path)))
+
+
+def _alive(spark: SparkSession) -> bool:
+    return spark.sparkContext._jsc is not None  # None once stopped
+
+
+def _read(spark: SparkSession, path: str, name: str) -> DataFrame:
+    df = spark.read.parquet(path)
+    if name == "events" and dict(df.dtypes).get("ts") == "bigint":
+        # Keep the raw nanos column: predicates on the converted ts
+        # cannot push through the arithmetic into the parquet scan, but
+        # an equivalent raw-space predicate on ts_ns can (row-group
+        # pruning at scale) — see operators.filters.events_ts_range.
+        df = df.withColumn("ts_ns", F.col("ts")).withColumn(
+            "ts", F.timestamp_micros(F.expr("ts div 1000"))
+        )
+    return df
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -40,27 +79,36 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     ``epoch_us(ts)`` truncation, so both engines see the same instants
     and NTZ predicates push down to the scan (row-group pruning). If an
     enclosing session was built with the legacy ``nanosAsLong`` conf the
-    column arrives as a long of nanoseconds instead; the branch below
+    column arrives as a long of nanoseconds instead; ``_read``
     canonicalizes that shape to the same microsecond timestamps.
+
+    Repeat calls on one live session return the same DataFrame while
+    the files are unchanged (see the module docstring). A path that
+    cannot be stat'ed — missing, or not on the local filesystem — is
+    never memoized, so Spark reports it as it always has.
     """
     if name not in TESTDATA_TABLES:
         raise KeyError(f"unknown table {name!r}; known: {TESTDATA_TABLES}")
-    caching = os.environ.get("SPARK_GRAFT_CACHE_TABLES") == "1"
-    key = (os.path.abspath(sf_dir), name)
-    if caching and key in _TABLE_CACHE:
-        return _TABLE_CACHE[key]
-    df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
-    if name == "events" and dict(df.dtypes).get("ts") == "bigint":
-        # Keep the raw nanos column: predicates on the converted ts
-        # cannot push through the arithmetic into the parquet scan, but
-        # an equivalent raw-space predicate on ts_ns can (row-group
-        # pruning at scale) — see operators.filters.events_ts_range.
-        df = df.withColumn("ts_ns", F.col("ts")).withColumn(
-            "ts", F.timestamp_micros(F.expr("ts div 1000"))
-        )
-    if caching:
+    path = os.path.join(sf_dir, f"{name}.parquet")
+    key = os.path.abspath(path)
+    try:
+        sig = _signature(path)
+    except OSError:
+        sig = None
+    hit = _RESOLVED.get(key)
+    if hit is not None:
+        owner, seen, frame = hit
+        if sig is not None and seen == sig and owner is spark and _alive(spark):
+            return frame
+        if frame.is_cached and _alive(owner):
+            # Spark's cache matches plans by path, so the stale cached
+            # data would otherwise answer the fresh read.
+            frame.unpersist()
+    df = _read(spark, path, name)
+    if os.environ.get("SPARK_GRAFT_CACHE_TABLES") == "1":
         df = df.cache()
-        _TABLE_CACHE[key] = df
+    if sig is not None:
+        _RESOLVED[key] = (spark, sig, df)
     return df
 
 

@@ -295,22 +295,23 @@ def test_pairwise_corr_joins_aligned_table_not_ticks(spark):
 
 
 def test_pairwise_corr_registered_plan_is_gram_lane(spark):
-    """The REGISTERED pairwise_corr plan (r11 flip) must be the
-    blocked-BLAS Gram lane: the aligned (key × bucket) table feeds an
-    Arrow applyInPandas stage (FlatMapGroupsInPandas) and the bucket
-    self-join pair explosion is gone.  Since r13 the aligned bucket
-    aggregate is materialized ONCE (lazy localCheckpoint) — so the
-    visible plan must show NO parquet re-scan of the tick table (the
-    aggregate runs inside the single checkpoint materialization, where
-    explain has no stanza for it)."""
+    """The REGISTERED pairwise_corr plan must be the blocked-BLAS Gram
+    lane: the aligned (key × bucket) table feeds an Arrow applyInPandas
+    stage (FlatMapGroupsInPandas) and the bucket self-join pair
+    explosion is gone.  Since r14 one scan feeds the aligned bucket
+    aggregate, which an explode task grid fans out to the block pairs —
+    no checkpoint, no join: exactly one parquet scan and two exchanges
+    (the aggregate's and the grid's), the tree recorded in
+    plans/r14/pairwise_corr_after.txt."""
     from market_insights_app_spark.plans.registry import QUERIES
 
     p = plan_of(QUERIES["pairwise_corr"](spark, SF_ORACLE))
     assert "FlatMapGroupsInPandas" in p
     assert "CartesianProduct" not in p
-    # both task-grid sides read the materialized aligned table: zero
-    # parquet scans in the visible plan (was 2 before the checkpoint)
-    assert "Scan parquet" not in p, p
+    assert "BroadcastHashJoin" not in p
+    tree = p.split("\n\n")[0]
+    assert tree.count("Scan parquet") == 1, p
+    assert tree.count("Exchange") == 2, p
 
 
 def test_bigram_lm_no_bigram_broadcast(spark):
