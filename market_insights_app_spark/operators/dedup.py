@@ -29,7 +29,8 @@ from market_insights_app_spark.functions.text import (
 def dedup_exact_keys(df: DataFrame, key_cols: list[str]) -> DataFrame:
     """D1: keep one row per natural key (reference: first insert wins;
     Spark batch: dropDuplicates — arbitrary winner, use
-    ``latest_wins``/``first_wins`` when precedence matters)."""
+    ``first_wins`` or ``windows.latest_per_key`` when precedence
+    matters)."""
     return df.dropDuplicates(key_cols)
 
 
@@ -617,39 +618,6 @@ def ngram_jaccard_vs_query(
         )
     )
     return out.select(F.col("id").alias(id_col), "jaccard")
-
-
-# ---------------------------------------------------------------------------
-# Latest-wins upsert readback (D4/D5 without Delta)
-# ---------------------------------------------------------------------------
-
-
-def latest_wins(df: DataFrame, key_cols: list[str], version_col: str, id_col: str | None = None) -> DataFrame:
-    """Versioned-append + latest-version-wins view — the plain-parquet
-    MERGE substitute (SURVEY §7.4.5): newest version per key."""
-    from market_insights_app_spark.operators.windows import latest_per_key
-
-    return latest_per_key(df, key_cols, version_col, id_col)
-
-
-def merge_upsert(
-    target: DataFrame,
-    updates: DataFrame,
-    key_cols: list[str],
-    bump_col: str | None = None,
-) -> DataFrame:
-    """D5 update-else-insert (db.py:166-201) without Delta: rows whose
-    key appears in ``updates`` are replaced (WHEN MATCHED UPDATE),
-    unmatched update rows are inserted (WHEN NOT MATCHED INSERT);
-    ``bump_col`` gets current_timestamp on every written row
-    (updated_at bump, db.py:182-191). Anti-join + union — one shuffle
-    each side on the key; with both sides bucketed by the key the
-    shuffles disappear."""
-    kept = target.join(updates.select(*key_cols).distinct(), on=key_cols, how="left_anti")
-    written = updates
-    if bump_col is not None:
-        written = written.withColumn(bump_col, F.current_timestamp())
-    return kept.unionByName(written)
 
 
 # ---------------------------------------------------------------------------

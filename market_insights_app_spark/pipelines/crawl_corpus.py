@@ -139,9 +139,9 @@ def warc_to_documents_stream(
     newly-arrived archives into documents rows through the SAME
     stateless transform — so the stream's cumulative output equals the
     batch lane over the same files (pinned by
-    tests/test_crawl_pipeline.py).  Sink it with foreachBatch into the
-    ACID table (streaming/ingest.idempotent_append_batch keyed on
-    doc_id) for an always-current corpus."""
+    tests/test_crawl_pipeline.py).  Sink it with foreachBatch into a
+    TxnTable (storage/txnlog.streaming_merge_sink keyed on doc_id) for
+    an always-current corpus."""
     recs = read_warc_stream(
         spark, path, record_types=("response",),
         max_files_per_trigger=max_files_per_trigger,

@@ -698,10 +698,9 @@ class TxnTable:
         into a key-clustered table rewrites O(updates) directories.
         Key-disjoint concurrent writers conflict only on the version
         counter and REBASE without re-reading or re-writing anything;
-        overlapping writers re-run against the fresh snapshot —
-        serializability the lock-sentinel lane approximated with a
-        global mutex (streaming/ingest.py:166) falls out of the log
-        order instead.
+        overlapping writers re-run against the fresh snapshot, so
+        serializability falls out of the log order: the last committer
+        wins.
 
         `txn=(app, id)`: exactly-once marker — if the log already
         holds a commit by `app` with a transaction id >= `id`, the
@@ -1201,12 +1200,12 @@ def streaming_merge_sink(table: TxnTable, key_cols: list[str],
                          app: str | None = None,
                          evolve_schema: bool = False):
     """foreachBatch body running each micro-batch as one ACID MERGE —
-    the transactional upgrade of streaming/ingest.py's lock-sentinel
-    `latest_wins_batch` (D4).  With `app` set, the (app, batch_id)
+    the streaming upsert sink for idempotent inserts (S4) and latest
+    state views (D4/D5).  With `app` set, the (app, batch_id)
     pair rides the commit log as a transaction marker, so a restarted
     micro-batch SKIPS instead of re-merging — exactly-once into the
     table, not just idempotent-by-values.  Concurrent writers
-    serialize through the commit log instead of a host-local mutex."""
+    serialize through the commit log."""
 
     def sink(batch: DataFrame, batch_id: int) -> None:
         table.merge(

@@ -11,8 +11,9 @@ Spark-native surface:
   deliberately generous and documented as the deviation (§7.4.6);
 - tumbling / sliding / session window aggregations (ST5 — no reference
   counterpart; part of the Spark-native surface mandate);
-- a foreachBatch sink that applies latest-wins merge semantics to a
-  parquet target (D4/D5 without Delta).
+- availableNow drains into a memory sink or through ``foreachBatch``;
+  idempotent inserts and upserts (S4, D4/D5) sink each micro-batch as
+  one ACID MERGE via ``storage/txnlog.streaming_merge_sink``.
 
 All builders return unstarted DataFrames/queries so tests drive them
 with ``trigger(availableNow=True)`` + memory sink.
@@ -23,11 +24,7 @@ from __future__ import annotations
 import os
 import shutil
 import tempfile
-import time
-import uuid
-from contextlib import contextmanager
 
-from pyspark.errors.exceptions.captured import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -186,8 +183,20 @@ def run_available_now_to_memory(
     path narrows.  Replays run sequentially (driver sweep, bench,
     tests), so the temporary session-conf flip cannot leak into a
     concurrent query."""
+    writer = (
+        stream_df.writeStream.format("memory")
+        .queryName(name)
+        .outputMode(output_mode)
+    )
+    return _drain(stream_df.sparkSession, writer, shuffle_partitions)
+
+
+def _drain(spark: SparkSession, writer, shuffle_partitions: int | None):
+    """Start ``writer`` with an availableNow trigger on a fresh
+    checkpoint, wait for it to drain, and record it as
+    ``LAST_REPLAY_QUERY``.  ``shuffle_partitions`` overrides the
+    session's shuffle width for this drain only."""
     global LAST_REPLAY_QUERY
-    spark = stream_df.sparkSession
     prev = None
     ckpt = _replay_checkpoint_dir()
     if shuffle_partitions is not None:
@@ -195,10 +204,7 @@ def run_available_now_to_memory(
         spark.conf.set("spark.sql.shuffle.partitions", str(shuffle_partitions))
     try:
         q = (
-            stream_df.writeStream.format("memory")
-            .queryName(name)
-            .outputMode(output_mode)
-            .trigger(availableNow=True)
+            writer.trigger(availableNow=True)
             .option("checkpointLocation", ckpt)
             .start()
         )
@@ -206,70 +212,11 @@ def run_available_now_to_memory(
     finally:
         if prev is not None:
             spark.conf.set("spark.sql.shuffle.partitions", prev)
+        # the checkpoint is single-use by construction (fresh dir per
+        # drain) — remove it instead of leaking one mkdtemp per replay
         shutil.rmtree(ckpt, ignore_errors=True)
     LAST_REPLAY_QUERY = q
     return q
-
-
-@contextmanager
-def _path_lock(target_path: str, timeout_s: float = 120.0):
-    """Inter-process mutual exclusion for the read-modify-write merge
-    surrogates below: an O_CREAT|O_EXCL sentinel file next to the
-    target (atomic on POSIX filesystems).  Without it two concurrent
-    ``foreachBatch`` callers can interleave read→anti-join→append and
-    both insert the same key — the race a real MERGE forbids.
-
-    Scope honestly documented: this serializes LOCAL-filesystem writers
-    only.  Non-local URIs (s3://, hdfs://) skip the lock — multi-writer
-    correctness on object stores is exactly what a transactional table
-    layer (Delta/Iceberg) provides, and that deviation is recorded in
-    the README."""
-    if "://" in target_path:
-        yield
-        return
-    lock = target_path.rstrip("/") + ".__lock__"
-    os.makedirs(os.path.dirname(os.path.abspath(lock)), exist_ok=True)
-    deadline = time.monotonic() + timeout_s
-    while True:
-        try:
-            fd = os.open(lock, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-            break
-        except FileExistsError:
-            if time.monotonic() > deadline:
-                raise TimeoutError(
-                    f"gave up waiting for merge lock {lock!r} after "
-                    f"{timeout_s}s — stale lock from a crashed writer? "
-                    "remove it manually if no writer is alive"
-                )
-            time.sleep(0.05)
-    try:
-        os.write(fd, str(os.getpid()).encode())
-        os.close(fd)
-        yield
-    finally:
-        os.unlink(lock)
-
-
-def idempotent_append_batch(batch: DataFrame, target_path: str, key_cols: list[str]) -> None:
-    """foreachBatch sink body: drop in-batch dupes, anti-join against
-    the target's existing natural keys, append the remainder — the
-    plain-parquet MERGE WHEN NOT MATCHED INSERT (S4, db.py:253-261).
-    The whole read-modify-append is serialized per target via
-    ``_path_lock`` so concurrent callers cannot both pass the anti-join
-    with the same key."""
-    spark = batch.sparkSession
-    with _path_lock(target_path):
-        fresh = batch.dropDuplicates(key_cols)
-        try:
-            existing = spark.read.parquet(target_path).select(*key_cols).distinct()
-            fresh = fresh.join(existing, on=key_cols, how="left_anti")
-        except AnalysisException:
-            # first batch: target path does not exist yet. Any other failure
-            # (permissions, corrupt footers) must propagate — silently
-            # skipping the anti-join would append duplicates and break the
-            # INSERT OR IGNORE contract.
-            pass
-        fresh.write.mode("append").parquet(target_path)
 
 
 def ema_stateful(
@@ -437,36 +384,6 @@ def session_builder_stateful(
     )
 
 
-def latest_wins_batch(batch: DataFrame, target_path: str, key_cols: list[str], version_col: str) -> None:
-    """foreachBatch sink body for D4/D5 upsert targets: merge the batch
-    into the parquet target keeping the newest version per key — the
-    streaming materialized 'latest state' view (session upsert
-    db.py:517-525 / journal upsert db.py:166-201 without Delta).
-
-    Rewrites the (small) latest-state table per batch; at scale the
-    target would be partitioned and only touched partitions rewritten.
-    Serialized per target via ``_path_lock`` (concurrent read-merge-
-    overwrite callers would otherwise lose one writer's keys), with a
-    caller-unique staging directory so a parallel writer on ANOTHER
-    target can never collide on the temp path."""
-    spark = batch.sparkSession
-    from market_insights_app_spark.operators.dedup import latest_wins
-
-    with _path_lock(target_path):
-        tmp = f"{target_path}__stage_{uuid.uuid4().hex[:8]}"
-        try:
-            existing = spark.read.parquet(target_path)
-            merged = existing.unionByName(batch)
-        except AnalysisException:
-            # first batch only — other read failures must propagate (see
-            # idempotent_append_batch)
-            merged = batch
-        out = latest_wins(merged, key_cols, version_col)
-        out.write.mode("overwrite").parquet(tmp)
-        spark.read.parquet(tmp).write.mode("overwrite").parquet(target_path)
-        shutil.rmtree(tmp, ignore_errors=True)
-
-
 def interval_join_stream(
     left: DataFrame,
     right: DataFrame,
@@ -590,34 +507,10 @@ def run_available_now_foreach_batch(
 ):
     """Drain everything currently available through a ``foreachBatch``
     sink and stop — the :func:`run_available_now_to_memory` analog for
-    sinks that write somewhere real (TxnTable, parquet targets).  Same
+    sinks that write somewhere real (e.g. a TxnTable).  Same
     temporary shuffle-width override, same sequential-replay caveat."""
-    global LAST_REPLAY_QUERY
-    spark = stream_df.sparkSession
-    prev = None
-    ckpt = _replay_checkpoint_dir()
-    if shuffle_partitions is not None:
-        prev = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions", str(shuffle_partitions))
-    try:
-        q = (
-            stream_df.writeStream.foreachBatch(
-                lambda b, _id: batch_fn(b)
-            )
-            .trigger(availableNow=True)
-            .option("checkpointLocation", ckpt)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        if prev is not None:
-            spark.conf.set("spark.sql.shuffle.partitions", prev)
-        # the drained replay's checkpoint is single-use by construction
-        # (fresh dir per call) — remove it here instead of leaking one
-        # mkdtemp per replay
-        shutil.rmtree(ckpt, ignore_errors=True)
-    LAST_REPLAY_QUERY = q
-    return q
+    writer = stream_df.writeStream.foreachBatch(lambda b, _id: batch_fn(b))
+    return _drain(stream_df.sparkSession, writer, shuffle_partitions)
 
 
 def cdc_apply_batch(batch: DataFrame, table, key_cols: list[str], value_cols: list[str]) -> None:

@@ -127,13 +127,14 @@ def test_streaming_crawl_matches_batch_and_sinks_idempotently(spark, tmp_path):
     With maxFilesPerTrigger=1 the availableNow drain crosses real
     micro-batch boundaries, and the cumulative stream output must
     equal the batch lane over the same files; re-draining into the
-    idempotent foreachBatch sink must not duplicate rows."""
+    TxnTable MERGE sink must not duplicate rows."""
     from market_insights_app_spark.pipelines.crawl_corpus import (
         warc_to_documents,
         warc_to_documents_stream,
     )
-    from market_insights_app_spark.streaming.ingest import (
-        idempotent_append_batch,
+    from market_insights_app_spark.storage.txnlog import (
+        TxnTable,
+        streaming_merge_sink,
     )
 
     crawl = tmp_path / "crawl"
@@ -149,32 +150,29 @@ def test_streaming_crawl_matches_batch_and_sinks_idempotently(spark, tmp_path):
     assert len(batch) == 12
 
     stream = warc_to_documents_stream(spark, path, max_files_per_trigger=1)
-    target = str(tmp_path / "docs_table")
+    table = TxnTable(spark, str(tmp_path / "docs_table"))
     q = (
-        stream.writeStream.foreachBatch(
-            lambda b, _i: idempotent_append_batch(b, target, ["doc_id"])
-        )
+        stream.writeStream.foreachBatch(streaming_merge_sink(table, ["doc_id"]))
         .option("checkpointLocation", str(tmp_path / "ck1"))
         .trigger(availableNow=True)
         .start()
     )
     q.awaitTermination()
-    got = sorted(tuple(r) for r in spark.read.parquet(target).collect())
+    got = sorted(tuple(r) for r in table.read().collect())
     assert got == batch
 
-    # second drain from a FRESH checkpoint replays every file; the
-    # idempotent sink must keep the table identical
+    # second drain from a FRESH checkpoint replays every file with batch
+    # ids restarting at 0, so no (app, batch_id) marker is shared across
+    # the drains; update-else-insert must keep the table identical
     q2 = (
         warc_to_documents_stream(spark, path, max_files_per_trigger=1)
-        .writeStream.foreachBatch(
-            lambda b, _i: idempotent_append_batch(b, target, ["doc_id"])
-        )
+        .writeStream.foreachBatch(streaming_merge_sink(table, ["doc_id"]))
         .option("checkpointLocation", str(tmp_path / "ck2"))
         .trigger(availableNow=True)
         .start()
     )
     q2.awaitTermination()
-    again = sorted(tuple(r) for r in spark.read.parquet(target).collect())
+    again = sorted(tuple(r) for r in table.read().collect())
     assert again == batch
 
 

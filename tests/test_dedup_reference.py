@@ -364,19 +364,6 @@ def test_embedding_neardup_lanes_bit_equal(spark):
         assert any(x[:2] == (0, 81) for x in a)           # dup pair found
 
 
-def test_merge_upsert(spark):
-    from market_insights_app_spark.operators.dedup import merge_upsert
-
-    target = spark.createDataFrame(
-        [(1, "old1"), (2, "old2"), (3, "keep3")], "id long, v string"
-    )
-    updates = spark.createDataFrame(
-        [(1, "new1"), (4, "ins4")], "id long, v string"
-    )
-    out = {r["id"]: r["v"] for r in merge_upsert(target, updates, ["id"]).collect()}
-    assert out == {1: "new1", 2: "old2", 3: "keep3", 4: "ins4"}
-
-
 def test_duplicate_clusters_components(spark):
     """Min-label propagation must find exact connected components,
     including a 4-node chain (diameter > 1) and a separate pair."""

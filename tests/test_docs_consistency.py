@@ -6,6 +6,7 @@ fails loudly instead of shipping a stale inventory."""
 
 from __future__ import annotations
 
+import os
 import re
 
 REPO = __file__.rsplit("/tests/", 1)[0]
@@ -70,3 +71,26 @@ def test_bench_headline_names_exist():
 
     missing = [n for n in bench.HEADLINE if n not in QUERIES]
     assert not missing, f"bench HEADLINE names not in registry: {missing}"
+
+
+def test_cited_scripts_exist_or_name_their_commit():
+    """Every `scripts/<name>.py` cited in the package, the tests,
+    README.md, SCALE_NOTES.md or COVERAGE.md exists.  A deleted
+    script may still be cited, but only on a line that names the
+    commit still holding it ("... at commit <sha>"), so a measurement
+    stays reproducible after its probe is gone."""
+    import glob
+
+    files = [f"{REPO}/{d}" for d in ("README.md", "SCALE_NOTES.md", "COVERAGE.md")]
+    for d in ("market_insights_app_spark", "tests"):
+        files += glob.glob(f"{REPO}/{d}/**/*.py", recursive=True)
+    bad = []
+    for path in files:
+        for n, line in enumerate(open(path, encoding="utf-8"), 1):
+            for m in re.finditer(r"scripts/\w+\.py", line):
+                script = m.group(0)
+                if not os.path.exists(f"{REPO}/{script}") and not re.search(
+                    r"\bcommit [0-9a-f]{7,40}\b", line
+                ):
+                    bad.append(f"{os.path.relpath(path, REPO)}:{n} {script}")
+    assert not bad, f"citations of missing scripts without a commit: {bad}"

@@ -84,45 +84,6 @@ def test_session_agg_runs(spark, stream):
         assert r["session_end"] > r["session_start"] and r["n"] >= 1
 
 
-def test_idempotent_append_batch(spark, tmp_path):
-    from market_insights_app_spark.streaming.ingest import idempotent_append_batch
-
-    target = str(tmp_path / "prices")
-    b1 = spark.createDataFrame(
-        [("A", 1, "s", 1.0), ("A", 1, "s", 1.0), ("B", 2, "s", 2.0)],
-        "symbol string, as_of long, source string, price double",
-    )
-    idempotent_append_batch(b1, target, ["symbol", "as_of", "source"])
-    assert spark.read.parquet(target).count() == 2  # in-batch dup dropped
-    # redelivery of the same observations is a no-op (D1, db.py:253-259)
-    idempotent_append_batch(b1, target, ["symbol", "as_of", "source"])
-    assert spark.read.parquet(target).count() == 2
-    b2 = spark.createDataFrame(
-        [("A", 9, "s", 3.0)], "symbol string, as_of long, source string, price double"
-    )
-    idempotent_append_batch(b2, target, ["symbol", "as_of", "source"])
-    assert spark.read.parquet(target).count() == 3
-
-
-def test_idempotent_append_batch_corrupt_target_raises(spark, tmp_path):
-    """A corrupt (existing) target must RAISE, not silently skip the
-    anti-join and append duplicates — only missing-path errors mean
-    'first batch'."""
-    import pytest
-
-    from market_insights_app_spark.streaming.ingest import idempotent_append_batch
-
-    target = tmp_path / "prices"
-    target.mkdir()
-    (target / "part-00000.parquet").write_bytes(b"not a parquet file")
-    b = spark.createDataFrame(
-        [("A", 1, "s", 1.0)], "symbol string, as_of long, source string, price double"
-    )
-    with pytest.raises(Exception) as exc:
-        idempotent_append_batch(b, str(target), ["symbol", "as_of", "source"])
-    assert "AnalysisException" not in type(exc.value).__name__
-
-
 def test_media_decode_fake_and_stub(spark):
     from market_insights_app_spark.operators.multimodal import decode_media
 
@@ -286,13 +247,13 @@ def test_session_builder_timeout_close(spark, tmp_path):
 
 def test_foreachbatch_ingest_pipeline(spark, tmp_path):
     """S2+S4+ST2 end-to-end: a stream of raw FX payloads → from_json
-    normalize → idempotent parquet sink via foreachBatch — the full
+    normalize → TxnTable MERGE via foreachBatch — the full
     POST /ingest/fx path (SURVEY §3.2) as a streaming pipeline.
     Includes a duplicate redelivery and an erroneous payload."""
     import json
 
     from market_insights_app_spark.sources.http_quotes import parse_alpha_vantage_fx
-    from market_insights_app_spark.streaming.ingest import idempotent_append_batch
+    from market_insights_app_spark.storage.txnlog import TxnTable
 
     def fx_payload(pair, rate, refreshed):
         return json.dumps(
@@ -307,7 +268,7 @@ def test_foreachbatch_ingest_pipeline(spark, tmp_path):
         )
 
     src = str(tmp_path / "payloads")
-    target = str(tmp_path / "prices")
+    table = TxnTable(spark, str(tmp_path / "prices"))
     import os
 
     os.makedirs(src)
@@ -326,7 +287,7 @@ def test_foreachbatch_ingest_pipeline(spark, tmp_path):
     def sink(batch, batch_id):
         parsed = parse_alpha_vantage_fx(batch)
         good = parsed.filter(F.col("error").isNull()).drop("error")
-        idempotent_append_batch(good, target, ["symbol", "as_of", "source"])
+        table.merge(good, ["symbol", "as_of", "source"])
 
     q = (
         raw.writeStream.foreachBatch(sink)
@@ -335,7 +296,7 @@ def test_foreachbatch_ingest_pipeline(spark, tmp_path):
         .start()
     )
     q.awaitTermination()
-    out = spark.read.parquet(target)
+    out = table.read()
     assert out.count() == 2  # dup collapsed, error row filtered
     assert {r["symbol"] for r in out.collect()} == {"EURUSD", "GBPUSD"}
 
@@ -350,7 +311,7 @@ def test_foreachbatch_ingest_pipeline(spark, tmp_path):
         .start()
     )
     q.awaitTermination()
-    assert spark.read.parquet(target).count() == 3
+    assert table.read().count() == 3
 
 
 def test_cross_batch_dedup_and_late_data(spark, tmp_path):
@@ -404,19 +365,6 @@ def test_cross_batch_dedup_and_late_data(spark, tmp_path):
     assert len(got) == 4  # A@noon, B@noon, A@11:30 (late), C@12:01
     assert got[("A", base)] == 1.0
     assert got[("A", base - dt.timedelta(minutes=30))] == 0.9
-
-
-def test_latest_wins_batch_sink(spark, tmp_path):
-    from market_insights_app_spark.streaming.ingest import latest_wins_batch
-
-    target = str(tmp_path / "state")
-    schema = "token string, email string, version long"
-    b1 = spark.createDataFrame([("t1", "a@x", 1), ("t2", "b@x", 1)], schema)
-    latest_wins_batch(b1, target, ["token"], "version")
-    b2 = spark.createDataFrame([("t1", "a2@x", 2), ("t3", "c@x", 1)], schema)
-    latest_wins_batch(b2, target, ["token"], "version")
-    got = {r["token"]: (r["email"], r["version"]) for r in spark.read.parquet(target).collect()}
-    assert got == {"t1": ("a2@x", 2), "t2": ("b@x", 1), "t3": ("c@x", 1)}
 
 
 def test_interval_join_stream_matches_batch(spark, stream):
@@ -526,62 +474,6 @@ def test_audio_features_golden(spark):
 
     with _pytest.raises(Exception, match="NotImplementedError|PIL|ffmpeg"):
         audio_features(media, fake=False).collect()
-
-
-def test_idempotent_append_concurrent_writers(spark, tmp_path):
-    """Two writers applying the SAME batch concurrently must not insert
-    duplicate keys: the per-target lock serializes the read-anti-join-
-    append critical section (the plain-parquet MERGE surrogate's race)."""
-    from concurrent.futures import ThreadPoolExecutor
-
-    from market_insights_app_spark.streaming.ingest import idempotent_append_batch
-
-    target = str(tmp_path / "merge_target")
-    batch = spark.createDataFrame(
-        [(i, f"v{i}") for i in range(50)], ["k", "v"]
-    )
-
-    with ThreadPoolExecutor(max_workers=2) as ex:
-        futs = [
-            ex.submit(idempotent_append_batch, batch, target, ["k"])
-            for _ in range(2)
-        ]
-        for f in futs:
-            f.result()
-
-    got = spark.read.parquet(target)
-    assert got.count() == 50
-    assert got.select("k").distinct().count() == 50
-
-
-def test_latest_wins_batch_concurrent_writers(spark, tmp_path):
-    """Two latest-wins writers of the same keyed batch: the target must
-    end with exactly one (newest) row per key and no leftover staging
-    directories."""
-    import os as _os
-    from concurrent.futures import ThreadPoolExecutor
-
-    from market_insights_app_spark.streaming.ingest import latest_wins_batch
-
-    target = str(tmp_path / "state_target")
-    b1 = spark.createDataFrame([(i, 1, f"a{i}") for i in range(20)], ["k", "ver", "v"])
-    b2 = spark.createDataFrame([(i, 2, f"b{i}") for i in range(20)], ["k", "ver", "v"])
-
-    with ThreadPoolExecutor(max_workers=2) as ex:
-        futs = [
-            ex.submit(latest_wins_batch, b, target, ["k"], "ver")
-            for b in (b1, b2)
-        ]
-        for f in futs:
-            f.result()
-
-    got = spark.read.parquet(target)
-    assert got.count() == 20
-    # every key carries the highest version seen (2), regardless of
-    # which writer won the lock first
-    assert got.filter("ver <> 2").count() == 0
-    leftovers = [d for d in _os.listdir(tmp_path) if "__stage_" in d or "__lock__" in d]
-    assert leftovers == []
 
 
 def test_streaming_ohlc_matches_batch_operator(spark, stream):

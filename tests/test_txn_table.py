@@ -93,11 +93,13 @@ def test_append_evolve_schema_widens_and_null_fills(spark, table):
 
 def test_merge_update_else_insert(spark, table):
     table.append(_mk(spark, [(1, "a"), (2, "b")]), stats_col="id")
-    v = table.merge(_mk(spark, [(2, "B"), (4, "d")]), ["id"])
+    # (4, "d") arrives twice in one batch: a redelivered observation
+    updates = _mk(spark, [(2, "B"), (4, "d"), (4, "d")])
+    v = table.merge(updates, ["id"])
     assert v == 1
     assert _rows(table.read()) == [(1, "a"), (2, "B"), (4, "d")]
     # merging the same batch again is idempotent (restart semantics)
-    table.merge(_mk(spark, [(2, "B"), (4, "d")]), ["id"])
+    table.merge(updates, ["id"])
     assert _rows(table.read()) == [(1, "a"), (2, "B"), (4, "d")]
 
 
@@ -195,8 +197,8 @@ def test_concurrent_appends_all_land(spark, tmp_path):
 
 def test_concurrent_disjoint_merges_serialize(spark, tmp_path):
     """Key-disjoint writers merging concurrently: every writer's rows
-    land exactly once, keys stay unique — the property the global
-    lock-sentinel bought, now from the commit log."""
+    land exactly once, keys stay unique — serialized by the commit
+    log."""
     t = TxnTable(spark, str(tmp_path / "cm"))
     t.append(_mk(spark, [(k, "seed") for k in range(4)]), stats_col="id")
     errs = []
@@ -243,6 +245,52 @@ def test_concurrent_overlapping_merges_last_committer_wins(spark, tmp_path):
     assert got[1] == last  # serializability: log order decides
     for tag in ("A", "B", "C"):
         assert got[100 + ord(tag[0])] == tag  # no writer's insert lost
+
+
+def test_concurrent_same_batch_merges_keep_one_row_per_key(spark, tmp_path):
+    """Two writers merging the SAME 50-key batch at once (a
+    redelivered micro-batch racing its original): one row per key, and
+    every data directory on disk is one some commit added — a lost
+    writer's staging and stale rewrites are gone."""
+    t = TxnTable(spark, str(tmp_path / "same"))
+    batch = _mk(spark, [(k, f"v{k}") for k in range(50)])
+    errs = []
+
+    def w():
+        try:
+            TxnTable(spark, t.path).merge(batch, ["id"], max_retries=50)
+        except Exception as e:  # noqa: BLE001
+            errs.append(e)
+
+    ths = [threading.Thread(target=w) for _ in range(2)]
+    [th.start() for th in ths]
+    [th.join() for th in ths]
+    assert not errs
+    got = t.read()
+    assert got.count() == 50
+    assert got.select("id").distinct().count() == 50
+    committed = {a["dir"] for c in t.history() for a in c["add"]}
+    on_disk = {
+        f"data/{d}" for d in os.listdir(os.path.join(t.path, "data"))
+    }
+    assert on_disk == committed
+
+
+def test_merge_over_corrupt_live_file_raises_without_commit(spark, table):
+    """A merge that must rewrite a corrupt live data file RAISES and
+    commits nothing — it never skips the unreadable rows and publishes
+    a table that silently lost them."""
+    table.append(_mk(spark, [(1, "a"), (2, "b")]), stats_col="id")
+    live = os.path.join(table.path, table.snapshot().dirs[0])
+    part = next(f for f in os.listdir(live) if f.endswith(".parquet"))
+    with open(os.path.join(live, part), "wb") as fh:
+        fh.write(b"not a parquet file")
+    log = sorted(os.listdir(os.path.join(table.path, "_txn_log")))
+    version = table.snapshot().version
+    with pytest.raises(Exception):
+        table.merge(_mk(spark, [(2, "B")]), ["id"])
+    assert table.snapshot().version == version
+    assert sorted(os.listdir(os.path.join(table.path, "_txn_log"))) == log
 
 
 def test_conflict_exhaustion_raises(spark, table, monkeypatch):
@@ -431,8 +479,8 @@ def test_random_op_sequence_matches_dict_model(spark, tmp_path):
 
 def test_streaming_merge_sink(spark, tmp_path):
     """availableNow replay through foreachBatch -> ACID MERGE: the
-    latest-wins materialization, transactional edition of
-    streaming/ingest.latest_wins_batch."""
+    latest-wins materialization of a keyed stream (D4) — each key
+    holds its newest merged value, untouched keys survive."""
     src = tmp_path / "src"
     _mk(spark, [(1, "s1"), (2, "s2")]).write.mode("overwrite").parquet(str(src))
     t = TxnTable(spark, str(tmp_path / "sink"))
