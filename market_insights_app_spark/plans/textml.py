@@ -10,8 +10,6 @@ portable twin or a pure-Python reference in tests/.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
 
@@ -3023,9 +3021,9 @@ def q_txn_merge(spark: SparkSession, sf: str) -> DataFrame:
     per-call temp dir (POSIX path, like the streaming replays' memory
     sinks); output depends only on the input slice."""
     import shutil
-    import tempfile
 
     from market_insights_app_spark.storage.txnlog import TxnTable
+    from market_insights_app_spark.streaming.ingest import _replay_checkpoint_dir
 
     ev = load_table(spark, sf, "events").select(
         "event_id", "user_id", "value"
@@ -3038,21 +3036,16 @@ def q_txn_merge(spark: SparkSession, sf: str) -> DataFrame:
         (F.col("value") * 2 + 1).alias("value"),
     )
     # Single-use gate table on a RAM-backed dir when available (r13,
-    # same contract as the streaming replays' _replay_checkpoint_dir):
-    # the table is written, read once and discarded, so disk-backed
-    # /tmp paid pure fsync overhead — and the old mkdtemp LEAKED one
-    # data dir per call.  Single cleanup slot: the previous call's dir
-    # is removed on the next call (its action is long finished by
-    # then), bounding the footprint to one ~MB-scale table.
-    base_dir = os.environ.get("SPARK_GRAFT_CKPT_BASE")
-    if base_dir is None and os.path.isdir("/dev/shm") and os.access(
-        "/dev/shm", os.W_OK
-    ):
-        base_dir = "/dev/shm"
+    # the streaming replays' scratch-dir rule): the table is written,
+    # read once and discarded, so disk-backed /tmp paid pure fsync
+    # overhead — and the old mkdtemp LEAKED one data dir per call.
+    # Single cleanup slot: the previous call's dir is removed on the
+    # next call (its action is long finished by then), bounding the
+    # footprint to one ~MB-scale table.
     prev = _TXN_MERGE_DIR.pop() if _TXN_MERGE_DIR else None
     if prev is not None:
         shutil.rmtree(prev, ignore_errors=True)
-    path = tempfile.mkdtemp(prefix="mias_txn_merge_", dir=base_dir)
+    path = _replay_checkpoint_dir(prefix="mias_txn_merge_")
     _TXN_MERGE_DIR.append(path)
     t = TxnTable(spark, path)
     t.append(base, stats_col="event_id")

@@ -41,10 +41,15 @@ Honest scope:
   guarantee — exactly the documented Delta-on-S3 caveat — so the
   constructor rejects ``://`` URIs rather than silently weakening the
   contract.
-* The table schema is FIXED at the first commit; schema evolution
-  (add/rename/widen) is out of scope — a merge whose update set's
-  columns differ from the table's fails in ``unionByName`` rather
-  than silently corrupting the layout.
+* The first commit records the table schema, and every later commit
+  carries the schema its data reads back under.  A write whose
+  columns differ from the recorded ones fails loudly unless it
+  passes ``evolve_schema=True`` (append/merge — the Delta
+  ``mergeSchema`` analog), which adds the new columns and lets
+  shared ones widen; renames and drops are out of scope.
+* Every write operation builds and publishes its commit through one
+  optimistic loop (``_commit_loop``), so retry, rebase and
+  checkpoint rules live in one place.
 * ``last_txn`` scans the log newest-first (driver-side JSON); a
   production deployment would fold per-app watermarks into the
   checkpoint."""
@@ -60,10 +65,18 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
+
+from market_insights_app_spark.operators.layout import (
+    layout_stats,
+    linear_assign,
+    zorder_assign,
+)
 
 LOG_DIR = "_txn_log"
 DATA_DIR = "data"
 _V_WIDTH = 20
+_CP_PREFIX = "checkpoint-"
 
 
 class CommitConflict(Exception):
@@ -80,6 +93,33 @@ class ConstraintViolation(Exception):
 
 def _fmt_version(v: int) -> str:
     return f"{v:0{_V_WIDTH}d}.json"
+
+
+def _fmt_checkpoint(v: int) -> str:
+    return f"{_CP_PREFIX}{_fmt_version(v)}"
+
+
+def _struct(schema_json: str) -> StructType:
+    return StructType.fromJson(json.loads(schema_json))
+
+
+def _data_root(rel: str) -> str:
+    """The physical ``data/<uuid>`` directory holding add-entry ``rel``
+    (a compaction's entries are per-file subdirectories of one root)."""
+    return "/".join(rel.split("/")[:2])
+
+
+def _overlaps(s: dict | None, lo, hi) -> bool:
+    """Min/max pruning test: False only when the recorded range ``s``
+    is provably disjoint from [lo, hi].  No stats, or stats of a type
+    that does not compare with the bounds (schema drift), cannot
+    prune — correct, just not skipped."""
+    if s is None:
+        return True
+    try:
+        return not (s["max"] < lo or s["min"] > hi)
+    except TypeError:
+        return True
 
 
 def _stat_value(v):
@@ -145,7 +185,7 @@ class TxnTable:
     def _versions(self) -> list[int]:
         out = []
         for f in os.listdir(self._log_path()):
-            if f.endswith(".json") and not f.startswith(("checkpoint-", ".")):
+            if f.endswith(".json") and not f.startswith((_CP_PREFIX, ".")):
                 out.append(int(f[: -len(".json")]))
         out.sort()
         # a racing listdir can observe version N+1 while missing N (no
@@ -170,69 +210,53 @@ class TxnTable:
         with open(os.path.join(self._log_path(), _fmt_version(v))) as fh:
             return json.load(fh)
 
-    def _publish(self, version: int, payload: dict) -> bool:
-        """Atomically publish commit `version`.  True iff this writer
-        won the version.  The temp file is fully written and fsynced
-        before the link, so a visible log entry is always complete."""
+    def _link_new(self, name: str, body: dict) -> bool:
+        """Atomically create log file `name` holding `body`; True iff
+        this call created it.  The temp file is fully written and
+        fsynced before the link, so a visible log file is always
+        complete and its bytes are on disk."""
         log = self._log_path()
         tmp = os.path.join(log, f".tmp-{uuid.uuid4().hex}")
-        final = os.path.join(log, _fmt_version(version))
         with open(tmp, "w") as fh:
-            json.dump(payload, fh)
+            json.dump(body, fh)
             fh.flush()
             os.fsync(fh.fileno())
         try:
-            os.link(tmp, final)  # atomic fail-if-exists publication
+            os.link(tmp, os.path.join(log, name))  # atomic fail-if-exists
             return True
         except FileExistsError:
             return False
         finally:
             os.unlink(tmp)
 
-    def _maybe_checkpoint(self, snap_after: Snapshot) -> None:
-        """Write the full live map every `checkpoint_interval` commits.
-        Replay is deterministic, so two writers racing on the same
-        checkpoint write identical content — the loser's FileExists is
+    def _publish(self, version: int, payload: dict) -> bool:
+        """Atomically publish commit `version`.  True iff this writer
+        won the version."""
+        return self._link_new(_fmt_version(version), payload)
+
+    def _checkpoint(self, snap: Snapshot) -> None:
+        """Write the full live map for `snap`.  Replay is deterministic,
+        so racing writers produce identical content — a lost link is
         benign."""
-        v = snap_after.version
-        if v < 0 or (v + 1) % self.checkpoint_interval != 0:
-            return
-        self._force_checkpoint(snap_after)
+        self._link_new(
+            _fmt_checkpoint(snap.version),
+            {
+                "version": snap.version,
+                "files": snap.files,
+                "schema": snap.schema_json,
+                "constraints": snap.constraints,
+            },
+        )
 
-    def _force_checkpoint(self, snap: Snapshot) -> None:
-        """Write the full live map for `snap` unconditionally.  Replay
-        is deterministic, so racing writers produce identical content —
-        the loser's FileExists is benign."""
-        log = self._log_path()
-        tmp = os.path.join(log, f".tmp-{uuid.uuid4().hex}")
-        final = os.path.join(log, f"checkpoint-{snap.version:0{_V_WIDTH}d}.json")
-        body = {
-            "version": snap.version,
-            "files": snap.files,
-            "schema": snap.schema_json,
-            "constraints": snap.constraints,
-        }
-        with open(tmp, "w") as fh:
-            json.dump(body, fh)
-        try:
-            os.link(tmp, final)
-        except FileExistsError:
-            pass
-        finally:
-            os.unlink(tmp)
+    def _checkpoint_versions(self) -> list[int]:
+        return sorted(
+            int(f[len(_CP_PREFIX) : -len(".json")])
+            for f in os.listdir(self._log_path())
+            if f.startswith(_CP_PREFIX) and f.endswith(".json")
+        )
 
-    def _latest_checkpoint(self, upto: int) -> dict | None:
-        best = None
-        for f in os.listdir(self._log_path()):
-            if f.startswith("checkpoint-") and f.endswith(".json"):
-                v = int(f[len("checkpoint-") : -len(".json")])
-                if v <= upto and (best is None or v > best):
-                    best = v
-        if best is None:
-            return None
-        with open(
-            os.path.join(self._log_path(), f"checkpoint-{best:0{_V_WIDTH}d}.json")
-        ) as fh:
+    def _read_checkpoint(self, v: int) -> dict:
+        with open(os.path.join(self._log_path(), _fmt_checkpoint(v))) as fh:
             return json.load(fh)
 
     def snapshot(self, version: int | None = None) -> Snapshot:
@@ -249,7 +273,8 @@ class TxnTable:
                 f"version {target} not in log (have {versions[0]}..{versions[-1]})"
             )
         snap = Snapshot(version=-1)
-        cp = self._latest_checkpoint(target)
+        older = [v for v in self._checkpoint_versions() if v <= target]
+        cp = self._read_checkpoint(older[-1]) if older else None
         if versions[0] > 0 and (cp is None or cp["version"] < versions[0] - 1):
             # only truncate_history() can remove version 0, and it
             # publishes a covering checkpoint first — a hole here means
@@ -320,84 +345,29 @@ class TxnTable:
                 entry["stats"] = {"col": stats_col, "min": lo, "max": hi}
         return entry
 
-    def _write_clustered(
-        self, df: DataFrame, cluster_col: str, n_buckets: int
-    ) -> list[dict]:
-        """Write `df` as ONE physical directory holding `n_buckets`
-        range-clustered subdirectories (``__bucket=i``), and return one
-        add-entry per subdirectory with its own disjoint key-range
-        stats.  One write job + one grouped footer-scan job — never a
-        job per bucket.  `repartitionByRange` gives each partition a
-        disjoint slice of the cluster key's order, so the per-bucket
-        min/max stats are disjoint by construction — the layout that
-        makes every later key-confined MERGE rewrite O(1) buckets."""
-        if "__bucket" in df.columns:
-            raise ValueError("column name __bucket is reserved by optimize()")
+    def _write_files(self, laid: DataFrame, cols: list[str]) -> list[dict]:
+        """Write `laid` (rows tagged with their file in ``__file`` by an
+        operators/layout assigner) as ONE directory of ``__file=i``
+        subdirectories; return one add-entry each, with the first
+        column's range in ``stats`` and, for several columns, every
+        range in ``stats_multi``.  Stats come from the WRITTEN files:
+        one write job + one grouped footer-scan job, never one per file."""
         rel = f"{DATA_DIR}/{uuid.uuid4().hex}"
         full = os.path.join(self.path, rel)
-        (
-            df.repartitionByRange(n_buckets, F.col(cluster_col))
-            .withColumn("__bucket", F.spark_partition_id())
-            .write.mode("errorifexists")
-            .partitionBy("__bucket")
-            .parquet(full)
-        )
-        back = self.spark.read.parquet(full)
-        rows = back.groupBy("__bucket").agg(
-            F.count(F.lit(1)).alias("n"),
-            F.min(cluster_col).alias("lo"),
-            F.max(cluster_col).alias("hi"),
-        ).collect()
-        entries = []
-        for r in sorted(rows, key=lambda r: r["__bucket"]):
-            lo, hi = _stat_value(r["lo"]), _stat_value(r["hi"])
-            e: dict = {"dir": f"{rel}/__bucket={r['__bucket']}", "rows": r["n"]}
-            if lo is not None and hi is not None:
-                e["stats"] = {"col": cluster_col, "min": lo, "max": hi}
-            entries.append(e)
-        return entries
-
-    def _write_zordered(
-        self, df: DataFrame, cols: list[str], n_buckets: int
-    ) -> list[dict]:
-        """Write ``df`` as ONE physical directory of ``n_buckets``
-        Z-order-clustered subdirectories and return one add-entry per
-        subdirectory carrying BOTH the primary-column range (``stats``
-        — what 1-D pruned merges/deletes read) and per-dimension
-        ranges for every z-order column (``stats_multi`` — what
-        multi-dimension pruning reads).  One write job + one grouped
-        footer-scan job, same contract as :meth:`_write_clustered` with
-        the Morton curve instead of a 1-D range."""
-        from market_insights_app_spark.operators.layout import zorder_assign
-
-        if "__file" in df.columns:
-            raise ValueError("column name __file is reserved by optimize_zorder()")
-        rel = f"{DATA_DIR}/{uuid.uuid4().hex}"
-        full = os.path.join(self.path, rel)
-        (
-            zorder_assign(df, cols, n_buckets)
-            .write.mode("errorifexists")
-            .partitionBy("__file")
-            .parquet(full)
-        )
-        back = self.spark.read.parquet(full)
-        aggs = [F.count(F.lit(1)).alias("n")]
-        for c in cols:
-            aggs += [F.min(c).alias(f"__lo_{c}"), F.max(c).alias(f"__hi_{c}")]
-        rows = back.groupBy("__file").agg(*aggs).collect()
+        laid.write.mode("errorifexists").partitionBy("__file").parquet(full)
+        rows = layout_stats(self.spark.read.parquet(full), cols).collect()
         entries = []
         for r in sorted(rows, key=lambda r: r["__file"]):
-            e: dict = {"dir": f"{rel}/__file={r['__file']}", "rows": r["n"]}
+            e: dict = {"dir": f"{rel}/__file={r['__file']}", "rows": r["n_rows"]}
             multi = {}
             for c in cols:
-                lo, hi = _stat_value(r[f"__lo_{c}"]), _stat_value(r[f"__hi_{c}"])
+                lo, hi = _stat_value(r[f"min_{c}"]), _stat_value(r[f"max_{c}"])
                 if lo is not None and hi is not None:
                     multi[c] = {"min": lo, "max": hi}
-            if multi:
+            if cols[0] in multi:
+                e["stats"] = {"col": cols[0], **multi[cols[0]]}
+            if len(cols) > 1 and multi:
                 e["stats_multi"] = multi
-                c0 = cols[0]
-                if c0 in multi:
-                    e["stats"] = {"col": c0, **multi[c0]}
             entries.append(e)
         return entries
 
@@ -425,18 +395,47 @@ class TxnTable:
             f"rows violate CHECK constraint(s) {names} on {self.path}"
         )
 
+    def _check_new_rows(self, checked: set[str], constraints: dict[str, str],
+                        rows, drop: str | None = None) -> None:
+        """Validate a write's incoming rows (``rows()``) once per
+        distinct CHECK set (fingerprints in ``checked``), so a retry
+        re-validates only when a constraint landed mid-race.  A
+        violation drops the write's data directory ``drop``."""
+        fp = json.dumps(constraints, sort_keys=True)
+        if not constraints or fp in checked:
+            return
+        try:
+            self._check_constraints(rows(), constraints)
+        except ConstraintViolation:
+            if drop is not None:
+                self._drop_data(drop)
+            raise
+        checked.add(fp)
+
+    def _evolved_schema(self, schema_json: str, df: DataFrame) -> str:
+        """The recorded schema evolved by `df` — Spark's own union
+        promotion: new columns are added, shared ones may widen (e.g.
+        int→long; Spark 4 parquet type widening reads old files)."""
+        return (
+            self.spark.createDataFrame([], _struct(schema_json))
+            .unionByName(df, allowMissingColumns=True)
+            .schema.json()
+        )
+
     def _drop_data(self, rel: str) -> None:
         shutil.rmtree(os.path.join(self.path, rel), ignore_errors=True)
 
-    def _read_dirs(self, dirs: list[str], schema_json: str | None) -> DataFrame:
-        from pyspark.sql.types import StructType
+    def _drop_written(self, add: list[dict]) -> None:
+        """`on_stale` for a rewrite built against a stale snapshot:
+        drop the physical roots of its add entries."""
+        for root in {_data_root(a["dir"]) for a in add}:
+            self._drop_data(root)
 
+    def _read_dirs(self, dirs: list[str], schema_json: str | None) -> DataFrame:
         if not dirs:
             if schema_json is None:
                 raise ValueError("empty table with no recorded schema")
-            return self.spark.createDataFrame(
-                [], StructType.fromJson(json.loads(schema_json))
-            )
+            return self.spark.createDataFrame([], _struct(schema_json))
         paths = [os.path.join(self.path, d) for d in dirs]
         if schema_json is not None:
             # read under the SNAPSHOT's recorded schema: after a
@@ -445,9 +444,7 @@ class TxnTable:
             # null-fills them (per-file pruning still applies), and
             # time travel to a pre-evolution version keeps the old
             # schema because its snapshot records the old JSON
-            return self.spark.read.schema(
-                StructType.fromJson(json.loads(schema_json))
-            ).parquet(*paths)
+            return self.spark.read.schema(_struct(schema_json)).parquet(*paths)
         return self.spark.read.parquet(*paths)
 
     def read(self, version: int | None = None) -> DataFrame:
@@ -464,20 +461,22 @@ class TxnTable:
         self,
         op: str,
         build,  # Snapshot -> (add_entries, remove_dirs) ; data already written
-        rebase_safe,  # (our (add,remove), winning commit dict) -> bool
         max_retries: int,
+        rebase_safe=None,  # (our (add,remove), winning commit dict) -> bool
         on_stale=None,  # add_entries -> None: reclaim snapshot-dependent data
         schema_json: str | None = None,  # fallback when the table is new
         txn: tuple[str, int] | None = None,  # (app, id) idempotence marker
         schema_from=None,  # () -> json | None: evolved schema set by build
-        extra: dict | None = None,  # additional payload fields (constraints)
+        extra=None,  # () -> dict: additional payload fields set by build
     ) -> int:
-        """Shared optimistic-concurrency loop.  `build` runs against a
-        fresh snapshot and returns the rewrite; on a lost publish the
-        winning commit is examined — if it satisfies `rebase_safe` the
-        same rewrite is re-published at a higher version (no data
-        re-written, no re-read), else `on_stale` reclaims the
-        snapshot-dependent data directories and `build` re-runs."""
+        """The one optimistic-concurrency loop every write goes
+        through.  `build` runs against a fresh snapshot and returns
+        the rewrite; on a lost publish the winning commit is examined
+        — if it satisfies `rebase_safe` the same rewrite is
+        re-published at a higher version (no data re-written, no
+        re-read), else `on_stale` reclaims the snapshot-dependent data
+        directories and `build` re-runs (always, without
+        `rebase_safe`)."""
         attempts = 0
         while attempts < max_retries:
             snap = self.snapshot()
@@ -499,12 +498,13 @@ class TxnTable:
             }
             if txn is not None:
                 payload["txn"] = {"app": txn[0], "id": txn[1]}
-            if extra:
-                payload.update(extra() if callable(extra) else extra)
+            if extra is not None:
+                payload.update(extra())
             while attempts < max_retries:
                 attempts += 1
                 if self._publish(version, payload):
-                    self._maybe_checkpoint(self.snapshot(version))
+                    if (version + 1) % self.checkpoint_interval == 0:
+                        self._checkpoint(self.snapshot(version))
                     return version
                 try:
                     winner = self._read_commit(version)
@@ -512,6 +512,7 @@ class TxnTable:
                     winner = None  # publish failed without a visible winner
                 if (
                     winner is not None
+                    and rebase_safe is not None
                     # a winner that changed the recorded schema (e.g. an
                     # evolve_schema merge) must NOT be rebased over: our
                     # payload would stamp the stale schema back onto the
@@ -530,18 +531,17 @@ class TxnTable:
                 if on_stale is not None:
                     on_stale(add)
                 break
-            else:
-                break
         raise CommitConflict(
             f"lost {max_retries} optimistic commits on {self.path} ({op})"
         )
 
     def append(self, df: DataFrame, stats_col: str | None = None,
                max_retries: int = 20, evolve_schema: bool = False) -> int:
-        """Blind INSERT: no table read, conflicts never invalidate the
-        write — every lost race simply rebases to the next version.
-        The add carries the DataFrame's own schema so the first commit
-        defines the table.
+        """Blind INSERT: no table read, and a lost race never rewrites
+        the data — it only re-runs the cheap checks below against the
+        fresh snapshot and publishes at the next version.  The add
+        carries the DataFrame's own schema so the first commit defines
+        the table.
 
         ``evolve_schema=True`` (the Delta ``mergeSchema`` write
         analog): a frame with NEW columns widens the recorded schema
@@ -554,65 +554,44 @@ class TxnTable:
         from the winning schema."""
         entry = self._write_data(df, stats_col)
         schema_json = df.schema.json()
-        attempts = 0
-        checked_sets: set[str] = set()
-        while attempts < max_retries:
-            snap = self.snapshot()
+        checked: set[str] = set()
+        state: dict = {}
+
+        def build(snap: Snapshot):
+            diverged = snap.schema_json not in (None, schema_json)
+            evolved = (
+                self._evolved_schema(snap.schema_json, df)
+                if evolve_schema and diverged
+                else None
+            )
             # enforce CHECK constraints against THIS snapshot's set;
-            # re-snapshotting every iteration means a constraint that
-            # lands mid-race is re-validated, never bypassed by rebase.
+            # the loop re-snapshots every attempt, so a constraint that
+            # lands mid-race is re-validated, never bypassed.
             # Validate under the schema the data will READ back with
             # (evolve-appends missing a constrained evolved column are
             # null-filled → NULL passes CHECK, the same verdict a later
             # reader reaches; a raw read would AnalysisException on the
             # absent column instead)
-            cfp = json.dumps(snap.constraints, sort_keys=True)
-            if snap.constraints and cfp not in checked_sets:
-                read_schema = None
-                if evolve_schema and snap.schema_json is not None:
-                    from pyspark.sql.types import StructType
-
-                    base = StructType.fromJson(json.loads(snap.schema_json))
-                    read_schema = (
-                        self.spark.createDataFrame([], base)
-                        .unionByName(df.limit(0), allowMissingColumns=True)
-                        .schema.json()
-                    )
-                try:
-                    self._check_constraints(
-                        self._read_dirs([entry["dir"]], read_schema),
-                        snap.constraints,
-                    )
-                except ConstraintViolation:
-                    self._drop_data(entry["dir"])
-                    raise
-                checked_sets.add(cfp)
-            evolved_json: str | None = None
-            if (evolve_schema and snap.schema_json is not None
-                    and snap.schema_json != schema_json):
-                from pyspark.sql.types import StructType
-
-                base = StructType.fromJson(json.loads(snap.schema_json))
-                evolved_json = (
-                    self.spark.createDataFrame([], base)
-                    .unionByName(df.limit(0), allowMissingColumns=True)
-                    .schema.json()
-                )
-            elif snap.schema_json is not None and snap.schema_json != schema_json:
+            self._check_new_rows(
+                checked, snap.constraints,
+                lambda: self._read_dirs([entry["dir"]], evolved),
+                drop=entry["dir"],
+            )
+            state["schema"] = evolved
+            if diverged and not evolve_schema:
                 # the module contract is fail-loud on divergence: an
                 # unchecked mismatched append would commit fine and
                 # _read_dirs' explicit-schema read would then silently
-                # null-fill missing columns and drop extra ones
-                from pyspark.sql.types import StructType
-
-                base = StructType.fromJson(json.loads(snap.schema_json))
-                # name->type sets (parquet + explicit-schema read matches
-                # by NAME, so column order is harmless; nullability is
-                # advisory in parquet and Spark frames flip it freely)
+                # null-fill missing columns and drop extra ones.
+                # Compare name->type sets (parquet + explicit-schema read
+                # matches by NAME, so column order is harmless;
+                # nullability is advisory in parquet and Spark frames
+                # flip it freely)
                 shape = lambda st: sorted(  # noqa: E731
                     ((f.name, f.dataType) for f in st.fields),
                     key=lambda t: t[0],
                 )
+                base = _struct(snap.schema_json)
                 if shape(df.schema) != shape(base):
                     self._drop_data(entry["dir"])
                     raise ValueError(
@@ -620,23 +599,11 @@ class TxnTable:
                         f"recorded schema: table {shape(base)}, frame "
                         f"{shape(df.schema)}"
                     )
-            version = snap.version + 1
-            payload = {
-                "version": version,
-                "op": "append",
-                "read_version": snap.version,
-                "add": [entry],
-                "remove": [],
-                "schema": evolved_json or snap.schema_json or schema_json,
-                "ts": time.time(),
-                "writer": f"{os.getpid()}-{uuid.uuid4().hex[:8]}",
-            }
-            attempts += 1
-            if self._publish(version, payload):
-                self._maybe_checkpoint(self.snapshot(version))
-                return version
-        raise CommitConflict(
-            f"lost {max_retries} optimistic commits on {self.path} (append)"
+            return [entry], []
+
+        return self._commit_loop(
+            "append", build, max_retries, schema_json=schema_json,
+            schema_from=lambda: state["schema"],
         )
 
     def overwrite(self, df: DataFrame, stats_col: str | None = None,
@@ -644,29 +611,21 @@ class TxnTable:
         """Full-table replace (the reference's seed-reset shape, S9).
         The replacement data is snapshot-independent, so a lost race
         only re-runs the cheap `build` (recomputing the remove list
-        against the fresh snapshot) — never the data write."""
+        against the fresh snapshot) — never the data write.  It never
+        rebases: the remove list must cover every concurrent commit."""
         entry = self._write_data(df, stats_col)
         checked: set[str] = set()
 
         def build(snap: Snapshot):
-            cfp = json.dumps(snap.constraints, sort_keys=True)
-            if snap.constraints and cfp not in checked:
-                try:
-                    self._check_constraints(
-                        self._read_dirs([entry["dir"]], None), snap.constraints
-                    )
-                except ConstraintViolation:
-                    self._drop_data(entry["dir"])
-                    raise
-                checked.add(cfp)
+            self._check_new_rows(
+                checked, snap.constraints,
+                lambda: self._read_dirs([entry["dir"]], None),
+                drop=entry["dir"],
+            )
             return [entry], snap.dirs
 
-        def rebase_safe(ours, winner) -> bool:
-            return False  # the remove list must cover every concurrent commit
-
         return self._commit_loop(
-            "overwrite", build, rebase_safe, max_retries,
-            schema_json=df.schema.json(),
+            "overwrite", build, max_retries, schema_json=df.schema.json()
         )
 
     def last_txn(self, app: str) -> int | None:
@@ -739,29 +698,21 @@ class TxnTable:
 
         def overlaps(entry: dict) -> bool:
             s = entry.get("stats")
-            if s is None or u is None or s.get("col") != k0:
-                return True  # no stats -> cannot prune (correct, unskipped)
-            try:
-                return not (s["max"] < u["min"] or s["min"] > u["max"])
-            except TypeError:  # mixed stat types (schema drift): don't prune
-                return True
+            if u is None or (s is not None and s.get("col") != k0):
+                return True  # no comparable stats -> cannot prune
+            return _overlaps(s, u["min"], u["max"])
 
         state: dict = {}
+        checked: set[str] = set()
 
         def build(snap: Snapshot):
-            cfp = json.dumps(snap.constraints, sort_keys=True)
-            if snap.constraints and cfp not in state.setdefault("checked", set()):
-                # violating update rows abort before any rewrite; the
-                # orphaned update directory is vacuum's to reclaim
-                # (same contract as the schema-mismatch aborts below)
-                self._check_constraints(upd_df, snap.constraints)
-                state["checked"].add(cfp)
+            # violating update rows abort before any rewrite (the
+            # staging directory is dropped on the way out)
+            self._check_new_rows(checked, snap.constraints, lambda: upd_df)
             touched = [d for d in snap.dirs if overlaps(snap.files[d])]
             state["touched"] = set(touched)
             if snap.schema_json is not None:
-                from pyspark.sql.types import StructType
-
-                base = StructType.fromJson(json.loads(snap.schema_json))
+                base = _struct(snap.schema_json)
                 base_names = {f.name for f in base.fields}
                 upd_names = {f.name for f in upd_df.schema.fields}
                 missing = [f.name for f in base.fields if f.name not in upd_names]
@@ -783,14 +734,9 @@ class TxnTable:
                         "evolve_schema=True to add them"
                     )
                 if evolve_schema:
-                    # evolved schema = Spark's own union promotion of
-                    # (target, updates) — shared columns may widen (e.g.
-                    # int→long); untouched directories' narrower files
-                    # read back widened (Spark 4 parquet type widening)
-                    empty_tgt = self.spark.createDataFrame([], base)
-                    state["schema_json"] = empty_tgt.unionByName(
-                        upd_df, allowMissingColumns=True
-                    ).schema.json()
+                    state["schema_json"] = self._evolved_schema(
+                        snap.schema_json, upd_df
+                    )
             if touched:
                 tgt = self._read_dirs(touched, snap.schema_json)
                 kept = tgt.join(
@@ -801,38 +747,22 @@ class TxnTable:
                 )
             else:
                 out = upd_df
-            entry = self._write_data(out, k0)
-            if snap.version < 0:
-                # first commit defines the schema
-                return [entry], []
-            return [entry], touched
+            # on a new table `touched` is empty and the commit's schema
+            # falls back to the update frame's: the first commit defines it
+            return [self._write_data(out, k0)], touched
 
         def rebase_safe(ours, winner) -> bool:
             """The winning commit is invisible to this rewrite iff it
             neither removed anything we read/removed nor added data in
             our key range (their keys can then not collide with ours)."""
-            _, our_remove = ours
             if set(winner.get("remove", [])) & state["touched"]:
                 return False
-            for a in winner.get("add", []):
-                s = a.get("stats")
-                if s is None or u is None or s.get("col") != k0:
-                    return False
-                try:
-                    if not (s["max"] < u["min"] or s["min"] > u["max"]):
-                        return False
-                except TypeError:
-                    return False
-            return True
-
-        def on_stale(add):
-            for a in add:  # the rewrite was built against a stale snapshot
-                self._drop_data(a["dir"])
+            return not any(overlaps(a) for a in winner.get("add", []))
 
         try:
             return self._commit_loop(
-                "merge", build, rebase_safe, max_retries,
-                on_stale=on_stale, schema_json=updates.schema.json(),
+                "merge", build, max_retries, rebase_safe=rebase_safe,
+                on_stale=self._drop_written, schema_json=updates.schema.json(),
                 txn=txn, schema_from=lambda: state.get("schema_json"),
             )
         finally:
@@ -861,7 +791,9 @@ class TxnTable:
         conservatively rewritten.  A truthful hint never changes the
         result; a false one leaves matching rows alive — the same
         failure mode as a wrong predicate.  Without a hint the
-        table-wide rewrite is unchanged."""
+        table-wide rewrite is unchanged.  A delete reads table state,
+        so a lost race never rebases: it drops its rewrite and
+        rebuilds."""
 
         def overlaps(entry: dict) -> bool:
             if prune_hint is None:
@@ -871,22 +803,15 @@ class TxnTable:
             # hint may prune on ANY clustered column, not just the first
             s = (entry.get("stats_multi") or {}).get(col)
             if s is None:
-                s1 = entry.get("stats")
-                if s1 is None or s1.get("col") != col:
-                    return True  # no stats -> cannot prune (unskipped)
-                s = s1
-            try:
-                return not (s["max"] < lo or s["min"] > hi)
-            except TypeError:  # mixed stat types: don't prune
-                return True
-
-        state: dict = {}
+                s = entry.get("stats")
+                if s is not None and s.get("col") != col:
+                    return True  # no stats on the hint column: unskipped
+            return _overlaps(s, lo, hi)
 
         def build(snap: Snapshot):
             if snap.version < 0:
                 raise ValueError("delete_where on an empty table")
             touched = [d for d in snap.dirs if overlaps(snap.files[d])]
-            state["touched"] = set(touched)
             if not touched:
                 return [], []  # provably nothing to delete: no-op commit
             tgt = self._read_dirs(touched, snap.schema_json)
@@ -909,15 +834,8 @@ class TxnTable:
             entry = self._write_data(out, stats_col)
             return [entry], touched
 
-        def rebase_safe(ours, winner) -> bool:
-            return False  # a delete reads table state
-
-        def on_stale(add):
-            for a in add:
-                self._drop_data(a["dir"])
-
         return self._commit_loop(
-            "delete", build, rebase_safe, max_retries, on_stale=on_stale
+            "delete", build, max_retries, on_stale=self._drop_written
         )
 
     def optimize(
@@ -935,25 +853,10 @@ class TxnTable:
         100 TB this is the periodic background compaction; between
         runs correctness never depends on it — pruning just degrades
         toward rewrite-everything."""
-        state: dict = {}
-
-        def build(snap: Snapshot):
-            if snap.version < 0:
-                raise ValueError("optimize on an empty table")
-            df = self._read_dirs(snap.dirs, snap.schema_json)
-            k = target_dirs or max(1, min(len(snap.dirs), 32))
-            entries = self._write_clustered(df, cluster_col, k)
-            state["root"] = entries[0]["dir"].rsplit("/__bucket=", 1)[0]
-            return entries, snap.dirs
-
-        def rebase_safe(ours, winner) -> bool:
-            return False  # compaction reads the whole table
-
-        def on_stale(add):
-            self._drop_data(state["root"])  # one physical root for all buckets
-
-        return self._commit_loop(
-            "optimize", build, rebase_safe, max_retries, on_stale=on_stale
+        return self._compact(
+            "optimize", [cluster_col],
+            lambda df, k: linear_assign(df, cluster_col, k),
+            target_dirs, max_retries,
         )
 
     def optimize_zorder(
@@ -973,25 +876,29 @@ class TxnTable:
         dimension — the multi-tenant forget shape: cluster on
         (tenant, time) and both "forget tenant X" and "expire before
         T" deletes stay O(overlapping directories)."""
-        state: dict = {}
+        return self._compact(
+            "optimize_zorder", cols,
+            lambda df, k: zorder_assign(df, cols, k),
+            target_dirs, max_retries,
+        )
+
+    def _compact(self, name: str, cols: list[str], assign,
+                 target_dirs: int | None, max_retries: int) -> int:
+        """Both OPTIMIZE forms: rewrite the whole live table as the `k`
+        files `assign(df, k)` tags.  Compaction reads the whole table,
+        so a lost race never rebases: it drops its layout and rebuilds."""
 
         def build(snap: Snapshot):
             if snap.version < 0:
-                raise ValueError("optimize_zorder on an empty table")
+                raise ValueError(f"{name} on an empty table")
             df = self._read_dirs(snap.dirs, snap.schema_json)
+            if "__file" in df.columns:
+                raise ValueError(f"column name __file is reserved by {name}()")
             k = target_dirs or max(1, min(len(snap.dirs), 32))
-            entries = self._write_zordered(df, cols, k)
-            state["root"] = entries[0]["dir"].rsplit("/__file=", 1)[0]
-            return entries, snap.dirs
-
-        def rebase_safe(ours, winner) -> bool:
-            return False  # compaction reads the whole table
-
-        def on_stale(add):
-            self._drop_data(state["root"])  # one physical root for all files
+            return self._write_files(assign(df, k), cols), snap.dirs
 
         return self._commit_loop(
-            "optimize", build, rebase_safe, max_retries, on_stale=on_stale
+            "optimize", build, max_retries, on_stale=self._drop_written
         )
 
     def add_constraint(
@@ -1008,9 +915,8 @@ class TxnTable:
         (spell NOT NULL as ``col IS NOT NULL``).  ``restore()``
         restores data, not constraints (table metadata follows the
         log's last set/drop, the Delta property behavior)."""
-        state: dict = {}
 
-        def build(snap: Snapshot):
+        def new_set(snap: Snapshot) -> dict[str, str]:
             if snap.version < 0:
                 raise ValueError("add_constraint on an empty table")
             if name in snap.constraints:
@@ -1019,34 +925,31 @@ class TxnTable:
                 self._read_dirs(snap.dirs, snap.schema_json),
                 {name: check_sql},
             )
-            state["set"] = {**snap.constraints, name: check_sql}
-            return [], []
+            return {**snap.constraints, name: check_sql}
 
-        return self._commit_loop(
-            "set_constraint",
-            build,
-            lambda ours, winner: False,
-            max_retries,
-            extra=lambda: {"constraints": state["set"]},
-        )
+        return self._set_constraints(new_set, max_retries)
 
     def drop_constraint(self, name: str, max_retries: int = 10) -> int:
         """Remove a CHECK constraint (metadata-only commit)."""
+
+        def new_set(snap: Snapshot) -> dict[str, str]:
+            if name not in snap.constraints:
+                raise ValueError(f"constraint {name!r} does not exist")
+            return {k: v for k, v in snap.constraints.items() if k != name}
+
+        return self._set_constraints(new_set, max_retries)
+
+    def _set_constraints(self, new_set, max_retries: int) -> int:
+        """Metadata-only commit of the full CHECK set `new_set(snap)`,
+        recomputed on every lost race so concurrent changes compose."""
         state: dict = {}
 
         def build(snap: Snapshot):
-            if name not in snap.constraints:
-                raise ValueError(f"constraint {name!r} does not exist")
-            state["set"] = {
-                k: v for k, v in snap.constraints.items() if k != name
-            }
+            state["set"] = new_set(snap)
             return [], []
 
         return self._commit_loop(
-            "set_constraint",
-            build,
-            lambda ours, winner: False,
-            max_retries,
+            "set_constraint", build, max_retries,
             extra=lambda: {"constraints": state["set"]},
         )
 
@@ -1070,16 +973,11 @@ class TxnTable:
             raise ValueError("cannot restore an empty table state")
 
         def build(snap: Snapshot):
+            # a restore replaces the whole live set: never rebased
             return list(target.files.values()), snap.dirs
 
-        def rebase_safe(ours, winner) -> bool:
-            return False  # a restore replaces the whole live set
-
         return self._commit_loop(
-            "restore",
-            build,
-            rebase_safe,
-            max_retries,
+            "restore", build, max_retries,
             schema_from=lambda: target.schema_json,
         )
 
@@ -1121,7 +1019,7 @@ class TxnTable:
         # checkpoint at cutoff-1 — it references only post-cutoff state,
         # so vacuum is free to reclaim what the dropped versions held
         # (for the forget flow, cutoff = the delete commit itself)
-        self._force_checkpoint(self.snapshot(cutoff))
+        self._checkpoint(self.snapshot(cutoff))
         log = self._log_path()
         dropped: list[int] = []
         for v in versions:
@@ -1134,14 +1032,12 @@ class TxnTable:
                 pass  # concurrent truncate already dropped it
         # checkpoints strictly below the covering one reference only
         # dropped history — remove them so vacuum can reclaim
-        for f in os.listdir(log):
-            if f.startswith("checkpoint-") and f.endswith(".json"):
-                cv = int(f[len("checkpoint-") : -len(".json")])
-                if cv < cutoff:
-                    try:
-                        os.unlink(os.path.join(log, f))
-                    except FileNotFoundError:
-                        pass
+        for cv in self._checkpoint_versions():
+            if cv < cutoff:
+                try:
+                    os.unlink(os.path.join(log, _fmt_checkpoint(cv)))
+                except FileNotFoundError:
+                    pass
         return dropped
 
     def vacuum(self, retain_seconds: float = 3600.0) -> list[str]:
@@ -1149,29 +1045,28 @@ class TxnTable:
         `retain_seconds` (mtime).  The age guard is what keeps an
         in-flight writer's just-written-not-yet-committed directory
         safe — the same retention contract as Delta's VACUUM.  Note
-        referenced = ANY commit still in the log, so time travel keeps
-        working for every listed version; truncating old log entries
-        (and with them old versions) is a separate policy decision this
-        sandbox never needs."""
-        referenced: set[str] = set()
-        for c in self.history():
-            for a in c.get("add", []):
-                # an optimize commit references per-bucket SUBdirs of one
-                # physical root — protect the whole root directory
-                referenced.add("/".join(a["dir"].split("/")[:2]))
+        referenced = ANY commit still in the log or any surviving
+        checkpoint, so time travel keeps working for every listed
+        version; dropping old versions is the separate, explicit
+        :meth:`truncate_history` step.
+
+        A checkpoint that exists but cannot be parsed raises before
+        anything is deleted: after ``truncate_history`` it may be the
+        only reference to live data."""
+        # an optimize commit references per-file SUBdirs of one
+        # physical root — protect the whole root directory
+        referenced = {
+            _data_root(a["dir"]) for c in self.history() for a in c.get("add", [])
+        }
         # after truncate_history() a directory may be referenced ONLY by
         # the covering checkpoint (its adding commit is gone) — protect
         # everything any surviving checkpoint still maps
-        log = self._log_path()
-        for f in os.listdir(log):
-            if f.startswith("checkpoint-") and f.endswith(".json"):
-                try:
-                    with open(os.path.join(log, f)) as fh:
-                        cp = json.load(fh)
-                except (OSError, json.JSONDecodeError):
-                    continue
-                for d in cp.get("files", {}):
-                    referenced.add("/".join(d.split("/")[:2]))
+        for cv in self._checkpoint_versions():
+            try:
+                cp = self._read_checkpoint(cv)
+            except FileNotFoundError:
+                continue  # a concurrent truncate_history removed it
+            referenced.update(_data_root(d) for d in cp["files"])
         dropped = []
         data_root = os.path.join(self.path, DATA_DIR)
         now = time.time()

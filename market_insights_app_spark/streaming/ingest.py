@@ -145,22 +145,24 @@ def session_agg(
 LAST_REPLAY_QUERY = None
 
 
-def _replay_checkpoint_dir() -> str:
-    """Fresh checkpoint dir for a bounded replay drain, on a RAM-backed
-    filesystem when one is available.  A replay's checkpoint (offset
-    WAL, commit log, one state-store delta per partition per stateful
-    operator per batch) is written, fsynced and thrown away within
-    seconds — putting it on disk-backed /tmp made the fixed I/O cost
-    ~30-45 % of the whole interval-join drain (interleaved A/B r13:
-    11.7/4.4/5.5 s → 6.5/3.1/4.1 s on /dev/shm).  Durable pipelines
-    pass their own real checkpointLocation; this helper only serves
-    the drain-and-discard replay path, so volatility is correct.
+def _replay_checkpoint_dir(prefix: str = "mias_replay_ckpt_") -> str:
+    """Fresh ``<prefix>…`` scratch dir — a bounded replay drain's
+    checkpoint, or any other write-read-discard directory — on a
+    RAM-backed filesystem when one is available.  A replay's
+    checkpoint (offset WAL, commit log, one state-store delta per
+    partition per stateful operator per batch) is written, fsynced
+    and thrown away within seconds — putting it on disk-backed /tmp
+    made the fixed I/O cost ~30-45 % of the whole interval-join drain
+    (interleaved A/B r13: 11.7/4.4/5.5 s → 6.5/3.1/4.1 s on
+    /dev/shm).  Durable pipelines pass their own real
+    checkpointLocation; this helper only serves drain-and-discard
+    directories, so volatility is correct.
     Override base via SPARK_GRAFT_CKPT_BASE (e.g. point it at a fast
     scratch volume on a cluster)."""
     base = os.environ.get("SPARK_GRAFT_CKPT_BASE")
     if base is None and os.path.isdir("/dev/shm") and os.access("/dev/shm", os.W_OK):
         base = "/dev/shm"
-    return tempfile.mkdtemp(prefix="mias_replay_ckpt_", dir=base)
+    return tempfile.mkdtemp(prefix=prefix, dir=base)
 
 
 def run_available_now_to_memory(

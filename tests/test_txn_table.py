@@ -262,14 +262,35 @@ def test_merge_over_corrupt_live_file_raises_without_commit(spark, table):
     assert sorted(os.listdir(os.path.join(table.path, "_txn_log"))) == log
 
 
-def test_conflict_exhaustion_raises(spark, table, monkeypatch):
+_WRITE_OPS = {
+    "append": lambda t, s, n: t.append(_mk(s, [(2, "b")]), max_retries=n),
+    "overwrite": lambda t, s, n: t.overwrite(_mk(s, [(2, "b")]), max_retries=n),
+    "merge": lambda t, s, n: t.merge(_mk(s, [(1, "x")]), ["id"], max_retries=n),
+    "delete_where": lambda t, s, n: t.delete_where(F.col("id") == 1, max_retries=n),
+    "optimize": lambda t, s, n: t.optimize("id", max_retries=n),
+    "optimize_zorder": lambda t, s, n: t.optimize_zorder(["id"], max_retries=n),
+    "add_constraint": lambda t, s, n: t.add_constraint("pos", "id > 0", max_retries=n),
+    "restore": lambda t, s, n: t.restore(0, max_retries=n),
+}
+
+
+@pytest.mark.parametrize("op", sorted(_WRITE_OPS))
+def test_conflict_exhaustion_raises(spark, table, monkeypatch, op):
+    """Every write op gives up with CommitConflict after exactly
+    `max_retries` lost publishes and leaves the log untouched."""
     table.append(_mk(spark, [(1, "a")]), stats_col="id")
-    # force every publish to lose: pre-create the next N log entries
+    log_dir = os.path.join(table.path, "_txn_log")
+    log = sorted(os.listdir(log_dir))
+    published: list[int] = []
+    # force every publish to lose
     monkeypatch.setattr(
-        TxnTable, "_publish", lambda self, v, p: False, raising=True
+        TxnTable, "_publish",
+        lambda self, v, p: published.append(v) or False, raising=True,
     )
     with pytest.raises(CommitConflict):
-        table.merge(_mk(spark, [(1, "x")]), ["id"], max_retries=3)
+        _WRITE_OPS[op](table, spark, 3)
+    assert len(published) == 3
+    assert sorted(os.listdir(log_dir)) == log
 
 
 def test_vacuum_reclaims_only_unreferenced_old_dirs(spark, table):
@@ -290,6 +311,65 @@ def test_vacuum_reclaims_only_unreferenced_old_dirs(spark, table):
     fresh = os.path.join(data_root, "cafebabe")
     os.makedirs(fresh)
     assert table.vacuum(retain_seconds=3600) == []
+
+
+def test_vacuum_refuses_unreadable_checkpoint(spark, table, monkeypatch):
+    """After truncate_history the covering checkpoint can be the only
+    reference to live data.  vacuum must raise on a checkpoint it
+    cannot parse and delete nothing — skipping it would reclaim the
+    live directory holding ids 1-2.  A checkpoint that vanished under
+    a concurrent truncate is still skipped."""
+    table.append(_mk(spark, [(1, "a"), (2, "b")]), stats_col="id")
+    table.append(_mk(spark, [(3, "c")]), stats_col="id")
+    table.merge(_mk(spark, [(3, "C")]), ["id"])
+    table.truncate_history(1)
+    cp = os.path.join(table.path, "_txn_log", f"checkpoint-{2:020d}.json")
+    with open(cp) as fh:
+        good = fh.read()
+    with open(cp, "w") as fh:
+        fh.write("{not json")
+    data_root = os.path.join(table.path, "data")
+    for d in os.listdir(data_root):
+        os.utime(os.path.join(data_root, d), (1.0, 1.0))
+    before = sorted(os.listdir(data_root))
+    with pytest.raises(ValueError):
+        table.vacuum(retain_seconds=3600)
+    assert sorted(os.listdir(data_root)) == before
+    with open(cp, "w") as fh:
+        fh.write(good)
+    # a listed checkpoint that is gone by the time vacuum opens it
+    listed = TxnTable._checkpoint_versions
+    monkeypatch.setattr(
+        TxnTable, "_checkpoint_versions", lambda self: [0] + listed(self)
+    )
+    assert len(table.vacuum(retain_seconds=3600)) == 1  # only id 3's old dir
+    assert _rows(table.read()) == [(1, "a"), (2, "b"), (3, "C")]
+
+
+def test_checkpoint_fsynced_before_link(spark, table, monkeypatch):
+    """truncate_history unlinks log entries once its covering
+    checkpoint is visible, so the checkpoint must be on disk before
+    the link that makes it visible."""
+    import market_insights_app_spark.storage.txnlog as txnlog
+
+    table.append(_mk(spark, [(1, "a")]), stats_col="id")
+    table.append(_mk(spark, [(2, "b")]), stats_col="id")
+    events: list[str] = []
+    real_fsync, real_link = txnlog.os.fsync, txnlog.os.link
+
+    def fsync(fd):
+        events.append("fsync")
+        return real_fsync(fd)
+
+    def link(src, dst):
+        events.append(os.path.basename(dst))
+        return real_link(src, dst)
+
+    monkeypatch.setattr(txnlog.os, "fsync", fsync)
+    monkeypatch.setattr(txnlog.os, "link", link)
+    table.truncate_history(1)
+    i = events.index(f"checkpoint-{1:020d}.json")
+    assert i > 0 and events[i - 1] == "fsync"
 
 
 def test_optimize_restores_clustering(spark, table):
