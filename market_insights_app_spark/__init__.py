@@ -35,11 +35,12 @@ __version__ = "0.1.0"
 # setdefault: an explicit user/operator setting always wins.
 import os as _os
 
-for _var in (
+BLAS_THREAD_VARS = (
     "OPENBLAS_NUM_THREADS",
     "OMP_NUM_THREADS",
     "MKL_NUM_THREADS",
     "NUMEXPR_NUM_THREADS",
-):
+)
+for _var in BLAS_THREAD_VARS:
     _os.environ.setdefault(_var, "1")
 del _os, _var

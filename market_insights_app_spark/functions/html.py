@@ -13,11 +13,10 @@ Two lanes, matching the repo's UDF policy:
   block-level segments, each scored by link density (anchor-text chars
   / total chars) and length; navigation, menus and link farms score
   high density / short length and are dropped, article prose survives.
-  Stdlib ``html.parser`` does the tokenization by default — no
-  external deps; an import-guarded resiliparse (lexbor C) kernel
-  (``engine='auto'|'resiliparse'``) swaps the tokenizer inside the
-  SAME mapInPandas shape for the ~10-50× per-core gain the crawl
-  probe priced (SCALE_NOTES).
+  Stdlib ``html.parser`` does the tokenization (:func:`_segments`) —
+  no external deps.  It is the per-page cost of the crawl path
+  (SCALE_NOTES, crawl front door); a faster tokenizer would replace
+  that one kernel and leave the mapInPandas shape as it is.
 
 At 100 TB both lanes are embarrassingly parallel per document; the
 regex lane is preferred wherever its output is good enough (it stays
@@ -132,74 +131,6 @@ def _segments(html: str) -> list[tuple[str, int, int]]:
     return segs
 
 
-def _segments_resiliparse(html: str) -> list[tuple[str, int, int]]:
-    """C-kernel twin of :func:`_segments`: the SAME block segmentation
-    and link-density accounting, driven by a resiliparse (lexbor) DOM
-    walk instead of the stdlib event parser — the swap-for-C point the
-    crawl probe priced at ~10-50× per core (SCALE_NOTES crawl
-    front-door).  Import-guarded: raises ImportError where resiliparse
-    is absent; :func:`_pick_segmenter` falls back to the stdlib kernel
-    (the PIL cross-check pattern).  Engine differences surface only on
-    MALFORMED markup (lexbor repairs the tree, html.parser streams
-    events as-is) — the golden-page parity test pins well-formed
-    pages."""
-    from resiliparse.parse.html import HTMLTree, NodeType
-
-    segs: list[tuple[str, int, int]] = []
-    buf: list[str] = []
-    st = {"total": 0, "anchor": 0, "in_anchor": 0, "in_drop": 0}
-
-    def flush() -> None:
-        text = " ".join("".join(buf).split())
-        if text:
-            segs.append((text, st["total"], st["anchor"]))
-        buf.clear()
-        st["total"] = 0
-        st["anchor"] = 0
-
-    def walk(node) -> None:
-        if node.type == NodeType.TEXT:
-            if not st["in_drop"]:
-                data = node.value or ""
-                buf.append(data)
-                n = len(data.strip())
-                st["total"] += n
-                if st["in_anchor"]:
-                    st["anchor"] += n
-            return
-        if node.type != NodeType.ELEMENT:
-            for ch in node.child_nodes:
-                walk(ch)
-            return
-        tag = (node.tag or "").lower()
-        if tag in _DROP_TAGS:
-            st["in_drop"] += 1
-        elif tag == "a":
-            st["in_anchor"] += 1
-        elif tag in _BLOCK_TAGS:
-            flush()
-        for ch in node.child_nodes:
-            walk(ch)
-        if tag in _DROP_TAGS:
-            st["in_drop"] = max(0, st["in_drop"] - 1)
-        elif tag == "a":
-            st["in_anchor"] = max(0, st["in_anchor"] - 1)
-        elif tag in _BLOCK_TAGS:
-            flush()
-
-    try:
-        tree = HTMLTree.parse(html or "")
-        root = tree.document
-        if root is not None:
-            walk(root)
-    except ImportError:
-        raise
-    except Exception:
-        pass  # malformed HTML: keep whatever parsed (stdlib contract)
-    flush()
-    return segs
-
-
 _HREF_RE = r"""(?i)<a\s[^>]*href\s*=\s*["']?(https?://[^"'\s>#]+)"""
 
 
@@ -254,49 +185,6 @@ def extract_outlinks(col: Column | str) -> Column:
     return F.array_distinct(F.regexp_extract_all(c, F.lit(_HREF_RE), 1))
 
 
-# worker-local 'auto' kernel cache: resolved once per Python worker,
-# NOT on the driver — a failed import is not cached by sys.modules, so
-# resolving per call would retry the filesystem probe on every row
-# batch
-_AUTO_KERNEL = None
-
-
-def _segments_auto(html: str) -> list[tuple[str, int, int]]:
-    """Worker-side 'auto' resolution (r9 ADVICE): resiliparse when
-    importable ON THE EXECUTING WORKER, stdlib otherwise.  A
-    driver-side probe alone is unsafe in heterogeneous
-    driver/executor environments — the driver importing resiliparse
-    says nothing about the workers, and shipping
-    ``_segments_resiliparse`` by reference would then die inside
-    mapInPandas with ImportError instead of falling back."""
-    global _AUTO_KERNEL
-    if _AUTO_KERNEL is None:
-        try:
-            from resiliparse.parse.html import HTMLTree  # noqa: F401
-
-            _AUTO_KERNEL = _segments_resiliparse
-        except ImportError:
-            _AUTO_KERNEL = _segments
-    return _AUTO_KERNEL(html)
-
-
-def _pick_segmenter(engine: str = "auto"):
-    """Resolve the segmentation kernel: 'stdlib' (always available),
-    'resiliparse' (fail-FAST driver-side ImportError where absent —
-    an explicit request must not silently degrade), or 'auto' — a
-    worker-side deferred probe that uses resiliparse where each
-    worker has it and the stdlib kernel everywhere else."""
-    if engine == "stdlib":
-        return _segments
-    if engine == "auto":
-        return _segments_auto
-    if engine != "resiliparse":
-        raise ValueError(f"unknown segmenter engine: {engine!r}")
-    from resiliparse.parse.html import HTMLTree  # noqa: F401
-
-    return _segments_resiliparse
-
-
 def extract_main_text(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -304,7 +192,6 @@ def extract_main_text(
     max_link_density: float = 0.33,
     min_segment_chars: int = 25,
     keep_cols: tuple[str, ...] = (),
-    engine: str = "auto",
 ) -> DataFrame:
     """Boilerplate-removing main-text extraction: block segments with
     link density ≤ ``max_link_density`` and at least
@@ -318,12 +205,7 @@ def extract_main_text(
     ``keep_cols`` passes input columns through the Arrow batch
     untouched (appended after the extraction columns, original types)
     — the crawl pipeline carries the page URI this way instead of
-    re-parsing the WARC for a self-join.
-
-    ``engine`` selects the segmentation kernel ('auto'/'stdlib'/
-    'resiliparse', see :func:`_pick_segmenter`): the mapInPandas shape
-    — schema, batching, URI passthrough, scoring gates — is IDENTICAL
-    in every lane; only the per-page tokenizer swaps."""
+    re-parsing the WARC for a self-join."""
     from pyspark.sql.types import (
         DoubleType,
         IntegerType,
@@ -345,15 +227,13 @@ def extract_main_text(
         base_fields + [in_fields[c] for c in keep_cols]
     )
 
-    seg_fn = _pick_segmenter(engine)
-
     def run(batches):
         import pandas as pd
 
         for pdf in batches:
             rows = []
             for idx, (i, html) in enumerate(zip(pdf[id_col], pdf[html_col])):
-                segs = seg_fn(html or "")
+                segs = _segments(html or "")
                 kept = [
                     t for (t, tot, anch) in segs
                     if tot >= min_segment_chars

@@ -71,14 +71,9 @@ def _affine_params(seed: int) -> tuple[int, int]:
 
 
 def _base_hash(col: Column) -> Column:
-    return F.pmod(F.xxhash64(col), F.lit(MERSENNE_P))
-
-
-def _base_hash_portable(col: Column) -> Column:
-    """Engine-portable 32-bit base hash: first 8 hex chars of md5, mod
-    p. ~2× the cost of xxhash64 (string md5 + hex decode) — used by the
-    differentially-tested portable MinHash variant, where any SQL engine
-    can reproduce the exact same signatures (DuckDB twin:
+    """The MinHash base hash: first 8 hex chars of md5, mod p — 32
+    bits that any SQL engine reproduces exactly, so the whole LSH
+    pipeline is differentially tested (DuckDB twin:
     CAST('0x'||substr(md5(g),1,8) AS BIGINT) % p)."""
     h = F.conv(F.substring(F.md5(col), 1, 8), 16, 10).cast("long")
     return F.pmod(h, F.lit(MERSENNE_P))
@@ -86,11 +81,10 @@ def _base_hash_portable(col: Column) -> Column:
 
 def _hash_token(col: Column, seed: int) -> Column:
     """Deterministic token hash for the seed-th MinHash function:
-    one xxhash64 base hash + an affine permutation (a*h+b) mod p —
+    one md5-derived base hash + an affine permutation (a*h+b) mod p —
     the classic formulation; ~32× cheaper than re-hashing the token
     per seed. JVM-side, no UDF."""
-    a, b = _affine_params(seed)
-    return F.pmod(_base_hash(col) * F.lit(a) + F.lit(b), F.lit(MERSENNE_P))
+    return _permute(_base_hash(col), seed)
 
 
 def _permute(base: Column, seed: int) -> Column:
@@ -120,7 +114,6 @@ def minhash_signatures_df(
     text_col: str = "text",
     num_hashes: int = 32,
     shingle_n: int = 2,
-    portable: bool = False,
 ) -> DataFrame:
     """MinHash signatures as a DataFrame (id, h0..h{n-1}).
 
@@ -131,9 +124,8 @@ def minhash_signatures_df(
     5k docs, and worse at scale). Documents with zero shingles drop out
     (they cannot near-dup).
 
-    ``portable=True`` swaps the xxhash64 base hash for the md5-derived
-    one so any SQL engine can reproduce the signatures bit-for-bit
-    (differential oracle support); the engine default stays xxhash64.
+    The base hash is md5-derived (:func:`_base_hash`), so any SQL
+    engine reproduces the signatures bit-for-bit.
 
     Output: (id, sig: array<long>[num_hashes]). The aggregation itself
     stays the wide num_hashes-min form (one shuffle carrying
@@ -142,11 +134,10 @@ def minhash_signatures_df(
     downstream plan (banding, prefilter joins) is 2 columns wide
     instead of 2×num_hashes — narrower codegen, fewer analysis-time
     expressions, smaller join projections."""
-    base = _base_hash_portable if portable else _base_hash
     grams = df.select(
         F.col(id_col).alias("id"),
         F.explode(word_shingles(text_col, shingle_n)).alias("g"),
-    ).select("id", base(F.col("g")).alias("gh"))
+    ).select("id", _base_hash(F.col("g")).alias("gh"))
     hashed = grams.select(
         "id", *[_permute(F.col("gh"), i).alias(f"h{i}") for i in range(num_hashes)]
     )
@@ -167,15 +158,12 @@ def lsh_candidate_pairs(
     shingle_n: int = 2,
     sig: DataFrame | None = None,
     max_bucket_size: int | None = None,
-    portable: bool = False,
 ) -> DataFrame:
     """MinHash-LSH candidate pairs: signature → ``bands`` bands of
     ``num_hashes/bands`` rows → self-join within (band_idx, band_hash)
-    buckets → distinct (a < b) pairs.
-
-    ``portable=True``: bucket key is the comma-joined band values
-    (string) instead of their xxhash64 — identical bucketing semantics,
-    reproducible in any SQL engine for differential testing.
+    buckets → distinct (a < b) pairs.  The bucket key is the
+    comma-joined band values (a string), reproducible in any SQL
+    engine for differential testing.
 
     The self-join is an equi-join on the bucket key, so Spark shuffles
     on the bucket hash — no cross product. Returns (a, b) candidate
@@ -188,17 +176,11 @@ def lsh_candidate_pairs(
     information bands (standard LSH practice); None keeps everything.
     """
     if sig is None:
-        sig = minhash_signatures_df(
-            df, id_col, text_col, num_hashes, shingle_n, portable=portable
-        )
-    return _band_pairs(
-        _lsh_banded(sig, num_hashes, bands, portable), max_bucket_size
-    )
+        sig = minhash_signatures_df(df, id_col, text_col, num_hashes, shingle_n)
+    return _band_pairs(_lsh_banded(sig, num_hashes, bands), max_bucket_size)
 
 
-def _lsh_banded(
-    sig: DataFrame, num_hashes: int, bands: int, portable: bool
-) -> DataFrame:
+def _lsh_banded(sig: DataFrame, num_hashes: int, bands: int) -> DataFrame:
     """(id, band, bucket) band-membership table — the shared middle of
     :func:`lsh_candidate_pairs` (in-session) and
     :func:`lsh_band_index_write` (write-once bucketed layout)."""
@@ -206,9 +188,7 @@ def _lsh_banded(
 
     def band_key(b: int) -> Column:
         sl = F.slice("sig", b * rows_per_band + 1, rows_per_band)
-        if portable:
-            return F.array_join(F.transform(sl, lambda c: c.cast("string")), ",")
-        return F.xxhash64(sl)
+        return F.array_join(F.transform(sl, lambda c: c.cast("string")), ",")
 
     return sig.select(
         "id",
@@ -262,7 +242,6 @@ def lsh_band_index_write(
     num_hashes: int = 32,
     bands: int = 8,
     shingle_n: int = 2,
-    portable: bool = False,
     n_buckets: int = 32,
 ) -> None:
     """Write the MinHash band-membership table (id, band, bucket) ONCE
@@ -280,11 +259,9 @@ def lsh_band_index_write(
     tests/test_dedup_reference.py)."""
     from market_insights_app_spark.sources.bucketed import write_bucketed
 
-    sig = minhash_signatures_df(
-        df, id_col, text_col, num_hashes, shingle_n, portable=portable
-    )
+    sig = minhash_signatures_df(df, id_col, text_col, num_hashes, shingle_n)
     write_bucketed(
-        _lsh_banded(sig, num_hashes, bands, portable),
+        _lsh_banded(sig, num_hashes, bands),
         table,
         ["band", "bucket"],
         n_buckets=n_buckets,
@@ -301,8 +278,8 @@ def lsh_band_index_write(
     spark = df.sparkSession
     clear_managed_table(spark, f"{table}__params")
     spark.createDataFrame(
-        [(num_hashes, bands, shingle_n, portable)],
-        "num_hashes int, bands int, shingle_n int, portable boolean",
+        [(num_hashes, bands, shingle_n)],
+        "num_hashes int, bands int, shingle_n int",
     ).write.mode("overwrite").format("parquet").saveAsTable(
         f"{table}__params"
     )
@@ -325,16 +302,9 @@ def lsh_band_index_append(
 
     p = df_new.sparkSession.table(f"{table}__params").collect()[0]
     sig = minhash_signatures_df(
-        df_new,
-        id_col,
-        text_col,
-        p["num_hashes"],
-        p["shingle_n"],
-        portable=p["portable"],
+        df_new, id_col, text_col, p["num_hashes"], p["shingle_n"]
     )
-    append_bucketed(
-        _lsh_banded(sig, p["num_hashes"], p["bands"], p["portable"]), table
-    )
+    append_bucketed(_lsh_banded(sig, p["num_hashes"], p["bands"]), table)
 
 
 def lsh_candidate_pairs_from_index(
@@ -360,7 +330,6 @@ def minhash_near_dupes(
     bands: int = 8,
     shingle_n: int = 2,
     max_bucket_size: int | None = None,
-    portable: bool = False,
 ) -> DataFrame:
     """Candidate pairs verified by exact shingle-set Jaccard >= threshold.
     Output: (a, b, jaccard).
@@ -379,14 +348,13 @@ def minhash_near_dupes(
     # is rows × (num_hashes+1) longs — tiny next to the corpus — so
     # cache it rather than recompute the shingling per consumer.
     sig = minhash_signatures_df(
-        df, id_col, text_col, num_hashes, shingle_n, portable=portable
+        df, id_col, text_col, num_hashes, shingle_n
     ).persist(StorageLevel.MEMORY_AND_DISK)
     cands = lsh_candidate_pairs(
         num_hashes=num_hashes,
         bands=bands,
         sig=sig,
         max_bucket_size=max_bucket_size,
-        portable=portable,
     )
     sig_a = sig.select(F.col("id").alias("a"), F.col("sig").alias("sig_a"))
     sig_b = sig.select(F.col("id").alias("b"), F.col("sig").alias("sig_b"))

@@ -26,17 +26,12 @@ def _lower_tokens(text_col: str) -> Column:
     return tokens(F.lower(F.col(text_col)))
 
 
-def _bigrams_multiset(text_col: str) -> Column:
-    """Word bigrams WITH multiplicity (``word_shingles`` dedups, which
-    is right for Jaccard but wrong for repetition counting). Same
-    shifted-slice zip as word_shingles — O(tokens) per doc."""
-    return _bigrams_of(_lower_tokens(text_col))
-
-
 def _bigrams_of(toks: Column) -> Column:
-    """Bigram multiset off an already-tokenized array column — the
-    r13 single-tokenize lane (the regex tokenizer runs once per
-    corpus pass; bigram derivation is a cheap array zip)."""
+    """Word bigrams WITH multiplicity (``word_shingles`` dedups, which
+    is right for Jaccard but wrong for repetition counting) off an
+    already-tokenized array column — the r13 single-tokenize lane (the
+    regex tokenizer runs once per corpus pass; bigram derivation is a
+    cheap shifted-slice array zip, O(tokens) per doc)."""
     k = F.greatest(F.size(toks) - 1, F.lit(0))
     return F.zip_with(
         F.slice(toks, 1, k),

@@ -222,7 +222,7 @@ def hashed_ngram_buckets(
     into one of ``n_buckets`` buckets — WITH multiplicity (DSIR models
     gram counts, so this is deliberately not the distinct-shingle set
     the dedup family uses).  The md5-derived hash is engine-portable
-    (same arithmetic as dedup._base_hash_portable), so a DuckDB oracle
+    (same arithmetic as dedup._base_hash), so a DuckDB oracle
     replays the bucketing exactly."""
     from market_insights_app_spark.functions.text import norm_tokens
 
@@ -532,9 +532,10 @@ def poisson_weight(
     ``portable=True`` (the oracle-gated lane): md5 over the
     ``salt:id:replicate`` string, reproducible in any engine (the
     portable-hash contract shared with :func:`hash_fraction`).
-    ``portable=False`` (the engine lane, same dual-lane convention as
-    MinHash): multi-argument ``xxhash64`` — no string concatenation,
-    no cryptographic hash; measured 3.4× faster end-to-end at
+    ``portable=False`` (the engine lane, the same split as
+    ``dedup.simhash_df``'s ``portable`` flag): multi-argument
+    ``xxhash64`` — no string concatenation, no cryptographic hash;
+    measured 3.4× faster end-to-end at
     events-sf0.1 × 201 replicates (12.1 s vs 40.9 s).
     Same CDF thresholds either way; the lanes differ only in which
     uniform they draw."""

@@ -32,10 +32,11 @@ At 100 TB this parallelizes per WARC file with no shuffle anywhere —
 the first exchange of the whole crawl→corpus path is the downstream
 dedup's fingerprint groupBy.
 
-A second, independent lane (r10) turns the SAME records into a
-host-level link graph (codegen href scan, no Python) and feeds
-``operators/graph.pagerank`` as a per-document authority prior —
-see :func:`host_link_graph` / :func:`warc_to_documents_with_rank`.
+:func:`warc_to_documents_with_rank` adds a per-document authority
+prior: the SAME parsed pages also yield a host-level link graph
+(codegen href scan, no Python) that ``operators/graph.pagerank``
+ranks.  It parses each archive once — the page table is materialized
+a single time and both the documents and the link stages read it.
 """
 
 from __future__ import annotations
@@ -54,9 +55,9 @@ from market_insights_app_spark.sources.warc import read_warc, read_warc_stream
 
 def _pages_from_records(recs: DataFrame) -> DataFrame:
     """WARC response records → the parsed PAGE table (doc_id, html,
-    uri): the shared upstream of both the documents lane and the link
-    lane.  Pure scan-stage filter + select — this is the frame the
-    single-parse composition materializes once."""
+    uri): the shared upstream of the documents and link stages.  Pure
+    scan-stage filter + select — the frame
+    :func:`warc_to_documents_with_rank` materializes once."""
     return recs.filter(
         (F.col("http_status") == 200)
         & F.col("content_type").startswith("text/html")
@@ -174,8 +175,8 @@ def host_link_graph(recs: DataFrame) -> DataFrame:
 
 def host_link_graph_from_pages(pages: DataFrame) -> DataFrame:
     """:func:`host_link_graph` off an already-parsed page table
-    (doc_id, html, uri) — the lane the single-parse composition uses
-    so the link scan never re-reads the archives."""
+    (doc_id, html, uri), so :func:`warc_to_documents_with_rank`'s link
+    scan never re-reads the archives."""
     hrefs = pages.select(
         registered_domain(F.col("uri")).alias("src_host"),
         F.explode(extract_outlinks(F.col("html"))).alias("href"),
@@ -199,33 +200,30 @@ def host_pagerank(
     edges: DataFrame,
     iterations: int = 10,
     tiny_threshold: int = 0,
-    materialize_edges: bool = True,
 ) -> DataFrame:
     """PageRank over a (src_host, dst_host) string edge list → one
     (host, host_pagerank) row per host.  Hosts map to int64 node ids
     via xxhash64 (collision odds ≈ n²/2⁶⁵ — negligible at host
     cardinality) so the integer-grid pagerank operator
     (operators/graph.py) runs unchanged; ranks join back to names on
-    the same hash.  ``tiny_threshold`` passes through to
+    the same hash.  The edge list is always checkpointed eagerly, so
+    calling this runs the upstream href scan once, right away.
+    ``tiny_threshold`` passes through to
     :func:`operators.graph.pagerank`'s single-Arrow-task lane
     (bit-identical; 0 = off) — right for bounded host universes like
     fixtures and per-domain subgraphs, while a full-crawl host graph
     (millions of nodes) stays on the distributed lane."""
     from market_insights_app_spark.operators.graph import pagerank
 
-    # Materialize the string edge list ONCE (r12, default): it feeds
-    # THREE consumers — the int-edge frame (whose pagerank gate count
-    # and tiny/distributed lanes each evaluate it) and the name
-    # mapping joined back onto the ranks — and its upstream is the
-    # full crawl href scan, the chain's dominant cost.  The edge list
-    # itself is host-pair-bounded (orders of magnitude below the
-    # corpus), so the eager checkpoint is cheap at any scale;
-    # ContextCleaner frees the blocks when the result frame drops.
-    # ``materialize_edges=False`` preserves the pure-lazy shape for
-    # callers that document it (the r10 double-parse crawl lane, whose
-    # measured parse multiplicity IS its contract).
-    if materialize_edges:
-        edges = edges.localCheckpoint(eager=True)
+    # Materialize the string edge list ONCE (r12): it feeds THREE
+    # consumers — the int-edge frame (whose pagerank gate count and
+    # tiny/distributed lanes each evaluate it) and the name mapping
+    # joined back onto the ranks — and its upstream is the full crawl
+    # href scan, the chain's dominant cost.  The edge list itself is
+    # host-pair-bounded (orders of magnitude below the corpus), so the
+    # eager checkpoint is cheap at any scale; ContextCleaner frees the
+    # blocks when the result frame drops.
+    edges = edges.localCheckpoint(eager=True)
     e = edges.select(
         F.xxhash64("src_host").alias("src"),
         F.xxhash64("dst_host").alias("dst"),
@@ -265,7 +263,6 @@ def warc_to_documents_with_rank(
     max_link_density: float = 0.33,
     iterations: int = 10,
     pages_path: str | None = None,
-    single_parse: bool = True,
     parse_counter=None,
     tiny_threshold: int = 0,
 ) -> DataFrame:
@@ -277,22 +274,16 @@ def warc_to_documents_with_rank(
     Cost shape at 100 TB: the archives are parsed ONCE.  The parsed
     page table (doc_id, html, uri — already filtered to HTTP-200
     text/html, so smaller than the raw WARC bytes) is materialized a
-    single time and BOTH lanes — the documents/text lane and the link
-    lane's codegen href scan — run off it.  ``pages_path`` picks the
-    materialization: a path sinks the page table to parquet and
+    single time and BOTH stages — the documents/text stage and the
+    link stage's codegen href scan — run off it.  ``pages_path`` picks
+    the materialization: a path sinks the page table to parquet and
     re-reads it (the production ACID-ingest shape — survives the
-    session, feeds later reruns, column-pruned per lane: the link
-    lane reads only (html, uri)); None (default) uses an eager
+    session, feeds later reruns, column-pruned per stage: the link
+    stage reads only (html, uri)); None (default) uses an eager
     ``localCheckpoint`` (executor block storage, MEMORY_AND_DISK —
     the in-session shape; the blocks free when the result frame
     drops).  PageRank itself runs on the host graph (tiny), and the
     rank join back onto the corpus is a broadcast.
-
-    ``single_parse=False`` keeps the r10 double-parse lane (two
-    independent shuffle-free scans of the archives, nothing
-    materialized) — row-identical by construction and pinned so in
-    tests/test_crawl_pipeline.py; useful when the page table is too
-    hot to store and scan bandwidth is free.
 
     ``parse_counter`` (a Spark accumulator) counts archive parses —
     the single-parse law (counter == file count after one full
@@ -307,18 +298,6 @@ def warc_to_documents_with_rank(
     recs = read_warc(
         spark, path, record_types=("response",), parse_counter=parse_counter
     )
-    if not single_parse:
-        docs = _documents_from_records(
-            recs, min_chars, langs, max_link_density
-        )
-        rank = host_pagerank(
-            host_link_graph(recs),
-            iterations=iterations,
-            tiny_threshold=tiny_threshold,
-            materialize_edges=False,  # this lane's contract: nothing
-            # materialized, parse multiplicity measured as-is
-        )
-        return attach_host_rank(docs, rank)
     pages = _pages_from_records(recs)
     if pages_path is not None:
         pages.write.mode("overwrite").parquet(pages_path)

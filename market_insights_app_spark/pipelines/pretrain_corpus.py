@@ -110,7 +110,7 @@ def build_pretraining_corpus(
 
     gated = repetition_gate(train_in)
     exact = dedup_exact_content(gated)
-    near = dedup_corpus(exact, threshold=near_dup_threshold, portable=True)
+    near = dedup_corpus(exact, threshold=near_dup_threshold)
     clean = decontaminate(near, eval_set)
     stages = {
         "input": train_in,

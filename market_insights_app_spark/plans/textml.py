@@ -71,22 +71,21 @@ def q_ngram_jaccard(spark: SparkSession, sf: str) -> DataFrame:
 
 
 # r10 consolidation (sanctioned by the r9 verdict): the rows-only
-# registry rows `minhash_neardup` / `simhash_neardup` are RETIRED — the
-# xxhash64 engine lanes they exercised remain first-class operators
-# (minhash_near_dupes / simhash_near_dupes, default portable=False),
-# verified vs independent Python references in
-# tests/test_dedup_reference.py, while every pipeline stage is
-# hash-gated via the ★_portable twins below.
+# registry rows `minhash_neardup` / `simhash_neardup` are RETIRED.
+# MinHash has one lane (md5-derived base hash), so minhash_near_dupes
+# is hash-gated as-is by ★minhash_neardup_portable.  SimHash keeps its
+# 64-bit xxhash64 engine lane (default portable=False, verified vs
+# independent Python references in tests/test_dedup_reference.py) and
+# is hash-gated via its 32-bit ★simhash_neardup_portable twin.
 
 
 def q_minhash_neardup_portable(spark: SparkSession, sf: str) -> DataFrame:
     """The FULL MinHash-LSH pipeline (signatures → banding → candidate
-    pairs → estimate prefilter → exact-Jaccard verify) with the
-    md5-derived portable base hash and string band keys, so a DuckDB
-    oracle reproduces every stage bit-for-bit — a hard differential
-    gate on the whole LSH machinery, complementing the rows-only
-    xxhash64 engine lane (minhash_near_dupes, unit-gated)."""
-    return minhash_near_dupes(_docs(spark, sf), threshold=0.5, portable=True)
+    pairs → estimate prefilter → exact-Jaccard verify) — md5-derived
+    base hash and string band keys, so a DuckDB oracle reproduces
+    every stage bit-for-bit: a hard differential gate on the whole LSH
+    machinery."""
+    return minhash_near_dupes(_docs(spark, sf), threshold=0.5)
 
 
 def q_simhash_neardup_portable(spark: SparkSession, sf: str) -> DataFrame:
@@ -2828,7 +2827,7 @@ def q_split_leakage(spark: SparkSession, sf: str) -> DataFrame:
     from market_insights_app_spark.operators.sampling import hash_split
 
     docs = hash_split(_docs(spark, sf), id_col="doc_id", salt="corpus-v1")
-    return split_leakage_report(docs, threshold=0.5, portable=True)
+    return split_leakage_report(docs, threshold=0.5)
 
 
 TEXTML_ORACLES["split_leakage"] = f"""

@@ -13,6 +13,8 @@ import os
 
 from pyspark.sql import SparkSession
 
+from market_insights_app_spark import BLAS_THREAD_VARS
+
 
 def get_spark(
     app_name: str = "market-insights-spark",
@@ -36,21 +38,10 @@ def get_spark(
     # inherit the env via the JVM gateway (captured when THIS builder
     # creates the JVM — same caveat as driver.memory); executorEnv
     # carries the same pin to real cluster executors.
-    for var in (
-        "OPENBLAS_NUM_THREADS",
-        "OMP_NUM_THREADS",
-        "MKL_NUM_THREADS",
-        "NUMEXPR_NUM_THREADS",
-    ):
+    for var in BLAS_THREAD_VARS:
         os.environ.setdefault(var, "1")
     blas_pins = {
-        f"spark.executorEnv.{var}": os.environ[var]
-        for var in (
-            "OPENBLAS_NUM_THREADS",
-            "OMP_NUM_THREADS",
-            "MKL_NUM_THREADS",
-            "NUMEXPR_NUM_THREADS",
-        )
+        f"spark.executorEnv.{var}": os.environ[var] for var in BLAS_THREAD_VARS
     }
     builder = (
         SparkSession.builder.appName(app_name)

@@ -54,7 +54,9 @@ def parse_warc_bytes(data: bytes, warc_file: str = "") -> list[dict]:
     """Split one WARC file's bytes into record dicts (pure function —
     unit-testable without Spark).  Unknown/malformed trailing bytes
     stop the scan rather than raising: a truncated tail loses that
-    record only."""
+    record only — a record whose body is shorter than its
+    Content-Length is dropped, never emitted as a partial document
+    (a cut gzip member decompresses to exactly such a short body)."""
     if data[:2] == b"\x1f\x8b":
         data = _gunzip_members(data)
     records: list[dict] = []
@@ -82,6 +84,8 @@ def parse_warc_bytes(data: bytes, warc_file: str = "") -> list[dict]:
         except ValueError:
             break
         body_start = hdr_end + 4
+        if length < 0 or body_start + length > n:
+            break  # truncated (or nonsensical) body: drop the record
         body = data[body_start : body_start + length]
         pos = body_start + length
         rtype = headers.get("warc-type", "")

@@ -338,12 +338,11 @@ def test_single_parse_composition_parses_each_archive_once(
     spark, tmp_path
 ):
     """The r11 single-parse law: warc_to_documents_with_rank
-    materializes the parsed page table ONCE and runs BOTH lanes (text
+    materializes the parsed page table ONCE and runs BOTH stages (text
     + link) off it — the per-file parse accumulator lands exactly at
-    the archive count after a full action.  The r10 double-parse lane
-    (single_parse=False) re-parses per lane/action (strictly more
-    parses over the same files) but must stay row-identical, and the
-    pages_path (production ACID-ingest) shape must too.
+    the archive count after a full action.  The pages_path
+    (production ACID-ingest) shape must parse once too and return the
+    same rows.
 
     Accumulator-in-transformation caveat (r11 ADVICE): add() is
     at-least-once under task retries / speculation, so the exact
@@ -378,16 +377,6 @@ def test_single_parse_composition_parses_each_archive_once(
     single = sorted(tuple(r) for r in out.collect())
     assert len(single) == 4
     assert acc.value == 2  # one parse per archive, ever
-
-    acc2 = spark.sparkContext.accumulator(0)
-    double = sorted(
-        tuple(r)
-        for r in warc_to_documents_with_rank(
-            spark, path, single_parse=False, parse_counter=acc2
-        ).collect()
-    )
-    assert double == single
-    assert acc2.value > 2  # the shape single_parse removes
 
     acc3 = spark.sparkContext.accumulator(0)
     sunk = sorted(

@@ -97,10 +97,11 @@ def test_cited_scripts_exist_or_name_their_commit():
 
 
 def test_coverage_code_references_resolve():
-    """Every `<subpackage>/<module>.<attr>` reference in COVERAGE.md
-    (e.g. `storage/txnlog.TxnTable.merge`) imports and resolves, so a
-    rename or deletion cannot leave a stale row behind.  File
-    references (`<dir>/<name>.py`) are left to the scripts check."""
+    """Every `<subpackage>/<module>.<attr>` reference in COVERAGE.md,
+    README.md and SCALE_NOTES.md (e.g. `storage/txnlog.TxnTable.merge`)
+    imports and resolves, so a rename or deletion cannot leave a stale
+    row or note behind.  File references (`<dir>/<name>.py`) are left
+    to the scripts check."""
     import importlib
 
     pkg = "market_insights_app_spark"
@@ -108,20 +109,22 @@ def test_coverage_code_references_resolve():
         d for d in os.listdir(f"{REPO}/{pkg}")
         if os.path.isfile(f"{REPO}/{pkg}/{d}/__init__.py")
     }
-    cov = open(f"{REPO}/COVERAGE.md", encoding="utf-8").read()
-    refs = set(re.findall(
-        r"\b([a-z_]+)/([a-z_0-9]+)\.([A-Za-z_]\w*(?:\.[A-Za-z_]\w*)*)", cov
-    ))
     bad, checked = [], 0
-    for sub, mod, attr in sorted(refs):
-        if attr == "py" or sub not in subpackages:
-            continue
-        checked += 1
-        try:
-            obj = importlib.import_module(f"{pkg}.{sub}.{mod}")
-            for part in attr.split("."):
-                obj = getattr(obj, part)
-        except (ImportError, AttributeError) as e:
-            bad.append(f"{sub}/{mod}.{attr} ({e})")
-    assert checked, "no code references found in COVERAGE.md"
-    assert not bad, f"COVERAGE.md code references that do not resolve: {bad}"
+    for doc in ("COVERAGE.md", "README.md", "SCALE_NOTES.md"):
+        text = open(f"{REPO}/{doc}", encoding="utf-8").read()
+        refs = set(re.findall(
+            r"\b([a-z_]+)/([a-z_0-9]+)\.([A-Za-z_]\w*(?:\.[A-Za-z_]\w*)*)",
+            text,
+        ))
+        for sub, mod, attr in sorted(refs):
+            if attr == "py" or sub not in subpackages:
+                continue
+            checked += 1
+            try:
+                obj = importlib.import_module(f"{pkg}.{sub}.{mod}")
+                for part in attr.split("."):
+                    obj = getattr(obj, part)
+            except (ImportError, AttributeError) as e:
+                bad.append(f"{doc}: {sub}/{mod}.{attr} ({e})")
+    assert checked, "no code references found in the docs"
+    assert not bad, f"code references that do not resolve: {bad}"

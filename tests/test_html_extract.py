@@ -122,207 +122,6 @@ def test_extract_main_text_keep_cols_passthrough(spark):
     assert rows[2].text == ""  # NULL html still emits a reconciled row
 
 
-# --- segmenter-engine lanes (r9: the crawl probe's swap-for-C point) ---
-
-_GOLDEN_PAGES = [
-    # well-formed article page: title + nav link farm + prose + footer
-    (
-        "<html><head><title>T</title></head><body>"
-        "<nav><a href='/'>Home</a> <a href='/x'>X</a> <a href='/y'>Y</a></nav>"
-        "<article><h1>Headline words here</h1>"
-        "<p>This is the long-form article prose that easily clears the "
-        "minimum segment length and has zero anchors.</p>"
-        "<p>Second paragraph with a single <a href='z'>link</a> inside "
-        "plenty of surrounding prose so density stays low.</p></article>"
-        "<footer><a href='/about'>About</a></footer></body></html>"
-    ),
-    # tables + lists + entities
-    (
-        "<html><body><table><tr><td>cell one with enough text to count "
-        "as real content here</td></tr></table>"
-        "<ul><li>alpha &amp; beta &lt;gamma&gt;</li><li>delta</li></ul>"
-        "<pre>preformatted   block   text that is long enough to keep"
-        "</pre></body></html>"
-    ),
-    # script/style/comment containment
-    (
-        "<html><body><script>var x = 'never extracted';</script>"
-        "<style>.a{color:red}</style><!-- a comment -->"
-        "<p>Visible paragraph content that survives the extraction "
-        "gates without any trouble at all.</p></body></html>"
-    ),
-]
-
-
-def test_engine_stdlib_is_default_fallback(spark, monkeypatch):
-    """engine='auto' resolves WORKER-side (r9 ADVICE: a driver-only
-    probe is unsafe when executors lack the library) and falls back to
-    the stdlib kernel where resiliparse is absent; an explicit
-    engine='resiliparse' must fail FAST (driver-side) there; an
-    unknown engine is a contract error."""
-    import market_insights_app_spark.functions.html as html_mod
-    from market_insights_app_spark.functions.html import (
-        _pick_segmenter,
-        _segments,
-        _segments_auto,
-        extract_main_text,
-    )
-
-    monkeypatch.setattr(html_mod, "_AUTO_KERNEL", None)  # fresh probe
-
-    try:
-        import resiliparse  # noqa: F401
-
-        has_lib = True
-    except ImportError:
-        has_lib = False
-    # 'auto' always defers to the worker-side probe — never a
-    # driver-resolved kernel reference
-    assert _pick_segmenter("auto") is _segments_auto
-    if not has_lib:
-        with pytest.raises(ImportError):
-            _pick_segmenter("resiliparse")
-        # the worker-side probe lands on (and caches) the stdlib kernel
-        page = _GOLDEN_PAGES[0]
-        assert _segments_auto(page) == _segments(page)
-        assert html_mod._AUTO_KERNEL is _segments
-    with pytest.raises(ValueError, match="unknown segmenter engine"):
-        _pick_segmenter("lxml")
-    df = spark.createDataFrame(
-        [(0, _GOLDEN_PAGES[0])], "doc_id long, html string"
-    )
-    rows = extract_main_text(df, engine="auto").collect()
-    assert len(rows) == 1 and "article prose" in rows[0].text
-    assert rows[0].text == extract_main_text(df, engine="stdlib").collect()[0].text
-
-
-def test_resiliparse_kernel_golden_page_parity(spark):
-    """Guarded-lane parity (the PIL cross-check pattern): where
-    resiliparse IS installed, the C kernel must reproduce the stdlib
-    kernel's segments — text, totals and anchor accounting — on
-    well-formed golden pages, and the full mapInPandas output must
-    match row for row."""
-    pytest.importorskip("resiliparse")
-    from market_insights_app_spark.functions.html import (
-        _segments,
-        _segments_resiliparse,
-        extract_main_text,
-    )
-
-    for page in _GOLDEN_PAGES:
-        assert _segments_resiliparse(page) == _segments(page)
-    df = spark.createDataFrame(
-        list(enumerate(_GOLDEN_PAGES)), "doc_id long, html string"
-    )
-    a = sorted(tuple(r) for r in extract_main_text(df, engine="stdlib").collect())
-    b = sorted(
-        tuple(r) for r in extract_main_text(df, engine="resiliparse").collect()
-    )
-    assert a == b
-
-
-def test_resiliparse_walk_logic_via_mock_dom(monkeypatch):
-    """The resiliparse kernel's DOM traversal (drop-tag containment,
-    anchor-char accounting, block flush ordering) is real logic that
-    would otherwise only execute where the C lib is installed.  Drive
-    it here through a mock `resiliparse.parse.html` module whose tree
-    is built from the stdlib event parser — the walk must reproduce
-    the stdlib kernel's segments exactly on well-formed pages."""
-    import sys
-    import types
-    from html.parser import HTMLParser
-
-    class _Node:
-        def __init__(self, ntype, tag=None, value=None):
-            self.type = ntype
-            self.tag = tag
-            self.value = value
-            self.child_nodes = []
-
-    class _NodeType:
-        ELEMENT = "element"
-        TEXT = "text"
-        COMMENT = "comment"
-
-    _VOID = {"br", "img", "hr", "meta", "link", "input"}
-
-    class _TreeBuilder(HTMLParser):
-        def __init__(self):
-            super().__init__(convert_charrefs=True)
-            self.root = _Node(_NodeType.ELEMENT, tag="document")
-            self.stack = [self.root]
-
-        def handle_starttag(self, tag, attrs):
-            node = _Node(_NodeType.ELEMENT, tag=tag)
-            self.stack[-1].child_nodes.append(node)
-            if tag not in _VOID:
-                self.stack.append(node)
-
-        def handle_endtag(self, tag):
-            for i in range(len(self.stack) - 1, 0, -1):
-                if self.stack[i].tag == tag:
-                    del self.stack[i:]
-                    break
-
-        def handle_data(self, data):
-            self.stack[-1].child_nodes.append(
-                _Node(_NodeType.TEXT, value=data)
-            )
-
-        def handle_comment(self, data):
-            self.stack[-1].child_nodes.append(
-                _Node(_NodeType.COMMENT, value=data)
-            )
-
-    class _Tree:
-        def __init__(self, root):
-            self.document = root
-
-        @staticmethod
-        def parse(html):
-            b = _TreeBuilder()
-            b.feed(html or "")
-            b.close()
-            return _Tree(b.root)
-
-    mod = types.ModuleType("resiliparse.parse.html")
-    mod.HTMLTree = _Tree
-    mod.NodeType = _NodeType
-    pkg = types.ModuleType("resiliparse")
-    parse_pkg = types.ModuleType("resiliparse.parse")
-    monkeypatch.setitem(sys.modules, "resiliparse", pkg)
-    monkeypatch.setitem(sys.modules, "resiliparse.parse", parse_pkg)
-    monkeypatch.setitem(sys.modules, "resiliparse.parse.html", mod)
-
-    import market_insights_app_spark.functions.html as html_mod
-    from market_insights_app_spark.functions.html import (
-        _pick_segmenter,
-        _segments,
-        _segments_resiliparse,
-    )
-
-    # the worker-side 'auto' probe resolves (and caches) the C lane now
-    # that the module "exists"; reset the cache so an earlier test's
-    # fallback resolution can't leak in
-    monkeypatch.setattr(html_mod, "_AUTO_KERNEL", None)
-    assert _pick_segmenter("resiliparse") is _segments_resiliparse
-    assert (
-        html_mod._segments_auto(_GOLDEN_PAGES[0])
-        == _segments(_GOLDEN_PAGES[0])
-    )
-    assert html_mod._AUTO_KERNEL is _segments_resiliparse
-    for page in _GOLDEN_PAGES:
-        assert _segments_resiliparse(page) == _segments(page), page[:60]
-    # drop-tag containment specifically: script INSIDE an anchor
-    tricky = (
-        "<html><body><p>before text that is quite long here indeed"
-        "<a href='x'>link<script>var y;</script>text</a>after</p>"
-        "<ul><li>first item long enough to matter for the gates"
-        "</li><li>second</li></ul></body></html>"
-    )
-    assert _segments_resiliparse(tricky) == _segments(tricky)
-
-
 def test_extract_outlinks_edge_cases(spark):
     """The codegen href scan: quote styles, attribute order, case,
     fragment cutting, and the deliberate exclusions (relative,

@@ -105,7 +105,7 @@ def test_split_leakage_report_golden(spark):
     )
     got = {
         (r.rule, r.split_a, r.split_b): r
-        for r in split_leakage_report(docs, threshold=0.4, portable=True).collect()
+        for r in split_leakage_report(docs, threshold=0.4).collect()
     }
     ex = got[("exact", "train", "val")]
     assert ex.n_pairs == 2  # (1,2) and (2,3) cross; (1,3) is within-split
@@ -128,7 +128,5 @@ def test_pipeline_output_has_zero_leakage(spark, built):
         [(r.doc_id, r.text, r.split) for r in corpus],
         ["doc_id", "text", "split"],
     )
-    rows = split_leakage_report(
-        docs, threshold=0.5, portable=True
-    ).collect()
+    rows = split_leakage_report(docs, threshold=0.5).collect()
     assert rows == []

@@ -88,6 +88,32 @@ def test_parse_warc_gzip_members_and_truncation():
     assert len(recs_plain) == 5
 
 
+def test_parse_warc_short_body_drops_the_record():
+    """A record whose body is shorter than its Content-Length (a crawl
+    cut mid-record) is dropped, never emitted as half a page with
+    status 200 — in the plain form and as a truncated gzip member,
+    which decompresses to the same short body.  A negative
+    Content-Length is dropped the same way."""
+    info = _record("warcinfo", "", b"software: test\r\n",
+                   "application/warc-fields")
+    resp = _record("response", "http://ex.com/a", _http_response(_HTML),
+                   "application/http; msgtype=response")
+    cut = resp[:-40]  # 4 trailing CRLF bytes + 36 bytes of the body
+    assert [r["record_type"] for r in parse_warc_bytes(info + cut)] == [
+        "warcinfo"]
+    gz = gzip.compress(info) + gzip.compress(resp)[:-30]
+    assert [r["record_type"] for r in parse_warc_bytes(gz)] == ["warcinfo"]
+    # the complete forms still parse both records
+    assert len(parse_warc_bytes(info + resp)) == 2
+    assert len(parse_warc_bytes(gzip.compress(info) + gzip.compress(resp))) == 2
+    neg = resp.replace(
+        f"Content-Length: {len(_http_response(_HTML))}".encode(),
+        b"Content-Length: -5",
+    )
+    assert [r["record_type"] for r in parse_warc_bytes(info + neg)] == [
+        "warcinfo"]
+
+
 def test_parse_warc_corrupt_gzip_member_contained():
     """A corrupt (not merely truncated) gzip member must lose only the
     records from that member on — never raise out of the task."""
