@@ -206,11 +206,6 @@ def ttl_from_now(minutes: int = 0, days: int = 0) -> Column:
 
 
 # --- helpers shared by the registry ---------------------------------------
-def r4(c: Column) -> Column:
-    """Round to 4 dp — canonical rounding for oracle-compared aggregates."""
-    return F.round(c, 4)
-
-
 def r6(c: Column) -> Column:
     return F.round(c, 6)
 

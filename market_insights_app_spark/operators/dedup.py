@@ -17,21 +17,12 @@ from pyspark.sql import functions as F
 
 from market_insights_app_spark.functions.text import (
     md5_fingerprint,
-    normalize_text,
     word_shingles,
 )
 
 # ---------------------------------------------------------------------------
 # Exact dedup (D1/D2/D3: INSERT OR IGNORE on natural keys, db.py:44,126-131)
 # ---------------------------------------------------------------------------
-
-
-def dedup_exact_keys(df: DataFrame, key_cols: list[str]) -> DataFrame:
-    """D1: keep one row per natural key (reference: first insert wins;
-    Spark batch: dropDuplicates — arbitrary winner, use
-    ``first_wins`` or ``windows.latest_per_key`` when precedence
-    matters)."""
-    return df.dropDuplicates(key_cols)
 
 
 def first_wins(df: DataFrame, key_cols: list[str], order_col: str) -> DataFrame:

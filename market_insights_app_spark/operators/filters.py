@@ -72,30 +72,13 @@ def apply_conjunction(df: DataFrame, preds: list[Column]) -> DataFrame:
 
 
 def events_ts_range(df: DataFrame, start: str | None, end: str | None) -> DataFrame:
-    """Inclusive time-range filter on the canonical µs ``ts`` PLUS, when
-    the raw ``ts_ns`` column is present (sources/tables.py), the
-    equivalent nanosecond-space predicate. The raw predicate is what
-    reaches the parquet scan (PushedFilters → row-group pruning); the
-    µs predicate keeps the semantics authoritative. Bounds are ISO
+    """Inclusive time-range filter on ``ts``; both bounds reach the
+    parquet scan (PushedFilters → row-group pruning). Bounds are ISO
     dates/timestamps interpreted as UTC."""
-    import datetime as dt
-
-    def us(s: str) -> int:
-        d = dt.datetime.fromisoformat(s)
-        if d.tzinfo is None:
-            d = d.replace(tzinfo=dt.timezone.utc)
-        return int(d.timestamp() * 1_000_000)
-
-    has_raw = "ts_ns" in df.columns
     if start is not None:
         df = df.filter(F.col("ts") >= F.lit(start))
-        if has_raw:
-            df = df.filter(F.col("ts_ns") >= F.lit(us(start) * 1000))
     if end is not None:
         df = df.filter(F.col("ts") <= F.lit(end))
-        if has_raw:
-            # µs-truncated ts <= end ⇔ raw nanos < (end_us + 1) * 1000
-            df = df.filter(F.col("ts_ns") < F.lit((us(end) + 1) * 1000))
     return df
 
 

@@ -61,7 +61,6 @@ def analyze_ict(
         "*",
         W.slope("__sma", w, 2).alias("__s2"),
         W.slope("__sma", w, 5).alias("__s5"),
-        F.row_number().over(w).alias("__rn"),
     )
 
     key = F.struct(ts_col, id_col)
@@ -69,19 +68,13 @@ def analyze_ict(
 
     # rank the local extrema chronologically so "the last two" become
     # rank == max and rank == max-1 (W8 needs both, main.js:356-360)
-    hw = Window.partitionBy(*key_cols).orderBy(
-        F.col(ts_col).asc(), F.col(id_col).asc()
-    )
+    upto = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
     s3 = s2.withColumn(
         "__hi_rank",
-        F.sum(F.col("is_local_high").cast("int")).over(
-            hw.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        ),
+        F.sum(F.col("is_local_high").cast("int")).over(upto),
     ).withColumn(
         "__lo_rank",
-        F.sum(F.col("is_local_low").cast("int")).over(
-            hw.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        ),
+        F.sum(F.col("is_local_low").cast("int")).over(upto),
     )
     # r13: the last-extremum ranks ride an unbounded window over the
     # SAME key partitioning instead of a groupBy + join-back — the old

@@ -22,11 +22,12 @@ predicate against them.
 At 100 TB this is the periodic re-layout pass a multi-tenant table
 runs so that BOTH ``user_id`` and ``ts`` predicates (or symbol ×
 date, domain × crawl-week …) prune.  Measured (1M uniform 2-D rows,
-64 files, 1 %-per-axis boxes — scripts/zorder_probe.py): 1-D range
-layout skips 98.4 % on its own axis and 0 % on the other; Z-order
-skips 73.4 % / 79.7 % on each axis ALONE and 92.2 % on the 2-D box —
-the classic trade of a little best-axis pruning for pruning on every
-z-ordered dimension.  Layout write cost matched the 1-D pass (3.3 s
+64 files, 1 %-per-axis boxes —
+scripts/zorder_probe.py at commit bf32667): 1-D range layout skips
+98.4 % on its own axis and 0 % on the other; Z-order skips 73.4 % /
+79.7 % on each axis ALONE and 92.2 % on the 2-D box — the classic
+trade of a little best-axis pruning for pruning on every z-ordered
+dimension.  Layout write cost matched the 1-D pass (3.3 s
 vs 4.6 s at 1M rows).
 """
 

@@ -20,10 +20,6 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
-def order_desc_with_tiebreak(df: DataFrame, ts_col: str, id_col: str) -> DataFrame:
-    return df.orderBy(F.col(ts_col).desc(), F.col(id_col).desc())
-
-
 def page(
     df: DataFrame,
     order_by: list[Column],

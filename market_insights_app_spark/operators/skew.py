@@ -8,7 +8,7 @@ aggregation) and broadcast-unfriendly skewed joins (salt × replicate).
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
@@ -73,9 +73,3 @@ def key_histogram(df: DataFrame, key_cols: list[str], top: int = 20) -> DataFram
         .orderBy(F.col("n").desc())
         .limit(top)
     )
-
-
-def with_salt(col: Column, buckets: int) -> Column:
-    """Deterministic content-derived salt (hash-based, reproducible —
-    unlike rand) for co-partitioning pipelines."""
-    return F.pmod(F.xxhash64(col), F.lit(buckets))

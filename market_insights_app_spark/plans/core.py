@@ -78,8 +78,8 @@ def q_prices_keyset_page(spark: SparkSession, sf: str) -> DataFrame:
     from market_insights_app_spark.operators.pagination import keyset_page
 
     ev = _events(spark, sf).filter(F.col("event_type") == "click")
-    # coarse scan-space bound: (ts, id) < cursor implies ts <= cursor_ts;
-    # events_ts_range adds the raw-ns twin that reaches PushedFilters
+    # coarse scan-space bound: (ts, id) < cursor implies ts <= cursor_ts,
+    # which reaches PushedFilters
     ev = events_ts_range(ev, None, "2024-01-15")
     out = keyset_page(
         ev,

@@ -6,9 +6,9 @@ ordering match the Spark side exactly (see plans/core.py header).
 
 W_EVENTS = "PARTITION BY user_id ORDER BY ts, event_id"
 
-# events.ts is parquet TIMESTAMP(NANOS); the Spark side truncates to
-# microseconds at load (sources/tables.py), so every oracle reads events
-# through the identical truncation.
+# events.ts is a parquet microsecond timestamp, which the Spark side
+# reads as-is (sources/tables.py); every oracle reads events through a
+# microsecond truncation, a no-op on those files.
 EV_SUB = "(SELECT * REPLACE (make_timestamp(epoch_ns(ts) // 1000) AS ts) FROM events)"
 
 CORE_ORACLES: dict[str, str] = {

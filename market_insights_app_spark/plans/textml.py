@@ -3421,7 +3421,7 @@ def staged_q_zorder_skip_roundtrip(spark: SparkSession, sf: str) -> DataFrame:
     (false-negative-free skipping), whatever file boundaries the range
     partitioner sampled.  The skip RATIO is deliberately not in the
     gate (boundaries are sampling-dependent); it is priced in
-    scripts/zorder_probe.py and pinned directionally in
+    scripts/zorder_probe.py at commit bf32667 and pinned directionally in
     tests/test_zorder_layout.py."""
     import tempfile
 

@@ -57,9 +57,9 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.shuffle.partitions", shuffle)
         # Deterministic timestamp behavior for the differential oracle.
-        # No legacy nanosAsLong: Spark 4 reads parquet TIMESTAMP(NANOS)
-        # natively as TIMESTAMP_NTZ truncated to micros — identical to
-        # the driver's default session and to DuckDB's epoch_us.
+        # No legacy nanosAsLong: Spark 4 reads the microsecond parquet
+        # timestamps as TIMESTAMP_NTZ — identical to a plain default
+        # session and to DuckDB's epoch_us.
         .config("spark.sql.session.timeZone", "UTC")
         # Arrow-accelerated pandas exchange for the Pandas-UDF operators.
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")

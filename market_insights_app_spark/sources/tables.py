@@ -22,11 +22,8 @@ import os
 import stat
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from market_insights_app_spark.schemas import TESTDATA_TABLES
-
-DEFAULT_SF_DIR = "/root/testdata/sf0.001"
 
 # Resolved tables: absolute parquet path -> (session, stat signature,
 # frame). Each value is a complete tuple stored in one assignment, so a
@@ -37,10 +34,6 @@ DEFAULT_SF_DIR = "/root/testdata/sf0.001"
 # over a repeatedly-scanned table. Data caching stays opt-in so
 # correctness runs scan parquet.
 _RESOLVED: dict[str, tuple[SparkSession, object, DataFrame]] = {}
-
-
-def sf_dir_from_env(default: str = DEFAULT_SF_DIR) -> str:
-    return os.environ.get("SPARK_GRAFT_SF_DIR", default)
 
 
 def _signature(path: str) -> object:
@@ -56,31 +49,15 @@ def _alive(spark: SparkSession) -> bool:
     return spark.sparkContext._jsc is not None  # None once stopped
 
 
-def _read(spark: SparkSession, path: str, name: str) -> DataFrame:
-    df = spark.read.parquet(path)
-    if name == "events" and dict(df.dtypes).get("ts") == "bigint":
-        # Keep the raw nanos column: predicates on the converted ts
-        # cannot push through the arithmetic into the parquet scan, but
-        # an equivalent raw-space predicate on ts_ns can (row-group
-        # pruning at scale) — see operators.filters.events_ts_range.
-        df = df.withColumn("ts_ns", F.col("ts")).withColumn(
-            "ts", F.timestamp_micros(F.expr("ts div 1000"))
-        )
-    return df
-
-
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Load one testdata table. Schema comes from the parquet footer
     (already the exact types in schemas.TESTDATA); passing no explicit
     schema keeps vectorized reader + pushdown defaults intact.
 
-    events.ts is parquet TIMESTAMP(NANOS): Spark 4 reads it natively as
-    TIMESTAMP_NTZ truncated to microseconds — bit-identical to DuckDB's
-    ``epoch_us(ts)`` truncation, so both engines see the same instants
-    and NTZ predicates push down to the scan (row-group pruning). If an
-    enclosing session was built with the legacy ``nanosAsLong`` conf the
-    column arrives as a long of nanoseconds instead; ``_read``
-    canonicalizes that shape to the same microsecond timestamps.
+    events.ts is a parquet microsecond timestamp without a UTC
+    adjustment: Spark 4 reads it as TIMESTAMP_NTZ, the same instants
+    DuckDB's ``epoch_us(ts)`` sees, and NTZ predicates push down to the
+    scan (row-group pruning).
 
     Repeat calls on one live session return the same DataFrame while
     the files are unchanged (see the module docstring). A path that
@@ -104,7 +81,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             # Spark's cache matches plans by path, so the stale cached
             # data would otherwise answer the fresh read.
             frame.unpersist()
-    df = _read(spark, path, name)
+    df = spark.read.parquet(path)
     if os.environ.get("SPARK_GRAFT_CACHE_TABLES") == "1":
         df = df.cache()
     if sig is not None:

@@ -38,9 +38,9 @@ def events_file_stream(
     """Replay the events parquet as a micro-batched stream (ST1).
 
     The file source needs a directory, so the sf_dir is the basePath
-    with a glob for the events file. ts is parquet TIMESTAMP(NANOS),
-    which Spark 4 reads natively as TIMESTAMP_NTZ truncated to micros —
-    same canonical instants as the batch loader (sources/tables.py)."""
+    with a glob for the events file. ts is a parquet microsecond
+    timestamp, read as TIMESTAMP_NTZ — the same instants as the batch
+    loader (sources/tables.py)."""
     schema = T.StructType(
         [
             f if f.name != "ts" else T.StructField("ts", T.TimestampNTZType())
@@ -79,19 +79,9 @@ def tumbling_agg(
     key_col: str = "event_type",
     watermark: str = "1 hour",
 ) -> DataFrame:
-    """ST5 tumbling windows: per (window, key) count + sum(value)."""
-    return (
-        stream.withWatermark(ts_col, watermark)
-        .groupBy(F.window(F.col(ts_col), duration), F.col(key_col))
-        .agg(F.count(F.lit(1)).alias("n"), F.round(F.sum("value"), 4).alias("sum_value"))
-        .select(
-            F.col("window.start").alias("window_start"),
-            F.col("window.end").alias("window_end"),
-            key_col,
-            "n",
-            "sum_value",
-        )
-    )
+    """ST5 tumbling windows: a sliding window that slides by its own
+    duration."""
+    return sliding_agg(stream, duration, duration, ts_col, key_col, watermark)
 
 
 def sliding_agg(
@@ -102,6 +92,7 @@ def sliding_agg(
     key_col: str = "event_type",
     watermark: str = "1 hour",
 ) -> DataFrame:
+    """ST5 sliding windows: per (window, key) count + sum(value)."""
     return (
         stream.withWatermark(ts_col, watermark)
         .groupBy(F.window(F.col(ts_col), duration, slide), F.col(key_col))

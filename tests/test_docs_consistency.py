@@ -128,3 +128,66 @@ def test_coverage_code_references_resolve():
                 bad.append(f"{doc}: {sub}/{mod}.{attr} ({e})")
     assert checked, "no code references found in the docs"
     assert not bad, f"code references that do not resolve: {bad}"
+
+
+def test_kept_scripts_call_the_package_as_it_is():
+    """Every ``from market_insights_app_spark… import X`` in a
+    ``scripts/*.py`` resolves, and every keyword a script passes to a
+    package callable it imported (``X(kw=…)`` or ``module.f(kw=…)``) is
+    in that callable's signature.  Nothing else imports the scripts, so
+    without this a parameter removed from the package leaves a kept
+    tool broken until someone next runs it."""
+    import ast
+    import glob
+    import importlib
+    import inspect
+
+    pkg = "market_insights_app_spark"
+    scripts = sorted(glob.glob(f"{REPO}/scripts/*.py"))
+    assert scripts, "no scripts found"
+    bad, calls = [], 0
+    for path in scripts:
+        rel = os.path.relpath(path, REPO)
+        tree = ast.parse(open(path, encoding="utf-8").read(), rel)
+        bound = {}
+        for node in ast.walk(tree):
+            if not (isinstance(node, ast.ImportFrom) and node.level == 0
+                    and node.module and node.module.split(".")[0] == pkg):
+                continue
+            mod = importlib.import_module(node.module)
+            for alias in node.names:
+                try:
+                    obj = getattr(mod, alias.name)
+                except AttributeError:
+                    try:
+                        obj = importlib.import_module(f"{node.module}.{alias.name}")
+                    except ImportError:
+                        bad.append(f"{rel}:{node.lineno} {node.module}.{alias.name} does not resolve")
+                        continue
+                bound[alias.asname or alias.name] = obj
+        for node in ast.walk(tree):
+            if not isinstance(node, ast.Call):
+                continue
+            f = node.func
+            if isinstance(f, ast.Name) and f.id in bound:
+                target, label = bound[f.id], f.id
+            elif (isinstance(f, ast.Attribute) and isinstance(f.value, ast.Name)
+                  and inspect.ismodule(bound.get(f.value.id))):
+                label = f"{f.value.id}.{f.attr}"
+                target = getattr(bound[f.value.id], f.attr, None)
+                if target is None:
+                    bad.append(f"{rel}:{node.lineno} {label} does not resolve")
+                    continue
+            else:
+                continue
+            if not callable(target):
+                continue
+            calls += 1
+            params = inspect.signature(target).parameters
+            if any(p.kind is p.VAR_KEYWORD for p in params.values()):
+                continue
+            for kw in node.keywords:
+                if kw.arg is not None and kw.arg not in params:
+                    bad.append(f"{rel}:{node.lineno} {label}({kw.arg}=…) not in its signature")
+    assert calls, "no package calls found in the scripts"
+    assert not bad, f"scripts out of step with the package: {bad}"

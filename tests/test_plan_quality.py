@@ -34,8 +34,8 @@ def test_range_filter_pushed_to_scan(spark):
 
 
 def test_keyset_cursor_pushed_to_scan(spark):
-    """The keyset-pagination coarse cursor bound must reach the scan in
-    raw-ns space (deep pages stay O(limit) only if the scan prunes)."""
+    """The keyset-pagination coarse cursor bound must reach the scan
+    (deep pages stay O(limit) only if the scan prunes)."""
     from market_insights_app_spark.plans.registry import QUERIES
 
     p = plan_of(QUERIES["prices_keyset_page"](spark, SF_ORACLE))
@@ -511,8 +511,9 @@ def test_aqe_skew_join_engages_on_hot_key(spark):
     the fact side must come out of the shuffle marked ``skew=true`` on
     the executed SortMergeJoin, i.e. AQE split the oversized partition
     and replicated the matching side.  Thresholds are scaled down the
-    same way the 20 M-row probe (scripts/skew_probe.py) scales them,
-    so this is the identical mechanism a 100 TB hot key triggers."""
+    same way the 20 M-row probe scales them
+    (scripts/skew_probe.py at commit bf32667), so this is the identical
+    mechanism a 100 TB hot key triggers."""
     confs = {
         "spark.sql.autoBroadcastJoinThreshold": "-1",
         "spark.sql.adaptive.autoBroadcastJoinThreshold": "-1",

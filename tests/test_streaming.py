@@ -27,20 +27,17 @@ def test_stream_is_streaming(stream):
     assert stream.isStreaming
 
 
-def test_tumbling_agg_matches_batch(spark, stream):
-    from market_insights_app_spark.streaming.ingest import (
-        run_available_now_to_memory,
-        tumbling_agg,
-    )
+def _assert_window_agg_matches_batch(spark, agg, sink, *window):
+    from market_insights_app_spark.streaming.ingest import run_available_now_to_memory
 
-    run_available_now_to_memory(tumbling_agg(stream), "t_tumbling", "append")
+    run_available_now_to_memory(agg, sink, "append")
     got = {
         (r["window_start"], r["event_type"]): (r["n"], r["sum_value"])
-        for r in spark.sql("SELECT * FROM t_tumbling").collect()
+        for r in spark.sql(f"SELECT * FROM {sink}").collect()
     }
     batch = (
         _batch_events(spark)
-        .groupBy(F.window("ts", "15 minutes").alias("w"), "event_type")
+        .groupBy(F.window("ts", *window).alias("w"), "event_type")
         .agg(F.count(F.lit(1)).alias("n"), F.round(F.sum("value"), 4).alias("s"))
         .select(F.col("w.start").alias("ws"), "event_type", "n", "s")
     )
@@ -51,6 +48,17 @@ def test_tumbling_agg_matches_batch(spark, stream):
     for k, v in got.items():
         assert want[k] == v
     assert len(got) >= len(want) * 0.9
+
+
+def test_tumbling_agg_matches_batch(spark, stream):
+    from market_insights_app_spark.streaming.ingest import sliding_agg, tumbling_agg
+
+    _assert_window_agg_matches_batch(
+        spark, tumbling_agg(stream), "t_tumbling", "15 minutes"
+    )
+    _assert_window_agg_matches_batch(
+        spark, sliding_agg(stream), "t_sliding", "30 minutes", "15 minutes"
+    )
 
 
 def test_stream_dedup_drops_duplicates(spark):
