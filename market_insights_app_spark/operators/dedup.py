@@ -237,8 +237,7 @@ def lsh_band_index_write(
 ) -> None:
     """Write the MinHash band-membership table (id, band, bucket) ONCE
     as a catalog table bucketed by (band, bucket) — the write-once
-    layout for the OTHER big self-join production re-screens
-    repeatedly (the semdedup_bucketed pattern applied to LSH).  The
+    layout for a self-join that production re-screens repeatedly.  The
     expensive half of near-dup detection is the signature scan
     (shingling + ``num_hashes`` hash folds over every document) plus
     the band shuffle; both are paid here exactly once.  Every later

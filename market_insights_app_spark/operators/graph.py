@@ -428,392 +428,3 @@ def synthetic_link_graph(docs: DataFrame) -> DataFrame:
     for a in arms[1:]:
         out = out.union(a)
     return out
-
-
-def triangle_count(
-    edges: DataFrame, src: str = "src", dst: str = "dst"
-) -> DataFrame:
-    """Per-node triangle counts over an UNDIRECTED view of ``edges``
-    (direction and duplicates collapse; self-loops drop) — the classic
-    degree-ordered enumeration (Schank & Wagner 2005; the
-    MapReduce/Spark formulation in Suri & Vassilvitskii, WWW'11):
-
-    1. canonicalize each edge to (a < b), distinct;
-    2. orient every edge from its lower-(degree, id) endpoint to the
-       higher one — a total order, so each undirected edge appears
-       exactly once and each node's ORIENTED out-degree is O(sqrt m)
-       even at power-law hubs (a hub's edges point INTO it from its
-       lower-degree neighbors);
-    3. wedges = per-source pairs of out-neighbors (ordered by the same
-       total order, so each wedge enumerates once);
-    4. a wedge (u, v, w) closes into a triangle iff the (v, w) edge
-       exists — oriented v→w by construction — one left-semi join;
-    5. per-node counts = explode the three corners, one groupBy.
-
-    Scale shape: steps 2-5 are equi-joins and aggregations only (no
-    cartesian, no driver state); the degree orientation is what keeps
-    the wedge fan-out O(m^1.5) total instead of sum(deg²) — at a
-    power-law 100 TB link graph the hub arm would otherwise dominate
-    quadratically.  Every step is exact integer arithmetic, so a SQL
-    twin enumerating triangles the naive a<b<c way hash-matches.
-
-    Returns (node, triangles) for every node in at least one triangle.
-    """
-    e = edges.select(F.col(src).alias("a"), F.col(dst).alias("b")).filter(
-        F.col("a") != F.col("b")
-    )
-    # und feeds THREE consumers (degree agg ×2 via the union, the
-    # orientation join) and o feeds three more (both wedge sides, the
-    # closure semi-join) — without lineage cuts every consumer
-    # re-derives the whole upstream edge expression (measured on the
-    # synthetic fixture: 30 re-evaluations of the arm subtree, i.e.
-    # 30 corpus scans at 100 TB).  Eager localCheckpoints materialize
-    # each ONCE; the ContextCleaner frees the blocks when the result
-    # frame drops (the pagerank/dedup in-repo standard).
-    und = (
-        e.select(
-            F.least("a", "b").alias("a"), F.greatest("a", "b").alias("b")
-        )
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    deg = (
-        und.select(F.col("a").alias("node"))
-        .union(und.select(F.col("b").alias("node")))
-        .groupBy("node")
-        .agg(F.count(F.lit(1)).alias("deg"))
-    )
-    ed = (
-        und.join(
-            deg.select(F.col("node").alias("a"), F.col("deg").alias("da")),
-            "a",
-        )
-        .join(
-            deg.select(F.col("node").alias("b"), F.col("deg").alias("db")),
-            "b",
-        )
-    )
-    lo_first = (F.col("da") < F.col("db")) | (
-        (F.col("da") == F.col("db")) & (F.col("a") < F.col("b"))
-    )
-    o = ed.select(
-        F.when(lo_first, F.col("a")).otherwise(F.col("b")).alias("u"),
-        F.when(lo_first, F.col("b")).otherwise(F.col("a")).alias("v"),
-        F.when(lo_first, F.col("db")).otherwise(F.col("da")).alias("dv"),
-    ).localCheckpoint(eager=True)
-    o1, o2 = o.alias("o1"), o.alias("o2")
-    rank_lt = (F.col("o1.dv") < F.col("o2.dv")) | (
-        (F.col("o1.dv") == F.col("o2.dv")) & (F.col("o1.v") < F.col("o2.v"))
-    )
-    wedges = o1.join(
-        o2, (F.col("o1.u") == F.col("o2.u")) & rank_lt
-    ).select(
-        F.col("o1.u").alias("tu"),
-        F.col("o1.v").alias("tv"),
-        F.col("o2.v").alias("tw"),
-    )
-    tri = wedges.join(
-        o.select(F.col("u").alias("tv"), F.col("v").alias("tw")),
-        ["tv", "tw"],
-        "left_semi",
-    )
-    return (
-        tri.select(
-            F.explode(F.array("tu", "tv", "tw")).alias("node")
-        )
-        .groupBy("node")
-        .agg(F.count(F.lit(1)).alias("triangles"))
-    )
-
-
-def link_predict_common_neighbors(
-    edges: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
-    max_center_degree: int = 32,
-    min_common: int = 2,
-) -> DataFrame:
-    """Friend-of-friend link prediction by common-neighbor count
-    (Liben-Nowell & Kleinberg 2003's strongest simple baseline) over
-    an UNDIRECTED view of ``edges``: for every NON-adjacent pair
-    (a < b) sharing at least ``min_common`` neighbors, the count of
-    shared neighbors — the fourth graph primitive after PageRank,
-    connected components and triangles, and the one a recommendation
-    / related-items surface runs nightly.
-
-    Scale contract — the degree cap IS the semantics, not a fallback:
-    a pair's wedges through a center z cost C(deg(z), 2), so an
-    uncapped enumeration is sum(deg²) — the power-law hub arm makes
-    that quadratic exactly where the signal is weakest (sharing a
-    mega-hub neighbor carries ~zero evidence two nodes are related;
-    the same reasoning Adamic-Adar formalizes by down-weighting
-    1/log deg, and sublinear-wedge samplers exploit).  Centers with
-    degree > ``max_center_degree`` therefore contribute NO wedges, by
-    definition, in BOTH engines — total wedge work is bounded by
-    cap·m, linear in the edge count.  Raising the cap trades cost for
-    recall on hub-mediated pairs; the default keeps per-center work
-    ≤ C(32,2) = 496 pairs.
-
-    Shape: canonicalize → degree → cap-filtered full adjacency →
-    per-center out-pair join (the triangle wedge join with the center
-    kept) → one anti-join against the edge set (predicted links must
-    be NEW) → one groupBy count.  Equi-joins and aggregations only;
-    pure int64; no driver state.  Returns (node_a, node_b,
-    common_neighbors), node_a < node_b.
-    """
-    e = edges.select(F.col(src).alias("a"), F.col(dst).alias("b")).filter(
-        F.col("a") != F.col("b")
-    )
-    # und feeds four consumers (degree union ×2, adjacency union ×2,
-    # the final anti-join) — same lineage-cut rationale as
-    # triangle_count: materialize the canonical edge set ONCE.
-    und = (
-        e.select(
-            F.least("a", "b").alias("a"), F.greatest("a", "b").alias("b")
-        )
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    deg = (
-        und.select(F.col("a").alias("node"))
-        .union(und.select(F.col("b").alias("node")))
-        .groupBy("node")
-        .agg(F.count(F.lit(1)).alias("deg"))
-    )
-    centers = deg.filter(F.col("deg") <= max_center_degree).select("node")
-    adj = und.select(
-        F.col("a").alias("node"), F.col("b").alias("nbr")
-    ).union(und.select(F.col("b").alias("node"), F.col("a").alias("nbr")))
-    cadj = adj.join(centers, "node", "left_semi").localCheckpoint(eager=True)
-    a1, a2 = cadj.alias("a1"), cadj.alias("a2")
-    pairs = a1.join(
-        a2,
-        (F.col("a1.node") == F.col("a2.node"))
-        & (F.col("a1.nbr") < F.col("a2.nbr")),
-    ).select(F.col("a1.nbr").alias("a"), F.col("a2.nbr").alias("b"))
-    fresh = pairs.join(und, ["a", "b"], "left_anti")
-    return (
-        fresh.groupBy("a", "b")
-        .agg(F.count(F.lit(1)).alias("common_neighbors"))
-        .filter(F.col("common_neighbors") >= min_common)
-        .select(
-            F.col("a").alias("node_a"),
-            F.col("b").alias("node_b"),
-            "common_neighbors",
-        )
-    )
-
-
-def kcore(
-    edges: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
-    k: int = 3,
-    rounds: int = 8,
-) -> DataFrame:
-    """Synchronized k-core peeling over an UNDIRECTED view of
-    ``edges`` (Seidman 1983; the Batagelj–Zaveršnik sequential peel
-    re-expressed as the bulk-synchronous variant every distributed
-    engine uses): each round simultaneously deletes EVERY node whose
-    degree in the current surviving subgraph is < ``k``, for a FIXED
-    ``rounds`` — the :func:`pagerank` iterations contract, so the
-    output is deterministic and twin-replayable whether or not the
-    peel has converged (when it has, the survivors are exactly the
-    k-core: the maximal subgraph of minimum degree ≥ k).  Rounds
-    needed in practice is the peeling DEPTH, typically O(log n) on
-    power-law graphs — a chain construction can force Θ(n), which is
-    why rounds is a parameter and not a convergence loop.
-
-    Returns (node, degree) for surviving nodes, degree measured in
-    the surviving subgraph.
-
-    Scale shape: per round, one degree aggregate + two left-semi
-    joins, all equi-keyed on the node — linear in surviving edges,
-    shrinking monotonically; each round's edge set is eagerly
-    checkpointed (the pagerank lineage-cut standard — without it
-    round r's plan re-derives all r−1 predecessors and the upstream
-    scan 2^r times).  Pure int64; no driver state beyond the loop
-    counter."""
-    if k < 1 or rounds < 0:
-        raise ValueError("k must be ≥ 1 and rounds ≥ 0")
-    e = edges.select(F.col(src).alias("a"), F.col(dst).alias("b")).filter(
-        F.col("a") != F.col("b")
-    )
-    alive = (
-        e.select(
-            F.least("a", "b").alias("a"), F.greatest("a", "b").alias("b")
-        )
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    for _ in range(rounds):
-        deg = (
-            alive.select(F.col("a").alias("node"))
-            .union(alive.select(F.col("b").alias("node")))
-            .groupBy("node")
-            .agg(F.count(F.lit(1)).alias("deg"))
-        )
-        keep = deg.filter(F.col("deg") >= k).select("node")
-        alive = (
-            alive.join(
-                keep.select(F.col("node").alias("a")), "a", "left_semi"
-            )
-            .join(keep.select(F.col("node").alias("b")), "b", "left_semi")
-            .localCheckpoint(eager=True)
-        )
-    return (
-        alive.select(F.col("a").alias("node"))
-        .union(alive.select(F.col("b").alias("node")))
-        .groupBy("node")
-        .agg(F.count(F.lit(1)).alias("degree"))
-    )
-
-
-def synthetic_clique(docs: DataFrame, target: int = 20) -> DataFrame:
-    """Deterministic ~``target``-node clique over the documents table
-    (members: doc_id ≡ 0 mod max(n/target, 1)) — the fixture arm that
-    gives :func:`kcore` a non-trivial STABLE core: the skewed link
-    graph alone is too homogeneous (k=4 peels everything within 8
-    rounds, k=3 peels nothing — measured at staging), while a clique
-    of size ≥ k+1 survives any k-core peel by construction.  Member
-    count is ~target at EVERY corpus size (the modulus scales with n),
-    so the clique contributes a CONSTANT ≤ C(target,2) edges — the
-    pair join below is a tiny bounded nested-loop, never a scale
-    term."""
-    cnt = docs.groupBy().agg(F.count(F.lit(1)).alias("n"))
-    step = F.greatest(F.expr("n div 20"), F.lit(1).cast("long"))
-    sel = (
-        docs.select("doc_id")
-        .crossJoin(F.broadcast(cnt))
-        .filter(F.col("doc_id") % step == 0)
-        .select("doc_id")
-    )
-    c1 = sel.select(F.col("doc_id").alias("src"))
-    c2 = sel.select(F.col("doc_id").alias("dst"))
-    return c1.join(F.broadcast(c2), F.col("src") < F.col("dst"))
-
-
-def label_propagation(
-    edges: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
-    rounds: int = 4,
-) -> DataFrame:
-    """Community detection by synchronous label propagation (Raghavan,
-    Albert & Kumara 2007, the bulk-synchronous min-tie variant the
-    GraphX/Pregel implementations use): every node starts labeled with
-    itself; each round every node SIMULTANEOUSLY adopts the most
-    frequent label among its neighbors, ties broken by MIN label — so
-    each round is a pure function of the previous labeling and the
-    output is deterministic and twin-replayable.  Fixed ``rounds`` (the
-    :func:`pagerank` iterations contract): synchronous LPA is known to
-    oscillate on bipartite-ish structures rather than converge, which
-    is precisely why the distributed formulation runs a fixed budget
-    and never a convergence loop.  Undirected view of ``edges``;
-    self-loops dropped.  Returns (node, label).
-
-    Scale shape: the symmetric adjacency is materialized ONCE and
-    checkpointed; per round one equi-join (labels onto neighbor ids),
-    one (node, label) count, and one per-node argmax via max(struct) —
-    all shuffles on the node key, linear in edges, no driver state.
-    Each round's labeling is eagerly checkpointed (the pagerank
-    lineage-cut standard — without it round r's plan re-derives all
-    r−1 predecessors and the upstream scan 2^r times).  The sixth
-    graph primitive (after PageRank, connected components, triangles,
-    link prediction, k-core): CC gives reachability classes, LPA
-    splits them into densely-linked communities — the grouping a crawl
-    pipeline samples by when one host-authority class is too coarse.
-    Pure int64."""
-    if rounds < 0:
-        raise ValueError("rounds must be >= 0")
-    e = (
-        edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-        .filter(F.col("a") != F.col("b"))
-        .select(F.least("a", "b").alias("a"), F.greatest("a", "b").alias("b"))
-        .distinct()
-    )
-    adj = (
-        e.select(F.col("a").alias("node"), F.col("b").alias("nbr"))
-        .union(e.select(F.col("b").alias("node"), F.col("a").alias("nbr")))
-        .localCheckpoint(eager=True)
-    )
-    labels = adj.select("node").distinct().withColumn("label", F.col("node"))
-    for _ in range(rounds):
-        counts = (
-            adj.join(
-                labels.select(F.col("node").alias("nbr"), "label"), "nbr"
-            )
-            .groupBy("node", "label")
-            .agg(F.count(F.lit(1)).alias("c"))
-        )
-        # most frequent neighbor label, tie -> smallest label:
-        # max(struct(c, -label)) maximizes c then minimizes label
-        labels = (
-            counts.groupBy("node")
-            .agg(
-                (
-                    -F.max(F.struct(F.col("c"), (-F.col("label")).alias("nl")))
-                    .getField("nl")
-                ).alias("label")
-            )
-            .localCheckpoint(eager=True)
-        )
-    return labels.select("node", "label")
-
-
-def bfs_distance(
-    edges: DataFrame,
-    seeds: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
-    node_col: str = "node",
-    rounds: int = 6,
-) -> DataFrame:
-    """Multi-source BFS over an UNDIRECTED view of ``edges``: distance
-    from the nearest seed, the frontier-relaxation bulk-synchronous
-    form (each round relaxes dist(v) = min(dist(v), min over neighbors
-    + 1) simultaneously — Bellman-Ford restricted to unit weights).
-    Fixed ``rounds`` (the :func:`pagerank` iterations contract):
-    deterministic and twin-replayable whether or not the frontier has
-    drained; a converged graph stops changing, an unconverged one
-    reports distances ≤ rounds, both exactly reproducible.  The crawl
-    scheduler's primitive: depth-from-seed-hosts decides fetch
-    priority and politeness budgets.
-
-    Returns (node, dist) for nodes within ``rounds`` hops of any seed
-    (seeds at dist 0).  Unreached nodes are absent, not NULL.
-
-    Scale shape: per round one equi-join (frontier onto adjacency) +
-    one min-aggregate, both node-keyed; the distance table is eagerly
-    checkpointed per round (lineage cut).  Adjacency materialized
-    once.  Pure int64."""
-    if rounds < 0:
-        raise ValueError("rounds must be >= 0")
-    e = (
-        edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-        .filter(F.col("a") != F.col("b"))
-        .select(F.least("a", "b").alias("a"), F.greatest("a", "b").alias("b"))
-        .distinct()
-    )
-    adj = (
-        e.select(F.col("a").alias("node"), F.col("b").alias("nbr"))
-        .union(e.select(F.col("b").alias("node"), F.col("a").alias("nbr")))
-        .localCheckpoint(eager=True)
-    )
-    dist = seeds.select(
-        F.col(node_col).alias("node"), F.lit(0).cast("long").alias("dist")
-    ).distinct()
-    for _ in range(rounds):
-        relaxed = (
-            adj.join(
-                dist.select(F.col("node").alias("nbr"), "dist"), "nbr"
-            )
-            .select("node", (F.col("dist") + 1).alias("dist"))
-        )
-        dist = (
-            dist.unionByName(relaxed)
-            .groupBy("node")
-            .agg(F.min("dist").alias("dist"))
-            .localCheckpoint(eager=True)
-        )
-    return dist

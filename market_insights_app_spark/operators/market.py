@@ -986,118 +986,3 @@ def var_cvar(
             / (F.count(F.lit(1)).cast("double") * F.lit(1e9))
         ).alias("cvar_a"),
     )
-
-
-def seasonal_decompose(
-    df: DataFrame,
-    key_col: str = "event_type",
-    ts_col: str = "ts",
-    value_col: str = "value",
-    period: int = 24,
-    bucket: str = "hour",
-) -> DataFrame:
-    """Classical additive seasonal decomposition (STL-lite: the
-    moving-average decomposition of Cleveland et al.'s ancestors —
-    trend by centered moving average, seasonal by period-slot means of
-    the detrended series, residual as the remainder) per series — the
-    "is Monday 9am always a spike, or is the metric actually rising"
-    primitive every metrics pipeline asks for after :func:`ols_trend`
-    answers "is it drifting".
-
-    Semantics (documented, deliberately simple): the series is the
-    per-(key, bucket) SUM of ``value_col`` over OCCUPIED buckets
-    ordered by time (no grid fill — compose with
-    :func:`resample_ffill` first when a strict grid is wanted);
-    ``trend`` is the centered moving average over ``period+1`` ROWS
-    (half = period//2 each side, NULL unless the frame is full and
-    every bucket sum in it is non-NULL — the warm-up contract of the
-    SMA family); ``seasonal`` is the per-(key, slot) mean of the
-    detrended values where slot = hour-of-day (period 24 assumed by
-    the slot function; other periods reuse the row arithmetic but
-    need a caller-supplied slot — kept fixed here because the twin
-    must replay it); ``residual = value − trend − seasonal``.
-
-    Exactness contract (the module's DECIMAL discipline): bucket sums
-    accumulate in DECIMAL(18,2); the windowed trend SUM stays DECIMAL
-    (exact, order-free); the detrended value is computed as
-    ``y·(period+1) − trend_sum`` — still exact DECIMAL — and the
-    seasonal numerator is a DECIMAL sum of those.  Doubles appear only
-    in the final single expressions (one division each for trend and
-    seasonal, one subtraction chain for residual), bit-identical
-    cross-engine.
-
-    Scale shape: ONE shuffle on the key partitions both the bucket
-    aggregate and the trend window; the seasonal aggregate reduces to
-    k×period rows and broadcast-joins back.  No UDF, no grid
-    explosion, no driver state."""
-    if period % 2 != 0 or period <= 0:
-        raise ValueError("period must be a positive even integer")
-    half = period // 2
-    w_len = period + 1
-    h = F.date_trunc(bucket, F.col(ts_col))
-    b = (
-        df.select(
-            F.col(key_col).alias("k"),
-            h.alias("h"),
-            F.col(value_col).cast("decimal(8,2)").alias("v"),
-        )
-        .groupBy("k", "h")
-        .agg(F.sum("v").cast(DEC).alias("y"))
-    )
-    w = (
-        Window.partitionBy("k")
-        .orderBy("h")
-        .rowsBetween(-half, half)
-    )
-    t = b.select(
-        "k",
-        "h",
-        "y",
-        F.sum("y").over(w).cast("decimal(26,2)").alias("tsum"),
-        F.count("y").over(w).alias("tn"),
-        F.count(F.lit(1)).over(w).alias("nr"),
-    )
-    full = (F.col("tn") == w_len) & (F.col("nr") == w_len)
-    # t2 feeds TWO consumers (the seasonal aggregate and the final
-    # join) — without a lineage cut each re-derives the whole
-    # scan→bucket-agg→window subtree, i.e. a second full pass over the
-    # tick store at 100 TB.  The decomposed series is bucket-sized
-    # (keys × occupied buckets), so materializing it once is cheap;
-    # eager localCheckpoint is the in-repo standard (triangle_count,
-    # pagerank) and the ContextCleaner frees the blocks with the frame.
-    t2 = t.select(
-        "k",
-        "h",
-        "y",
-        F.when(full, F.col("tsum").cast("double") / F.lit(float(w_len))).alias(
-            "trend"
-        ),
-        F.when(full, (F.col("y") * w_len).cast("decimal(26,2)") - F.col("tsum"))
-        .cast("decimal(27,2)")
-        .alias("det"),
-        F.hour("h").alias("slot"),
-    ).localCheckpoint(eager=True)
-    s = t2.groupBy("k", "slot").agg(
-        F.sum("det").cast("decimal(32,2)").alias("sn"),
-        F.count("det").alias("sc"),
-    )
-    seasonal_raw = F.when(
-        F.col("sc") > 0,
-        F.col("sn").cast("double")
-        / (F.lit(float(w_len)) * F.col("sc").cast("double")),
-    )
-    j = t2.join(F.broadcast(s), ["k", "slot"])
-    return j.select(
-        F.col("k").alias(key_col),
-        ts_us("h").alias("bucket_us"),
-        F.round(F.col("y").cast("double"), 6).alias("bucket_value"),
-        F.round("trend", 6).alias("trend"),
-        F.round(seasonal_raw, 6).alias("seasonal"),
-        F.round(
-            F.when(
-                F.col("trend").isNotNull() & seasonal_raw.isNotNull(),
-                F.col("y").cast("double") - F.col("trend") - seasonal_raw,
-            ),
-            6,
-        ).alias("residual"),
-    )

@@ -500,160 +500,3 @@ def kfold_column(
     return (
         F.conv(F.substring(h, 1, 8), 16, 10).cast("long") % F.lit(k)
     ).cast("int").alias("fold")
-
-
-# Poisson(1) inverse-CDF thresholds: cum_k = e⁻¹ Σ_{i≤k} 1/i!.  The
-# literals below MUST match the oracle twin digit-for-digit — both
-# engines then evaluate identical double comparisons on identical
-# hash-uniform inputs, making the bootstrap weights engine-exact.
-POISSON1_CDF = (
-    0.36787944117144233,
-    0.7357588823428847,
-    0.9196986029286058,
-    0.9810118431238463,
-    0.9963401531726563,
-    0.9994058151824183,
-    0.999916758850712,
-    0.9999897508033253,
-    0.999998874797402,
-)
-
-
-def poisson_weight(
-    id_col: Column,
-    rep_col: Column,
-    salt: str = "boot-v1",
-    portable: bool = True,
-) -> Column:
-    """Deterministic Poisson(1) bootstrap weight for (row, replicate):
-    inverse-CDF over a hash-uniform of (salt, id, replicate) — no RNG
-    state, stable under repartitioning and reruns.
-
-    ``portable=True`` (the oracle-gated lane): md5 over the
-    ``salt:id:replicate`` string, reproducible in any engine (the
-    portable-hash contract shared with :func:`hash_fraction`).
-    ``portable=False`` (the engine lane, the same split as
-    ``dedup.simhash_df``'s ``portable`` flag): multi-argument
-    ``xxhash64`` — no string concatenation, no cryptographic hash;
-    measured 3.4× faster end-to-end at
-    events-sf0.1 × 201 replicates (12.1 s vs 40.9 s).
-    Same CDF thresholds either way; the lanes differ only in which
-    uniform they draw."""
-    if portable:
-        u = hash_fraction(
-            F.concat(id_col.cast("string"), F.lit(":"), rep_col.cast("string")),
-            salt,
-        )
-    else:
-        u = (
-            F.xxhash64(F.lit(salt), id_col, rep_col)
-            .bitwiseAND(F.lit(0xFFFFFFFF))
-            / F.lit(4294967296.0)
-        )
-    k: Column = F.lit(len(POISSON1_CDF))
-    for i in range(len(POISSON1_CDF) - 1, -1, -1):
-        k = F.when(u < F.lit(POISSON1_CDF[i]), F.lit(i)).otherwise(k)
-    return k
-
-
-def poisson_bootstrap_ci(
-    df: DataFrame,
-    value_col: str,
-    group_col: str,
-    id_col: str,
-    n_replicates: int = 201,
-    lo_p: float = 0.025,
-    hi_p: float = 0.975,
-    salt: str = "boot-v1",
-    portable: bool = True,
-) -> DataFrame:
-    """Per-group bootstrap confidence interval for the mean in ONE
-    pass — the Poisson bootstrap (Chamandy, Muralidharan, Najmi &
-    Naidu 2012, "Estimating Uncertainty for Massive Data Streams"):
-    instead of drawing n rows with replacement per replicate (which
-    needs global coordination), each row enters replicate b with an
-    independent Poisson(1) weight, here derived DETERMINISTICALLY from
-    a hash so the resample is reproducible and engine-portable.
-
-    Exactness discipline: per-replicate sums are DECIMAL (weight ≤ 9 ×
-    DECIMAL(8,2) values — same overflow contract as ab_welch_t: exact
-    at |value| < 10⁶), replicate means are exact-decimal quotients cast
-    to double, and the interval bounds are LOWER ORDER STATISTICS
-    (index = floor(p·(count−1))+1 via row_number, ties broken by
-    replicate id) — no interpolation arithmetic exists to drift by a
-    ULP between engines.  With the default 201 replicates the 2.5/97.5
-    indices land on exact percentile positions (0.025·200 = 5).
-
-    Scale shape: the replicate explode multiplies map-side CPU by B,
-    but partial aggregation combines before the exchange — the shuffle
-    carries (groups × B) decimal partials, never rows × B.  The
-    ranking window partitions by group over B rows each.  This is why
-    the Poisson bootstrap is THE bootstrap for distributed data: one
-    scan, mergeable state, no per-replicate pass.
-
-    Returns (group, n, mean, ci_lo, ci_hi, n_replicates) — groups
-    whose every replicate drew zero total weight (P ≈ e⁻ⁿ·B, i.e.
-    only microscopic groups) drop those replicates from the order
-    statistics; the replicate count is reported."""
-    if n_replicates < 2:
-        raise ValueError("n_replicates must be >= 2")
-    v = F.col(value_col).cast("decimal(8,2)")
-    base = df.select(
-        F.col(group_col).alias("g"),
-        F.col(id_col).alias("id"),
-        v.alias("v"),
-    )
-    rep = base.select(
-        "g",
-        "id",
-        "v",
-        F.explode(F.sequence(F.lit(0), F.lit(n_replicates - 1))).alias("b"),
-    )
-    means = (
-        rep.withColumn(
-            "k", poisson_weight(F.col("id"), F.col("b"), salt, portable=portable)
-        )
-        .groupBy("g", "b")
-        .agg(
-            F.sum(F.col("k") * F.col("v")).cast("decimal(24,2)").alias("s"),
-            F.sum("k").cast("decimal(12,0)").alias("n"),
-        )
-        .filter(F.col("n") > 0)
-        .select(
-            "g",
-            "b",
-            (F.col("s").cast("double") / F.col("n").cast("double")).alias("m"),
-        )
-    )
-    w = Window.partitionBy("g").orderBy("m", "b")
-    cw = Window.partitionBy("g")
-    ranked = (
-        means.withColumn("rn", F.row_number().over(w))
-        .withColumn("cnt", F.count(F.lit(1)).over(cw))
-        .withColumn(
-            "lo_idx", (F.floor(F.lit(lo_p) * (F.col("cnt") - 1)) + 1).cast("long")
-        )
-        .withColumn(
-            "hi_idx", (F.floor(F.lit(hi_p) * (F.col("cnt") - 1)) + 1).cast("long")
-        )
-    )
-    ci = ranked.groupBy("g").agg(
-        F.max(F.when(F.col("rn") == F.col("lo_idx"), F.col("m"))).alias("ci_lo"),
-        F.max(F.when(F.col("rn") == F.col("hi_idx"), F.col("m"))).alias("ci_hi"),
-        F.count(F.lit(1)).alias("n_replicates"),
-    )
-    overall = base.groupBy("g").agg(
-        F.count(F.lit(1)).alias("n"),
-        (
-            F.sum("v").cast("decimal(24,2)").cast("double")
-            / F.count(F.lit(1)).cast("double")
-        ).alias("mean"),
-    )
-    return overall.join(ci, "g").select(
-        F.col("g").alias(group_col),
-        "n",
-        "mean",
-        "ci_lo",
-        "ci_hi",
-        "n_replicates",
-    )

@@ -743,10 +743,8 @@ def semdedup(
     evaluation.  An explicit ``broadcast_probe`` keeps the JVM
     self-join screen with that join strategy: True broadcasts the
     probe side, False keeps the cluster-keyed sort-merge join (the
-    lane-equality reference pair; the bucketed layout keeps the SMJ
-    form because its write-time bucketing makes that screen
-    exchange-free).  All three lanes return the exact same survivor
-    set.
+    lane-equality reference pair).  All three lanes return the exact
+    same survivor set.
 
     Returns the SURVIVING (id, cluster) rows.
     """
@@ -814,16 +812,13 @@ def semdedup(
 def _semdedup_pair_screen(
     a: DataFrame, threshold: float, id_col: str, broadcast: bool
 ) -> DataFrame:
-    """In-cluster pair probe + survivor anti-join shared by
-    :func:`semdedup` (checkpointed in-session frame) and
-    :func:`semdedup_bucketed` (cluster-bucketed catalog table):
-    left-semi-mark every row whose cluster holds a lower-id
+    """In-cluster pair probe + survivor anti-join of
+    :func:`semdedup`'s JVM-screen lanes (checkpointed in-session
+    frame): left-semi-mark every row whose cluster holds a lower-id
     near-duplicate at ``threshold``, then anti-join the marks away.
     ``a`` must carry (id, cluster, v, nrm).  The caller picks the
     exchange story: ``broadcast=True`` ships the probe side,
-    ``False`` keeps the cluster-keyed join — exchange-FREE when ``a``
-    scans a table bucketed by cluster (both join inputs then share
-    the write-time layout)."""
+    ``False`` keeps the cluster-keyed join."""
     l, r = a.alias("l"), a.alias("r")
     pair_cos = F.round(
         dot(F.col("l.v"), F.col("r.v"))
@@ -844,181 +839,6 @@ def _semdedup_pair_screen(
         a.join(dupes, "id", "left_anti")
         .select(F.col("id").alias(id_col), "cluster")
     )
-
-
-def semdedup_bucketed(
-    df: DataFrame,
-    table: str,
-    k: int | None = 8,
-    iters: int = 2,
-    threshold: float = 0.95,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    n_buckets: int = 32,
-) -> DataFrame:
-    """SemDeDup off a WRITE-ONCE cluster-bucketed storage layout — the
-    100 TB shape :func:`semdedup`'s lane notes point at, as code
-    instead of a comment.  Fit + label exactly as :func:`semdedup`,
-    persist the labeled frame as a catalog table bucketed by
-    ``cluster`` (sources/bucketed.write_bucketed), then run the SAME
-    in-cluster screen off the bucketed scan.  Both sides of the pair
-    self-join — and, past clustering.LARGE_K, the applyInPandas
-    groupBy — consume the same bucketed table, so the planner inserts
-    NO Exchange into the screen: the one shuffle was paid at write
-    time and amortizes over every re-screen (threshold sweeps,
-    incremental re-audits).  Survivors are BIT-IDENTICAL to
-    ``semdedup(df, ...)`` with the same parameters — the screen is
-    literally the shared :func:`_semdedup_pair_screen` /
-    :func:`_semdedup_in_cluster_pandas` code — pinned, along with the
-    zero-Exchange plan, in tests/test_retrieval_clustering.py.
-
-    Reference: SemDeDup (Abbas et al. 2023) §3 in-cluster screening;
-    the bucketed table is the Spark-native analog of cluster-sharded
-    storage.  Requires a catalog (saveAsTable) — see
-    sources/bucketed.py."""
-    from market_insights_app_spark.operators import clustering
-    from market_insights_app_spark.sources.bucketed import (
-        read_bucketed,
-        write_bucketed,
-    )
-
-    cents = clustering.kmeans_fit(
-        df, k=k, iters=iters, id_col=id_col, vec_col=vec_col
-    )
-    if not cents:
-        return df.select(
-            F.col(id_col), F.lit(0).cast("int").alias("cluster")
-        ).limit(0)
-    spark = df.sparkSession
-    if len(cents) > clustering.LARGE_K:
-        assigned = clustering._assign_pandas(
-            df, cents, id_col, vec_col, keep_vec=True
-        )
-        write_bucketed(assigned, table, ["cluster"], n_buckets=n_buckets)
-    else:
-        a = _semdedup_label(df, cents, id_col, vec_col)
-        write_bucketed(a, table, ["cluster"], n_buckets=n_buckets)
-    # persist the FROZEN centroids beside the table: incremental
-    # appends (semdedup_bucketed_append) assign new batches to these —
-    # the standard production pattern (refit periodically, assign
-    # incrementally) — and without them the layout cannot grow
-    from market_insights_app_spark.sources.bucketed import (
-        clear_managed_table,
-    )
-
-    clear_managed_table(spark, f"{table}__centroids")
-    spark.createDataFrame(
-        [(i, c) for i, c in enumerate(cents)],
-        "cluster int, centroid array<double>",
-    ).write.mode("overwrite").format("parquet").saveAsTable(
-        f"{table}__centroids"
-    )
-    # the first screen IS a re-screen of the just-written table, so the
-    # write path and every later re-screen run identical code by
-    # construction (r13: semdedup_rescreen was previously reachable
-    # only through the private screen helpers)
-    return semdedup_rescreen(
-        spark, table, threshold=threshold, id_col=id_col, vec_col=vec_col
-    )
-
-
-def _semdedup_label(
-    df: DataFrame,
-    cents: list[list[float]],
-    id_col: str,
-    vec_col: str,
-) -> DataFrame:
-    """Expression-lane labeling select shared by the bucketed write
-    and the incremental append: (id, cluster, v, nrm) with the
-    cluster from the O(1)-plan-size argmin literal.  Centroids
-    round-trip exactly through the companion parquet table (doubles),
-    so an appended batch gets bit-identical assignments to a fresh
-    write with the same frozen centroid set."""
-    from market_insights_app_spark.operators import clustering
-
-    v = _as_double(F.col(vec_col))
-    return df.select(
-        F.col(id_col).alias("id"),
-        clustering._best_struct(v, cents)["c"].alias("cluster"),
-        v.alias("v"),
-    ).withColumn("nrm", norm(F.col("v")))
-
-
-def semdedup_bucketed_append(
-    df_new: DataFrame,
-    table: str,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> None:
-    """Incrementally grow a :func:`semdedup_bucketed` layout: assign a
-    NEW corpus batch to the FROZEN centroids persisted beside the
-    table (``{table}__centroids``) and append it INTO the bucketed
-    layout — the production cadence (refit centroids periodically,
-    assign arrivals incrementally) with no refit scan, no re-label of
-    the existing corpus, and the exchange-free-screen property intact
-    (the append redeclares the catalog's bucket spec, so new files
-    land in the write-time layout).  A following
-    :func:`semdedup_rescreen` screens old+new together; because the
-    keep rule is min-id-survives, pre-existing survivors can only be
-    unaffected by higher-id arrivals, and each new row drops iff a
-    lower-id near-duplicate shares its cluster (pinned in
-    tests/test_retrieval_clustering.py).
-
-    Lane dispatch mirrors the stored schema, like
-    :func:`semdedup_rescreen`: an (id, cluster, v, nrm) table appends
-    through the JVM labeling select, a LARGE_K table through the
-    broadcast-numpy assignment with the vector carried."""
-    from market_insights_app_spark.operators import clustering
-    from market_insights_app_spark.sources.bucketed import (
-        append_bucketed,
-        read_bucketed,
-    )
-
-    spark = df_new.sparkSession
-    cents = [
-        [float(x) for x in r["centroid"]]
-        for r in spark.table(f"{table}__centroids")
-        .orderBy("cluster")
-        .collect()
-    ]
-    if "nrm" in read_bucketed(spark, table).columns:
-        a = _semdedup_label(df_new, cents, id_col, vec_col)
-    else:
-        a = clustering._assign_pandas(
-            df_new, cents, id_col, vec_col, keep_vec=True
-        )
-    append_bucketed(a, table)
-
-
-def semdedup_rescreen(
-    spark: SparkSession,
-    table: str,
-    threshold: float = 0.95,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Re-run the SemDeDup in-cluster screen against a cluster-bucketed
-    table previously written by :func:`semdedup_bucketed` — the payoff
-    half of the write-once layout: threshold sweeps and incremental
-    re-audits pay NO k-means fit, NO assignment scan, and NO exchange
-    (the screen's self-join reads both sides from the bucketed layout;
-    measured 7.05 s full run vs 0.58 s re-screen at sf0.1, and the gap
-    widens with corpus size — SCALE_NOTES.md r12/r13).
-
-    Lane dispatch reads the table's own schema: the expression lane
-    stores (id, cluster, v, nrm) and re-screens through the JVM pair
-    probe; the web-scale lane (k > clustering.LARGE_K at write time)
-    stores (``id_col``, cluster, ``vec_col``) and re-screens through
-    the blocked-numpy applyInPandas — each table re-screens through
-    the same lane that wrote it, so survivors are bit-identical to a
-    fresh ``semdedup_bucketed`` run at the same threshold (pinned in
-    tests/test_retrieval_clustering.py)."""
-    from market_insights_app_spark.sources.bucketed import read_bucketed
-
-    a = read_bucketed(spark, table)
-    if "nrm" in a.columns:
-        return _semdedup_pair_screen(a, threshold, id_col, broadcast=False)
-    return _semdedup_in_cluster_pandas(a, threshold, id_col, vec_col)
 
 
 def semantic_decontaminate(

@@ -6,11 +6,6 @@ ordering match the Spark side exactly (see plans/core.py header).
 
 W_EVENTS = "PARTITION BY user_id ORDER BY ts, event_id"
 
-# events.ts is a parquet microsecond timestamp, which the Spark side
-# reads as-is (sources/tables.py); every oracle reads events through a
-# microsecond truncation, a no-op on those files.
-EV_SUB = "(SELECT * REPLACE (make_timestamp(epoch_ns(ts) // 1000) AS ts) FROM events)"
-
 CORE_ORACLES: dict[str, str] = {
     "prices_filter_range_limit": """
         SELECT event_id, epoch_us(ts) AS ts_us, user_id, event_type,
@@ -308,18 +303,13 @@ CORE_ORACLES: dict[str, str] = {
     """,
 }
 
-# apply the ns→µs truncation wrapper to every events reference
-CORE_ORACLES = {
-    k: v.replace("FROM events", f"FROM {EV_SUB} events") for k, v in CORE_ORACLES.items()
-}
-
-CORE_ORACLES["session_stateful_replay"] = f"""
+CORE_ORACLES["session_stateful_replay"] = """
     WITH o AS (
       SELECT user_id, ts, value, event_id,
              CASE WHEN lag(ts) OVER w IS NULL
                     OR ts - lag(ts) OVER w >= INTERVAL '30 minutes'
                   THEN 1 ELSE 0 END AS new_s
-      FROM {EV_SUB} events WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)),
+      FROM events WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)),
     s AS (
       SELECT user_id, ts, value, event_id,
              SUM(new_s) OVER (PARTITION BY user_id ORDER BY ts, event_id
@@ -339,10 +329,10 @@ CORE_ORACLES["session_stateful_replay"] = f"""
     FROM agg a JOIN last l ON a.user_id = l.user_id AND a.sid < l.maxsid
 """
 
-CORE_ORACLES["ema_stateful_replay"] = f"""
+CORE_ORACLES["ema_stateful_replay"] = """
     WITH s AS (
       SELECT user_id, list(value ORDER BY ts, event_id) AS vs
-      FROM {EV_SUB} events GROUP BY user_id)
+      FROM events GROUP BY user_id)
     SELECT user_id,
            list_reduce(vs, (acc, x) -> 0.2 * x + 0.8 * acc) AS ema,
            CAST(len(vs) AS BIGINT) AS n_seen
@@ -357,7 +347,7 @@ CORE_ORACLES["ict_analysis"] = f"""
              END AS sma,
              (value >= lag(value) OVER w AND value >= lead(value) OVER w) AS ih,
              (value <= lag(value) OVER w AND value <= lead(value) OVER w) AS il
-      FROM {EV_SUB} events WINDOW w AS ({W_EVENTS})),
+      FROM events WINDOW w AS ({W_EVENTS})),
     s2 AS (
       SELECT *, sma - lag(sma, 2) OVER w AS s2v, sma - lag(sma, 5) OVER w AS s5v
       FROM s1 WINDOW w AS ({W_EVENTS})),
@@ -422,10 +412,10 @@ CORE_ORACLES["rollup_revenue"] = """
     GROUP BY ROLLUP (r_name, n_name)
 """
 
-CORE_ORACLES["set_ops"] = f"""
-    WITH clicks AS (SELECT DISTINCT user_id FROM {EV_SUB} events
+CORE_ORACLES["set_ops"] = """
+    WITH clicks AS (SELECT DISTINCT user_id FROM events
                     WHERE event_type = 'click'),
-         buys AS (SELECT DISTINCT user_id FROM {EV_SUB} events
+         buys AS (SELECT DISTINCT user_id FROM events
                   WHERE event_type = 'purchase')
     SELECT user_id, 'click_only' AS set_kind FROM (SELECT user_id FROM clicks EXCEPT ALL SELECT user_id FROM buys)
     UNION ALL
@@ -439,17 +429,17 @@ CORE_ORACLES["trailing_max_argmax"] = f"""
     FROM (SELECT event_id,
                  max(CAST(round(value * 100, 0) AS BIGINT) * 10000000 + event_id)
                    OVER (w ROWS BETWEEN 19 PRECEDING AND CURRENT ROW) AS mx
-          FROM {EV_SUB} events WINDOW w AS ({W_EVENTS}))
+          FROM events WINDOW w AS ({W_EVENTS}))
 """
 
-CORE_ORACLES["range_join_sessions"] = f"""
+CORE_ORACLES["range_join_sessions"] = """
     WITH o AS (
       SELECT user_id, event_id, ts,
              -- >= matches Spark session_window end-exclusive boundary semantics
              CASE WHEN lag(ts) OVER w IS NULL
                     OR ts - lag(ts) OVER w >= INTERVAL '30 minutes'
                   THEN 1 ELSE 0 END AS new_s
-      FROM {EV_SUB} events WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)),
+      FROM events WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)),
     s AS (
       SELECT user_id, event_id, ts,
              SUM(new_s) OVER (PARTITION BY user_id ORDER BY ts
@@ -460,19 +450,19 @@ CORE_ORACLES["range_join_sessions"] = f"""
              max(ts) + INTERVAL '30 minutes' AS s_end
       FROM s GROUP BY user_id, sid)
     SELECT e.event_id, epoch_us(sess.s_start) AS session_start_us
-    FROM {EV_SUB} e
+    FROM events e
     JOIN sess ON e.user_id = sess.user_id
              AND e.ts >= sess.s_start AND e.ts <= sess.s_end
 """
 
-CORE_ORACLES["funnel_conversion"] = f"""
+CORE_ORACLES["funnel_conversion"] = """
     WITH mins AS (
       SELECT user_id,
              min(ts) FILTER (WHERE event_type = 'signup')   AS m0,
              min(ts) FILTER (WHERE event_type = 'view')     AS m1,
              min(ts) FILTER (WHERE event_type = 'click')    AS m2,
              min(ts) FILTER (WHERE event_type = 'purchase') AS m3
-      FROM {EV_SUB} events GROUP BY user_id),
+      FROM events GROUP BY user_id),
     r AS (
       SELECT (m0 IS NOT NULL) AS r0,
              (m0 IS NOT NULL AND m1 IS NOT NULL AND m1 > m0) AS r1,
@@ -530,10 +520,10 @@ CORE_ORACLES["salted_hot_agg"] = """
     FROM events GROUP BY event_type
 """
 
-CORE_ORACLES["click_attribution"] = f"""
+CORE_ORACLES["click_attribution"] = """
     SELECT p.event_id AS purchase_id, c.event_id AS click_id,
            epoch_us(p.ts) - epoch_us(c.ts) AS delta_us
-    FROM {EV_SUB} p JOIN {EV_SUB} c
+    FROM events p JOIN events c
       ON p.user_id = c.user_id
      AND p.event_type = 'purchase' AND c.event_type = 'click'
      AND p.ts >= c.ts AND p.ts <= c.ts + INTERVAL 30 MINUTE
@@ -608,7 +598,7 @@ def _profile_col_sql(ordinal: int, col: str) -> str:
              COUNT(DISTINCT {col}) AS n_distinct,
              CAST(MIN({col}) AS VARCHAR) AS min_str,
              CAST(MAX({col}) AS VARCHAR) AS max_str
-      FROM {EV_SUB} events"""
+      FROM events"""
 
 
 CORE_ORACLES["table_profile"] = " UNION ALL ".join(
@@ -658,7 +648,7 @@ CORE_ORACLES["ewma_macd"] = f"""
       SELECT user_id, event_id, epoch_us(ts) AS ts_us,
              list_reverse(list(coalesce(value, 0.0)) OVER (w ROWS BETWEEN 11 PRECEDING AND CURRENT ROW)) AS rev12,
              list_reverse(list(coalesce(value, 0.0)) OVER (w ROWS BETWEEN 25 PRECEDING AND CURRENT ROW)) AS rev26
-      FROM {EV_SUB} events WINDOW w AS ({W_EVENTS})),
+      FROM events WINDOW w AS ({W_EVENTS})),
     e AS (
       SELECT user_id, event_id, ts_us,
              {_N12} / {_D12} AS e12,
@@ -966,8 +956,8 @@ CORE_ORACLES["validate_lineitem"] = """
     FROM checks
 """
 
-CORE_ORACLES["scd2_user_state"] = f"""
-    WITH ev AS (SELECT * FROM {EV_SUB}),
+CORE_ORACLES["scd2_user_state"] = """
+    WITH ev AS (SELECT * FROM events),
     marked AS (
         SELECT user_id, event_type, ts, event_id,
                (row_number() OVER w = 1
@@ -985,8 +975,8 @@ CORE_ORACLES["scd2_user_state"] = f"""
     WINDOW w2 AS (PARTITION BY user_id ORDER BY ts, event_id)
 """
 
-CORE_ORACLES["pit_feature_lookup"] = f"""
-    WITH ev AS (SELECT * FROM {EV_SUB}),
+CORE_ORACLES["pit_feature_lookup"] = """
+    WITH ev AS (SELECT * FROM events),
     marked AS (
         SELECT user_id, event_type, ts, event_id,
                (row_number() OVER w = 1
@@ -1071,8 +1061,8 @@ CORE_ORACLES["quantile_binning"] = """
     FROM b GROUP BY event_type, bin
 """
 
-CORE_ORACLES["twap_daily"] = f"""
-    WITH ev AS (SELECT * FROM {EV_SUB}),
+CORE_ORACLES["twap_daily"] = """
+    WITH ev AS (SELECT * FROM events),
     t AS (
         SELECT user_id AS k, date_trunc('day', ts) AS d,
                CAST(value AS DECIMAL(8,2)) AS v,
@@ -1369,10 +1359,10 @@ CORE_ORACLES["key_skew"] = """
     FROM top, tot
 """
 
-CORE_ORACLES["interval_join_stream_replay"] = f"""
+CORE_ORACLES["interval_join_stream_replay"] = """
     SELECT p.event_id AS purchase_id, c.event_id AS click_id,
            epoch_us(p.ts) - epoch_us(c.ts) AS delta_us
-    FROM {EV_SUB} p JOIN {EV_SUB} c
+    FROM events p JOIN events c
       ON p.user_id = c.user_id
      AND p.event_type = 'purchase' AND c.event_type = 'click'
      AND p.ts >= c.ts AND p.ts <= c.ts + INTERVAL 30 MINUTE

@@ -121,10 +121,10 @@ _LAST_SWEPT: dict[str, int] = {
 }
 
 # Queries first registered in round _ROUND (no driver row can exist).
-# r13 registers the r12-staged txn_merge (textml.py, promoted from
-# STAGED_ORACLES with its parity/unicode/degenerate gates intact):
-# the ACID MERGE surface — D5's transactional lane (storage/txnlog.
-# TxnTable.merge, reference db.py:166-201's update-else-insert) —
+# r13 registers the r12-staged txn_merge (textml.py, promoted with its
+# parity/unicode/degenerate gates intact): the ACID MERGE surface —
+# D5's transactional lane (storage/txnlog.TxnTable.merge, reference
+# db.py:166-201's update-else-insert) —
 # hash-gated ROW-LEVEL for the first time: a deterministic `events`
 # slice is appended, a deterministic update set MERGEd (replace the
 # {2,3} residues, insert {4,5}, leave {0,1}), and the final state
@@ -136,8 +136,7 @@ _LAST_SWEPT: dict[str, int] = {
 # auto-fill with the stalest r11 rows (tier-2 order), so the rotation
 # runs ahead of schedule rather than idling the slack.
 # r14 is an optimization round: no new registrations (txn_merge's r13
-# row is folded into _LAST_SWEPT above; the staged shelf below stays
-# shelved — feature work is out of scope this round).
+# row is folded into _LAST_SWEPT above).
 _NEW_THIS_ROUND: list[str] = []
 
 # Queries whose operator/plan/oracle semantics were touched since
@@ -163,179 +162,7 @@ _CHANGED_SINCE_ROW: list[str] = [
 # rows + the 2 _CHANGED_SINCE_ROW re-gates — exactly W, zero idle
 # slack.  r15 pre-stage: fold CORRECTNESS_r14 (-> 14); the r15
 # must-sweep is then the 50 r12-swept rows minus however many the r14
-# window already re-gated, leaving slack for the ONE registration on
-# the shelf (plans/textml.py STAGED_ORACLES, staged r12, sf0.1
-# twin-audited):
-#   staged_q_heavy_hitters_stream — approx_top_k streaming window
-#                                  sketch replay, deterministic
-#                                  re-rank, GROUP BY+row_number twin
-# Its sanctioned consolidation candidate (pre-staged per the standing
-# one-retirement-per-registration standard): retire `prices_page2`
-# (T3 — its offset-pagination second page is the SAME page()
-# machinery ★prices_keyset_page and ★prices_filter_range_limit gate
-# from both ends: identical orderBy tiebreakers, identical
-# TakeOrderedAndProject shape, and the offset arithmetic itself stays
-# golden-tested in tests/test_domain_operators.py
-# test_pagination_contract).  To register: rename to q_<name>, move
-# the STAGED_ORACLES entry into TEXTML_ORACLES, list in
-# _NEW_THIS_ROUND, delete the retired row from _LAST_SWEPT, keep
-# N ≤ 3W − 2.
-#
-# The shelf is also stocked for r15 (both twin-tested at sf_oracle +
-# degenerate/unicode-swept from the day they were staged, r13):
-#   staged_q_triangle_count            — degree-ordered triangle
-#                                        enumeration vs a naive a<b<c
-#                                        3-join twin (graph.py)
-#   staged_q_semdedup_bucketed_roundtrip — the bucketed write→read
-#                                        catalog round-trip vs
-#                                        ★semdedup's oracle verbatim
-#                                        (closes r12 verdict gap #3)
-# Their pre-staged consolidation candidates (one retirement funds each
-# registration; all keep their golden value tests):
-#   for triangle_count            → retire `cube_agg` (its Expand-based
-#     grouping lattice is the same operator ★grouping_sets_revenue and
-#     ★rollup_revenue gate from both ends — CUBE is the grouping-sets
-#     special case with every subset listed)
-#   for semdedup_bucketed_roundtrip → retire `tumbling_window_agg`
-#     (tumbling = sliding with slide == duration; ★sliding_window_agg
-#     gates the general machinery and ★ohlc_stream_replay hash-gates
-#     tumbling semantics end-to-end through the streaming replay)
-#
-# r16 shelf (staged + fully gated this round, r13 continuation:
-# sf_oracle parity, degenerate/unicode sweeps, sf0.1 twin audits
-# green — 3,600 and 2,898 rows — plan pins in test_plan_quality.py):
-#   staged_q_seasonal_decompose — STL-lite trend/seasonal/residual
-#     over hourly bucket sums, exact-DECIMAL discipline (market.py)
-#   staged_q_link_prediction_cn — common-neighbor link prediction
-#     with the degree cap as query semantics (graph.py)
-# Pre-staged consolidation candidates:
-#   for seasonal_decompose  → retire `autocorr_lag1` (its lag-pair
-#     DECIMAL sufficient statistics are the ★pairwise_corr machinery
-#     over a ★lag_delta-gated shift — both stay gated from both ends)
-#   for link_prediction_cn  → retire `group_topk` (generic per-group
-#     rank-and-filter — the same row_number shape ★sample_per_group,
-#     ★vocab_topk and ★tfidf_top_terms gate over three different
-#     corpora)
-#
-# r17 shelf (staged + fully gated this round: parity, degenerate/
-# unicode sweeps, sf0.1 audit 23 rows green, 100k/1M probes):
-#   staged_q_kcore — k-core survivors, 8 synchronized peel rounds
-#     (pagerank fixed-iterations contract) vs an unrolled
-#     MATERIALIZED-CTE DuckDB twin; clique fixture arm gives the peel
-#     a non-trivial stable core (graph.py kcore/synthetic_clique)
-# Pre-staged consolidation candidate:
-#   for kcore → retire `set_ops` (its union/intersect/except algebra
-#     is pinned cross-engine by ★union_merge_dedup's union-anti form
-#     and the anti/semi joins inside every dedup/decontaminate gate;
-#     golden tests stay)
-#
-# r18 shelf (staged + fully gated this round: parity, degenerate/
-# unicode sweeps — the empty-corpus schema-inference crasher was
-# found and fixed by the sweep before staging — sf0.1 audit 956 rows
-# green, 68.8% of files skipped for the gate box at sf0.1):
-#   staged_q_zorder_skip_roundtrip — the Z-order data-skipping path
-#     through storage: cluster → write → footer stats from read-back
-#     → min/max file pruning → pruned re-read, vs the plain-WHERE
-#     DuckDB twin (a hash match proves pruning is false-negative-free
-#     whatever file boundaries the range partitioner sampled)
-# Pre-staged consolidation candidate:
-#   for zorder_skip_roundtrip → retire `minmax_normalize` (its
-#     per-key min/max window is the machinery ★minmax_mid_premium
-#     and ★trailing_max_argmax gate from both ends; the zero-range
-#     division guard keeps its golden test)
-#
-# r19 shelf (staged + fully gated this round: parity, degenerate/
-# unicode sweeps, sf0.1 audit 148,453 rows green, micro-batch-
-# boundary + batch-law pins in test_staged_r10_ops.py):
-#   staged_q_cdc_stream_apply — the CDC round-trip law THROUGH
-#     streaming and ACID storage: snapshot_diff feed replayed as a
-#     multi-micro-batch file stream, each batch one atomic TxnTable
-#     MERGE with soft-delete tombstones (ingest.cdc_apply_batch),
-#     final snapshot state vs NEW computed directly
-# Pre-staged consolidation candidate:
-#   for cdc_stream_apply → retire `snapshot_diff` (its exact output
-#     shape — statuses + old_/new_ columns — is consumed whole by TWO
-#     gated compositions: ★cdc_apply_roundtrip's apply∘diff==new law
-#     and the stream row's merge path; the diff operator keeps its
-#     golden + property tests)
-#
-# r20 shelf (staged + fully gated this round: parity, degenerate/
-# unicode sweeps — the empty-corpus no-first-commit branch is guarded
-# and swept — sf0.1 audit 4,992 rows value-match, ~8 s Spark side):
-#   staged_q_forget_propagation — the right-to-be-forgotten law
-#     through ACID storage AND derived-view recompute: a duplicate
-#     corpus is appended to a TxnTable, the forget set delete_where'd,
-#     history TRUNCATED (storage/txnlog.truncate_history, new this
-#     round — the Delta logRetentionDuration analog that makes
-#     deletes physically reclaimable) and vacuumed, then exact-dedup
-#     survivors recomputed from the surviving snapshot.  The hash
-#     catches filter-the-old-output implementations: forgotten
-#     keepers must RE-ELECT their retained duplicate (three cluster
-#     fates pinned in test_staged_r10_ops.py); physical erasure
-#     itself is unit-pinned in test_txn_table.py.
-# Pre-staged consolidation candidate:
-#   for forget_propagation → retire `dedup_exact` (strict subset: the
-#     identical md5-fingerprint group-agg law is the forget gate's
-#     final stage, and the fingerprint column itself stays gated by
-#     ★fingerprint_docs; dedup_exact keeps its golden tests)
-#
-# Shelf ALTERNATE (no round assigned — every round through r20 already
-# carries a primary; registerable whenever a round frees a slot, e.g.
-# if a primary is invalidated by an engine change):
-#   staged_q_label_propagation — min-tie synchronous LPA communities
-#     over the link+clique fixture, 4 bulk-synchronous rounds vs an
-#     unrolled MATERIALIZED-CTE row_number-argmax DuckDB twin
-#     (graph.py label_propagation — the sixth graph primitive)
-# Pre-staged consolidation candidate:
-#   for label_propagation → retire `zipf_slope` (its log-log OLS over
-#     ranked token counts rides the same vocab count table ★vocab_topk
-#     gates and the same OLS normal equations ★trend_ols gates;
-#     golden tests stay)
-#
-# Shelf ALTERNATE #2 (same standing):
-#   staged_q_bootstrap_ci — per-group Poisson-bootstrap CI of the mean
-#     (Chamandy et al. 2012: hash-deterministic Poisson(1) weights,
-#     one pass, mergeable partials), DECIMAL replicate sums +
-#     order-statistic bounds so both engines agree to the bit; the
-#     DuckDB twin replays weights→means→ranking→selection in SQL
-#     (operators/sampling.poisson_bootstrap_ci; sf0.1 audit 5 rows
-#     exact, python-Fraction reference replay in tests)
-# Pre-staged consolidation candidate:
-#   for bootstrap_ci → retire `value_quantiles` (exact per-group
-#     percentiles are gated from both ends by ★quantile_binning's
-#     exact bin edges and ★sketch_profile's accuracy report, which
-#     compares the sketch AGAINST the exact quantiles; golden tests
-#     stay)
-#
-# Shelf ALTERNATE #3 (same standing):
-#   staged_q_bfs_distance — multi-source BFS depth from the clique-arm
-#     hub seeds, 6 frontier-relaxation rounds vs an unrolled
-#     MATERIALIZED-CTE min-relaxation DuckDB twin (graph.bfs_distance
-#     — the seventh graph primitive; the crawl scheduler's
-#     depth-from-seed-hosts priority field; sf0.1 audit 5,000 nodes
-#     exact with a 0–6 depth histogram that proves the round budget
-#     bites)
-# Pre-staged consolidation candidate:
-#   for bfs_distance → retire `ewma_macd` (its α-recursion is
-#     hash-gated end-to-end by ★ema_stateful_replay's streaming
-#     replay of the same recursion, and the signal/histogram columns
-#     are plain algebra over it; golden tests stay)
-#
-# Shelf ALTERNATE #4 (same standing):
-#   staged_q_holt_stateful_replay — the THIRD custom stateful
-#     operator (ingest.holt_stateful: per-key Holt level+trend double
-#     exponential smoothing, α=1/4 β=1/8 dyadic so the fold is
-#     bit-reproducible from plain literals) hash-gated through a real
-#     availableNow stream replay vs a list-accumulator list_reduce
-#     DuckDB twin; forecast1 = level + trend is the engine's
-#     one-step-ahead forecast surface (sf0.1 audit 1,500 users
-#     bit-exact; exact-fold + planted-ramp trend-recovery pins in
-#     tests/test_streaming.py)
-# Pre-staged consolidation candidate:
-#   for holt_stateful_replay → retire `resample_ffill` (its bucket
-#     grid rides ★ohlc_resample's gated resampling machinery and its
-#     forward-fill is the last_value window ★latest_per_key gates;
-#     golden tests stay)
+# window already re-gated.
 #
 # CEILING (computed, not guessed): N = 148 = 3W − 2.  The 2 slack
 # slots per 3-round cycle are what lets _CHANGED_SINCE_ROW re-gates

@@ -806,15 +806,6 @@ TEXTML_ORACLES: dict[str, str] = {
 }
 
 
-# events.ts ns→µs truncation (see plans/core_oracles.EV_SUB)
-from market_insights_app_spark.plans.core_oracles import EV_SUB as _EV_SUB  # noqa: E402
-
-TEXTML_ORACLES = {
-    k: v.replace("FROM events", f"FROM {_EV_SUB} events")
-    for k, v in TEXTML_ORACLES.items()
-}
-
-
 # q_ngram_jaccard_bigram retired in r9 (sanctioned consolidation,
 # registry.py pre-stage note): it was ngram_jaccard with n=2 instead of
 # n=1 — the same ngram_jaccard_vs_query code path, whose shingle
@@ -2438,8 +2429,7 @@ TEXTML_ORACLES["pmi_collocations"] = """
 # ---------------------------------------------------------------------------
 # REGISTERED in r8 (previously staged one round, gated locally by
 # tests/test_lm_scoring.py / test_sketches.py direct Spark<->DuckDB
-# parity plus the unicode + degenerate-input sweeps).  The staging
-# shelf for future rounds is STAGED_ORACLES (end of this module).
+# parity plus the unicode + degenerate-input sweeps).
 # ---------------------------------------------------------------------------
 
 
@@ -2875,15 +2865,8 @@ TEXTML_ORACLES["split_leakage"] = f"""
 # ---------------------------------------------------------------------------
 # r12 registration: host_authority (staged in r11, promoted per the
 # registry pre-stage plan, funded by the sanctioned sma5 consolidation
-# -> N = 148 = 3W - 2 preserved).  The staging shelf below
-# (STAGED_ORACLES — NOT collected: no q_ prefix) holds future rounds'
-# candidates; each pair is gated NOW by direct Spark<->DuckDB parity
-# tests plus the unicode and degenerate-input sweeps; a future round
-# renames `staged_q_<name>` -> `q_<name>`, moves the oracle into
-# TEXTML_ORACLES, and lists the name in _NEW_THIS_ROUND.
+# -> N = 148 = 3W - 2 preserved).
 # ---------------------------------------------------------------------------
-
-STAGED_ORACLES: dict[str, str] = {}
 
 
 def q_host_authority(spark: SparkSession, sf: str) -> DataFrame:
@@ -3060,807 +3043,4 @@ TEXTML_ORACLES["txn_merge"] = """
       AND NOT EXISTS (SELECT 1 FROM upd WHERE upd.event_id = events.event_id)
     UNION ALL
     SELECT event_id, user_id, value FROM upd
-"""
-
-
-def staged_q_heavy_hitters_stream(spark: SparkSession, sf: str) -> DataFrame:
-    """r13 staging candidate: the streaming frequent-items readout
-    (streaming/ingest.windowed_heavy_hitters — Spark 4's
-    ``approx_top_k`` mergeable sketch inside a windowed streaming
-    aggregate) hash-gated end-to-end: events replayed as an
-    availableNow file stream, 30-minute tumbling windows per
-    event_type, drained complete-mode into a memory sink (the
-    ohlc-replay pattern, so every window's final summary lands).
-
-    Exactness contract that makes a value-hash possible: the sketch is
-    EXACT while distinct keys fit ``max_items_tracked`` (10k here vs
-    a handful of event types), and k=16 exceeds the key cardinality so
-    no window truncates — the only nondeterminism left is the sketch's
-    tie ORDER, which this query discards by re-ranking with a
-    deterministic row_number over (est_count desc, item).  The DuckDB
-    twin computes the same windows with plain GROUP BY + row_number.
-    On a real unbounded-cardinality stream the same query is
-    MG-bounded (approximate) — that regime is exercised by the batch
-    sketches tests, not hash-gated here."""
-    import uuid
-
-    from pyspark.sql.window import Window as SqlWindow
-
-    from market_insights_app_spark.streaming.ingest import (
-        events_file_stream,
-        run_available_now_to_memory,
-        windowed_heavy_hitters,
-    )
-
-    name = f"hh_replay_{uuid.uuid4().hex[:8]}"
-    stream = events_file_stream(spark, sf, max_files_per_trigger=10_000)
-    hh = windowed_heavy_hitters(
-        stream,
-        key_col="event_type",
-        ts_col="ts",
-        duration="30 minutes",
-        k=16,
-        max_items_tracked=10_000,
-    )
-    run_available_now_to_memory(hh, name, "complete", shuffle_partitions=8)
-    out = spark.table(name)
-    rw = SqlWindow.partitionBy("window_start").orderBy(
-        F.desc("est_count"), F.asc("item")
-    )
-    return out.select(
-        ts_us("window_start").alias("window_start_us"),
-        F.col("item"),
-        F.col("est_count").cast("long").alias("est_count"),
-        F.row_number().over(rw).cast("int").alias("rank"),
-    )
-
-
-STAGED_ORACLES["heavy_hitters_stream"] = """
-    WITH c AS (
-      SELECT epoch_us(time_bucket(INTERVAL '30 minutes', ts))
-               AS window_start_us,
-             event_type AS item, COUNT(*) AS est_count
-      FROM events GROUP BY 1, 2
-    )
-    SELECT window_start_us, item, est_count,
-           CAST(row_number() OVER (PARTITION BY window_start_us
-                ORDER BY est_count DESC, item) AS INT) AS rank
-    FROM c
-"""
-
-
-def staged_q_triangle_count(spark: SparkSession, sf: str) -> DataFrame:
-    """r15 staging candidate: per-node triangle counts over the
-    deterministic skewed link graph (operators/graph.triangle_count —
-    degree-ordered wedge enumeration, Schank & Wagner 2005 / Suri &
-    Vassilvitskii WWW'11) — the third graph primitive after PageRank
-    and connected components, and the one whose naive form is the
-    canonical scale killer (sum(deg²) wedges at a power-law hub).
-    The Spark lane enumerates each triangle exactly once via the
-    (degree, id) total order; the DuckDB twin enumerates the same
-    triangle SET the naive a<b<c way over the identically-derived
-    canonical edge list — orientation changes the join plan, never the
-    triangle set, so per-corner counts hash-match exactly (pure int64
-    arithmetic end-to-end)."""
-    from market_insights_app_spark.operators.graph import (
-        synthetic_link_graph,
-        triangle_count,
-    )
-
-    return triangle_count(synthetic_link_graph(_docs(spark, sf)))
-
-
-STAGED_ORACLES["triangle_count"] = """
-    WITH n_t AS (SELECT CAST(count(*) AS BIGINT) AS n FROM documents),
-    raw AS (
-      SELECT doc_id AS src,
-             ((doc_id % n) * (doc_id % n) + 1) % n AS dst
-      FROM documents CROSS JOIN n_t
-      UNION ALL
-      SELECT doc_id, (doc_id * 31 + 7) % n FROM documents CROSS JOIN n_t
-      UNION ALL
-      SELECT doc_id, doc_id % greatest(n // 50, 1)
-      FROM documents CROSS JOIN n_t
-    ),
-    und AS (SELECT DISTINCT least(src, dst) AS a, greatest(src, dst) AS b
-            FROM raw WHERE src <> dst),
-    tri AS (SELECT e1.a AS ta, e1.b AS tb, e2.b AS tc
-            FROM und e1
-            JOIN und e2 ON e2.a = e1.b
-            JOIN und e3 ON e3.a = e1.a AND e3.b = e2.b),
-    corners AS (SELECT ta AS node FROM tri
-                UNION ALL SELECT tb FROM tri
-                UNION ALL SELECT tc FROM tri)
-    SELECT node, CAST(count(*) AS BIGINT) AS triangles
-    FROM corners GROUP BY node
-"""
-
-
-def staged_q_semdedup_bucketed_roundtrip(
-    spark: SparkSession, sf: str
-) -> DataFrame:
-    """r15 staging candidate: the write-once bucketed SemDeDup layout
-    hash-gated THROUGH the catalog round-trip — fit + label + bucketed
-    WRITE + read-back + screen (operators/similarity.semdedup_bucketed)
-    with the same parameters as ★semdedup, so the DuckDB twin is
-    ★semdedup's oracle verbatim: survivors are bit-identical by the
-    shared-screen construction (pinned in tests), and a driver row
-    would close the one residual gap the r12 verdict named — the
-    write→read round-trip through the catalog is itself logic the
-    in-session row never executes.  The per-call uuid table lives in
-    the session warehouse (the txn_merge temp-dir pattern; output
-    depends only on the input slice)."""
-    import uuid
-
-    from market_insights_app_spark.operators.similarity import (
-        semdedup_bucketed,
-    )
-
-    return semdedup_bucketed(
-        _emb(spark, sf),
-        f"sdd_bkt_rt_{uuid.uuid4().hex[:8]}",
-        k=8,
-        iters=2,
-        threshold=0.4,
-    )
-
-
-STAGED_ORACLES["semdedup_bucketed_roundtrip"] = TEXTML_ORACLES["semdedup"]
-
-
-def staged_q_seasonal_decompose(spark: SparkSession, sf: str) -> DataFrame:
-    """r16 staging candidate: classical additive seasonal
-    decomposition per event_type (operators/market.seasonal_decompose
-    — hourly bucket sums, centered 25-row moving-average trend,
-    hour-of-day seasonal means of the detrended series, residual
-    remainder).  The reference charts raw series (main.js chart
-    panels); this is the follow-on question every metrics consumer
-    asks of them — "is that spike seasonal or real" — decomposed with
-    the module's DECIMAL discipline so trend/seasonal/residual are
-    single double expressions over exact sums, value-hashable
-    cross-engine.  The DuckDB twin replays bucket→window→slot algebra
-    declaratively; ns→µs timestamp truncation cannot move an hour
-    boundary, so the staged oracle reads events raw (the
-    heavy_hitters_stream precedent)."""
-    from market_insights_app_spark.operators.market import (
-        seasonal_decompose,
-    )
-
-    ev = load_table(spark, sf, "events")
-    return seasonal_decompose(ev)
-
-
-STAGED_ORACLES["seasonal_decompose"] = """
-    WITH b AS (
-      SELECT event_type AS k, date_trunc('hour', ts) AS h,
-             sum(CAST(value AS DECIMAL(8,2))) AS y
-      FROM events GROUP BY 1, 2
-    ),
-    t AS (
-      SELECT k, h, y,
-             sum(y)   OVER w AS tsum,
-             count(y) OVER w AS tn,
-             count(*) OVER w AS nr
-      FROM b WINDOW w AS (PARTITION BY k ORDER BY h
-                          ROWS BETWEEN 12 PRECEDING AND 12 FOLLOWING)
-    ),
-    t2 AS (
-      SELECT k, h, y,
-             CASE WHEN tn = 25 AND nr = 25
-                  THEN CAST(tsum AS DOUBLE) / 25.0 END AS trend,
-             CASE WHEN tn = 25 AND nr = 25
-                  THEN y * 25 - tsum END AS det,
-             hour(h) AS slot
-      FROM t
-    ),
-    s AS (
-      SELECT k, slot, sum(det) AS sn, count(det) AS sc
-      FROM t2 GROUP BY 1, 2
-    )
-    SELECT t2.k AS event_type, epoch_us(t2.h) AS bucket_us,
-           round(CAST(t2.y AS DOUBLE), 6) AS bucket_value,
-           round(t2.trend, 6) AS trend,
-           round(CASE WHEN s.sc > 0
-                 THEN CAST(s.sn AS DOUBLE) / (25.0 * CAST(s.sc AS DOUBLE))
-                 END, 6) AS seasonal,
-           round(CASE WHEN t2.trend IS NOT NULL AND s.sc > 0
-                 THEN CAST(t2.y AS DOUBLE) - t2.trend
-                      - CAST(s.sn AS DOUBLE) / (25.0 * CAST(s.sc AS DOUBLE))
-                 END, 6) AS residual
-    FROM t2 JOIN s ON s.k = t2.k AND s.slot = t2.slot
-"""
-
-
-def staged_q_link_prediction_cn(spark: SparkSession, sf: str) -> DataFrame:
-    """r16 staging candidate: common-neighbor link prediction over the
-    deterministic skewed link graph (operators/graph.
-    link_predict_common_neighbors — Liben-Nowell & Kleinberg 2003) —
-    the fourth graph primitive, and the first whose SCALE SEMANTICS
-    (the max_center_degree wedge cap, see the operator docstring) are
-    part of the query definition: the DuckDB twin replays the SAME cap
-    over the same degree table, so the gate hash-checks the capped
-    enumeration itself, hub exclusions included (the synthetic graph's
-    hub arm pushes nodes past the cap at every sf — 10 hubs at the
-    500-doc gate scales, 111 at sf0.1 — so the cap genuinely binds).
-    Pure int64 arithmetic end-to-end."""
-    from market_insights_app_spark.operators.graph import (
-        link_predict_common_neighbors,
-        synthetic_link_graph,
-    )
-
-    return link_predict_common_neighbors(
-        synthetic_link_graph(_docs(spark, sf))
-    )
-
-
-STAGED_ORACLES["link_prediction_cn"] = """
-    WITH n_t AS (SELECT CAST(count(*) AS BIGINT) AS n FROM documents),
-    raw AS (
-      SELECT doc_id AS src,
-             ((doc_id % n) * (doc_id % n) + 1) % n AS dst
-      FROM documents CROSS JOIN n_t
-      UNION ALL
-      SELECT doc_id, (doc_id * 31 + 7) % n FROM documents CROSS JOIN n_t
-      UNION ALL
-      SELECT doc_id, doc_id % greatest(n // 50, 1)
-      FROM documents CROSS JOIN n_t
-    ),
-    und AS (SELECT DISTINCT least(src, dst) AS a, greatest(src, dst) AS b
-            FROM raw WHERE src <> dst),
-    deg AS (SELECT node, count(*) AS d
-            FROM (SELECT a AS node FROM und
-                  UNION ALL SELECT b FROM und)
-            GROUP BY node),
-    adj AS (SELECT a AS node, b AS nbr FROM und
-            UNION ALL SELECT b, a FROM und),
-    cadj AS (SELECT adj.node, adj.nbr FROM adj
-             JOIN deg ON deg.node = adj.node AND deg.d <= 32),
-    pairs AS (SELECT a1.nbr AS a, a2.nbr AS b
-              FROM cadj a1 JOIN cadj a2
-                ON a1.node = a2.node AND a1.nbr < a2.nbr),
-    fresh AS (SELECT a, b FROM pairs
-              WHERE NOT EXISTS (SELECT 1 FROM und
-                                WHERE und.a = pairs.a AND und.b = pairs.b))
-    SELECT a AS node_a, b AS node_b,
-           CAST(count(*) AS BIGINT) AS common_neighbors
-    FROM fresh GROUP BY a, b HAVING count(*) >= 2
-"""
-
-
-def staged_q_kcore(spark: SparkSession, sf: str) -> DataFrame:
-    """r17 staging candidate: k-core decomposition survivors over the
-    deterministic skewed link graph PLUS a ~20-node clique arm
-    (operators/graph.kcore / synthetic_clique, k=5, 8 synchronized
-    peeling rounds — the pagerank fixed-iterations contract, so the
-    DuckDB twin replays the identical 8-round peel as unrolled
-    MATERIALIZED CTEs and the gate hash-checks every round's
-    simultaneous-deletion semantics).  Fixture calibration (measured
-    at staging): k=5 peels deeply THROUGH a multi-round cascade
-    (sf0.1: 879 → 200 → 23 survivors by rounds 1/2/4) and stabilizes
-    on the clique core — the bare link graph is too homogeneous (k=4
-    empties, k=3 never peels), which is exactly why the clique arm
-    exists.  The fifth graph primitive (after PageRank, connected
-    components, triangles, link prediction): the standard "dense
-    enough to matter" filter a graph pipeline runs before
-    community/motif work.  Pure int64."""
-    from market_insights_app_spark.operators.graph import (
-        kcore,
-        synthetic_clique,
-        synthetic_link_graph,
-    )
-
-    docs = _docs(spark, sf)
-    g = synthetic_link_graph(docs).union(synthetic_clique(docs))
-    return kcore(g, k=5, rounds=8)
-
-
-# shared by the kcore and label_propagation twins: the deterministic
-# skewed link graph + ~20-node clique arm, canonicalized undirected
-_LINK_CLIQUE_E0_SQL = """
-    WITH n_t AS (SELECT CAST(count(*) AS BIGINT) AS n FROM documents),
-    raw AS (
-      SELECT doc_id AS src,
-             ((doc_id % n) * (doc_id % n) + 1) % n AS dst
-      FROM documents CROSS JOIN n_t
-      UNION ALL
-      SELECT doc_id, (doc_id * 31 + 7) % n FROM documents CROSS JOIN n_t
-      UNION ALL
-      SELECT doc_id, doc_id % greatest(n // 50, 1)
-      FROM documents CROSS JOIN n_t
-      UNION ALL
-      SELECT c1.doc_id, c2.doc_id
-      FROM documents c1 CROSS JOIN n_t, documents c2
-      WHERE c1.doc_id % greatest(n // 20, 1) = 0
-        AND c2.doc_id % greatest(n // 20, 1) = 0
-        AND c1.doc_id < c2.doc_id
-    ),
-    e0 AS MATERIALIZED (SELECT DISTINCT least(src, dst) AS a, greatest(src, dst) AS b
-           FROM raw WHERE src <> dst)"""
-
-
-def _kcore_oracle(k: int = 3, rounds: int = 8) -> str:
-    # Every CTE is AS MATERIALIZED: DuckDB inlines plain CTEs, and each
-    # peel round references its predecessor ~4 times (degree union x2,
-    # survivor joins x2), so the inlined e8 expands ~4^8 subtrees and
-    # re-opens the parquet at every leaf ("Too many open files", found
-    # at staging).  The pagerank oracle survives unmaterialized only
-    # because its chain is linear.
-    steps = []
-    for r in range(rounds):
-        steps.append(f"""
-    d{r} AS MATERIALIZED (SELECT node, count(*) AS c
-             FROM (SELECT a AS node FROM e{r}
-                   UNION ALL SELECT b FROM e{r})
-             GROUP BY node),
-    s{r} AS MATERIALIZED (SELECT node FROM d{r} WHERE c >= {k}),
-    e{r + 1} AS MATERIALIZED (SELECT e{r}.a, e{r}.b FROM e{r}
-                 JOIN s{r} x ON x.node = e{r}.a
-                 JOIN s{r} y ON y.node = e{r}.b)""")
-    return f"""{_LINK_CLIQUE_E0_SQL},{",".join(steps)}
-    SELECT node, CAST(count(*) AS BIGINT) AS degree
-    FROM (SELECT a AS node FROM e{rounds}
-          UNION ALL SELECT b FROM e{rounds})
-    GROUP BY node
-"""
-
-
-STAGED_ORACLES["kcore"] = _kcore_oracle(k=5)
-
-
-def staged_q_zorder_skip_roundtrip(spark: SparkSession, sf: str) -> DataFrame:
-    """r18 staging candidate: the Z-order data-skipping path hash-gated
-    THROUGH storage (the semdedup_bucketed_roundtrip pattern applied to
-    layout.py, whose gates today are unit-only): events are z-order
-    clustered on (user_id, value) into 16 files (operators/layout.
-    zorder_assign — Morton interleave, one repartitionByRange), written
-    to parquet partitioned by file, per-file min/max stats derived from
-    the READ-BACK data (what a table format's footer records), a 2-D
-    box predicate prunes files on those stats, and ONLY surviving files
-    are re-read and row-filtered.  The DuckDB twin is the plain WHERE —
-    so a hash match proves min/max pruning dropped no qualifying row
-    (false-negative-free skipping), whatever file boundaries the range
-    partitioner sampled.  The skip RATIO is deliberately not in the
-    gate (boundaries are sampling-dependent); it is priced in
-    scripts/zorder_probe.py at commit bf32667 and pinned directionally in
-    tests/test_zorder_layout.py."""
-    import tempfile
-
-    from market_insights_app_spark.operators.layout import (
-        layout_stats,
-        zorder_assign,
-    )
-
-    lo_u, hi_u, lo_v, hi_v = 10, 40, 20.0, 80.0
-    ev = load_table(spark, sf, "events").select(
-        "event_id", "user_id", "value"
-    )
-    root = tempfile.mkdtemp(prefix="mias_zorder_rt_")
-    laid = zorder_assign(ev, ["user_id", "value"], n_files=16)
-    laid.write.mode("overwrite").partitionBy("__file").parquet(root)
-    # explicit schema: an EMPTY corpus writes no partition dirs, and a
-    # schema-less read of the bare root cannot infer one (found by the
-    # degenerate sweep)
-    back = spark.read.schema(laid.schema).parquet(root)
-    stats = layout_stats(back, ["user_id", "value"]).collect()
-    keep = [
-        r["__file"]
-        for r in stats
-        if r["min_user_id"] is not None
-        and r["max_user_id"] >= lo_u
-        and r["min_user_id"] <= hi_u
-        and r["max_value"] >= lo_v
-        and r["min_value"] <= hi_v
-    ]
-    row_filter = (
-        F.col("user_id").between(lo_u, hi_u)
-        & F.col("value").between(lo_v, hi_v)
-    )
-    cols = ["event_id", "user_id", "value"]
-    if not keep:
-        return ev.filter(row_filter).limit(0).select(*cols)
-    pruned = spark.read.parquet(
-        *[f"{root}/__file={k}" for k in keep]
-    )
-    return pruned.filter(row_filter).select(*cols)
-
-
-STAGED_ORACLES["zorder_skip_roundtrip"] = """
-    SELECT event_id, user_id, value FROM events
-    WHERE user_id BETWEEN 10 AND 40 AND value BETWEEN 20.0 AND 80.0
-"""
-
-
-def staged_q_cdc_stream_apply(spark: SparkSession, sf: str) -> DataFrame:
-    """r19 staging candidate: the CDC round-trip law extended through
-    STREAMING and ACID storage in one gate — the ★cdc_apply_roundtrip
-    change feed (reconcile.snapshot_diff over the deterministic orders
-    snapshots) is written to files, replayed as a file STREAM in
-    multiple micro-batches (maxFilesPerTrigger=2 over 8 files), and
-    each micro-batch lands on a TxnTable seeded with OLD as one atomic
-    MERGE via streaming/ingest.cdc_apply_batch (soft-delete
-    tombstones, no driver key collection).  The final non-tombstone
-    state read back through the snapshot log must equal NEW computed
-    directly — the DuckDB twin never sees the diff, the stream, or
-    the log.  What this gates that the batch row cannot: micro-batch
-    boundary invariance (diff rows are one-per-key so disjoint merges
-    commute), the foreachBatch→MERGE composition, and the read-after-
-    stream snapshot."""
-    import tempfile
-
-    from market_insights_app_spark.operators.reconcile import snapshot_diff
-    from market_insights_app_spark.storage.txnlog import TxnTable
-    from market_insights_app_spark.streaming.ingest import (
-        cdc_apply_batch,
-        run_available_now_foreach_batch,
-    )
-
-    orders = load_table(spark, sf, "orders")
-    old = orders.filter(F.col("o_orderkey") % 89 != 0).select(
-        "o_orderkey", "o_totalprice", "o_orderstatus"
-    )
-    new = (
-        orders.filter(F.col("o_orderkey") % 97 != 0)
-        .withColumn(
-            "o_totalprice",
-            F.when(
-                F.col("o_orderpriority") == "1-URGENT",
-                F.col("o_totalprice") + F.lit(10.0),
-            ).otherwise(F.col("o_totalprice")),
-        )
-        .select("o_orderkey", "o_totalprice", "o_orderstatus")
-    )
-    diff = snapshot_diff(
-        old, new, ["o_orderkey"], ["o_totalprice", "o_orderstatus"]
-    )
-    feed = tempfile.mkdtemp(prefix="mias_cdc_feed_")
-    diff.repartition(8).write.mode("overwrite").parquet(feed)
-
-    t = TxnTable(spark, tempfile.mkdtemp(prefix="mias_cdc_tbl_"))
-    t.append(
-        old.withColumn("deleted", F.lit(False)), stats_col="o_orderkey"
-    )
-    stream = (
-        spark.readStream.schema(spark.read.parquet(feed).schema)
-        .option("maxFilesPerTrigger", 2)
-        .parquet(feed)
-    )
-    run_available_now_foreach_batch(
-        stream,
-        lambda b: cdc_apply_batch(
-            b, t, ["o_orderkey"], ["o_totalprice", "o_orderstatus"]
-        ),
-        shuffle_partitions=8,
-    )
-    return (
-        t.read()
-        .filter(~F.col("deleted"))
-        .select(
-            "o_orderkey",
-            F.round("o_totalprice", 2).alias("totalprice"),
-            "o_orderstatus",
-        )
-    )
-
-
-STAGED_ORACLES["cdc_stream_apply"] = """
-    SELECT o_orderkey,
-           round(CASE WHEN o_orderpriority = '1-URGENT'
-                      THEN o_totalprice + 10.0 ELSE o_totalprice END, 2)
-             AS totalprice,
-           o_orderstatus
-    FROM orders WHERE o_orderkey % 97 <> 0
-"""
-
-
-def staged_q_forget_propagation(spark: SparkSession, sf: str) -> DataFrame:
-    """r20 staging candidate: the right-to-be-forgotten law gated
-    through ACID storage AND derived-view recompute in one hash.  A
-    deterministic duplicate corpus (documents ∪ a doc_id+100000 copy of
-    itself) is appended to a TxnTable, the forget set (doc_id % 53 = 0)
-    is removed with delete_where, history is truncated and vacuumed so
-    the forgotten bytes physically leave storage (storage/txnlog.
-    truncate_history — the Delta logRetentionDuration analog; a row
-    DELETE alone keeps the bytes reachable via time travel), and
-    exact-dedup survivors are RECOMPUTED from the surviving snapshot
-    (generalizing reference db.py:92-99 delete + db.py:126-131 dedup).
-    The DuckDB twin computes survivors over the retained corpus
-    directly — it never sees the table, the log, or the vacuum.
-
-    What the hash distinguishes that a filter-the-old-output
-    implementation gets wrong: clusters whose keeper was forgotten
-    (doc_id ≡ 0 mod 53) must RE-ELECT the retained copy as keeper
-    (keeper becomes doc_id+100000); clusters that lost only the copy
-    (doc_id ≡ 11 mod 53, since 100000 ≡ 42 mod 53) shrink n 2→1 with
-    the keeper unchanged; every other cluster is untouched.  Physical
-    erasure itself is unit-pinned (tests/test_txn_table.py
-    test_truncate_history_enables_physical_forget) — a value hash
-    cannot see storage."""
-    import tempfile
-
-    from market_insights_app_spark.storage.txnlog import TxnTable
-
-    docs = load_table(spark, sf, "documents").select("doc_id", "text")
-    corpus = docs.unionByName(
-        docs.select((F.col("doc_id") + F.lit(100000)).alias("doc_id"), "text")
-    )
-    out_schema = "fp string, keeper bigint, n bigint"
-    if corpus.isEmpty():
-        # an empty corpus has no first commit to delete from; the
-        # degenerate-sweep contract is an empty result, not a stacktrace
-        return spark.createDataFrame([], out_schema)
-    t = TxnTable(spark, tempfile.mkdtemp(prefix="mias_forget_"))
-    t.append(corpus, stats_col="doc_id")
-    t.delete_where(F.col("doc_id") % 53 == 0)
-    t.truncate_history()
-    t.vacuum(retain_seconds=0.0)
-    retained = t.read()
-    return (
-        retained.select(TX.md5_fingerprint("text").alias("fp"), "doc_id")
-        .groupBy("fp")
-        .agg(F.min("doc_id").alias("keeper"), F.count(F.lit(1)).alias("n"))
-    )
-
-
-STAGED_ORACLES["forget_propagation"] = f"""
-    WITH corpus AS (
-        SELECT doc_id, text FROM documents
-        UNION ALL
-        SELECT doc_id + 100000 AS doc_id, text FROM documents
-    )
-    SELECT md5({_NORM_SQL}) AS fp, min(doc_id) AS keeper, COUNT(*) AS n
-    FROM corpus WHERE doc_id % 53 <> 0
-    GROUP BY 1
-"""
-
-
-def staged_q_label_propagation(spark: SparkSession, sf: str) -> DataFrame:
-    """Shelf alternate (registerable whenever a round frees a slot —
-    every named round through r20 already carries a primary): community
-    detection by synchronous min-tie label propagation over the
-    deterministic skewed link graph + clique arm (operators/graph.
-    label_propagation, 4 bulk-synchronous rounds — the pagerank
-    fixed-iterations contract, so the DuckDB twin replays the identical
-    4 rounds as unrolled MATERIALIZED CTEs with a row_number argmax per
-    node and the gate hash-checks every round's simultaneous-adoption
-    semantics).  The sixth graph primitive: connected components give
-    reachability classes, LPA splits them into densely-linked
-    communities (the clique arm must collapse onto its minimum member —
-    pinned in tests/test_graph.py).  Pure int64."""
-    from market_insights_app_spark.operators.graph import (
-        label_propagation,
-        synthetic_clique,
-        synthetic_link_graph,
-    )
-
-    docs = _docs(spark, sf)
-    g = synthetic_link_graph(docs).union(synthetic_clique(docs))
-    return label_propagation(g, rounds=4)
-
-
-def _lpa_oracle(rounds: int = 4) -> str:
-    steps = []
-    for r in range(rounds):
-        steps.append(f"""
-    c{r} AS MATERIALIZED (SELECT adj.node, l.label, count(*) AS c
-             FROM adj JOIN l{r} l ON l.node = adj.nbr
-             GROUP BY 1, 2),
-    l{r + 1} AS MATERIALIZED (SELECT node, label FROM (
-               SELECT node, label,
-                      row_number() OVER (PARTITION BY node
-                                         ORDER BY c DESC, label ASC) AS rn
-               FROM c{r}) WHERE rn = 1)""")
-    return f"""{_LINK_CLIQUE_E0_SQL},
-    adj AS MATERIALIZED (SELECT a AS node, b AS nbr FROM e0
-           UNION ALL SELECT b AS node, a AS nbr FROM e0),
-    l0 AS MATERIALIZED (SELECT DISTINCT node, node AS label FROM adj),{",".join(steps)}
-    SELECT node, label FROM l{rounds}
-"""
-
-
-STAGED_ORACLES["label_propagation"] = _lpa_oracle(rounds=4)
-
-
-def staged_q_bootstrap_ci(spark: SparkSession, sf: str) -> DataFrame:
-    """Shelf alternate: per-language bootstrap CI of mean document
-    length by the POISSON bootstrap (Chamandy et al. 2012 — the
-    one-pass, coordination-free resampling a 100 TB readout needs:
-    each row enters replicate b with a hash-deterministic Poisson(1)
-    weight; operators/sampling.poisson_bootstrap_ci).  Engine-exact by
-    construction: identical md5-uniforms and CDF literals on both
-    sides, DECIMAL replicate sums, and LOWER-ORDER-STATISTIC interval
-    bounds via row_number (no percentile interpolation arithmetic to
-    drift a ULP).  201 replicates put the 2.5/97.5 cut indices on
-    exact percentile positions.  The twin replays every stage in SQL —
-    weights, replicate means, ranking, order-statistic selection."""
-    from market_insights_app_spark.operators.sampling import (
-        poisson_bootstrap_ci,
-    )
-
-    docs = _docs(spark, sf)
-    return poisson_bootstrap_ci(
-        docs, value_col="n_chars", group_col="lang", id_col="doc_id"
-    )
-
-
-STAGED_ORACLES["bootstrap_ci"] = """
-    WITH base AS (
-      SELECT lang AS g, doc_id AS id, CAST(n_chars AS DECIMAL(8,2)) AS v
-      FROM documents
-    ),
-    rep AS (
-      SELECT g, id, v, b
-      FROM base CROSS JOIN (SELECT unnest(range(201)) AS b)
-    ),
-    wtd AS (
-      SELECT g, b, v,
-        CASE
-          WHEN u < 0.36787944117144233 THEN 0
-          WHEN u < 0.7357588823428847 THEN 1
-          WHEN u < 0.9196986029286058 THEN 2
-          WHEN u < 0.9810118431238463 THEN 3
-          WHEN u < 0.9963401531726563 THEN 4
-          WHEN u < 0.9994058151824183 THEN 5
-          WHEN u < 0.999916758850712 THEN 6
-          WHEN u < 0.9999897508033253 THEN 7
-          WHEN u < 0.999998874797402 THEN 8
-          ELSE 9 END AS k
-      FROM (SELECT g, id, v, b,
-              CAST(('0x' || substr(md5('boot-v1:' || CAST(id AS VARCHAR)
-                    || ':' || CAST(b AS VARCHAR)), 1, 8)) AS BIGINT)
-                / 4294967296.0 AS u
-            FROM rep) t
-    ),
-    means AS (
-      SELECT g, b, CAST(SUM(k * v) AS DOUBLE) / CAST(SUM(k) AS DOUBLE) AS m
-      FROM wtd GROUP BY 1, 2 HAVING SUM(k) > 0
-    ),
-    ranked AS (
-      SELECT g, b, m,
-             row_number() OVER (PARTITION BY g ORDER BY m, b) AS rn,
-             count(*) OVER (PARTITION BY g) AS cnt
-      FROM means
-    ),
-    ci AS (
-      SELECT g,
-             max(CASE WHEN rn = CAST(floor(0.025 * (cnt - 1)) AS BIGINT) + 1
-                      THEN m END) AS ci_lo,
-             max(CASE WHEN rn = CAST(floor(0.975 * (cnt - 1)) AS BIGINT) + 1
-                      THEN m END) AS ci_hi,
-             count(*) AS n_replicates
-      FROM ranked GROUP BY 1
-    ),
-    overall AS (
-      SELECT g, count(*) AS n, CAST(SUM(v) AS DOUBLE) / count(*) AS mean
-      FROM base GROUP BY 1
-    )
-    SELECT overall.g AS lang, n, mean, ci_lo, ci_hi, n_replicates
-    FROM overall JOIN ci USING (g)
-"""
-
-
-def staged_q_bfs_distance(spark: SparkSession, sf: str) -> DataFrame:
-    """Shelf alternate: multi-source BFS depth from the clique-arm hub
-    set over the deterministic link graph (operators/graph.
-    bfs_distance, 6 frontier-relaxation rounds — the pagerank
-    fixed-iterations contract; the DuckDB twin replays the identical
-    6 relaxations as unrolled MATERIALIZED CTEs).  The crawl
-    scheduler's primitive — depth from seed hosts prioritizes the
-    fetch frontier — and the seventh graph primitive.  Seeds are the
-    ~20 clique members (doc_id ≡ 0 mod max(n/20, 1), the same hub set
-    synthetic_clique links), so the depth field radiates from the
-    densely-connected core.  Pure int64."""
-    from market_insights_app_spark.operators.graph import (
-        bfs_distance,
-        synthetic_clique,
-        synthetic_link_graph,
-    )
-
-    docs = _docs(spark, sf)
-    g = synthetic_link_graph(docs).union(synthetic_clique(docs))
-    cnt = docs.groupBy().agg(F.count(F.lit(1)).alias("n"))
-    step = F.greatest(F.expr("n div 20"), F.lit(1).cast("long"))
-    seeds = (
-        docs.select("doc_id")
-        .crossJoin(F.broadcast(cnt))
-        .filter(F.col("doc_id") % step == 0)
-        .select(F.col("doc_id").alias("node"))
-    )
-    return bfs_distance(g, seeds, rounds=6)
-
-
-def _bfs_oracle(rounds: int = 6) -> str:
-    steps = []
-    for r in range(rounds):
-        steps.append(f"""
-    d{r + 1} AS MATERIALIZED (
-      SELECT node, min(dist) AS dist FROM (
-        SELECT node, dist FROM d{r}
-        UNION ALL
-        SELECT adj.node, d.dist + 1 AS dist
-        FROM adj JOIN d{r} d ON d.node = adj.nbr
-      ) GROUP BY 1)""")
-    return f"""{_LINK_CLIQUE_E0_SQL},
-    adj AS MATERIALIZED (SELECT a AS node, b AS nbr FROM e0
-           UNION ALL SELECT b AS node, a AS nbr FROM e0),
-    d0 AS MATERIALIZED (
-      SELECT doc_id AS node, CAST(0 AS BIGINT) AS dist
-      FROM documents CROSS JOIN n_t
-      WHERE doc_id % greatest(n // 20, 1) = 0),{",".join(steps)}
-    SELECT node, dist FROM d{rounds}
-"""
-
-
-STAGED_ORACLES["bfs_distance"] = _bfs_oracle(rounds=6)
-
-
-def staged_q_holt_stateful_replay(spark: SparkSession, sf: str) -> DataFrame:
-    """Shelf alternate: the THIRD custom stateful operator hash-gated
-    through a real stream replay — per-key Holt double exponential
-    smoothing (level + trend; streaming/ingest.holt_stateful, α=1/4,
-    β=1/8 — dyadic, so 1−α / 1−β are exact doubles and the fold is
-    bit-reproducible from plain literals) run by applyInPandasWithState
-    over the events parquet replayed as an availableNow file stream.
-    The DuckDB twin replays the identical fold as a struct-accumulator
-    list_reduce in (ts, event_id) order — the l-expression appears
-    twice in the lambda (SQL lambdas bind no intermediates) but
-    deterministic FP makes the recomputation bit-identical to the
-    operator's reuse.  Forecast surface: forecast1 = level + trend is
-    the one-step-ahead prediction the EMA's trendless state cannot
-    express."""
-    import uuid as _uuid
-
-    from pyspark.sql.window import Window as W
-
-    from market_insights_app_spark.streaming.ingest import (
-        events_file_stream,
-        holt_stateful,
-        run_available_now_to_memory,
-    )
-
-    name = f"holt_replay_{_uuid.uuid4().hex[:8]}"
-    stream = events_file_stream(spark, sf, max_files_per_trigger=10_000)
-    run_available_now_to_memory(
-        holt_stateful(stream), name, "append", shuffle_partitions=8
-    )
-    out = spark.table(name)
-    w = W.partitionBy("key").orderBy(F.col("n_seen").desc())
-    return (
-        out.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .select(
-            F.col("key").alias("user_id"),
-            "level",
-            "trend",
-            "forecast1",
-            "n_seen",
-        )
-    )
-
-
-STAGED_ORACLES["holt_stateful_replay"] = """
-    WITH s AS (
-      SELECT user_id, list(value ORDER BY ts, event_id) AS vs
-      FROM events GROUP BY user_id),
-    f AS (
-      -- accumulator is a DOUBLE[2] = [level, trend].  NOT a struct:
-      -- DuckDB 1.0 list_reduce evaluates struct-literal lambda fields
-      -- sequentially with acc fields REBOUND to already-computed new
-      -- fields from the 2nd application on (found at staging: the
-      -- trend expression saw the new level) — list literals fold
-      -- correctly
-      SELECT user_id,
-             list_reduce(
-               list_transform(vs, x -> [CAST(x AS DOUBLE),
-                                        CAST(0 AS DOUBLE)]),
-               (acc, x) -> [
-                 0.25::DOUBLE * x[1] + 0.75::DOUBLE * (acc[1] + acc[2]),
-                 0.125::DOUBLE * ((0.25::DOUBLE * x[1]
-                     + 0.75::DOUBLE * (acc[1] + acc[2])) - acc[1])
-                   + 0.875::DOUBLE * acc[2]
-               ]) AS st,
-             CAST(len(vs) AS BIGINT) AS n_seen
-      FROM s)
-    SELECT user_id, st[1] AS level, st[2] AS trend,
-           st[1] + st[2] AS forecast1, n_seen
-    FROM f
 """

@@ -11,9 +11,9 @@ Spark-native surface:
   deliberately generous and documented as the deviation (§7.4.6);
 - tumbling / sliding / session window aggregations (ST5 — no reference
   counterpart; part of the Spark-native surface mandate);
-- availableNow drains into a memory sink or through ``foreachBatch``;
-  idempotent inserts and upserts (S4, D4/D5) sink each micro-batch as
-  one ACID MERGE via ``storage/txnlog.streaming_merge_sink``.
+- availableNow drains into a memory sink; idempotent inserts and
+  upserts (S4, D4/D5) sink each micro-batch as one ACID MERGE via
+  ``storage/txnlog.streaming_merge_sink``.
 
 All builders return unstarted DataFrames/queries so tests drive them
 with ``trigger(availableNow=True)`` + memory sink.
@@ -176,20 +176,8 @@ def run_available_now_to_memory(
     path narrows.  Replays run sequentially (driver sweep, bench,
     tests), so the temporary session-conf flip cannot leak into a
     concurrent query."""
-    writer = (
-        stream_df.writeStream.format("memory")
-        .queryName(name)
-        .outputMode(output_mode)
-    )
-    return _drain(stream_df.sparkSession, writer, shuffle_partitions)
-
-
-def _drain(spark: SparkSession, writer, shuffle_partitions: int | None):
-    """Start ``writer`` with an availableNow trigger on a fresh
-    checkpoint, wait for it to drain, and record it as
-    ``LAST_REPLAY_QUERY``.  ``shuffle_partitions`` overrides the
-    session's shuffle width for this drain only."""
     global LAST_REPLAY_QUERY
+    spark = stream_df.sparkSession
     prev = None
     ckpt = _replay_checkpoint_dir()
     if shuffle_partitions is not None:
@@ -197,7 +185,10 @@ def _drain(spark: SparkSession, writer, shuffle_partitions: int | None):
         spark.conf.set("spark.sql.shuffle.partitions", str(shuffle_partitions))
     try:
         q = (
-            writer.trigger(availableNow=True)
+            stream_df.writeStream.format("memory")
+            .queryName(name)
+            .outputMode(output_mode)
+            .trigger(availableNow=True)
             .option("checkpointLocation", ckpt)
             .start()
         )
@@ -446,168 +437,5 @@ def ohlc_agg(
             "low",
             "close",
             "n_ticks",
-        )
-    )
-
-
-def windowed_heavy_hitters(
-    stream: DataFrame,
-    key_col: str = "event_type",
-    ts_col: str = "ts",
-    duration: str = "30 minutes",
-    k: int = 10,
-    max_items_tracked: int = 10_000,
-    watermark: str = "1 hour",
-) -> DataFrame:
-    """Per-event-time-window top-k frequent keys on a stream — the
-    trending-keys readout (hot urls / symbols / event types per
-    window), riding Spark 4's ``approx_top_k`` frequent-items sketch
-    INSIDE a watermarked streaming aggregate: the sketch is a
-    fixed-size mergeable buffer, so the state store holds one summary
-    per open window regardless of key cardinality, and windows emit
-    finalized (append mode) once the watermark passes.  Same error
-    contract as the batch ``sketches.heavy_hitters`` twin: exact while
-    distinct keys fit ``max_items_tracked``, MG-bounded past it.
-
-    Output: one row per (window, rank): window_start, window_end,
-    rank (1-based by estimate), item, est_count."""
-    topk = F.expr(
-        f"approx_top_k(CAST({key_col} AS STRING), {int(k)}, "
-        f"{int(max_items_tracked)})"
-    ).alias("__tk")
-    agg = (
-        stream.withWatermark(ts_col, watermark)
-        .groupBy(F.window(F.col(ts_col), duration))
-        .agg(topk)
-    )
-    return agg.select(
-        F.col("window.start").alias("window_start"),
-        F.col("window.end").alias("window_end"),
-        F.posexplode("__tk").alias("__pos", "e"),
-    ).select(
-        "window_start",
-        "window_end",
-        (F.col("__pos") + 1).cast("int").alias("rank"),
-        F.col("e.item").alias("item"),
-        F.col("e.count").alias("est_count"),
-    )
-
-
-def run_available_now_foreach_batch(
-    stream_df: DataFrame,
-    batch_fn,
-    shuffle_partitions: int | None = None,
-):
-    """Drain everything currently available through a ``foreachBatch``
-    sink and stop — the :func:`run_available_now_to_memory` analog for
-    sinks that write somewhere real (e.g. a TxnTable).  Same
-    temporary shuffle-width override, same sequential-replay caveat."""
-    writer = stream_df.writeStream.foreachBatch(lambda b, _id: batch_fn(b))
-    return _drain(stream_df.sparkSession, writer, shuffle_partitions)
-
-
-def cdc_apply_batch(batch: DataFrame, table, key_cols: list[str], value_cols: list[str]) -> None:
-    """foreachBatch sink body: apply one micro-batch of a
-    ``snapshot_diff`` change feed onto a :class:`TxnTable` as ONE
-    atomic MERGE — added/changed keys take their ``new_<c>`` values,
-    removed keys become tombstones (``deleted = true``, the soft-delete
-    CDC-to-table convention: no driver-side key collection, readers
-    filter ``deleted``).  Batch boundaries cannot change the outcome: a
-    snapshot diff carries at most one row per key, so merges of
-    disjoint key sets commute — the stream-replayed final state equals
-    the batch :func:`~market_insights_app_spark.operators.reconcile.
-    apply_changes` law whatever the file-source split was."""
-    if not batch.take(1):
-        return  # empty micro-batch: nothing to commit
-    up = batch.select(
-        *key_cols,
-        *[F.col(f"new_{c}").alias(c) for c in value_cols],
-        (F.col("status") == F.lit("removed")).alias("deleted"),
-    )
-    table.merge(up, key_cols=key_cols)
-
-
-def holt_stateful(
-    stream: DataFrame,
-    key_col: str = "user_id",
-    ts_col: str = "ts",
-    value_col: str = "value",
-    alpha: float = 0.25,
-    beta: float = 0.125,
-) -> DataFrame:
-    """Third custom stateful operator: per-key Holt double exponential
-    smoothing (level + trend) carried across micro-batches — the
-    incremental FORECASTER the EMA lacks a trend term for.  Recursion
-    (Holt 1957, the standard formulation):
-
-        l_t = α·y_t + (1−α)·(l_{t−1} + b_{t−1})
-        b_t = β·(l_t − l_{t−1}) + (1−β)·b_{t−1}
-
-    seeded l_0 = y_0, b_0 = 0.  The default α=1/4, β=1/8 are DYADIC,
-    so 1−α and 1−β are exact doubles and the fold is bit-reproducible
-    from plain literals in any engine — the property the replay twin's
-    list_reduce depends on.  State = (level, trend, n); one emission
-    per key per micro-batch with the one-step-ahead forecast
-    level + trend."""
-    import pandas as pd  # noqa: F811 (executor-side import)
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-    out_schema = T.StructType(
-        [
-            T.StructField("key", T.LongType()),
-            T.StructField("level", T.DoubleType()),
-            T.StructField("trend", T.DoubleType()),
-            T.StructField("forecast1", T.DoubleType()),
-            T.StructField("n_seen", T.LongType()),
-        ]
-    )
-    state_schema = T.StructType(
-        [
-            T.StructField("level", T.DoubleType()),
-            T.StructField("trend", T.DoubleType()),
-            T.StructField("n", T.LongType()),
-        ]
-    )
-    one_m_a = 1.0 - alpha
-    one_m_b = 1.0 - beta
-
-    def update(key, pdfs, state: GroupState):
-        level, trend, n = state.get if state.exists else (None, 0.0, 0)
-        for pdf in pdfs:
-            pdf = pdf.sort_values(ts_col)
-            for v in pdf[value_col]:
-                y = float(v)
-                if level is None:
-                    level, trend = y, 0.0
-                else:
-                    prev_l = level
-                    level = alpha * y + one_m_a * (level + trend)
-                    trend = beta * (level - prev_l) + one_m_b * trend
-                n += 1
-        state.update((level, trend, n))
-        yield pd.DataFrame(
-            [
-                {
-                    "key": key[0],
-                    "level": level,
-                    "trend": trend,
-                    "forecast1": None if level is None else level + trend,
-                    "n_seen": n,
-                }
-            ]
-        )
-
-    # guide §4: ship ONLY the columns the fold reads across the Python
-    # boundary — the events stream carries a JSON ``props`` blob that
-    # was Arrow-serialized into every state batch and never read (r14).
-    slim = stream.select(F.col(key_col), F.col(ts_col), F.col(value_col))
-    return (
-        slim.groupBy(F.col(key_col))
-        .applyInPandasWithState(
-            update,
-            outputStructType=out_schema,
-            stateStructType=state_schema,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.NoTimeout,
         )
     )

@@ -536,12 +536,6 @@ def main() -> None:
             _shutil.rmtree(_root, ignore_errors=True)
             out.write(f"\n## {name}\n\n{note}\n\n```\n{buf.getvalue().strip()}\n```\n")
             continue
-        elif name.startswith("staged:"):
-            from market_insights_app_spark.plans import textml
-
-            df = getattr(textml, f"staged_q_{name.split(':', 1)[1]}")(
-                spark, sf_dir
-            )
         elif name == "exact_jaccard_pairs":
             from market_insights_app_spark.operators.dedup import exact_jaccard_pairs
             from market_insights_app_spark.sources.tables import load_table

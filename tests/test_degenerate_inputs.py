@@ -21,23 +21,10 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from market_insights_app_spark.plans.registry import QUERIES as _REGISTERED
+from market_insights_app_spark.plans.registry import QUERIES
 from market_insights_app_spark.schemas import TESTDATA_TABLES
 from tests.conftest import SF_ORACLE
 
-
-def _staged():
-    from market_insights_app_spark.plans import textml
-
-    return {
-        f"staged:{n}": getattr(textml, f"staged_q_{n}")
-        for n in textml.STAGED_ORACLES
-    }
-
-
-# r8-staged queries get the same degenerate sweeps BEFORE the driver
-# ever sees them, so registration can't introduce a fragile row
-QUERIES = {**_REGISTERED, **_staged()}
 
 @pytest.fixture(scope="module")
 def empty_sf(spark, tmp_path_factory):

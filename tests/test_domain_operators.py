@@ -909,13 +909,12 @@ def test_temperature_mixture_null_groups_dropped_not_crash(spark):
 
 
 def test_zipf_slope_golden_exact_power_law(spark):
-    """Golden pin for the Zipf fit (its registry row is the pre-staged
-    consolidation candidate for the label_propagation alternate — per
-    the retirement contract the value law must stay pinned here): a
-    corpus whose term k appears exactly round(C/k) times is a perfect
-    log-log line, so the OLS slope must recover −1 to within the
-    integer-rounding wiggle, and a single-token corpus must yield a
-    NULL slope (zero denominator), not an error."""
+    """Golden pin for the Zipf fit (the value law stays pinned here
+    whatever happens to its registry row): a corpus whose term k
+    appears exactly round(C/k) times is a perfect log-log line, so the
+    OLS slope must recover −1 to within the integer-rounding wiggle,
+    and a single-token corpus must yield a NULL slope (zero
+    denominator), not an error."""
     from market_insights_app_spark.plans.textml import q_zipf_slope
 
     words = []

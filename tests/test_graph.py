@@ -6,8 +6,6 @@ from __future__ import annotations
 
 import random
 
-import pytest
-
 from market_insights_app_spark.operators.graph import (
     pagerank,
     synthetic_link_graph,
@@ -350,260 +348,3 @@ def test_pagerank_tiny_threshold_zero_is_off(spark):
     on_raw = _pagerank_tiny(e, 2, 85, 10**9, None, False)
     assert "MapInPandas" in on_raw._jdf.queryExecution().analyzed().toString()
     assert "MapInPandas" not in off_plan
-
-
-def test_triangle_count_golden_and_bruteforce(spark):
-    """K4 golden (each node sits in C(3,2)=3 triangles) plus a
-    brute-force cross-check on a deterministic pseudo-random graph —
-    direction, duplicate edges and self-loops must all collapse before
-    counting."""
-    from itertools import combinations
-
-    from market_insights_app_spark.operators.graph import triangle_count
-
-    k4 = [(a, b) for a in range(4) for b in range(4) if a != b]  # directed dups
-    out = {
-        r["node"]: r["triangles"]
-        for r in triangle_count(
-            spark.createDataFrame(k4 + [(0, 0)], ["src", "dst"])
-        ).collect()
-    }
-    assert out == {0: 3, 1: 3, 2: 3, 3: 3}
-
-    # 12 nodes, (a+b) % 3 != 0 edges: 44 undirected edges, 56 triangles,
-    # every node in at least one (verified by the reference below) —
-    # the first fixture tried here had ZERO triangles and the check
-    # passed vacuously; keep the density assert so that can't recur
-    edges = [
-        (a, b) for a in range(12) for b in range(12)
-        if a != b and (a + b) % 3 != 0
-    ]
-    und = {(min(a, b), max(a, b)) for a, b in edges}
-    want: dict[int, int] = {}
-    for a, b, c in combinations(sorted({n for e in und for n in e}), 3):
-        if {(a, b), (b, c), (a, c)} <= und:
-            for n in (a, b, c):
-                want[n] = want.get(n, 0) + 1
-    assert sum(want.values()) // 3 == 56  # non-vacuous reference
-    got = {
-        r["node"]: r["triangles"]
-        for r in triangle_count(
-            spark.createDataFrame(edges, ["src", "dst"])
-        ).collect()
-    }
-    assert got == want
-
-
-def test_link_predict_cn_planted_counts(spark):
-    """A star of 3 centers all adjacent to {10, 11} plus a direct
-    10–12 edge: pair (10, 11) shares exactly 3 neighbors and is
-    predicted; (10, 12) is ALREADY an edge so it must not appear even
-    though they share a neighbor; pairs sharing only 1 neighbor fall
-    under min_common."""
-    from market_insights_app_spark.operators.graph import (
-        link_predict_common_neighbors,
-    )
-
-    edges = [(c, x) for c in (1, 2, 3) for x in (10, 11)]
-    edges += [(1, 12), (10, 12)]
-    df = spark.createDataFrame(edges, "src long, dst long")
-    got = {
-        (r.node_a, r.node_b): r.common_neighbors
-        for r in link_predict_common_neighbors(df).collect()
-    }
-    assert got[(10, 11)] == 3
-    assert (10, 12) not in got  # existing edge suppressed
-    assert all(v >= 2 for v in got.values())
-
-
-def test_link_predict_cn_cap_excludes_hub_centers(spark):
-    """With the cap below the hub's degree, pairs whose ONLY shared
-    neighbor is the hub disappear — the documented semantics (wedge
-    work bounded by cap·m), replayed identically by the staged DuckDB
-    twin."""
-    from market_insights_app_spark.operators.graph import (
-        link_predict_common_neighbors,
-    )
-
-    hub = [(0, i) for i in range(1, 9)]  # deg(0) = 8
-    df = spark.createDataFrame(hub, "src long, dst long")
-    assert (
-        link_predict_common_neighbors(
-            df, max_center_degree=4, min_common=1
-        ).count()
-        == 0
-    )
-    out = link_predict_common_neighbors(
-        df, max_center_degree=8, min_common=1
-    )
-    assert out.count() == 8 * 7 // 2  # all leaf pairs share the hub
-
-
-def test_kcore_golden_k5_plus_tail(spark):
-    """K5 with a pendant chain: 3-core peeling removes the chain
-    (degree < 3 cascades down it) and keeps exactly the K5, every
-    survivor at degree 4."""
-    from market_insights_app_spark.operators.graph import kcore
-
-    k5 = [(i, j) for i in range(5) for j in range(i + 1, 5)]
-    tail = [(4, 10), (10, 11), (11, 12)]
-    df = spark.createDataFrame(k5 + tail, "src long, dst long")
-    got = {r.node: r.degree for r in kcore(df, k=3, rounds=8).collect()}
-    assert got == {i: 4 for i in range(5)}
-
-
-def test_kcore_matches_python_synchronized_peel(spark):
-    """Fixed-round output equals a pure-Python synchronized peel on a
-    random-ish deterministic graph, at a round count BELOW convergence
-    too — the twin replays rounds, not the fixpoint, so the operator
-    must match round-for-round."""
-    from market_insights_app_spark.operators.graph import kcore
-
-    edges = sorted(
-        {
-            (min(a, b), max(a, b))
-            for a, b in (
-                ((i * 7 + 3) % 23, (i * i + 1) % 23) for i in range(60)
-            )
-            if a != b
-        }
-    )
-
-    def python_peel(und, k, rounds):
-        alive = set(und)
-        for _ in range(rounds):
-            deg: dict = {}
-            for a, b in alive:
-                deg[a] = deg.get(a, 0) + 1
-                deg[b] = deg.get(b, 0) + 1
-            keep = {n for n, d in deg.items() if d >= k}
-            alive = {(a, b) for a, b in alive if a in keep and b in keep}
-        deg = {}
-        for a, b in alive:
-            deg[a] = deg.get(a, 0) + 1
-            deg[b] = deg.get(b, 0) + 1
-        return deg
-
-    df = spark.createDataFrame(edges, "src long, dst long")
-    for k, rounds in ((3, 8), (3, 1), (4, 2), (2, 0)):
-        got = {
-            r.node: r.degree
-            for r in kcore(df, k=k, rounds=rounds).collect()
-        }
-        assert got == python_peel(edges, k, rounds), (k, rounds)
-
-
-def test_kcore_rejects_bad_params(spark):
-    import pytest as _pytest
-
-    from market_insights_app_spark.operators.graph import kcore
-
-    df = spark.createDataFrame([(1, 2)], "src long, dst long")
-    with _pytest.raises(ValueError):
-        kcore(df, k=0)
-    with _pytest.raises(ValueError):
-        kcore(df, rounds=-1)
-
-
-def test_label_propagation_matches_python_reference(spark):
-    """Bulk-synchronous min-tie LPA vs an independent pure-Python
-    replay: every node simultaneously adopts its neighbors' most
-    frequent label, tie -> smallest — checked across round budgets on
-    a graph with two dense blobs joined by a bridge."""
-    from market_insights_app_spark.operators.graph import label_propagation
-
-    blob1 = [(a, b) for a in range(5) for b in range(a + 1, 5)]
-    blob2 = [(a, b) for a in range(10, 14) for b in range(a + 1, 14)]
-    edges = blob1 + blob2 + [(4, 10)]  # bridge
-
-    def python_lpa(es, rounds):
-        und = {tuple(sorted(e)) for e in es if e[0] != e[1]}
-        adj: dict = {}
-        for a, b in und:
-            adj.setdefault(a, []).append(b)
-            adj.setdefault(b, []).append(a)
-        lab = {n: n for n in adj}
-        for _ in range(rounds):
-            new = {}
-            for n, nbrs in adj.items():
-                cnt: dict = {}
-                for m in nbrs:
-                    cnt[lab[m]] = cnt.get(lab[m], 0) + 1
-                best = max(cnt.items(), key=lambda kv: (kv[1], -kv[0]))
-                new[n] = best[0]
-            lab = new
-        return lab
-
-    df = spark.createDataFrame(edges, "src long, dst long")
-    for rounds in (0, 1, 2, 4):
-        got = {
-            r.node: r.label
-            for r in label_propagation(df, rounds=rounds).collect()
-        }
-        assert got == python_lpa(edges, rounds), rounds
-
-
-def test_label_propagation_clique_collapses_to_min_member(spark):
-    from market_insights_app_spark.operators.graph import label_propagation
-
-    members = [3, 7, 11, 15]
-    clique = [
-        (a, b) for i, a in enumerate(members) for b in members[i + 1 :]
-    ]
-    got = {
-        r.node: r.label
-        for r in label_propagation(
-            spark.createDataFrame(clique, "src long, dst long"), rounds=4
-        ).collect()
-    }
-    assert got == {m: 3 for m in members}
-
-
-def test_label_propagation_empty_and_validation(spark):
-    from market_insights_app_spark.operators.graph import label_propagation
-
-    e = spark.createDataFrame([], "src long, dst long")
-    assert label_propagation(e, rounds=2).collect() == []
-    with pytest.raises(ValueError, match="rounds"):
-        label_propagation(e, rounds=-1)
-
-
-def test_bfs_distance_matches_python_reference(spark):
-    """Frontier relaxation vs a plain Python BFS on a graph with a
-    chain (depth beyond the round budget), a blob, and a disconnected
-    island — checked across round budgets including 0 (seeds only)."""
-    from market_insights_app_spark.operators.graph import bfs_distance
-
-    edges = (
-        [(i, i + 1) for i in range(10)]          # chain 0..10
-        + [(20, 21), (20, 22), (21, 22)]          # blob off-seed
-        + [(5, 20)]                               # bridge
-        + [(50, 51)]                              # unreachable island
-    )
-
-    def python_bfs(es, seed_set, rounds):
-        und = {tuple(sorted(e)) for e in es if e[0] != e[1]}
-        adj: dict = {}
-        for a, b in und:
-            adj.setdefault(a, []).append(b)
-            adj.setdefault(b, []).append(a)
-        dist = {s: 0 for s in seed_set}
-        for _ in range(rounds):
-            new = dict(dist)
-            for n, d in dist.items():
-                for m in adj.get(n, []):
-                    if m not in new or new[m] > d + 1:
-                        new[m] = d + 1
-            dist = new
-        return dist
-
-    df = spark.createDataFrame(edges, "src long, dst long")
-    for rounds in (0, 1, 3, 6):
-        seeds = spark.createDataFrame([(0,), (22,)], "node long")
-        got = {
-            r.node: r.dist
-            for r in bfs_distance(df, seeds, rounds=rounds).collect()
-        }
-        assert got == python_bfs(edges, {0, 22}, rounds), rounds
-    with pytest.raises(ValueError, match="rounds"):
-        bfs_distance(df, spark.createDataFrame([(0,)], "node long"), rounds=-1)

@@ -213,11 +213,11 @@ def test_twap_same_ts_zero_weight(spark):
 
 
 def test_value_quantiles_golden_interpolation(spark):
-    """Golden pin for exact per-group percentiles (registry row is the
-    pre-staged consolidation candidate for the bootstrap_ci alternate
-    — the value law stays pinned here): a hand-built 5-point group
-    where every linear-interpolation value is computable by hand, and
-    a 1-point group where all percentiles collapse to that point."""
+    """Golden pin for exact per-group percentiles (the value law stays
+    pinned here whatever happens to its registry row): a hand-built
+    5-point group where every linear-interpolation value is computable
+    by hand, and a 1-point group where all percentiles collapse to that
+    point."""
     import datetime as dt
 
     from market_insights_app_spark.plans.core import q_value_quantiles

@@ -659,68 +659,6 @@ def test_split_leakage_no_cartesian_pairs(spark):
     assert "BroadcastHashJoin" in p
 
 
-def test_seasonal_decompose_lineage_cut_and_broadcast(spark):
-    """The decomposed bucket series feeds two consumers (seasonal agg,
-    final join); the eager checkpoint must keep the tick-store scan out
-    of the final plan entirely (one materialized pass, not two), the
-    k×24 seasonal table must come back as a broadcast join, and the
-    only shuffle left is the seasonal groupBy."""
-    from market_insights_app_spark.plans import textml
-
-    p = plan_of(
-        textml.staged_q_seasonal_decompose(spark, SF_ORACLE)
-    )
-    tree = p.split("\n\n")[0]
-    assert "Scan parquet" not in p  # both consumers read the checkpoint
-    assert "BroadcastHashJoin" in tree
-    assert "SortMergeJoin" not in tree
-    assert tree.count("Exchange") == 2  # seasonal groupBy + its broadcast
-
-
-def test_link_prediction_cn_no_cartesian(spark):
-    """The wedge join and the new-edge anti-join are equi-joins on
-    (node) / (a, b) — a cartesian or nested-loop form here is the
-    sum(deg²) scale killer the degree cap exists to prevent."""
-    from market_insights_app_spark.plans import textml
-
-    p = plan_of(textml.staged_q_link_prediction_cn(spark, SF_ORACLE))
-    assert "CartesianProduct" not in p
-    assert "BroadcastNestedLoopJoin" not in p
-    assert "LeftAnti" in p
-
-
-def test_label_propagation_lineage_cut(spark):
-    """Each LPA round's labeling is eagerly checkpointed: the final
-    round's plan must read the previous labeling as a materialized
-    LogicalRDD scan — never re-derive r−1 rounds of joins (2^r upstream
-    re-evaluations) — so the plan holds exactly one label-count join
-    regardless of the round budget."""
-    from market_insights_app_spark.plans import textml
-
-    p = plan_of(textml.staged_q_label_propagation(spark, SF_ORACLE))
-    assert "Scan ExistingRDD" in p  # reads the checkpointed labeling
-    assert "Scan parquet" not in p  # corpus scan amortized away
-    tree = p.split("\n\n")[0]
-    # every round (including the last) is materialized, so the returned
-    # plan is the checkpoint scan itself — any Join here means a round
-    # budget leaked its lineage into the output
-    assert tree.count("Join") == 0, tree
-
-
-def test_bfs_distance_lineage_cut(spark):
-    """Every BFS relaxation round is eagerly checkpointed: the final
-    distance table must read back as a materialized LogicalRDD scan
-    with no join or parquet lineage — a leaked round budget would
-    re-derive r−1 rounds (2^r upstream re-evaluations)."""
-    from market_insights_app_spark.plans import textml
-
-    p = plan_of(textml.staged_q_bfs_distance(spark, SF_ORACLE))
-    assert "Scan ExistingRDD" in p
-    assert "Scan parquet" not in p
-    tree = p.split("\n\n")[0]
-    assert tree.count("Join") == 0, tree
-
-
 def test_registry_wide_plan_anti_pattern_audit(spark):
     """The full-registry version of the judge's anti-pattern audit,
     institutionalized: EVERY registered query's physical plan must be
@@ -755,8 +693,7 @@ def test_registry_wide_plan_anti_pattern_audit(spark):
     SKIP = {
         "ema_stateful_replay", "session_stateful_replay",
         "ohlc_stream_replay", "interval_join_stream_replay",
-        "heavy_hitters_stream", "txn_merge", "cdc_apply_roundtrip",
-        "semdedup_bucketed", "media_decode",
+        "txn_merge", "cdc_apply_roundtrip", "media_decode",
     }
     bad_python, bad_cross = [], []
     for name, fn in sorted(QUERIES.items()):

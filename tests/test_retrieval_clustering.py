@@ -312,242 +312,6 @@ def test_dsir_ranks_target_like_docs_higher(spark):
     assert w[1] > w[2] and w[3] > w[2]
 
 
-def test_semdedup_bucketed_bit_identical_and_no_cluster_exchange(spark):
-    """semdedup_bucketed (the write-once cluster-bucketed storage form)
-    must return exactly semdedup's survivors, and its in-cluster pair
-    semi-join must plan WITHOUT a cluster-keyed Exchange — the bucket
-    layout, not a shuffle, co-locates the clusters (broadcast disabled
-    for the plan capture so the catalog layout is what proves it).
-    The LARGE_K pandas screen rides the same bucketed read."""
-    from market_insights_app_spark.operators import clustering
-    from market_insights_app_spark.operators.similarity import (
-        semdedup,
-        semdedup_bucketed,
-    )
-    from market_insights_app_spark.sources.bucketed import drop_bucketed
-    from tests.test_bucketed_layout import no_broadcast, plan_of
-
-    base = [
-        (i, [float((i * 7 + j * 5) % 13) / 13.0 + 0.5 for j in range(6)])
-        for i in range(50)
-    ]
-    dups = [(i + 500, v) for i, v in base[:20]]
-    df = spark.createDataFrame(base + dups, ["vec_id", "embedding"])
-    want = {
-        tuple(r)
-        for r in semdedup(df, k=5, iters=2, threshold=0.999999).collect()
-    }
-    assert want  # fixture sanity: something survives
-    try:
-        out = semdedup_bucketed(
-            df, "t_semdedup_bkt", k=5, iters=2, threshold=0.999999,
-            n_buckets=4,
-        )
-        with no_broadcast(spark):
-            tree = plan_of(out).split("\n\n")[0]
-            got = {tuple(r) for r in out.collect()}
-        assert got == want
-        assert "LeftSemi" in tree, tree
-        assert "hashpartitioning(cluster" not in tree, tree
-        old = clustering.LARGE_K
-        try:
-            clustering.LARGE_K = 2  # route the pandas screen at same k
-            out2 = semdedup_bucketed(
-                df, "t_semdedup_bkt2", k=5, iters=2, threshold=0.999999,
-                n_buckets=4,
-            )
-            assert {tuple(r) for r in out2.collect()} == want
-        finally:
-            clustering.LARGE_K = old
-    finally:
-        drop_bucketed(spark, "t_semdedup_bkt")
-        drop_bucketed(spark, "t_semdedup_bkt2")
-
-
-def test_semdedup_rescreen_matches_fresh_run_both_lanes(spark):
-    """semdedup_rescreen off an existing bucketed table must equal a
-    fresh semdedup_bucketed run at the SAME new threshold — no re-fit,
-    no re-assignment, no exchange — in both storage lanes (JVM pair
-    screen and LARGE_K pandas screen; lane dispatch reads the stored
-    schema)."""
-    from market_insights_app_spark.operators import clustering
-    from market_insights_app_spark.operators.similarity import (
-        semdedup_bucketed,
-        semdedup_rescreen,
-    )
-    from market_insights_app_spark.sources.bucketed import drop_bucketed
-    from tests.test_bucketed_layout import no_broadcast, plan_of
-
-    base = [
-        (i, [float((i * 11 + j * 3) % 17) / 17.0 + 0.25 for j in range(6)])
-        for i in range(40)
-    ]
-    dups = [(i + 400, v) for i, v in base[:15]]
-    df = spark.createDataFrame(base + dups, ["vec_id", "embedding"])
-    try:
-        semdedup_bucketed(
-            df, "t_sdd_rescreen", k=4, iters=2, threshold=0.999999,
-            n_buckets=4,
-        ).collect()
-        # fresh run at the sweep threshold = ground truth
-        want = {
-            tuple(r)
-            for r in semdedup_bucketed(
-                df, "t_sdd_fresh", k=4, iters=2, threshold=0.9,
-                n_buckets=4,
-            ).collect()
-        }
-        out = semdedup_rescreen(spark, "t_sdd_rescreen", threshold=0.9)
-        with no_broadcast(spark):
-            tree = plan_of(out).split("\n\n")[0]
-            got = {tuple(r) for r in out.collect()}
-        assert got == want
-        assert "hashpartitioning(cluster" not in tree, tree
-        # LARGE_K lane: table stores (id, cluster, embedding) → pandas
-        old = clustering.LARGE_K
-        try:
-            clustering.LARGE_K = 2
-            semdedup_bucketed(
-                df, "t_sdd_rescreen_pd", k=4, iters=2, threshold=0.999999,
-                n_buckets=4,
-            ).collect()
-            got_pd = {
-                tuple(r)
-                for r in semdedup_rescreen(
-                    spark, "t_sdd_rescreen_pd", threshold=0.9
-                ).collect()
-            }
-            assert got_pd == want
-        finally:
-            clustering.LARGE_K = old
-    finally:
-        drop_bucketed(spark, "t_sdd_rescreen")
-        drop_bucketed(spark, "t_sdd_fresh")
-        drop_bucketed(spark, "t_sdd_rescreen_pd")
-
-
-def test_semdedup_bucketed_append_frozen_centroids(spark):
-    """semdedup_bucketed_append must grow the layout without a refit:
-    base survivors are unchanged by higher-id arrivals (min-id keep
-    rule), appended near-dups of base rows are dropped, appended
-    novel rows survive, the pair screen stays cluster-Exchange-free
-    after the append, and the same invariants hold in the LARGE_K
-    pandas lane."""
-    from market_insights_app_spark.operators import clustering
-    from market_insights_app_spark.operators.similarity import (
-        semdedup_bucketed,
-        semdedup_bucketed_append,
-        semdedup_rescreen,
-    )
-    from market_insights_app_spark.sources.bucketed import (
-        bucket_spec,
-        drop_bucketed,
-    )
-    from tests.test_bucketed_layout import no_broadcast, plan_of
-
-    base_rows = [
-        (i, [float((i * 13 + j * 7) % 19) / 19.0 + 0.1 for j in range(6)])
-        for i in range(30)
-    ]
-    base = spark.createDataFrame(base_rows, ["vec_id", "embedding"])
-    # delta: exact copies of the first 10 base vectors (must drop) +
-    # 5 novel vectors (must survive)
-    delta_rows = [(i + 1000, v) for i, v in base_rows[:10]] + [
-        # near-one-hot novel vectors: pairwise cosines stay far below
-        # the threshold (a shared constant offset would make them
-        # near-parallel and correctly collapse to one survivor)
-        (i + 2000, [10.0 if j == i else 0.1 * j for j in range(6)])
-        for i in range(5)
-    ]
-    delta = spark.createDataFrame(delta_rows, ["vec_id", "embedding"])
-
-    def run_lane(table, large_k):
-        old = clustering.LARGE_K
-        try:
-            if large_k:
-                clustering.LARGE_K = 2
-            before = {
-                r["vec_id"]
-                for r in semdedup_bucketed(
-                    base, table, k=4, iters=2, threshold=0.999999,
-                    n_buckets=4,
-                ).collect()
-            }
-            semdedup_bucketed_append(delta, table)
-            assert bucket_spec(spark, table) == (["cluster"], 4)
-            out = semdedup_rescreen(spark, table, threshold=0.999999)
-            if not large_k:
-                with no_broadcast(spark):
-                    tree = plan_of(out).split("\n\n")[0]
-                assert "hashpartitioning(cluster" not in tree, tree
-            got = {r["vec_id"] for r in out.collect()}
-            assert got & set(range(30)) == before          # base unchanged
-            assert not got & {i + 1000 for i in range(10)}  # dups dropped
-            assert {i + 2000 for i in range(5)} <= got      # novel survive
-        finally:
-            clustering.LARGE_K = old
-
-    try:
-        run_lane("t_sdd_append", large_k=False)
-        run_lane("t_sdd_append_pd", large_k=True)
-    finally:
-        for t in (
-            "t_sdd_append",
-            "t_sdd_append__centroids",
-            "t_sdd_append_pd",
-            "t_sdd_append_pd__centroids",
-        ):
-            drop_bucketed(spark, t)
-
-
-def test_semdedup_bucketed_append_empty_delta(spark):
-    """An empty arrival batch must append nothing and leave the
-    re-screen result unchanged (an empty micro-batch is routine in a
-    production ingest cadence)."""
-    from market_insights_app_spark.operators.similarity import (
-        semdedup_bucketed,
-        semdedup_bucketed_append,
-        semdedup_rescreen,
-    )
-    from market_insights_app_spark.sources.bucketed import drop_bucketed
-
-    df = spark.createDataFrame(
-        [(i, [float(i + j) for j in range(4)]) for i in range(12)],
-        ["vec_id", "embedding"],
-    )
-    empty = spark.createDataFrame([], "vec_id long, embedding array<double>")
-    try:
-        before = {
-            tuple(r)
-            for r in semdedup_bucketed(
-                df, "t_sdd_empty_delta", k=3, iters=1, n_buckets=2
-            ).collect()
-        }
-        semdedup_bucketed_append(empty, "t_sdd_empty_delta")
-        after = {
-            tuple(r)
-            for r in semdedup_rescreen(spark, "t_sdd_empty_delta").collect()
-        }
-        assert after == before
-    finally:
-        drop_bucketed(spark, "t_sdd_empty_delta")
-        drop_bucketed(spark, "t_sdd_empty_delta__centroids")
-
-
-def test_semdedup_bucketed_empty_corpus(spark):
-    """Empty input → empty (id, cluster) frame with the right schema,
-    and no table write attempted (kmeans returns no centroids)."""
-    from market_insights_app_spark.operators.similarity import (
-        semdedup_bucketed,
-    )
-
-    df = spark.createDataFrame([], "vec_id long, embedding array<double>")
-    out = semdedup_bucketed(df, "t_semdedup_bkt_empty", k=4, iters=1)
-    assert out.columns == ["vec_id", "cluster"]
-    assert out.count() == 0
-    assert not spark.catalog.tableExists("t_semdedup_bkt_empty")
-
-
 def test_round6_ge_cutoff_replays_jvm_round_compare():
     """The half-line cutoff must agree with literal HALF_UP-on-
     shortest-repr rounding (Spark's round(double, 6) semantics,

@@ -1,41 +1,13 @@
-"""r10/r11-registered queries (hard_negatives / kfold_column /
-temperature_mixture / split_leakage — promoted from STAGED_ORACLES,
-now swept by test_oracle_parity like every registered pair) keep
-their semantic shape tests here, plus whatever is currently staged in
-plans/textml.py STAGED_ORACLES gets the direct Spark<->DuckDB parity
-gate every staged query faces before registration.  The unicode and
-degenerate sweeps pick the staged names up automatically
+"""Semantic shape tests for the r10/r11-registered queries
+(hard_negatives / kfold_column / temperature_mixture / split_leakage)
+and the no-action lane gates of their operators.  Their Spark<->DuckDB
+hash gate is test_oracle_parity, like every registered pair; the
+unicode and degenerate-input sweeps cover them too
 (test_unicode_parity.py / test_degenerate_inputs.py)."""
 
 from __future__ import annotations
 
-import pytest
-
 from tests.conftest import SF_ORACLE
-from tests.test_oracle_parity import canon
-
-from market_insights_app_spark.plans import textml as _textml
-
-STAGED = sorted(_textml.STAGED_ORACLES)
-
-
-@pytest.mark.parametrize("name", STAGED)
-def test_staged_parity(name, spark, duck):
-    from market_insights_app_spark.plans import textml
-
-    fn = getattr(textml, f"staged_q_{name}")
-    sdf = fn(spark, SF_ORACLE)
-    srows = [tuple(r) for r in sdf.collect()]
-    rel = duck.sql(textml.STAGED_ORACLES[name])
-    drows = rel.fetchall()
-    dcols = [d[0] for d in rel.description]
-    assert sorted(sdf.columns) == sorted(dcols), name
-    assert len(srows) == len(drows) > 0, name
-    sc, dc = canon(srows, sdf.columns), canon(drows, dcols)
-    mism = [i for i, (a, b) in enumerate(zip(sc, dc)) if a != b][:3]
-    assert sc == dc, f"{name}: " + "; ".join(
-        f"spark={sc[i]} duck={dc[i]}" for i in mism
-    )
 
 
 def test_hard_negatives_shape(spark):
@@ -157,224 +129,3 @@ def test_hard_negatives_sequential_chunks_release_broadcasts(spark):
     # all but the last panel were destroyed before the plan returned
     assert destroyed == created[:-1]
     assert n_rows > 0
-
-
-def test_heavy_hitters_stream_exactness_premise(spark, duck):
-    """The staged heavy_hitters_stream twin is a value-hash gate ONLY
-    because the sketch is exact in this regime: distinct keys must fit
-    max_items_tracked (10k) and k=16 must exceed the per-window key
-    cardinality so no window truncates.  Pin the premise on the gate
-    fixture — if the testdata generator ever grows event_type past 16,
-    this fails BEFORE the twin starts flaking on tie order."""
-    n = duck.sql(
-        "SELECT max(cnt) FROM (SELECT count(DISTINCT event_type) AS cnt "
-        "FROM events GROUP BY time_bucket(INTERVAL '30 minutes', ts))"
-    ).fetchone()[0]
-    assert n is not None and n <= 16, n
-
-
-def test_seasonal_decompose_recovers_planted_pattern(spark):
-    """A flat series with a planted +60 spike at hour 9 must come back
-    as: seasonal maximal (and strongly positive) at slot 9, the
-    additivity law value == trend + seasonal + residual wherever all
-    three are non-null (exact up to the 6 dp output rounding), and the
-    SMA-family warm-up contract (first/last 12 buckets per key carry
-    NULL trend)."""
-    import datetime as dt
-
-    from market_insights_app_spark.operators.market import (
-        seasonal_decompose,
-    )
-
-    base = dt.datetime(2024, 1, 1)
-    rows = [
-        (
-            i,
-            base + dt.timedelta(hours=i),
-            1,
-            "m",
-            160.0 if i % 24 == 9 else 100.0,
-        )
-        for i in range(24 * 10)
-    ]
-    ev = spark.createDataFrame(
-        rows, "event_id long, ts timestamp, user_id long, "
-        "event_type string, value double"
-    )
-    out = seasonal_decompose(ev).collect()
-    assert len(out) == 240
-    by_h = sorted(out, key=lambda r: r.bucket_us)
-    assert all(r.trend is None for r in by_h[:12])
-    assert all(r.trend is None for r in by_h[-12:])
-    seas = {}
-    for r in out:
-        slot = dt.datetime.fromtimestamp(
-            r.bucket_us / 1e6, dt.timezone.utc
-        ).hour
-        seas.setdefault(slot, r.seasonal)
-        if r.trend is not None and r.seasonal is not None:
-            assert r.residual is not None
-            assert abs(
-                r.bucket_value - (r.trend + r.seasonal + r.residual)
-            ) < 2e-5, r
-    assert max(seas, key=seas.get) == 9
-    assert seas[9] > 40
-    assert all(v < 3 for s, v in seas.items() if s != 9)
-
-
-def test_seasonal_decompose_rejects_odd_period(spark):
-    import pytest as _pytest
-
-    from market_insights_app_spark.operators.market import (
-        seasonal_decompose,
-    )
-
-    df = spark.range(1)
-    with _pytest.raises(ValueError, match="positive even"):
-        seasonal_decompose(df, period=23)
-
-
-def test_cdc_stream_apply_crosses_batches_and_matches_batch_law(spark):
-    """The staged CDC stream replay must (a) actually cross micro-batch
-    boundaries — a single-batch drain would gate nothing the batch row
-    doesn't — and (b) land on exactly the state the batch
-    apply_changes law produces (★cdc_apply_roundtrip's output), key
-    for key."""
-    from market_insights_app_spark.plans import textml
-    from market_insights_app_spark.plans.core import q_cdc_apply_roundtrip
-    from market_insights_app_spark.streaming import ingest
-
-    streamed = {
-        r.o_orderkey: (r.totalprice, r.o_orderstatus)
-        for r in textml.staged_q_cdc_stream_apply(
-            spark, SF_ORACLE
-        ).collect()
-    }
-    q = ingest.LAST_REPLAY_QUERY
-    fed = [p for p in q.recentProgress if p["numInputRows"] > 0]
-    assert len(fed) >= 2, "replay did not cross a micro-batch boundary"
-    batch = {
-        r.o_orderkey: (r.totalprice, r.o_orderstatus)
-        for r in q_cdc_apply_roundtrip(spark, SF_ORACLE).collect()
-    }
-    assert streamed == batch
-
-
-def test_forget_propagation_reelects_keepers(spark):
-    """The staged forget gate must exercise all three cluster fates —
-    keeper re-elected (original forgotten, copy retained), cluster
-    shrunk (copy forgotten), untouched — otherwise a
-    filter-the-old-survivors implementation would pass it."""
-    from market_insights_app_spark.plans import textml
-
-    out = {
-        r.fp: (r.keeper, r.n)
-        for r in textml.staged_q_forget_propagation(spark, SF_ORACLE).collect()
-    }
-    docs = spark.read.parquet(f"{SF_ORACLE}/documents.parquet")
-    base = {
-        r.fp: r.keeper
-        for r in docs.selectExpr(
-            "md5(trim(regexp_replace(lower(text), '\\\\s+', ' '))) AS fp",
-            "doc_id AS keeper",
-        ).collect()
-    }
-    reelected = sum(
-        1 for fp, kid in base.items()
-        if kid % 53 == 0 and fp in out and out[fp][0] == kid + 100000
-    )
-    shrunk = sum(
-        1 for fp, kid in base.items()
-        if kid % 53 == 11 and fp in out and out[fp] == (kid, 1)
-    )
-    untouched = sum(
-        1 for fp, kid in base.items()
-        if kid % 53 not in (0, 11) and fp in out and out[fp] == (kid, 2)
-    )
-    assert reelected > 0, "no forgotten keeper was re-elected"
-    assert shrunk > 0, "no cluster lost only its copy"
-    assert untouched > 0
-    # and nothing forgotten survives as a keeper
-    assert all(k % 53 != 0 for k, _ in out.values())
-
-
-def test_poisson_bootstrap_matches_python_reference(spark):
-    """Exact replay of the whole bootstrap in pure Python on a small
-    fixture: identical md5-uniforms, identical CDF thresholds, exact
-    fraction means, identical order-statistic selection — the Spark
-    output must match to the bit."""
-    import hashlib
-    import math
-    from fractions import Fraction
-
-    from market_insights_app_spark.operators.sampling import (
-        POISSON1_CDF,
-        poisson_bootstrap_ci,
-    )
-
-    rows = [(f"g{gi}", i, float(v)) for gi in (0, 1)
-            for i, v in enumerate(range(10 + gi, 40 + gi, 3))]
-    df = spark.createDataFrame(rows, "lang string, doc_id long, n_chars double")
-    B = 21
-
-    def pw(doc_id, b):
-        h = hashlib.md5(f"boot-v1:{doc_id}:{b}".encode()).hexdigest()
-        u = int(h[:8], 16) / 4294967296.0
-        for i, c in enumerate(POISSON1_CDF):
-            if u < c:
-                return i
-        return len(POISSON1_CDF)
-
-    expect = {}
-    for g in ("g0", "g1"):
-        grp = [(i, v) for (gg, i, v) in rows if gg == g]
-        means = []
-        for b in range(B):
-            ks = [(pw(i, b), v) for i, v in grp]
-            n = sum(k for k, _ in ks)
-            if n == 0:
-                continue
-            s = sum(Fraction(k) * Fraction(str(v)) for k, v in ks)
-            means.append((float(s / n), b))
-        means.sort()
-        cnt = len(means)
-        lo = means[math.floor(0.025 * (cnt - 1))][0]
-        hi = means[math.floor(0.975 * (cnt - 1))][0]
-        mean = float(sum(Fraction(str(v)) for _, v in grp) / len(grp))
-        expect[g] = (len(grp), mean, lo, hi, cnt)
-
-    got = {
-        r.lang: (r.n, r.mean, r.ci_lo, r.ci_hi, r.n_replicates)
-        for r in poisson_bootstrap_ci(
-            df, "n_chars", "lang", "doc_id", n_replicates=B
-        ).collect()
-    }
-    assert got == expect
-    # and the interval actually brackets the point estimate
-    for n, mean, lo, hi, _ in got.values():
-        assert lo <= mean <= hi
-
-
-def test_poisson_bootstrap_engine_lane_agrees(spark):
-    """The xxhash64 engine lane draws a DIFFERENT resample but must
-    agree on everything deterministic: identical point estimates and
-    group sizes, CIs that bracket the mean, and intervals overlapping
-    the portable lane's (same distribution, different uniforms)."""
-    from market_insights_app_spark.operators.sampling import (
-        poisson_bootstrap_ci,
-    )
-
-    rows = [("g", i, float(20 + (i * 7) % 13)) for i in range(60)]
-    df = spark.createDataFrame(rows, "lang string, doc_id long, n_chars double")
-    out = {}
-    for lane in (True, False):
-        r = poisson_bootstrap_ci(
-            df, "n_chars", "lang", "doc_id", n_replicates=51, portable=lane
-        ).collect()[0]
-        out[lane] = r
-        assert r.ci_lo <= r.mean <= r.ci_hi, lane
-        assert r.n == 60 and r.n_replicates == 51
-    assert out[True].mean == out[False].mean  # point estimate is exact
-    # same-distribution intervals overlap
-    assert out[True].ci_lo <= out[False].ci_hi
-    assert out[False].ci_lo <= out[True].ci_hi

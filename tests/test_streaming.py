@@ -600,105 +600,3 @@ def test_streaming_ohlc_matches_batch_operator(spark, stream):
     for k, v in got.items():
         assert want[k] == v
     assert len(got) >= len(want) * 0.9
-
-
-def test_windowed_heavy_hitters_replay_matches_batch(spark, tmp_path):
-    """availableNow replay of the streaming per-window top-k sketch ==
-    a batch groupBy count in the exact (no-overflow) regime."""
-    import datetime as dt
-
-    from market_insights_app_spark.streaming.ingest import (
-        run_available_now_to_memory,
-        windowed_heavy_hitters,
-    )
-
-    base = dt.datetime(2026, 1, 1, 0, 0, 0)
-    rows = []
-    # window 1: a x5, b x3, c x1 ; window 2: c x4, a x2
-    for i, key in enumerate(["a"] * 5 + ["b"] * 3 + ["c"]):
-        rows.append((i, base + dt.timedelta(minutes=i), key, 1.0))
-    for i, key in enumerate(["c"] * 4 + ["a"] * 2):
-        rows.append((100 + i, base + dt.timedelta(minutes=30 + i), key, 1.0))
-    # sentinel far in the future: pushes the watermark past both real
-    # windows so append mode finalizes them (its own window stays open)
-    rows.append((999, base + dt.timedelta(hours=6), "zz", 1.0))
-    src = tmp_path / "hh_src"
-    df = spark.createDataFrame(
-        rows, "event_id long, ts timestamp, event_type string, value double"
-    )
-    df.write.parquet(str(src))
-    stream = spark.readStream.schema(
-        "event_id long, ts timestamp, event_type string, value double"
-    ).parquet(str(src))
-    out = windowed_heavy_hitters(
-        stream, duration="30 minutes", k=2, watermark="1 minute"
-    )
-    run_available_now_to_memory(out, "hh_replay")
-    got = {
-        (r.window_start.minute, r.rank): (r.item, r.est_count)
-        for r in spark.sql("select * from hh_replay").collect()
-    }
-    assert got[(0, 1)] == ("a", 5) and got[(0, 2)] == ("b", 3)
-    assert got[(30, 1)] == ("c", 4) and got[(30, 2)] == ("a", 2)
-    assert len(got) == 4  # k=2 per window, c/x cut from window 1
-
-
-def test_holt_stateful_exact_fold_and_trend_recovery(spark, tmp_path):
-    """Holt level/trend state across micro-batches: (a) final state
-    equals the EXACT sequential Python recursion over the events
-    series (bit-level — the dyadic α/β contract), (b) on a planted
-    linear ramp the trend converges to the slope and forecast1
-    predicts the next point."""
-    from market_insights_app_spark.sources.tables import load_table
-    from market_insights_app_spark.streaming.ingest import (
-        events_file_stream,
-        holt_stateful,
-        run_available_now_to_memory,
-    )
-
-    s = events_file_stream(spark, SF)
-    run_available_now_to_memory(holt_stateful(s), "t_holt", "append")
-    rows = spark.sql("SELECT * FROM t_holt").collect()
-    last = {}
-    for r in rows:
-        if r["n_seen"] == max(
-            x["n_seen"] for x in rows if x["key"] == r["key"]
-        ):
-            last[r["key"]] = (r["level"], r["trend"], r["forecast1"], r["n_seen"])
-    batch = load_table(spark, SF, "events").orderBy("ts", "event_id").collect()
-    expect = {}
-    for r in batch:
-        level, trend, n = expect.get(r["user_id"], (None, 0.0, 0))
-        y = float(r["value"])
-        if level is None:
-            level, trend = y, 0.0
-        else:
-            prev = level
-            level = 0.25 * y + 0.75 * (level + trend)
-            trend = 0.125 * (level - prev) + 0.875 * trend
-        expect[r["user_id"]] = (level, trend, n + 1)
-    assert set(last) == set(expect)
-    for k, (level, trend, n) in expect.items():
-        assert last[k][3] == n
-        assert last[k][0] == level  # exact, not approx: dyadic fold
-        assert last[k][1] == trend
-        assert last[k][2] == level + trend
-
-    # (b) linear ramp: y = 10 + 2t for one key
-    import datetime as dt
-
-    ramp = spark.createDataFrame(
-        [
-            (i, 1, dt.datetime(2024, 1, 1) + dt.timedelta(minutes=i),
-             "tick", 10.0 + 2.0 * i)
-            for i in range(80)
-        ],
-        "event_id long, user_id long, ts timestamp, event_type string, value double",
-    )
-    src = tmp_path / "ramp"
-    ramp.coalesce(1).write.parquet(str(src))
-    stream = spark.readStream.schema(ramp.schema).parquet(str(src))
-    run_available_now_to_memory(holt_stateful(stream), "t_ramp", "append")
-    r = spark.sql("SELECT * FROM t_ramp ORDER BY n_seen DESC").collect()[0]
-    assert abs(r["trend"] - 2.0) < 0.05
-    assert abs(r["forecast1"] - (10.0 + 2.0 * 80)) < 0.5

@@ -128,24 +128,9 @@ def uni_duck(uni_dir):
     con.close()
 
 
-def _query_and_sql(name):
-    if name.startswith("staged:"):
-        from market_insights_app_spark.plans import textml
-
-        short = name.split(":", 1)[1]
-        return getattr(textml, f"staged_q_{short}"), textml.STAGED_ORACLES[short]
-    return QUERIES[name], ORACLES[name]
-
-
-def _staged_names():
-    from market_insights_app_spark.plans.textml import STAGED_ORACLES
-
-    return [f"staged:{n}" for n in sorted(STAGED_ORACLES)]
-
-
-@pytest.mark.parametrize("name", _DOC_ORACLES + _staged_names())
+@pytest.mark.parametrize("name", _DOC_ORACLES)
 def test_unicode_corpus_parity(name, spark, uni_dir, uni_duck):
-    fn, sql = _query_and_sql(name)
+    fn, sql = QUERIES[name], ORACLES[name]
     sdf = fn(spark, uni_dir)
     srows = [tuple(r) for r in sdf.collect()]
     rel = uni_duck.sql(sql)
