@@ -168,20 +168,14 @@ def lsh_candidate_pairs(
     """
     if sig is None:
         sig = minhash_signatures_df(df, id_col, text_col, num_hashes, shingle_n)
-    return _band_pairs(_lsh_banded(sig, num_hashes, bands), max_bucket_size)
-
-
-def _lsh_banded(sig: DataFrame, num_hashes: int, bands: int) -> DataFrame:
-    """(id, band, bucket) band-membership table — the shared middle of
-    :func:`lsh_candidate_pairs` (in-session) and
-    :func:`lsh_band_index_write` (write-once bucketed layout)."""
     rows_per_band = num_hashes // bands
 
     def band_key(b: int) -> Column:
         sl = F.slice("sig", b * rows_per_band + 1, rows_per_band)
         return F.array_join(F.transform(sl, lambda c: c.cast("string")), ",")
 
-    return sig.select(
+    # (id, band, bucket) band-membership table
+    banded = sig.select(
         "id",
         F.explode(
             F.array(
@@ -192,17 +186,6 @@ def _lsh_banded(sig: DataFrame, num_hashes: int, bands: int) -> DataFrame:
             )
         ).alias("bb"),
     ).select("id", "bb.band", "bb.bucket")
-
-
-def _band_pairs(
-    banded: DataFrame, max_bucket_size: int | None
-) -> DataFrame:
-    """Hot-bucket cap + within-bucket self-join + distinct (a < b)
-    pairs over a band-membership table.  When ``banded`` scans a table
-    bucketed by (band, bucket) — :func:`lsh_band_index_write` — the
-    cap's groupBy, its semi-join back, and the pair self-join all ride
-    the write-time layout with NO Exchange; only the final distinct
-    (keyed on the much smaller pair set) shuffles."""
     if max_bucket_size is not None:
         ok = (
             banded.groupBy("band", "bucket")
@@ -223,92 +206,6 @@ def _band_pairs(
         .select(F.col("l.id").alias("a"), F.col("r.id").alias("b"))
         .distinct()
     )
-
-
-def lsh_band_index_write(
-    df: DataFrame,
-    table: str,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    num_hashes: int = 32,
-    bands: int = 8,
-    shingle_n: int = 2,
-    n_buckets: int = 32,
-) -> None:
-    """Write the MinHash band-membership table (id, band, bucket) ONCE
-    as a catalog table bucketed by (band, bucket) — the write-once
-    layout for a self-join that production re-screens repeatedly.  The
-    expensive half of near-dup detection is the signature scan
-    (shingling + ``num_hashes`` hash folds over every document) plus
-    the band shuffle; both are paid here exactly once.  Every later
-    :func:`lsh_candidate_pairs_from_index` call — hot-bucket-cap
-    sweeps, incremental re-audits, split-leakage checks — replans the
-    pair join off the stored layout with no Exchange and no
-    re-hashing.  Pair sets are identical to in-session
-    :func:`lsh_candidate_pairs` with the same parameters (pinned in
-    tests/test_dedup_reference.py)."""
-    from market_insights_app_spark.sources.bucketed import write_bucketed
-
-    sig = minhash_signatures_df(df, id_col, text_col, num_hashes, shingle_n)
-    write_bucketed(
-        _lsh_banded(sig, num_hashes, bands),
-        table,
-        ["band", "bucket"],
-        n_buckets=n_buckets,
-    )
-    # persist the hashing parameters beside the index: an append that
-    # re-derived them from caller arguments could silently band new
-    # docs with a DIFFERENT sketch than the stored rows, making cross
-    # old/new pairs meaningless — the companion row makes the append
-    # self-describing instead
-    from market_insights_app_spark.sources.bucketed import (
-        clear_managed_table,
-    )
-
-    spark = df.sparkSession
-    clear_managed_table(spark, f"{table}__params")
-    spark.createDataFrame(
-        [(num_hashes, bands, shingle_n)],
-        "num_hashes int, bands int, shingle_n int",
-    ).write.mode("overwrite").format("parquet").saveAsTable(
-        f"{table}__params"
-    )
-
-
-def lsh_band_index_append(
-    df_new: DataFrame,
-    table: str,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> None:
-    """Incrementally grow a :func:`lsh_band_index_write` index: band a
-    NEW document batch with the EXACT hashing parameters persisted
-    beside the index (``{table}__params``) and append it into the
-    bucketed layout — arrivals pay only their own signature scan, and
-    the next :func:`lsh_candidate_pairs_from_index` sees old×old,
-    old×new and new×new candidates alike, still with no band-keyed
-    Exchange (the append redeclares the catalog's bucket spec)."""
-    from market_insights_app_spark.sources.bucketed import append_bucketed
-
-    p = df_new.sparkSession.table(f"{table}__params").collect()[0]
-    sig = minhash_signatures_df(
-        df_new, id_col, text_col, p["num_hashes"], p["shingle_n"]
-    )
-    append_bucketed(_lsh_banded(sig, p["num_hashes"], p["bands"]), table)
-
-
-def lsh_candidate_pairs_from_index(
-    spark: SparkSession,
-    table: str,
-    max_bucket_size: int | None = None,
-) -> DataFrame:
-    """Candidate pairs off a band index previously written by
-    :func:`lsh_band_index_write` — no signature recompute, no band
-    shuffle (see that function's docstring for the amortization
-    story)."""
-    from market_insights_app_spark.sources.bucketed import read_bucketed
-
-    return _band_pairs(read_bucketed(spark, table), max_bucket_size)
 
 
 def minhash_near_dupes(

@@ -89,9 +89,9 @@ def zorder_assign(
 
     Stability caveat (applies to :func:`linear_assign` too):
     ``repartitionByRange`` re-samples its range boundaries per ACTION,
-    so ``__file`` is only stable once materialized — derive stats /
-    bloom indexes from the WRITTEN (or checkpointed) data, never from
-    a second evaluation of the same plan (every storage-layer caller
+    so ``__file`` is only stable once materialized — derive stats
+    from the WRITTEN (or checkpointed) data, never from a second
+    evaluation of the same plan (every storage-layer caller
     reads stats back from the written files for exactly this reason).
     """
     joined, z = zorder_value(df, cols, bits)
@@ -142,141 +142,5 @@ def skipped_fraction(
             and r[f"min_{c}"] <= hi
             for c, (lo, hi) in box.items()
         ):
-            read += 1
-    return 1.0 - read / len(rows)
-
-
-def bloom_file_index(
-    df_with_file: DataFrame,
-    col: str,
-    bits_per_value: int = 16,
-    n_hashes: int = 4,
-    max_m_bits: int = 1 << 27,
-) -> DataFrame:
-    """Per-file Bloom skipping index — the EQUALITY complement of the
-    min/max stats: range predicates prune via :func:`layout_stats` /
-    Z-order, but a point lookup on a high-cardinality column (doc_id,
-    url hash, user id) overlaps almost every file's [min, max] no
-    matter the layout.  A ~16-bit-per-value Bloom per file answers
-    "can this file contain v?" with no false negatives, so equality
-    predicates skip every file whose k probe bits are not all set —
-    the Parquet bloom_filter_enabled / Delta bloom index design, built
-    here as an explicit metadata frame the same way layout_stats is.
-
-    Bit positions are computed JVM-side (``xxhash64(value, seed) &
-    (m-1)``, m a power of two — the exact decontaminate_bloom scheme,
-    so no Python hash reimplementation exists to drift) and each
-    file's positions are OR-packed into a byte array inside one Arrow
-    ``applyInPandas`` group pass.  Every file gets the same m (sized
-    from the LARGEST file's row count), so index rows are uniform and
-    the probe needs no per-row geometry.
-
-    Memory bound: each file's filter is ONE m/8-byte buffer, held in
-    the Arrow group pass and in the returned metadata row, where
-    ``m = min(max_m_bits, next_pow2(bits_per_value · max_file_rows))``
-    (the pow2 rounding can reach ~2× the bits_per_value target).
-    ``max_m_bits`` caps it — default 2²⁷ bits = 16 MB/file, which
-    holds the full 16-bit/value budget up to ~8.4 M rows/file; files
-    beyond the cap keep working with a gracefully higher
-    false-positive rate ((1 − e^(−k·rows/m))^k) instead of an
-    unbounded buffer (at 1e8 rows/file the uncapped build would
-    allocate 256 MB per file).  No false negatives ever — the cap
-    trades skip RATE, never correctness.
-
-    Returns one row per file: (__file, m_bits long, n_hashes int,
-    col_type string, bits binary) — m/8 bytes per file of metadata.
-    The indexed column's Spark type rides along because xxhash64 is
-    TYPE-SENSITIVE (an int literal and a bigint column hash
-    differently); the probe casts its literal to this type.
-    """
-    import numpy as np
-    import pandas as pd
-
-    if max_m_bits < 1024 or max_m_bits & (max_m_bits - 1):
-        raise ValueError("max_m_bits must be a power of two >= 1024")
-    col_type = dict(df_with_file.dtypes)[col]
-    max_rows = (
-        df_with_file.groupBy("__file")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .agg(F.max("n"))
-        .first()[0]
-    )
-    if max_rows is None:
-        return df_with_file.sparkSession.createDataFrame(
-            [],
-            "__file int, m_bits long, n_hashes int, col_type string, "
-            "bits binary",
-        )
-    m_bits = 1 << max(10, (bits_per_value * int(max_rows) - 1).bit_length())
-    m_bits = min(m_bits, max_m_bits)  # bound the per-file buffer
-    mask = m_bits - 1
-    m_bytes = m_bits >> 3
-
-    pos = df_with_file.select(
-        "__file",
-        F.explode(
-            F.array(
-                *[
-                    F.xxhash64(F.col(col), F.lit(i)).bitwiseAND(F.lit(mask))
-                    for i in range(n_hashes)
-                ]
-            )
-        ).alias("p"),
-    )
-
-    def pack(pdf: pd.DataFrame) -> pd.DataFrame:
-        arr = np.zeros(m_bytes, dtype=np.uint8)
-        p = pdf["p"].to_numpy().astype(np.int64)
-        np.bitwise_or.at(
-            arr, p >> 3, np.uint8(1) << (p & 7).astype(np.uint8)
-        )
-        return pd.DataFrame(
-            {
-                "__file": pdf["__file"].iloc[:1],
-                "m_bits": pd.Series([m_bits], dtype="int64"),
-                "n_hashes": pd.Series([n_hashes], dtype="int32"),
-                "col_type": pd.Series([col_type], dtype=object),
-                "bits": pd.Series([arr.tobytes()], dtype=object),
-            }
-        )
-
-    return pos.groupBy("__file").applyInPandas(
-        pack,
-        schema="__file int, m_bits long, n_hashes int, col_type string, "
-        "bits binary",
-    )
-
-
-def bloom_skipped_fraction(index: DataFrame, value) -> float:
-    """Fraction of files an equality predicate ``col = value`` SKIPS
-    under the Bloom index (no false skips: Bloom filters have no
-    false negatives).  Probe positions are computed through the SAME
-    JVM xxhash64 expression the build used; the index frame is
-    metadata-sized (m/8 bytes per file), so the probe is driver-side
-    like :func:`skipped_fraction`."""
-    import numpy as np
-
-    if value is None:
-        raise ValueError("equality with NULL matches no rows; nothing to probe")
-    rows = index.collect()
-    if not rows:
-        return 0.0
-    m_bits, k = rows[0]["m_bits"], rows[0]["n_hashes"]
-    spark = index.sparkSession
-    # cast to the INDEXED column's type: xxhash64 is type-sensitive
-    lit = F.lit(value).cast(rows[0]["col_type"])
-    probe = spark.range(1).select(
-        *[
-            F.xxhash64(lit, F.lit(i))
-            .bitwiseAND(F.lit(m_bits - 1))
-            .alias(f"p{i}")
-            for i in range(k)
-        ]
-    ).first()
-    ps = [probe[f"p{i}"] for i in range(k)]
-    read = 0
-    for r in rows:
-        b = np.frombuffer(r["bits"], dtype=np.uint8)
-        if all(b[p >> 3] & (1 << (p & 7)) for p in ps):
             read += 1
     return 1.0 - read / len(rows)

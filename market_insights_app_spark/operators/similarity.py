@@ -13,8 +13,8 @@ then TakeOrderedAndProject. Scale paths:
 - ``cosine_self_join_neardup``: embedding near-dup pairs, bucketed by a
   coarse key so no cross product forms.
 
-At 100 TB the bucketed variants turn a full-scan top-k into a
-partition-pruned probe of a small fraction of cells.
+Each operator has one execution lane; the registered queries run it
+and their DuckDB twins gate it.
 """
 
 from __future__ import annotations
@@ -173,153 +173,48 @@ def ann_lsh_topk(
     )
 
 
-def materialize_signatures(
-    df: DataFrame,
-    dim: int,
-    n_planes: int = 8,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """One-time LSH index build: (vec_id, embedding, sig) where ``sig``
-    is the sign-bit signature against the fixed deterministic
-    hyperplanes. This is the scan ``ann_lsh_topk`` otherwise repeats on
-    EVERY query — materialize once, write partitioned by ``sig`` (see
-    ``write_signature_index``), and the per-query cost drops from a
-    full corpus scan to a partition-pruned probe."""
-    planes = _deterministic_hyperplanes(dim, n_planes)
-    sig = lsh_signature(_as_double(F.col(vec_col)), planes)
-    return df.select(F.col(id_col), F.col(vec_col), sig.alias("sig"))
-
-
-def write_signature_index(
-    df: DataFrame,
-    path: str,
-    dim: int,
-    n_planes: int = 8,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> None:
-    """Persist the LSH index parquet partitioned by ``sig`` — one
-    directory per signature (≤ 2**n_planes of them), so a query's
-    Hamming ball maps to partition pruning at the file listing level."""
-    materialize_signatures(df, dim, n_planes, id_col, vec_col).write.mode(
-        "overwrite"
-    ).partitionBy("sig").parquet(path)
-
-
-def _hamming_ball(sig: int, n_planes: int, radius: int) -> list[int]:
-    """All signatures within ``radius`` bit flips of ``sig`` —
-    sum(C(n_planes, r) for r <= radius) values, e.g. 93 for (8, 3)."""
-    from itertools import combinations
-
-    out = []
-    for r in range(radius + 1):
-        for bits in combinations(range(n_planes), r):
-            s = sig
-            for b in bits:
-                s ^= 1 << b
-            out.append(s)
-    return out
-
-
-def ann_lsh_topk_indexed(
-    index: DataFrame,
-    query_vec: list[float],
-    k: int = 10,
-    n_planes: int = 8,
-    max_hamming: int = 3,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Probe a materialized signature index: enumerate the query's
-    Hamming ball as an explicit IN-list over the ``sig`` partition
-    column (partition pruning — only matching directories are listed,
-    let alone read), then exact cosine on the survivors. Identical
-    results to ``ann_lsh_topk`` with the same parameters; the
-    difference is a per-query full scan vs a pruned probe."""
-    dim = len(query_vec)
-    planes = _deterministic_hyperplanes(dim, n_planes)
-    qsig = 0
-    for i, p in enumerate(planes):
-        if sum(a * b for a, b in zip(query_vec, p)) >= 0:
-            qsig |= 1 << i
-    allowed = _hamming_ball(qsig, n_planes, max_hamming)
-    cand = index.filter(F.col("sig").isin(allowed))
-    return (
-        cand.select(
-            F.col(id_col),
-            F.round(_q_cosine(_as_double(F.col(vec_col)), query_vec), 6).alias("cosine"),
-        )
-        .orderBy(F.col("cosine").desc(), F.col(id_col).asc())
-        .limit(k)
-    )
-
-
 def cosine_self_join_neardup(
     df: DataFrame,
     bucket_col: str,
     threshold: float = 0.99,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    dense: bool | None = None,
 ) -> DataFrame:
     """Embedding-cosine near-dup pairs within a coarse bucket (e.g. a
-    cluster label, an LSH signature): equi-join on the bucket then exact
+    cluster label, an LSH signature): group on the bucket then exact
     cosine. The bucket key bounds the pair blow-up; never a full cross
     join. Output (a, b, cosine).
 
-    Two lanes, BIT-IDENTICAL by construction (the semantic_decontaminate
-    pattern).  Lane choice NEVER runs an action over the corpus (the
-    hard_negatives rule — a count() just to pick a lane is an extra
-    full scan at 100 TB): the dense Arrow lane is the default, and
-    callers that know the buckets are tiny opt into the expression
-    lane with ``dense=False``.
+    One shuffle groups each bucket onto an executor; the in-bucket pair
+    dots run as d vectorized row-block multiply-adds accumulated IN
+    DIMENSION ORDER — the JVM ``dot`` fold's exact IEEE sequence — and
+    only pairs with raw ≥ threshold − 1e-6 leave Arrow (the margin
+    covers the 6 dp rounding boundary); Spark applies F.round and the
+    exact ≥ threshold filter, so emitted values equal
+    round(dot/(nrm_l·nrm_r), 6) bit for bit.  Row-blocked (1 024 rows)
+    so a hot bucket's g×g panel never materializes whole.
 
-    - expression lane (``dense=False``): the
-      per-row norm is computed once on each side before the join, so
-      per-PAIR work is a single dot fold — dot/(nrm_l·nrm_r)
-      multiplies the exact same doubles cosine() would.
-    - dense Arrow lane (``dense=True``, the default): one
-      shuffle groups each bucket onto an executor, the in-bucket pair
-      dots run as d vectorized row-block multiply-adds accumulated IN
-      DIMENSION ORDER — the JVM fold's exact IEEE sequence — and only
-      pairs with raw ≥ threshold − 1e-6 leave Arrow (the margin covers
-      the 6 dp rounding boundary); Spark applies the SAME F.round and
-      the exact ≥ threshold filter, so emitted values and survivors
-      match the expression lane bit for bit.  Row-blocked (1 024 rows)
-      so a hot bucket's g×g panel never materializes whole.
-
-    A zero-norm pair's cosine is undefined: the expression lane's
-    NULL fails the filter, the dense lane excludes denom == 0 — same
-    survivors."""
-    slim = df.select(
-        F.col(id_col).alias("id"),
-        F.col(bucket_col).alias("bk"),
-        _as_double(F.col(vec_col)).alias("v"),
-    ).withColumn("nrm", norm(F.col("v")))
-    if dense is None or dense:
-        raw = _neardup_dense_pairs(slim, threshold)
-        return raw.select(
-            "a", "b", F.round(F.col("raw"), 6).alias("cosine")
-        ).filter(F.col("cosine") >= threshold)
-    l, r = slim.alias("l"), slim.alias("r")
-    pair_cos = F.round(
-        dot(F.col("l.v"), F.col("r.v"))
-        / F.nullif(F.col("l.nrm") * F.col("r.nrm"), F.lit(0.0)),
-        6,
+    Equi-join semantics: a row whose bucket key is NULL shares a bucket
+    with nothing (SQL ``l.bk = r.bk`` is never true for NULL), so such
+    rows are dropped before the group.  A zero-norm pair's cosine is
+    undefined (denom == 0) and never emitted."""
+    slim = (
+        df.select(
+            F.col(id_col).alias("id"),
+            F.col(bucket_col).alias("bk"),
+            _as_double(F.col(vec_col)).alias("v"),
+        )
+        .filter(F.col("bk").isNotNull())
+        .withColumn("nrm", norm(F.col("v")))
     )
-    pairs = l.join(
-        r, (F.col("l.bk") == F.col("r.bk")) & (F.col("l.id") < F.col("r.id"))
-    ).select(
-        F.col("l.id").alias("a"),
-        F.col("r.id").alias("b"),
-        pair_cos.alias("cosine"),
-    )
-    return pairs.filter(F.col("cosine") >= threshold)
+    raw = _neardup_dense_pairs(slim, threshold)
+    return raw.select(
+        "a", "b", F.round(F.col("raw"), 6).alias("cosine")
+    ).filter(F.col("cosine") >= threshold)
 
 
 def _neardup_dense_pairs(slim: DataFrame, threshold: float) -> DataFrame:
-    """Arrow lane for cosine_self_join_neardup: per bucket, all i<j
+    """Pair kernel of cosine_self_join_neardup: per bucket, all i<j
     pair dots via dimension-ordered row-block multiply-adds
     (bit-identical to the JVM fold); emits (a, b, raw) for pairs with
     raw ≥ threshold − 1e-6 — a superset of the rounded-filter
@@ -476,68 +371,6 @@ def _probe_cells(
     return [c[0] for c in probe]
 
 
-def materialize_cells(
-    df: DataFrame,
-    cents: list[tuple[int, list[float]]],
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """One-time IVF index build: (vec_id, embedding, cell) with every
-    vector assigned to its nearest centroid. This is the corpus-wide
-    assignment ``ivf_topk`` otherwise recomputes per query."""
-    cell = _cell_expr(_as_double(F.col(vec_col)), cents)
-    return df.select(F.col(id_col), F.col(vec_col), cell.alias("cell"))
-
-
-def write_cell_index(
-    df: DataFrame,
-    path: str,
-    n_cells: int = 16,
-    seed_ids: list[int] | None = None,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> None:
-    """Persist the IVF index: ``path``/vectors parquet partitioned by
-    ``cell`` (partition pruning serves the probe) and ``path``/centroids
-    (cell, centroid) so a query never touches the corpus to find its
-    probe cells."""
-    cents = _seed_centroids(df, n_cells, seed_ids, id_col, vec_col)
-    materialize_cells(df, cents, id_col, vec_col).write.mode("overwrite").partitionBy(
-        "cell"
-    ).parquet(path + "/vectors")
-    spark = df.sparkSession
-    spark.createDataFrame(
-        [(i, cvec) for i, cvec in cents], "cell int, centroid array<double>"
-    ).coalesce(1).write.mode("overwrite").parquet(path + "/centroids")
-
-
-def ivf_topk_indexed(
-    spark,
-    path: str,
-    query_vec: list[float],
-    k: int = 10,
-    nprobe: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Probe a materialized IVF index: rank the persisted centroids
-    (≤ n_cells rows) against the query driver-side, then read ONLY the
-    ``nprobe`` matching cell partitions and run exact cosine there.
-    Identical results to ``ivf_topk`` with the same seeding; per-query
-    cost is a pruned probe instead of a corpus-wide cell assignment."""
-    cents = [
-        (int(r["cell"]), [float(x) for x in r["centroid"]])
-        for r in spark.read.parquet(path + "/centroids").collect()
-    ]
-    probe_ids = _probe_cells(query_vec, cents, nprobe)
-    cand = spark.read.parquet(path + "/vectors").filter(F.col("cell").isin(probe_ids))
-    return (
-        cand.select(F.col(id_col), F.round(_q_cosine(_as_double(F.col(vec_col)), query_vec), 6).alias("cosine"))
-        .orderBy(F.col("cosine").desc(), F.col(id_col).asc())
-        .limit(k)
-    )
-
-
 def cosine_topk_many(
     df: DataFrame,
     queries: DataFrame,
@@ -651,16 +484,16 @@ def _semdedup_in_cluster_pandas(
     vec_col: str,
 ) -> DataFrame:
     """Survivors of the in-cluster cosine screen, one applyInPandas
-    group per cluster — BIT-IDENTICAL to the JVM pair probe
-    (:func:`_semdedup_pair_screen`) since r13: dots accumulate as
-    column FMAs in dimension order (the exact IEEE sequence of the
-    index-ordered ``dot`` fold — the ``_decontaminate_dense`` trick),
-    norms are the same sequential sum-of-squares + sqrt, the cosine is
-    the same single division by nrm_l·nrm_r, and the JVM
-    round(·,6) >= threshold predicate is replayed exactly via the
-    precomputed :func:`_round6_ge_cutoff` half-line (no np.round, no
-    summation-order caveat).  Zero-norm pairs match nothing, exactly
-    like the JVM lane's ``nullif`` NULL predicate.
+    group per cluster — BIT-IDENTICAL to a JVM pair probe
+    ``round(dot(l, r)/nullif(nrm_l·nrm_r, 0), 6) >= threshold``: dots
+    accumulate as column FMAs in dimension order (the exact IEEE
+    sequence of the index-ordered ``dot`` fold — the
+    ``_decontaminate_dense`` trick), norms are the same sequential
+    sum-of-squares + sqrt, the cosine is the same single division by
+    nrm_l·nrm_r, and the round(·,6) >= threshold predicate is replayed
+    exactly via the precomputed :func:`_round6_ge_cutoff` half-line (no
+    np.round, no summation-order caveat).  Zero-norm pairs match
+    nothing, exactly like ``nullif``'s NULL predicate.
 
     Rows are id-sorted and each block's cosines are taken against
     every lower-or-self index, so 'drop if cosine ≥ threshold to ANY
@@ -715,7 +548,6 @@ def semdedup(
     threshold: float = 0.95,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    broadcast_probe: bool | None = None,
 ) -> DataFrame:
     """Semantic dedup (SemDeDup, Abbas et al. 2023): cluster the
     embedding space with k-means, then WITHIN each cluster drop every
@@ -724,27 +556,20 @@ def semdedup(
     neighborhood survives.
 
     Scale shape: the O(n²) cosine work is confined to each cluster by
-    an equi-join on the cluster id — the standard SemDeDup trick that
+    grouping on the cluster id — the standard SemDeDup trick that
     makes web-scale semantic dedup tractable.  ``k=None`` applies the
     paper's k ≈ √n rule (clustering.heuristic_k), which keeps expected
     cluster sizes, and therefore the per-cluster quadratic term,
     bounded as the corpus grows; above clustering.LARGE_K the
     assignment automatically switches to the broadcast-numpy path so a
     web-scale k (10⁴–10⁵) never reaches the expression planner.  One
-    shuffle for the self-join; the drop rule is a left-semi EXISTS, so
-    no pair set is ever materialized to the driver.  Deterministic:
-    k-means init is the k smallest ids (operators/clustering.py), and
-    the keep rule is pure min-id.
-
-    ``broadcast_probe=None`` (default, r13) screens through the dense
-    Arrow in-cluster lane — bit-identical to the JVM pair probe since
-    the column-FMA rewrite (see :func:`_semdedup_in_cluster_pandas`)
-    and free of the quadratic interpreted higher-order-function
-    evaluation.  An explicit ``broadcast_probe`` keeps the JVM
-    self-join screen with that join strategy: True broadcasts the
-    probe side, False keeps the cluster-keyed sort-merge join (the
-    lane-equality reference pair).  All three lanes return the exact
-    same survivor set.
+    shuffle groups each cluster, and the in-cluster screen runs in the
+    Arrow lane (:func:`_semdedup_in_cluster_pandas`, bit-identical to
+    the JVM cosine expression and free of its quadratic interpreted
+    higher-order-function evaluation), so no pair set is ever
+    materialized to the driver.  Deterministic: k-means init is the k
+    smallest ids (operators/clustering.py), and the keep rule is pure
+    min-id.
 
     Returns the SURVIVING (id, cluster) rows.
     """
@@ -776,68 +601,13 @@ def semdedup(
         clustering._best_struct(v, cents)["c"].alias("cluster"),
         v.alias("v"),
     )
-    if broadcast_probe is None:
-        # r13 default: the in-cluster screen runs in the dense Arrow
-        # lane, which is BIT-IDENTICAL to the JVM pair probe since the
-        # column-FMA rewrite (dimension-ordered folds + the exact
-        # round6 cutoff — see _semdedup_in_cluster_pandas) and avoids
-        # the quadratic interpreted higher-order-function evaluation
-        # entirely (measured at sf0.1: the JVM screen loses at every
-        # cluster size, same finding as semantic_decontaminate's lane
-        # gate).  r14: the labeled frame has exactly ONE consumer here
-        # and applyInPandas reshuffles by cluster anyway, so the r13
-        # repartition + eager localCheckpoint bought nothing and cost a
-        # full extra corpus materialization + round-robin exchange per
-        # call (the driver's cold-run r13 regression on this query) —
-        # the lane is now pure-lazy end to end.
-        return _semdedup_in_cluster_pandas(a, threshold, "id", "v").select(
-            F.col("id").alias(id_col), "cluster"
-        )
-    # explicit JVM-screen lanes: the vector norm is fixed per row —
-    # computing it once here turns the per-PAIR cosine below from
-    # three array folds (dot + 2 norms) into one; dot/(nrm_l·nrm_r)
-    # multiplies the exact same doubles cosine() would, so the 6 dp
-    # rounding is unchanged.
-    a = a.withColumn("nrm", norm(F.col("v")))
-    # the labeled frame feeds BOTH sides of the pair screen and the
-    # final survivor anti-join — materialize it once (ContextCleaner
-    # frees the blocks); the repartition spreads the per-cluster
-    # quadratic probe across the fleet.
-    a = a.repartition(df.sparkSession.sparkContext.defaultParallelism).localCheckpoint(
-        eager=True
-    )
-    return _semdedup_pair_screen(a, threshold, id_col, broadcast=broadcast_probe)
-
-
-def _semdedup_pair_screen(
-    a: DataFrame, threshold: float, id_col: str, broadcast: bool
-) -> DataFrame:
-    """In-cluster pair probe + survivor anti-join of
-    :func:`semdedup`'s JVM-screen lanes (checkpointed in-session
-    frame): left-semi-mark every row whose cluster holds a lower-id
-    near-duplicate at ``threshold``, then anti-join the marks away.
-    ``a`` must carry (id, cluster, v, nrm).  The caller picks the
-    exchange story: ``broadcast=True`` ships the probe side,
-    ``False`` keeps the cluster-keyed join."""
-    l, r = a.alias("l"), a.alias("r")
-    pair_cos = F.round(
-        dot(F.col("l.v"), F.col("r.v"))
-        / F.nullif(F.col("l.nrm") * F.col("r.nrm"), F.lit(0.0)),
-        6,
-    )
-    dupes = (
-        l.join(
-            F.broadcast(r) if broadcast else r,
-            (F.col("l.cluster") == F.col("r.cluster"))
-            & (F.col("r.id") < F.col("l.id"))
-            & (pair_cos >= threshold),
-            "left_semi",
-        )
-        .select(F.col("id"))
-    )
-    return (
-        a.join(dupes, "id", "left_anti")
-        .select(F.col("id").alias(id_col), "cluster")
+    # measured at sf0.1: the JVM pair screen loses to the Arrow lane at
+    # every cluster size, same finding as semantic_decontaminate.  The
+    # labeled frame has exactly ONE consumer and applyInPandas
+    # reshuffles by cluster anyway, so no repartition or checkpoint:
+    # either would cost a full extra corpus materialization per call.
+    return _semdedup_in_cluster_pandas(a, threshold, "id", "v").select(
+        F.col("id").alias(id_col), "cluster"
     )
 
 
@@ -847,7 +617,6 @@ def semantic_decontaminate(
     threshold: float = 0.95,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    dense: bool | None = None,
 ) -> DataFrame:
     """Embedding-space decontamination: flag every training vector
     whose cosine similarity to ANY eval-set vector reaches
@@ -858,90 +627,41 @@ def semantic_decontaminate(
 
     Scale shape: eval suites are small (10³–10⁵ vectors) while the
     corpus is the whole crawl, so the eval side is BROADCAST and the
-    corpus is scanned exactly once.  Two lanes, BIT-IDENTICAL by
-    construction:
+    corpus is scanned exactly once.  The eval matrix is collected
+    (bounded: it IS the broadcast side) and each corpus batch computes
+    all dots as ``d`` vectorized column-FMAs accumulated IN DIMENSION
+    ORDER — the exact IEEE operation sequence of the JVM ``dot`` fold,
+    so the doubles match bit for bit while running at numpy speed
+    instead of interpreted expression speed (measured 90 s → seconds at
+    200 k × 1 k × 64; interleaved best-of-3 at sf0.1 measured it faster
+    than a crossJoin of JVM dot folds at EVERY eval size down to a
+    single row, e.g. 0.50 vs 0.55 s at 1, 0.37 vs 1.33 s at 100).  An
+    empty eval set yields no rows.
 
-    - expression lane (``dense=False``; auto only for an EMPTY eval
-      set, where it degenerates to an empty join): per (train, eval)
-      pair one index-ordered dot fold over precomputed norms; the
-      per-train argmax is an order-insensitive ``max(struct)``
-      aggregate (map-side combinable — no window sort over the pair
-      stream).  Kept as the no-Arrow fallback and the lane-equality
-      test reference.
-    - dense Arrow lane (``dense=True``, auto for ANY non-empty eval
-      set — r13: interleaved best-of-3 at sf0.1 measured the dense
-      lane faster at EVERY eval size down to a single row, e.g. 0.50
-      vs 0.55 s at 1, 0.37 vs 1.33 s at 100 — the interpreted
-      higher-order-function dot fold loses to the Arrow boundary at
-      any pair count; the pre-r13 ≥256 gate left the bench query on
-      the interpreted lane): the
-      eval matrix is collected (bounded: it IS the broadcast side) and
-      each corpus batch computes all dots as ``d`` vectorized
-      column-FMAs accumulated IN DIMENSION ORDER — the exact IEEE
-      operation sequence of the JVM fold, so the doubles match bit for
-      bit while running at numpy speed instead of interpreted
-      expression speed (measured 90 s → seconds at 200 k × 1 k × 64).
-
-    The argmax runs on the UNROUNDED cosine (bit-identical in every
-    lane and in the DuckDB twin) with ties to the LOWEST eval id;
-    rounding to 6 dp happens once, on the emitted maximum.  A
-    zero-norm pair's cosine is undefined; all lanes and the twin
-    coalesce it to the sentinel -2.0 (below any real cosine), so such
-    rows surface as contaminated=false rather than vanishing.
+    The argmax runs on the UNROUNDED cosine (bit-identical to the
+    DuckDB twin) with ties to the LOWEST eval id; rounding to 6 dp
+    happens once, on the emitted maximum.  A zero-norm pair's cosine
+    is undefined; the operator and the twin coalesce it to the
+    sentinel -2.0 (below any real cosine), so such rows surface as
+    contaminated=false rather than vanishing.
 
     Returns one row per train vector: (``id_col``, nearest_eval_id,
     max_cosine, contaminated).
 
-    Resource note: the dense lane's eval broadcast stays resident only
-    while the returned plan is alive — it is captured by the Arrow
-    closure, and Spark's ContextCleaner reclaims the broadcast blocks
-    once the frame is garbage-collected (no session-lifetime leak; an
-    explicit destroy() is impossible while the plan can still
-    execute).
+    Resource note: the eval broadcast stays resident only while the
+    returned plan is alive — it is captured by the Arrow closure, and
+    Spark's ContextCleaner reclaims the broadcast blocks once the frame
+    is garbage-collected (no session-lifetime leak; an explicit
+    destroy() is impossible while the plan can still execute).
     """
     tr = train.select(
         F.col(id_col).alias("id"), _as_double(F.col(vec_col)).alias("v")
     ).withColumn("nrm", norm(F.col("v")))
-    if dense is None:
-        # lane gate from the SMALL side's one collect (it is the
-        # broadcast side either way — no separate count() action)
-        ev_rows = [
-            (r[0], list(r[1]))
-            for r in evalset.select(id_col, vec_col).collect()
-        ]
-        dense = len(ev_rows) >= 1
-    elif dense:
-        ev_rows = [
-            (r[0], list(r[1]))
-            for r in evalset.select(id_col, vec_col).collect()
-        ]
-    if dense:
-        best = _decontaminate_dense(tr, ev_rows)
-    else:
-        ev = evalset.select(
-            F.col(id_col).alias("eid"), _as_double(F.col(vec_col)).alias("ev")
-        ).withColumn("enrm", norm(F.col("ev")))
-        pair_cos = F.coalesce(
-            dot(F.col("v"), F.col("ev"))
-            / F.nullif(F.col("nrm") * F.col("enrm"), F.lit(0.0)),
-            F.lit(-2.0),
-        )
-        best = (
-            tr.crossJoin(F.broadcast(ev))
-            .select(
-                "id",
-                F.struct(
-                    pair_cos.alias("c"), (-F.col("eid")).alias("negid")
-                ).alias("ce"),
-            )
-            .groupBy("id")
-            .agg(F.max("ce").alias("m"))
-            .select(
-                "id",
-                (-F.col("m.negid")).alias("eid"),
-                F.col("m.c").alias("raw"),
-            )
-        )
+    ev_rows = [
+        (r[0], list(r[1]))
+        for r in evalset.select(id_col, vec_col).collect()
+    ]
+    best = _decontaminate_dense(tr, ev_rows)
     return best.select(
         F.col("id").alias(id_col),
         F.col("eid").alias("nearest_eval_id"),
@@ -953,7 +673,7 @@ def semantic_decontaminate(
 def _decontaminate_dense(
     tr: DataFrame, ev_rows: list, eval_chunk: int = 8_192
 ) -> DataFrame:
-    """Arrow lane for semantic_decontaminate: per corpus batch, all
+    """Pair kernel of semantic_decontaminate: per corpus batch, all
     (train, eval) dots via ``d`` vectorized multiply-adds accumulated
     in dimension order — bit-identical to the JVM fold (same IEEE ops,
     same order), at numpy speed.  Returns (id, eid, raw).
@@ -1042,7 +762,6 @@ def hard_negatives(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     label_col: str = "label",
-    dense: bool | None = None,
     anchor_chunk: int = 65_536,
 ) -> DataFrame:
     """Hard-negative mining for contrastive training: for every anchor,
@@ -1054,11 +773,10 @@ def hard_negatives(
     Scale shape: anchors ride a broadcast into one pool scan — the
     semantic_decontaminate join geometry — and the per-anchor top-k is
     a ranked window on the anchor key (one shuffle of the surviving
-    candidates, AQE handles skew).  Lane choice NEVER runs an action
-    over the pool (the unbounded side): the dense Arrow lane is the
-    default, and full-corpus mining (anchors ≈ the training set) is
-    handled by streaming the anchor side to the driver in bounded
-    chunks of ``anchor_chunk`` rows (``toLocalIterator`` — never an
+    candidates, AQE handles skew).  Nothing runs an action over the
+    pool (the unbounded side): full-corpus mining (anchors ≈ the
+    training set) is handled by streaming the anchor side to the driver
+    in bounded chunks of ``anchor_chunk`` rows (``toLocalIterator`` — never an
     unbounded collect), one broadcast panel per chunk; each anchor
     lands in exactly one chunk, so the per-anchor window still sees
     its complete candidate superset.  Chunks execute SEQUENTIALLY:
@@ -1071,21 +789,17 @@ def hard_negatives(
     × k rows).  The pool is scanned once PER CHUNK (⌈anchors /
     anchor_chunk⌉ scans total) — the explicit cost of bounding panel
     memory; size ``anchor_chunk`` to the executor budget, not smaller.
-    Two lanes, BIT-IDENTICAL by construction (the decontaminate
-    pattern):
 
-    - expression lane (``dense=False`` — the oracle-twin lane): one
-      index-ordered dot fold per pair over precomputed norms;
-    - dense Arrow lane (default): dimension-ordered vectorized
-      panels, and each pool batch pre-reduces to its LOCAL top-k per
-      anchor under the same (raw desc, id asc) order — a superset of
-      the global winners present in that batch — so the window ranks
-      k·batches candidates per anchor instead of the whole pool.
+    Each pool batch scores its anchors in dimension-ordered vectorized
+    panels (the decontaminate pattern: the JVM ``dot`` fold's exact
+    IEEE sequence) and pre-reduces to its LOCAL top-k per anchor under
+    the (raw desc, id asc) order — a superset of the global winners
+    present in that batch — so the window ranks k·batches candidates
+    per anchor instead of the whole pool.
 
-    Ranking happens on the UNROUNDED cosine in both lanes (identical
-    doubles → identical order), ties to the lower pool id; the emitted
-    cosine rounds to 6 dp once.  Same-id, same-label and zero-norm
-    pairs are excluded.
+    Ranking happens on the UNROUNDED cosine, ties to the lower pool id;
+    the emitted cosine rounds to 6 dp once.  Same-id, same-label,
+    NULL-label and zero-norm pairs are excluded.
 
     Returns (anchor_id, rank, ``id_col``, ``label_col``, cosine) —
     ``rank`` 1..k, hardest first.
@@ -1106,57 +820,33 @@ def hard_negatives(
         F.col(label_col).alias("p_label"),
         _as_double(F.col(vec_col)).alias("pv"),
     ).withColumn("pnrm", norm(F.col("pv")))
-    if dense is None or dense:
-        # dense lane (default): stream anchors in bounded chunks —
-        # no action over the pool, no unbounded driver collect
-        sel = anchors.select(id_col, label_col, vec_col)
-        chunk_dfs: list[DataFrame] = []
-        last_bc = None
-        buf: list = []
+    # stream anchors in bounded chunks — no action over the pool, no
+    # unbounded driver collect
+    sel = anchors.select(id_col, label_col, vec_col)
+    chunk_dfs: list[DataFrame] = []
+    last_bc = None
+    buf: list = []
 
-        def flush(chunk: list) -> None:
-            # sequential chunk execution: materialize the previous
-            # chunk's (already top-k-reduced) candidates and destroy
-            # its panel broadcast BEFORE building the next panel, so
-            # only one chunk's panel is ever resident anywhere
-            nonlocal last_bc
-            if chunk_dfs:
-                chunk_dfs[-1] = chunk_dfs[-1].localCheckpoint(eager=True)
-                last_bc.destroy()
-            cand, last_bc = _hard_negative_candidates(p, chunk, k)
-            chunk_dfs.append(cand)
+    def flush(chunk: list) -> None:
+        # sequential chunk execution: materialize the previous chunk's
+        # (already top-k-reduced) candidates and destroy its panel
+        # broadcast BEFORE building the next panel, so only one chunk's
+        # panel is ever resident anywhere
+        nonlocal last_bc
+        if chunk_dfs:
+            chunk_dfs[-1] = chunk_dfs[-1].localCheckpoint(eager=True)
+            last_bc.destroy()
+        cand, last_bc = _hard_negative_candidates(p, chunk, k)
+        chunk_dfs.append(cand)
 
-        for row in sel.toLocalIterator():
-            buf.append(row)
-            if len(buf) >= anchor_chunk:
-                flush(buf)
-                buf = []
-        if buf or not chunk_dfs:
+    for row in sel.toLocalIterator():
+        buf.append(row)
+        if len(buf) >= anchor_chunk:
             flush(buf)
-        pairs = reduce(DataFrame.unionByName, chunk_dfs)
-    else:
-        a = anchors.select(
-            F.col(id_col).alias("anchor_id"),
-            F.col(label_col).alias("a_label"),
-            _as_double(F.col(vec_col)).alias("av"),
-        ).withColumn("anrm", norm(F.col("av")))
-        pair_raw = dot(F.col("av"), F.col("pv")) / F.nullif(
-            F.col("anrm") * F.col("pnrm"), F.lit(0.0)
-        )
-        pairs = (
-            p.crossJoin(F.broadcast(a))
-            .filter(
-                (F.col("p_label") != F.col("a_label"))
-                & (F.col("pid") != F.col("anchor_id"))
-            )
-            .select(
-                "anchor_id",
-                "pid",
-                F.col("p_label").alias("__lbl"),
-                pair_raw.alias("raw"),
-            )
-            .filter(F.col("raw").isNotNull())
-        )
+            buf = []
+    if buf or not chunk_dfs:
+        flush(buf)
+    pairs = reduce(DataFrame.unionByName, chunk_dfs)
     w = Window.partitionBy("anchor_id").orderBy(
         F.col("raw").desc(), F.col("pid").asc()
     )
@@ -1179,10 +869,8 @@ def hard_negatives(
 _HN_PANEL_BLOCK = 1_024
 
 
-def _hard_negative_candidates(
-    p: DataFrame, a_rows: list, k: int, panel_block: int | None = None
-):
-    """Arrow lane for hard_negatives: per pool batch, dimension-ordered
+def _hard_negative_candidates(p: DataFrame, a_rows: list, k: int):
+    """Pair kernel of hard_negatives: per pool batch, dimension-ordered
     cosine panels against the broadcast anchor matrix, then a LOCAL
     per-anchor top-k under the exact global order (raw desc, pid asc)
     — any global winner present in the batch survives its batch's
@@ -1208,7 +896,7 @@ def _hard_negative_candidates(
     # module-global read inside ``run`` would resolve on the executor
     # to whatever the re-imported module holds, silently ignoring
     # driver-side overrides (incl. the boundary-crossing test's)
-    block = panel_block if panel_block is not None else _HN_PANEL_BLOCK
+    block = _HN_PANEL_BLOCK
 
     def run(batches):
         aid, albl_v, A = bc.value

@@ -2700,7 +2700,7 @@ def q_hard_negatives(spark: SparkSession, sf: str) -> DataFrame:
     different-label negatives per anchor.  Generalizes the reference's
     "most similar but different" top-K-per-group ranking semantics
     (static/main.js:1101-1103 family) to the contrastive-mining shape.
-    Both lanes rank on UNROUNDED cosines with ties to the lower pool
+    The operator ranks on UNROUNDED cosines with ties to the lower pool
     id — exactly the twin's row_number order."""
     from market_insights_app_spark.operators.similarity import hard_negatives
 

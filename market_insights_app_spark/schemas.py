@@ -8,8 +8,7 @@ schema so ingest never depends on inference (the reference only ever
 infers at the JSON wire edge, alpha_vantage.py:29-47).
 
 Two families:
-- the reference-domain tables (prices / journal / transactions /
-  portfolios / entry_plans), used by the domain operators and tests;
+- the multimodal media table (``MEDIA``);
 - the driver testdata tables (TESTDATA.md / FIXTURES.md §B), used by
   the oracle-checked query registry.
 """
@@ -17,80 +16,6 @@ Two families:
 from __future__ import annotations
 
 from pyspark.sql import types as T
-
-# ---------------------------------------------------------------------------
-# Reference-domain schemas (db.py:36-45, 50-64, 82-89, 93-107, 113-123)
-# ---------------------------------------------------------------------------
-
-PRICES = T.StructType(
-    [
-        T.StructField("id", T.LongType(), False),  # ingest-sequence tiebreaker
-        T.StructField("symbol", T.StringType(), False),
-        T.StructField("price", T.DoubleType(), False),
-        T.StructField("as_of", T.TimestampType(), False),
-        T.StructField("currency", T.StringType(), True),
-        T.StructField("source", T.StringType(), False),
-        T.StructField("created_at", T.TimestampType(), False),
-    ]
-)
-PRICES_NATURAL_KEY = ["symbol", "as_of", "source"]  # UNIQUE at db.py:44
-
-JOURNAL = T.StructType(
-    [
-        T.StructField("id", T.LongType(), False),
-        T.StructField("symbol", T.StringType(), False),
-        T.StructField("date", T.TimestampType(), False),
-        T.StructField("direction", T.StringType(), False),  # Long | Short
-        T.StructField("qty", T.DoubleType(), False),
-        T.StructField("entry", T.DoubleType(), False),
-        T.StructField("stop", T.DoubleType(), True),
-        T.StructField("exit", T.DoubleType(), True),
-        T.StructField("fees", T.DoubleType(), False),
-        T.StructField("tags", T.StringType(), True),
-        T.StructField("notes", T.StringType(), True),
-        T.StructField("created_at", T.TimestampType(), False),
-        T.StructField("updated_at", T.TimestampType(), False),
-    ]
-)
-
-PORTFOLIOS = T.StructType(
-    [
-        T.StructField("id", T.LongType(), False),
-        T.StructField("name", T.StringType(), False),
-        T.StructField("base_currency", T.StringType(), True),
-        T.StructField("created_at", T.TimestampType(), False),
-        T.StructField("updated_at", T.TimestampType(), False),
-    ]
-)
-
-TRANSACTIONS = T.StructType(
-    [
-        T.StructField("id", T.LongType(), False),
-        T.StructField("portfolio_id", T.LongType(), False),
-        T.StructField("date", T.TimestampType(), False),
-        T.StructField("symbol", T.StringType(), False),
-        T.StructField("type", T.StringType(), False),  # BUY|SELL|DIV|CASH|FX
-        T.StructField("qty", T.DoubleType(), False),
-        T.StructField("price", T.DoubleType(), False),
-        T.StructField("fees", T.DoubleType(), False),
-        T.StructField("currency", T.StringType(), True),
-        T.StructField("notes", T.StringType(), True),
-    ]
-)
-
-ENTRY_PLANS = T.StructType(
-    [
-        T.StructField("id", T.LongType(), False),
-        T.StructField("symbol", T.StringType(), False),
-        T.StructField("horizon", T.StringType(), True),
-        T.StructField("source", T.StringType(), True),
-        T.StructField("notes", T.StringType(), True),
-        T.StructField("images", T.IntegerType(), False),
-        T.StructField("text", T.StringType(), False),
-        T.StructField("created_at", T.TimestampType(), False),
-    ]
-)
-ENTRY_PLANS_NATURAL_KEY = ["symbol", "text"]  # unique index db.py:126-131
 
 # Multimodal extension: opaque media payload + typed metadata
 # (reference passes base64 data-URLs transiently, main.py:88,702-707;

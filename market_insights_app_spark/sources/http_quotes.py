@@ -7,10 +7,8 @@ yahoo.py:7-47). Spark-first restatement: the FETCH stays a driver-side
 (or foreachBatch) concern; the PARSE/NORMALIZE is a declarative
 ``from_json`` plan over a DataFrame of raw payload strings — testable
 without any network, vectorized, and usable identically in batch and
-``foreachBatch`` streaming micro-batches.
-
-Network fetch is gated behind an import-try (requests may be absent);
-everything else is pure DataFrame code.
+``foreachBatch`` streaming micro-batches.  Everything here is pure
+DataFrame code; the caller owns the fetch.
 """
 
 from __future__ import annotations
@@ -186,18 +184,3 @@ def parse_yahoo_chart(raw: DataFrame, payload_col: str = "payload") -> DataFrame
         F.lit("yahoo").alias("source"),
         F.when(last.isNull(), F.lit("no non-null close")).alias("error"),
     )
-
-
-# --- driver-side fetch (network; optional) ---------------------------------
-
-
-def fetch_payload(url: str, params: dict, timeout: int = 15) -> str:
-    """Driver/foreachBatch-side HTTP GET returning the raw JSON text.
-    Kept out of all operator paths; import-gated."""
-    try:
-        import requests  # type: ignore
-    except ImportError as e:  # pragma: no cover
-        raise RuntimeError("requests not available in this environment") from e
-    resp = requests.get(url, params=params, timeout=timeout)
-    resp.raise_for_status()
-    return resp.text

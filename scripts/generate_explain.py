@@ -59,18 +59,6 @@ COMMENTARY = {
         "Hamming filter runs BEFORE the pair-dedup exchange so only "
         "survivors are shuffled."
     ),
-    "bucketed_colocated_join": (
-        "Storage-side half of the shuffle discipline "
-        "(sources/bucketed.py): both fact tables were written "
-        "bucketBy(8, k), so the catalog reports their partitioning and "
-        "the fact-to-fact equi-join + groupBy on k plans with ZERO "
-        "Exchange operators — the SortMergeJoin reads both sides "
-        "already co-located (broadcast disabled here to prove it is "
-        "bucketing, not size, that removed the shuffle). At 100 TB "
-        "this is the repeatedly-joined fact/dimension layout: the "
-        "bucket shuffle is paid once at write time and amortizes over "
-        "every downstream join and aggregation on the key."
-    ),
     "txn_merge_rewrite": (
         "ACID MERGE rewrite (storage/txnlog.TxnTable.merge): the table "
         "here holds two data directories with disjoint key-range stats; "
@@ -460,49 +448,7 @@ def main() -> None:
         "after any plan-affecting change.\n"
     )
     for name, note in COMMENTARY.items():
-        if name == "bucketed_colocated_join":
-            from pyspark.sql import functions as F
-
-            from market_insights_app_spark.sources.bucketed import (
-                read_bucketed,
-                write_bucketed,
-            )
-
-            spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-            spark.conf.set(
-                "spark.sql.adaptive.autoBroadcastJoinThreshold", "-1"
-            )
-            for t, seed in (("expl_bkt_a", 1), ("expl_bkt_b", 2)):
-                write_bucketed(
-                    spark.range(10_000)
-                    .withColumn("k", F.pmod(F.xxhash64("id", F.lit(seed)), F.lit(500)))
-                    .withColumn("v", F.col("id").cast("double")),
-                    t,
-                    ["k"],
-                    n_buckets=8,
-                )
-            a = read_bucketed(spark, "expl_bkt_a")
-            b = read_bucketed(spark, "expl_bkt_b").withColumnRenamed("v", "v2")
-            df = (
-                a.join(b.select("k", "v2"), "k")
-                .groupBy("k")
-                .agg(F.sum(F.col("v") + F.col("v2")).alias("s"))
-            )
-            # explain() is lazy: capture THIS plan while broadcast is
-            # still disabled, then restore the confs so every later
-            # section keeps its real broadcast joins
-            buf = io.StringIO()
-            with redirect_stdout(buf):
-                df.explain("formatted")
-            plan_txt = buf.getvalue().strip()
-            assert "Exchange" not in plan_txt, "bucketed plan grew a shuffle"
-            spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
-            spark.conf.unset("spark.sql.adaptive.autoBroadcastJoinThreshold")
-            for t in ("expl_bkt_a", "expl_bkt_b"):
-                spark.sql(f"DROP TABLE IF EXISTS {t}")
-            out.write(f"\n## {name}\n\n{note}\n\n```\n{plan_txt}\n```\n")
-            continue
-        elif name == "txn_merge_rewrite":
+        if name == "txn_merge_rewrite":
             import shutil as _shutil
             import tempfile as _tempfile
 

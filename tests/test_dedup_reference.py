@@ -9,6 +9,8 @@ import hashlib
 import pytest
 from pyspark.sql import functions as F
 
+from tests.cosine_models import f32_rows, neardup_pairs
+
 DOCS = [
     (0, "the quick brown fox jumps over the lazy dog"),
     (1, "the quick brown fox jumps over the lazy cat"),  # near-dup of 0
@@ -47,91 +49,6 @@ def test_minhash_neardup_matches_true_jaccard(docs):
     for (a, b), j in out.items():
         truth = py_jaccard(py_shingles(DOCS[a][1], 2), py_shingles(DOCS[b][1], 2))
         assert j == pytest.approx(truth, abs=1e-6), (a, b)
-
-
-def test_lsh_band_index_matches_in_session(spark, docs):
-    """Candidate pairs off the write-once (band, bucket)-bucketed band
-    index must equal in-session lsh_candidate_pairs with the same
-    parameters — with and without the hot-bucket cap — and the indexed
-    pair join must plan WITHOUT a band-keyed Exchange (the bucket
-    layout, not a shuffle, co-locates the buckets; broadcast disabled
-    for the plan capture)."""
-    from market_insights_app_spark.operators.dedup import (
-        lsh_band_index_write,
-        lsh_candidate_pairs,
-        lsh_candidate_pairs_from_index,
-    )
-    from market_insights_app_spark.sources.bucketed import drop_bucketed
-    from tests.test_bucketed_layout import no_broadcast, plan_of
-
-    want = {
-        tuple(r) for r in lsh_candidate_pairs(docs, num_hashes=16, bands=4).collect()
-    }
-    assert want  # fixture sanity: the dup pairs must bucket together
-    want_capped = {
-        tuple(r)
-        for r in lsh_candidate_pairs(
-            docs, num_hashes=16, bands=4, max_bucket_size=2
-        ).collect()
-    }
-    try:
-        lsh_band_index_write(
-            docs, "t_lsh_band_idx", num_hashes=16, bands=4, n_buckets=4
-        )
-        out = lsh_candidate_pairs_from_index(spark, "t_lsh_band_idx")
-        with no_broadcast(spark):
-            tree = plan_of(out).split("\n\n")[0]
-            got = {tuple(r) for r in out.collect()}
-        assert got == want
-        assert "hashpartitioning(band" not in tree, tree
-        got_capped = {
-            tuple(r)
-            for r in lsh_candidate_pairs_from_index(
-                spark, "t_lsh_band_idx", max_bucket_size=2
-            ).collect()
-        }
-        assert got_capped == want_capped
-    finally:
-        drop_bucketed(spark, "t_lsh_band_idx")
-        drop_bucketed(spark, "t_lsh_band_idx__params")
-
-
-def test_lsh_band_index_append_matches_one_shot(spark, docs):
-    """Appending a batch through lsh_band_index_append (banded with
-    the params persisted beside the index, not caller-supplied ones)
-    must yield the same candidate pairs as one-shot indexing of the
-    full corpus — old×new cross pairs included — and the pair join
-    must stay band-Exchange-free after the append."""
-    from market_insights_app_spark.operators.dedup import (
-        lsh_band_index_append,
-        lsh_band_index_write,
-        lsh_candidate_pairs,
-        lsh_candidate_pairs_from_index,
-    )
-    from market_insights_app_spark.sources.bucketed import drop_bucketed
-    from tests.test_bucketed_layout import no_broadcast, plan_of
-
-    base = docs.filter(F.col("doc_id") <= 2)
-    delta = docs.filter(F.col("doc_id") > 2)  # doc 3 is an exact dup of 0
-    want = {
-        tuple(r)
-        for r in lsh_candidate_pairs(docs, num_hashes=16, bands=4).collect()
-    }
-    assert any(a <= 2 < b for a, b in want)  # fixture: a cross pair exists
-    try:
-        lsh_band_index_write(
-            base, "t_lsh_band_app", num_hashes=16, bands=4, n_buckets=4
-        )
-        lsh_band_index_append(delta, "t_lsh_band_app")
-        out = lsh_candidate_pairs_from_index(spark, "t_lsh_band_app")
-        with no_broadcast(spark):
-            tree = plan_of(out).split("\n\n")[0]
-            got = {tuple(r) for r in out.collect()}
-        assert got == want
-        assert "hashpartitioning(band" not in tree, tree
-    finally:
-        drop_bucketed(spark, "t_lsh_band_app")
-        drop_bucketed(spark, "t_lsh_band_app__params")
 
 
 def test_minhash_signature_is_real_minimum(spark, docs):
@@ -265,50 +182,6 @@ def test_ann_and_ivf_recall(spark):
     assert ivf[0] == 0 and len(set(bf) & set(ivf)) >= 5
 
 
-def test_indexed_ann_matches_full_scan(spark, tmp_path):
-    """The materialized-index probes must return EXACTLY the full-scan
-    variants' results (same signature/centroid definitions → same
-    candidate set); only the physical access path differs."""
-    import math
-
-    from market_insights_app_spark.operators.similarity import (
-        ann_lsh_topk,
-        ann_lsh_topk_indexed,
-        ivf_topk,
-        ivf_topk_indexed,
-        write_cell_index,
-        write_signature_index,
-    )
-
-    rows = []
-    for i in range(120):
-        c = i % 3
-        base = [1.0 if d // 5 == c else 0.05 for d in range(16)]
-        vec = [b + 0.01 * math.sin(i * 7 + d) for d, b in enumerate(base)]
-        rows.append((i, vec))
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    q = rows[0][1]
-
-    lsh_path = str(tmp_path / "lsh_index")
-    write_signature_index(df, lsh_path, dim=16)
-    idx = spark.read.parquet(lsh_path)
-    got = [(r["vec_id"], r["cosine"]) for r in ann_lsh_topk_indexed(idx, q, k=10).collect()]
-    want = [(r["vec_id"], r["cosine"]) for r in ann_lsh_topk(df, q, k=10).collect()]
-    assert got == want and got[0][0] == 0
-
-    ivf_path = str(tmp_path / "ivf_index")
-    write_cell_index(df, ivf_path, n_cells=6, seed_ids=[0, 1, 2, 3, 4, 5])
-    got_ivf = [
-        (r["vec_id"], r["cosine"])
-        for r in ivf_topk_indexed(spark, ivf_path, q, k=10, nprobe=3).collect()
-    ]
-    want_ivf = [
-        (r["vec_id"], r["cosine"])
-        for r in ivf_topk(df, q, k=10, n_cells=6, nprobe=3, seed_ids=[0, 1, 2, 3, 4, 5]).collect()
-    ]
-    assert got_ivf == want_ivf and got_ivf[0][0] == 0
-
-
 def test_embedding_neardup_bucketed(spark):
     from market_insights_app_spark.operators.similarity import cosine_self_join_neardup
 
@@ -327,10 +200,11 @@ def test_embedding_neardup_bucketed(spark):
 
 
 def test_embedding_neardup_lanes_bit_equal(spark):
-    """The dense Arrow lane (dimension-ordered row-block accumulation,
+    """The Arrow pair kernel (dimension-ordered row-block accumulation,
     raw pre-filter with a rounding margin, JVM-side round+filter) must
-    match the expression lane bit for bit — including zero-norm pairs
-    (dropped in both) and near-threshold cosines."""
+    match the pure-Python replay of the JVM cosine expression
+    (``cosine_models.neardup_pairs``) bit for bit — including zero-norm pairs
+    (dropped) and near-threshold cosines."""
     import random
 
     from market_insights_app_spark.operators.similarity import (
@@ -347,21 +221,38 @@ def test_embedding_neardup_lanes_bit_equal(spark):
         rows, "vec_id long, embedding array<float>, label int"
     )
     for thr in (0.2, 0.8):
-        a = sorted(
+        got = sorted(
             tuple(r)
-            for r in cosine_self_join_neardup(
-                df, "label", thr, dense=False
-            ).collect()
+            for r in cosine_self_join_neardup(df, "label", thr).collect()
         )
-        b = sorted(
-            tuple(r)
-            for r in cosine_self_join_neardup(
-                df, "label", thr, dense=True
-            ).collect()
-        )
-        assert a == b and len(a) > 0, thr
-        assert all(x[0] != 80 and x[1] != 80 for x in a)  # zero-norm out
-        assert any(x[:2] == (0, 81) for x in a)           # dup pair found
+        assert got == neardup_pairs(f32_rows(rows), thr) and len(got) > 0, thr
+        assert all(x[0] != 80 and x[1] != 80 for x in got)  # zero-norm out
+        assert any(x[:2] == (0, 81) for x in got)           # dup pair found
+
+
+def test_embedding_neardup_null_bucket_pairs_nothing(spark):
+    """A NULL bucket key shares a bucket with nothing — SQL equi-join
+    semantics, as in the ``embedding_neardup`` DuckDB twin
+    (``l.label = r.label``) — so two near-identical rows with NULL
+    labels never pair, while the same shape under label 0 does."""
+    from market_insights_app_spark.operators.similarity import (
+        cosine_self_join_neardup,
+    )
+
+    rows = [
+        (1, [1.0, 0.0], None),
+        (2, [1.0, 0.01], None),
+        (3, [1.0, 0.0], 0),
+        (4, [1.0, 0.02], 0),
+    ]
+    df = spark.createDataFrame(
+        rows, "vec_id long, embedding array<float>, label int"
+    )
+    got = sorted(
+        tuple(r) for r in cosine_self_join_neardup(df, "label", 0.9).collect()
+    )
+    assert got == [(3, 4, 0.9998)]
+    assert got == neardup_pairs(f32_rows(rows), 0.9)
 
 
 def test_duplicate_clusters_components(spark):

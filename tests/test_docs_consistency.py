@@ -40,7 +40,7 @@ def test_coverage_star_names_exist_in_registry():
 def test_readme_registry_counts_match():
     """README's driver-contract paragraph states literal registry
     sizes ("queries() → N named plans, oracle_sql() → N DuckDB
-    twins").  r12 found COVERAGE.md drifting on exactly this class of
+    twins"), and COVERAGE's sweep row says "all N queries".  r12 found COVERAGE.md drifting on exactly this class of
     claim (ann/ivf still labeled rows-only two rounds after gaining
     full twins) — pin the numbers to the registry so stale counts
     fail CI instead of reaching the judge."""
@@ -60,6 +60,14 @@ def test_readme_registry_counts_match():
     )
     # the repo-wide invariant the README sentence summarizes
     assert set(ORACLES) == set(QUERIES)
+    # COVERAGE's degenerate-input sweep row states the same registry
+    # size ("all N queries")
+    cov = open(f"{REPO}/COVERAGE.md").read()
+    n = re.findall(r"\ball (\d+) queries\b", cov)
+    assert n, "COVERAGE degenerate-sweep query count not found"
+    assert {int(x) for x in n} == {len(QUERIES)}, (
+        f"COVERAGE says {n} queries, registry has {len(QUERIES)}"
+    )
 
 
 def test_bench_headline_names_exist():

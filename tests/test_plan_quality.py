@@ -171,50 +171,6 @@ def test_autocorr_single_exchange(spark):
     assert tree.count("Exchange") == 1
 
 
-def test_ann_index_probe_prunes_partitions(spark, tmp_path):
-    """The materialized ANN indexes must serve probes via PARTITION
-    pruning: the Hamming-ball / probe-cell IN-list has to land in the
-    scan's PartitionFilters (directory-level pruning), not as a post-
-    scan Filter over the whole corpus."""
-    import math
-
-    from market_insights_app_spark.operators.similarity import (
-        ann_lsh_topk_indexed,
-        ivf_topk_indexed,
-        write_cell_index,
-        write_signature_index,
-    )
-
-    rows = []
-    for i in range(60):
-        base = [1.0 if d // 5 == i % 3 else 0.05 for d in range(16)]
-        rows.append((i, [b + 0.01 * math.sin(i * 7 + d) for d, b in enumerate(base)]))
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    q = rows[0][1]
-
-    lsh_path = str(tmp_path / "lsh")
-    write_signature_index(df, lsh_path, dim=16)
-    probe = ann_lsh_topk_indexed(spark.read.parquet(lsh_path), q, k=5, max_hamming=1)
-    p = plan_of(probe)
-    scan = p[p.index("Scan parquet") :]
-    part_line = next(
-        ln for ln in scan.splitlines() if ln.strip().startswith("PartitionFilters")
-    )
-    assert "sig" in part_line and ("INSET" in part_line or " IN " in part_line)
-    # and NOT a row-level filter: no sig predicate in PushedFilters/DataFilters
-    assert "bit_count" not in p
-
-    ivf_path = str(tmp_path / "ivf")
-    write_cell_index(df, ivf_path, n_cells=6, seed_ids=[0, 1, 2, 3, 4, 5])
-    probe_ivf = ivf_topk_indexed(spark, ivf_path, q, k=5, nprobe=2)
-    p2 = plan_of(probe_ivf)
-    scan2 = p2[p2.index("Scan parquet") :]
-    part_line2 = next(
-        ln for ln in scan2.splitlines() if ln.strip().startswith("PartitionFilters")
-    )
-    assert "cell" in part_line2 and ("INSET" in part_line2 or " IN " in part_line2)
-
-
 def test_fuzzy_match_is_equi_join(spark):
     """Blocking must surface as join keys (hash-partitioned equi-join
     or broadcast), with the edit distance as a residual filter — the
@@ -594,32 +550,6 @@ def test_nb_classifier_broadcasts_model_single_doc_exchange(spark):
     assert "SortMergeJoin" not in tree
     sch = [ln for ln in full.split("\n") if "ReadSchema" in ln]
     assert sch and all("lang" not in ln and "n_chars" not in ln for ln in sch)
-
-
-def test_semdedup_probe_join_shapes(spark):
-    """semdedup's pair stage (r11 lane gate): broadcast_probe=True
-    plans a broadcast hash join for the left-semi probe;
-    broadcast_probe=False keeps the cluster-keyed sort-merge join (the
-    at-scale default shape); neither lane ever plans a cartesian or
-    nested-loop product."""
-    from market_insights_app_spark.operators.similarity import semdedup
-
-    df = spark.createDataFrame(
-        [(i, [float((i * 3 + j) % 7) for j in range(4)]) for i in range(24)],
-        ["vec_id", "embedding"],
-    )
-    pb = plan_of(
-        semdedup(df, k=3, iters=1, threshold=0.99, broadcast_probe=True)
-    )
-    assert "BroadcastHashJoin" in pb and "LeftSemi" in pb
-    assert "CartesianProduct" not in pb
-    assert "BroadcastNestedLoopJoin" not in pb
-    ps = plan_of(
-        semdedup(df, k=3, iters=1, threshold=0.99, broadcast_probe=False)
-    )
-    assert "SortMergeJoin" in ps and "LeftSemi" in ps
-    assert "CartesianProduct" not in ps
-    assert "BroadcastNestedLoopJoin" not in ps
 
 
 def test_interval_join_stream_state_store_shape(spark):

@@ -1124,7 +1124,7 @@ def test_pagerank_matches_python_integer_model(spark, edges, iters):
     assert got == _ref_pagerank(edges, iters=iters)
 
 
-# --- hard_negatives: both lanes vs a pure-Python IEEE-exact model ----
+# --- hard_negatives vs the pure-Python IEEE-exact model (tests/cosine_models.py)
 
 _hn_vec = st.lists(
     st.sampled_from([0.0, 1.0, -1.0, 0.5, 0.25, -0.75, 2.0]),
@@ -1133,38 +1133,6 @@ _hn_vec = st.lists(
 _hn_row = st.tuples(
     _hn_vec, st.one_of(st.none(), st.integers(min_value=0, max_value=2))
 )
-
-
-def _py_hard_negatives(pool_rows, anchor_rows, k):
-    """Reference model: cosine via index-ordered sequential float ops —
-    the exact IEEE sequence of the JVM fold and the dim-ordered numpy
-    accumulation — selection by (raw desc, pid asc), SQL != NULL
-    semantics, zero-norm pairs dropped."""
-    out = []
-    for aid, av, albl in anchor_rows:
-        if albl is None:
-            continue
-        cands = []
-        for pid, pv, plbl in pool_rows:
-            if plbl is None or plbl == albl or pid == aid:
-                continue
-            dot = 0.0
-            for x, y in zip(av, pv):
-                dot = dot + x * y
-            na = 0.0
-            for x in av:
-                na = na + x * x
-            nb = 0.0
-            for y in pv:
-                nb = nb + y * y
-            denom = math.sqrt(na) * math.sqrt(nb)
-            if denom == 0.0:
-                continue
-            cands.append((-(dot / denom), pid, plbl))
-        cands.sort()
-        for rank, (neg_raw, pid, plbl) in enumerate(cands[:k], start=1):
-            out.append((aid, rank, pid, plbl, round(-neg_raw, 6)))
-    return sorted(out)
 
 
 @settings(**SETTINGS)
@@ -1176,10 +1144,10 @@ def _py_hard_negatives(pool_rows, anchor_rows, k):
 def test_hard_negatives_lanes_match_python_model(
     spark, monkeypatch, pool_rows, anchor_rows, k
 ):
-    """Both mining lanes equal the Python model on randomized inputs —
-    duplicate vectors (ties), zero vectors, NULL labels, empty sides —
-    with the Arrow panel width forced to 2 so every example crosses
-    panel boundaries."""
+    """Mining equals the Python model on randomized inputs — duplicate
+    vectors (ties), zero vectors, NULL labels, empty sides — with the
+    Arrow panel width forced to 2 so every example crosses panel
+    boundaries."""
     import market_insights_app_spark.operators.similarity as sim
 
     monkeypatch.setattr(sim, "_HN_PANEL_BLOCK", 2)
@@ -1188,24 +1156,15 @@ def test_hard_negatives_lanes_match_python_model(
     schema = "vec_id long, embedding array<float>, label int"
     # float32 storage: recompute the model on the float32-rounded
     # values the engines actually see
-    import numpy as np
+    from tests.cosine_models import f32_rows, hard_negatives
 
-    def f32(rows):
-        return [
-            (i, [float(np.float32(x)) for x in v], l) for i, v, l in rows
-        ]
-
-    want = _py_hard_negatives(f32(pool), f32(anchors), k)
+    want = hard_negatives(f32_rows(pool), f32_rows(anchors), k)
     pool_df = spark.createDataFrame(pool, schema)
     anchor_df = spark.createDataFrame(anchors, schema)
-    for lane in (False, True):
-        got = sorted(
-            tuple(r)
-            for r in sim.hard_negatives(
-                pool_df, anchor_df, k=k, dense=lane
-            ).collect()
-        )
-        assert got == want, (lane, got, want)
+    got = sorted(
+        tuple(r) for r in sim.hard_negatives(pool_df, anchor_df, k=k).collect()
+    )
+    assert got == want, (got, want)
 
 
 # --- crawl outlink scan vs an independent stdlib-parser model ---------------

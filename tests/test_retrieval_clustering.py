@@ -22,6 +22,7 @@ from market_insights_app_spark.operators.retrieval import (
     rrf_fuse,
 )
 from market_insights_app_spark.operators.sampling import shard_assign
+from tests.cosine_models import jvm_round6, semdedup_one_cluster
 
 
 @pytest.fixture(scope="module")
@@ -248,27 +249,6 @@ def test_semdedup_large_k_pandas_screen_matches_jvm(spark):
     assert not (survivors & {i + 1000 for i, _ in base})
 
 
-def test_semdedup_probe_lanes_identical(spark):
-    """The broadcast-probe and sort-merge self-join lanes return the
-    exact same surviving set — the join strategy changes the exchange,
-    never the pair predicate (r11 lane-gate standard)."""
-    from market_insights_app_spark.operators.similarity import semdedup
-
-    rows = [
-        (i, [float((i * 7 + j * 5) % 13) / 13.0 + 0.5 for j in range(6)])
-        for i in range(40)
-    ] + [(i + 500, [float((i * 7 + j * 5) % 13) / 13.0 + 0.5 for j in range(6)])
-         for i in range(40)]
-    df = spark.createDataFrame(rows, ["vec_id", "embedding"])
-    b = {tuple(r) for r in
-         semdedup(df, k=4, iters=1, threshold=0.999999,
-                  broadcast_probe=True).collect()}
-    s = {tuple(r) for r in
-         semdedup(df, k=4, iters=1, threshold=0.999999,
-                  broadcast_probe=False).collect()}
-    assert b == s and b
-
-
 def test_semdedup_default_path_runs_no_corpus_action(spark, monkeypatch):
     """The lane hint must come from the pre-checkpoint Catalyst size
     estimate, never a count()/collect-style job over the corpus: with
@@ -319,18 +299,10 @@ def test_round6_ge_cutoff_replays_jvm_round_compare():
     shortest representations on both sides of zero."""
     import math
     import random
-    from decimal import ROUND_HALF_UP, Decimal
 
     from market_insights_app_spark.operators.similarity import (
         _round6_ge_cutoff,
     )
-
-    def jvm_round6(x: float) -> float:
-        return float(
-            Decimal(repr(x)).quantize(
-                Decimal("0.000001"), rounding=ROUND_HALF_UP
-            )
-        )
 
     rng = random.Random(13)
     xs = [
@@ -376,10 +348,12 @@ def _unit_partner(c: float) -> list | None:
 
 
 def test_semdedup_default_dense_screen_bit_identical_to_jvm(spark):
-    """The r13 default (dense Arrow screen) must return EXACTLY the
-    JVM pair-probe survivors — including at a constructed cosine that
-    is an exact half-way shortest repr at the 6 dp grain, where any
-    np.round/summation-order deviation would flip the decision."""
+    """The Arrow screen must return EXACTLY the survivors of the JVM
+    pair predicate, replayed in pure Python
+    (``cosine_models.semdedup_one_cluster``) — including at a constructed
+    cosine that is an exact half-way shortest repr at the 6 dp grain,
+    where any np.round/summation-order deviation would flip the
+    decision."""
     import math
 
     from market_insights_app_spark.operators.similarity import semdedup
@@ -399,18 +373,13 @@ def test_semdedup_default_dense_screen_bit_identical_to_jvm(spark):
     def survivors(rows):
         df = spark.createDataFrame(rows, ["vec_id", "embedding"])
         # k=1 puts every row in one cluster -> the screen decides alone
-        dense = {
-            tuple(r)
+        got = {
+            r[0]
             for r in semdedup(df, k=1, iters=1, threshold=0.4).collect()
         }
-        jvm = {
-            tuple(r)
-            for r in semdedup(
-                df, k=1, iters=1, threshold=0.4, broadcast_probe=False
-            ).collect()
-        }
-        assert dense == jvm, (dense, jvm)
-        return {r[0] for r in dense}
+        want = semdedup_one_cluster(rows, 0.4)
+        assert got == want, (got, want)
+        return got
 
     # exact half-way cosine vs the lower-id anchor: HALF_UP drops it
     ids = survivors([(0, [1.0, 0.0]), (1, vb), (2, [0.0, 0.0])])

@@ -66,10 +66,10 @@ def test_temperature_mixture_shares(spark):
 
 
 def test_neardup_lane_gate_runs_no_action(spark, monkeypatch):
-    """cosine_self_join_neardup's default lane choice must not run a
-    count() (or any action) over the corpus — the r10 fix mirroring
+    """Building cosine_self_join_neardup's plan must not run a count()
+    (or any action) over the corpus — the r10 fix mirroring
     hard_negatives': an extra full scan just to pick a lane is real
-    money at 100 TB."""
+    money at scale."""
     from pyspark.sql import DataFrame
 
     from market_insights_app_spark.operators.similarity import (
@@ -85,8 +85,8 @@ def test_neardup_lane_gate_runs_no_action(spark, monkeypatch):
         [(i, i % 3, [1.0, float(i % 5)]) for i in range(12)],
         "vec_id long, label int, embedding array<float>",
     )
-    out = cosine_self_join_neardup(df, "label", 0.5)  # default lane
-    assert not counted, "lane gate ran DataFrame.count()"
+    out = cosine_self_join_neardup(df, "label", 0.5)  # plan built
+    assert not counted, "plan build ran DataFrame.count()"
     assert out.count() >= 0  # the plan itself still executes
 
 
@@ -103,8 +103,8 @@ def test_hard_negatives_sequential_chunks_release_broadcasts(spark):
     destroyed: list = []
     orig_bc = sim._hard_negative_candidates
 
-    def spy_candidates(p, a_rows, k, panel_block=None):
-        cand, bc = orig_bc(p, a_rows, k, panel_block)
+    def spy_candidates(p, a_rows, k):
+        cand, bc = orig_bc(p, a_rows, k)
         created.append(bc)
         orig_destroy = bc.destroy
         bc.destroy = lambda *a, **kw: destroyed.append(bc) or orig_destroy()

@@ -13,6 +13,8 @@ from market_insights_app_spark.operators.quality import readability_report
 from market_insights_app_spark.operators.similarity import (
     semantic_decontaminate,
 )
+from tests import cosine_models
+from tests.cosine_models import f32_rows
 from tests.conftest import SF_ORACLE
 from tests.test_oracle_parity import canon
 
@@ -145,11 +147,12 @@ def test_parity_readability(spark, duck):
 
 
 def test_semantic_decontaminate_lanes_bit_equal(spark):
-    """The dense Arrow lane accumulates dots in dimension order — the
-    exact IEEE operation sequence of the JVM fold — so both lanes must
-    agree BIT FOR BIT, including on engineered ties (duplicate eval
-    vectors: argmax must break to the lowest eval id in both) and the
-    zero-norm sentinel."""
+    """The Arrow kernel accumulates dots in dimension order — the
+    exact IEEE operation sequence of the JVM fold — so it must agree
+    BIT FOR BIT with the pure-Python replay of the JVM expression
+    (``cosine_models.decontaminate``), including on engineered ties
+    (duplicate eval vectors: argmax must break to the lowest eval id)
+    and the zero-norm sentinel."""
     import random
 
     rng = random.Random(99)
@@ -166,14 +169,11 @@ def test_semantic_decontaminate_lanes_bit_equal(spark):
     ]
     tr, ev = _vecdf(spark, tr_rows), _vecdf(spark, ev_rows)
     a = sorted(
-        tuple(r)
-        for r in semantic_decontaminate(tr, ev, 0.5, dense=False).collect()
+        tuple(r) for r in semantic_decontaminate(tr, ev, 0.5).collect()
     )
-    b = sorted(
-        tuple(r)
-        for r in semantic_decontaminate(tr, ev, 0.5, dense=True).collect()
+    assert a == cosine_models.decontaminate(
+        f32_rows(tr_rows), f32_rows(ev_rows), 0.5
     )
-    assert a == b
     assert all(r[1] != 101 for r in a)  # dup tie never picks the higher id
     zero = [r for r in a if r[0] == 60][0]
     assert zero.count(-2.0) == 1  # zero-norm train row carries the sentinel
@@ -203,20 +203,13 @@ def test_semantic_decontaminate_lanes_bit_equal(spark):
 
 
 def test_semantic_decontaminate_is_broadcast_no_shuffle_on_corpus(spark):
-    """Neither lane may sort or shuffle the corpus for the pair stage:
-    the expression lane rides a broadcast nested-loop join; the dense
-    lane (the r13 default for any non-empty eval set) is a map-only
-    Arrow stage over the corpus scan."""
+    """The pair stage may not sort or shuffle the corpus: it is a
+    map-only Arrow stage over the corpus scan."""
     emb = spark.read.parquet(f"{SF_ORACLE}/embeddings.parquet")
     ev = emb.filter(F.col("vec_id") % 20 == 0)
     tr = emb.filter(F.col("vec_id") % 20 != 0)
-    plan = semantic_decontaminate(
-        tr, ev, threshold=0.4, dense=False
-    )._jdf.queryExecution().executedPlan().toString()
-    assert "BroadcastNestedLoopJoin" in plan
-    assert "SortMergeJoin" not in plan
-    # default gate lands on the dense Arrow lane: no join at all —
-    # the eval matrix is a TorrentBroadcast inside the Arrow closure
+    # no join at all — the eval matrix is a TorrentBroadcast inside
+    # the Arrow closure
     dplan = semantic_decontaminate(
         tr, ev, threshold=0.4
     )._jdf.queryExecution().executedPlan().toString()
@@ -264,10 +257,11 @@ def test_hard_negatives_mining(spark):
 
 
 def test_hard_negatives_lanes_bit_equal(spark):
-    """Both mining lanes must agree bit for bit: dimension-ordered
-    panels + local per-anchor top-k under the exact global order is a
-    superset of the winners, and ranking runs on unrounded raw cosines
-    in both lanes."""
+    """Mining must agree bit for bit with the pure-Python replay of the
+    JVM expression (``cosine_models.hard_negatives``):
+    dimension-ordered panels + local per-anchor top-k under the exact
+    global order is a superset of the winners, and ranking runs on
+    unrounded raw cosines."""
     import random
 
     from market_insights_app_spark.operators.similarity import hard_negatives
@@ -291,26 +285,24 @@ def test_hard_negatives_lanes_bit_equal(spark):
         anchors_rows, "vec_id long, embedding array<float>, label int"
     )
     for kk in (1, 4, 13):
-        a = sorted(
-            tuple(r)
-            for r in hard_negatives(pool, anchors, k=kk, dense=False).collect()
+        got = sorted(
+            tuple(r) for r in hard_negatives(pool, anchors, k=kk).collect()
         )
-        b = sorted(
-            tuple(r)
-            for r in hard_negatives(pool, anchors, k=kk, dense=True).collect()
+        want = cosine_models.hard_negatives(
+            f32_rows(pool_rows), f32_rows(anchors_rows), kk
         )
-        assert a == b and len(a) > 0, kk
+        assert got == want and len(got) > 0, kk
     # the dup-pair tie for anchor 310: id 201 must rank before 202
     got = {
         (r.anchor_id, r.rank): r.vec_id
-        for r in hard_negatives(pool, anchors, k=2, dense=True).collect()
+        for r in hard_negatives(pool, anchors, k=2).collect()
     }
     assert got[(310, 1)] == 201 and got[(310, 2)] == 202
 
 
 def test_hard_negatives_null_labels_sql_semantics(spark):
     """SQL != is NULL-excluding: NULL-label pool rows are never
-    negatives and NULL-label anchors get none — in BOTH lanes."""
+    negatives and NULL-label anchors get none."""
     from market_insights_app_spark.operators.similarity import hard_negatives
 
     pool = spark.createDataFrame(
@@ -321,15 +313,14 @@ def test_hard_negatives_null_labels_sql_semantics(spark):
         [(10, [1.0, 0.0], 0), (11, [1.0, 0.0], None)],
         "vec_id long, embedding array<float>, label int",
     )
-    for lane in (False, True):
-        got = hard_negatives(pool, anchors, k=5, dense=lane).collect()
-        assert {r.anchor_id for r in got} == {10}, lane
-        assert all(r.vec_id == 2 for r in got), lane
+    got = hard_negatives(pool, anchors, k=5).collect()
+    assert {r.anchor_id for r in got} == {10}
+    assert all(r.vec_id == 2 for r in got)
 
 
 def test_hard_negatives_lane_gate_runs_no_pool_action(spark, monkeypatch):
-    """The default lane must never run an action over the pool (the
-    unbounded side) just to pick a lane — r8 gated on pool.count().
+    """Building the plan must never run an action over the pool (the
+    unbounded side) — r8 gated a lane choice on pool.count().
     Anchors may act (they are the bounded, chunk-streamed side)."""
     # patch the CONCRETE class (pyspark 4 dispatches through
     # pyspark.sql.classic.dataframe.DataFrame; patching the abstract
@@ -356,8 +347,8 @@ def test_hard_negatives_lane_gate_runs_no_pool_action(spark, monkeypatch):
     anchors = spark.createDataFrame(
         [(100, [1.0, 0.0], 0)], "vec_id long, embedding array<float>, label int"
     )
-    df = hard_negatives(pool, anchors, k=2)  # default lane, plan built
-    assert not counted, "lane gate ran DataFrame.count()"
+    df = hard_negatives(pool, anchors, k=2)  # plan built
+    assert not counted, "plan build ran DataFrame.count()"
     assert df.count() > 0  # the result itself still executes
 
 
@@ -393,9 +384,9 @@ def test_hard_negatives_panel_blocking_bit_equal_across_boundaries(
 ):
     """The in-kernel anchor panel blocking must be invisible: shrink
     the block width so the anchor set spans MULTIPLE panels (including
-    a ragged last panel) and assert bit-equality with the expression
-    lane — anchors at panel edges, duplicate-cosine ties and NULL
-    labels included."""
+    a ragged last panel) and assert bit-equality with the pure-Python
+    replay of the JVM expression (``cosine_models.hard_negatives``) —
+    anchors at panel edges and duplicate-cosine ties included."""
     import random
 
     import market_insights_app_spark.operators.similarity as sim
@@ -419,17 +410,16 @@ def test_hard_negatives_panel_blocking_bit_equal_across_boundaries(
         anchor_rows, "vec_id long, embedding array<float>, label int"
     )
     for kk in (1, 5):
-        a = sorted(
+        got = sorted(
             tuple(r)
-            for r in sim.hard_negatives(pool, anchors, k=kk, dense=False).collect()
+            for r in sim.hard_negatives(pool, anchors, k=kk).collect()
         )
-        b = sorted(
-            tuple(r)
-            for r in sim.hard_negatives(pool, anchors, k=kk, dense=True).collect()
+        want = cosine_models.hard_negatives(
+            f32_rows(pool_rows), f32_rows(anchor_rows), kk
         )
-        assert a == b and len(a) > 0, kk
+        assert got == want and len(got) > 0, kk
     got = {
         (r.anchor_id, r.rank): r.vec_id
-        for r in sim.hard_negatives(pool, anchors, k=2, dense=True).collect()
+        for r in sim.hard_negatives(pool, anchors, k=2).collect()
     }
     assert got[(310, 1)] == 120 and got[(310, 2)] == 121

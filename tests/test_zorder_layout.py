@@ -108,62 +108,6 @@ def test_zorder_files_are_disjoint_z_ranges(spark):
         assert h1 <= l2, spans
 
 
-def test_bloom_file_index_no_false_negatives_and_skips(spark):
-    """Equality skipping: a value present in exactly one file must
-    never be skipped from THAT file (no false negatives), and with
-    16 bits/value the other files are almost all skipped; an absent
-    value skips ~everything."""
-    from market_insights_app_spark.operators.layout import (
-        bloom_file_index,
-        bloom_skipped_fraction,
-    )
-
-    n, files = 64_000, 16
-    df = spark.range(n).select(
-        F.col("id").alias("doc_id"),
-        F.pmod(F.xxhash64("id"), F.lit(10_000)).alias("x"),
-    )
-    # materialize ONCE: repartitionByRange re-samples its range
-    # boundaries per action (seeded by the RDD id), so deriving the
-    # index and the home-file lookup from separate evaluations can
-    # disagree on file assignment (observed as a rare shard-run flake)
-    laid = linear_assign(df, "doc_id", files).localCheckpoint(eager=True)
-    idx = bloom_file_index(laid, "doc_id").cache()
-    assert idx.count() == files
-    # which file holds doc_id 12345?
-    home = laid.filter(F.col("doc_id") == 12_345).select("__file").first()[0]
-    rows = {r["__file"]: r for r in idx.collect()}
-    import numpy as np
-
-    m, k = rows[home]["m_bits"], rows[home]["n_hashes"]
-    probe = spark.range(1).select(
-        *[
-            F.xxhash64(F.lit(12_345).cast("bigint"), F.lit(i))
-            .bitwiseAND(F.lit(m - 1))
-            .alias(f"p{i}")
-            for i in range(k)
-        ]
-    ).first()
-    b = np.frombuffer(rows[home]["bits"], dtype=np.uint8)
-    assert all(b[p >> 3] & (1 << (p & 7)) for p in (probe[f"p{i}"] for i in range(k)))
-    # present value: skipped fraction counts every file EXCEPT the
-    # home file (plus rare false positives)
-    frac = bloom_skipped_fraction(idx, 12_345)
-    assert frac >= (files - 2) / files, frac
-    # absent value: essentially everything skipped
-    assert bloom_skipped_fraction(idx, 10_000_000) >= (files - 2) / files
-    # NULL equality is a contract error, not a silent zero
-    with pytest.raises(ValueError, match="NULL"):
-        bloom_skipped_fraction(idx, None)
-
-
-def test_bloom_file_index_empty_frame(spark):
-    from market_insights_app_spark.operators.layout import bloom_file_index
-
-    empty = spark.createDataFrame([], "doc_id long, __file int")
-    assert bloom_file_index(empty, "doc_id").collect() == []
-
-
 def test_zorder_value_three_columns(spark):
     """The interleave is dimension-generic: 3 columns x 3 bits against
     the pure-Python reference (identity scaling via full-range data)."""
@@ -177,46 +121,3 @@ def test_zorder_value_three_columns(spark):
     }
     for x, y, w in rows:
         assert got[(x, y, w)] == _interleave([x, y, w], bits), (x, y, w)
-
-
-def test_bloom_file_index_m_bits_cap_bounds_memory(spark):
-    """ADVICE r8: the per-file buffer is bounded by max_m_bits — an
-    oversized file gets a capped (higher-FPR) filter, never an
-    unbounded allocation, and equality probes still have NO false
-    negatives under the cap."""
-    from market_insights_app_spark.operators.layout import (
-        bloom_file_index,
-        bloom_skipped_fraction,
-    )
-
-    n, files = 8_000, 4
-    df = spark.range(n).select(F.col("id").alias("doc_id"))
-    laid = linear_assign(df, "doc_id", files).localCheckpoint(eager=True)
-    # uncapped target would be next_pow2(16 * 2000) = 32768 bits; cap at 4096
-    idx = bloom_file_index(laid, "doc_id", max_m_bits=4096).cache()
-    rows = idx.collect()
-    assert all(r["m_bits"] == 4096 for r in rows)
-    assert all(len(r["bits"]) == 4096 // 8 for r in rows)
-    # no false negatives: a present value is never skipped from its file
-    home = laid.filter(F.col("doc_id") == 4_321).select("__file").first()[0]
-    import numpy as np
-
-    r = {x["__file"]: x for x in rows}[home]
-    probe = spark.range(1).select(
-        *[
-            F.xxhash64(F.lit(4_321).cast("bigint"), F.lit(i))
-            .bitwiseAND(F.lit(4096 - 1))
-            .alias(f"p{i}")
-            for i in range(r["n_hashes"])
-        ]
-    ).first()
-    b = np.frombuffer(r["bits"], dtype=np.uint8)
-    assert all(
-        b[p >> 3] & (1 << (p & 7))
-        for p in (probe[f"p{i}"] for i in range(r["n_hashes"]))
-    )
-    # probing through the public path agrees (home file never skipped)
-    assert bloom_skipped_fraction(idx, 4_321) <= (files - 1) / files
-    # non-power-of-two cap is a contract error
-    with pytest.raises(ValueError, match="power of two"):
-        bloom_file_index(laid, "doc_id", max_m_bits=5000)
