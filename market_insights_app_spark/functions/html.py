@@ -15,8 +15,9 @@ Two lanes, matching the repo's UDF policy:
   high density / short length and are dropped, article prose survives.
   Stdlib ``html.parser`` does the tokenization (:func:`_segments`) —
   no external deps.  It is the per-page cost of the crawl path
-  (SCALE_NOTES, crawl front door); a faster tokenizer would replace
-  that one kernel and leave the mapInPandas shape as it is.
+  (SCALE_NOTES.md "Crawl front-door probes", at commit faebac6); a
+  faster tokenizer would replace that one kernel and leave the
+  mapInPandas shape as it is.
 
 At 100 TB both lanes are embarrassingly parallel per document; the
 regex lane is preferred wherever its output is good enough (it stays

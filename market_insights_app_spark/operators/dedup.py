@@ -11,7 +11,6 @@ between O(n²) and O(n·bucket) at 100 TB.
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 

@@ -45,14 +45,16 @@ from pyspark.sql import functions as F
 
 # Eager lineage cut EVERY iteration: counter-intuitively ~2× faster
 # end-to-end than batching 4 iterations into one plan (measured 20.0 s
-# → 10.5 s at 1M nodes / 3M edges / 10 iters, SCALE_NOTES r9) — a
-# deep iterated join plan pays superlinear planning + sort cost, while
-# per-iteration checkpoints keep each job flat over a materialized
-# rank frame of 2 longs/node.
+# → 10.5 s at 1M nodes / 3M edges / 10 iters,
+# SCALE_NOTES.md "r9: PageRank", at commit faebac6) — a deep iterated
+# join plan pays superlinear planning + sort cost, while per-iteration
+# checkpoints keep each job flat over a materialized rank frame of
+# 2 longs/node.
 
 # Cut cadence in the collapsed-to-1-partition regime, where the loop is
 # job-scheduling-bound and stacking a few iterations per cut beats the
-# at-width rule above (paired A/B in SCALE_NOTES r10).  Module-level so
+# at-width rule above (paired A/B in
+# SCALE_NOTES.md "r10: PageRank", at commit faebac6).  Module-level so
 # probes/tests can pair the two cadences inside one session.
 _TINY_CUT_EVERY = 3
 
@@ -239,13 +241,15 @@ def pagerank(
     # DATA-ADAPTIVE partition count for the iteration working set: at
     # small graph sizes the 10-iteration loop is pure task-scheduling
     # overhead, and full-width layouts more than double it (sf0.1
-    # fixture: 32 parts 6.3 s vs 8 parts 2.8 s best-of-2, SCALE_NOTES
-    # r9).  ≥ ~10k nodes/partition before going wide; big graphs keep
+    # fixture: 32 parts 6.3 s vs 8 parts 2.8 s best-of-2,
+    # SCALE_NOTES.md "r9: PageRank", at commit faebac6).  ≥ ~10k
+    # nodes/partition before going wide; big graphs keep
     # every core (parts = defaultParallelism) and pay NOTHING extra.
     # nodes is persisted like elist: it anchors EVERY iteration's left
     # join, and unpersisted it re-runs its 2·|E|-row distinct once per
     # iteration inside each action — measured 19.6 s → 15.5 s
-    # end-to-end at 1M nodes / 3M edges / 10 iters (SCALE_NOTES r9).
+    # end-to-end at 1M nodes / 3M edges / 10 iters
+    # (SCALE_NOTES.md "r9: PageRank", at commit faebac6).
     # Partitioned by the join key once so the per-iteration join
     # reuses the layout; dropped with elist before return.
     parts = max(1, min(default_parts, n // 10_000))
@@ -257,9 +261,11 @@ def pagerank(
     # RDD-backed frame loses size statistics and the planner demotes
     # every iteration's join to a sorted SMJ — measured ~2.6× slower
     # at 1M nodes / 10 iterations (r8 probe; its timer undercounted
-    # absolute cost — SCALE_NOTES r9 correction — but both variants
-    # equally, so the relative conclusion stands).  The cache-residency
-    # trade is bounded (edges × ~3 longs) and released before return.
+    # absolute cost, corrected in
+    # SCALE_NOTES.md "r9: PageRank", at commit faebac6 — but both
+    # variants equally, so the relative conclusion stands).  The
+    # cache-residency trade is bounded (edges × ~3 longs) and released
+    # before return.
     elist = (
         e.join(outdeg, "src")
         .repartition(parts, "src")
@@ -283,11 +289,13 @@ def pagerank(
     # placement is resource lifecycle): at big widths the per-iteration
     # cut is load-bearing (1M nodes: cadence-1 10.5 s vs cadence-2
     # 14.2 s — plan depth costs superlinear planning + sort there,
-    # SCALE_NOTES r9), but in the collapsed-to-1-partition regime the
-    # loop is pure job-scheduling overhead and stacking 3 iterations
-    # per cut is measurably cheaper (sf0.1 fixture best-of-3: cadence-1
-    # 3.25 s, cadence-3 2.78 s, cadence-10 worse again — SCALE_NOTES
-    # r10).  Lanes that run a per-iteration ACTION on pr (tol delta,
+    # SCALE_NOTES.md "r9: PageRank", at commit faebac6), but in the
+    # collapsed-to-1-partition regime the loop is pure job-scheduling
+    # overhead and stacking 3 iterations per cut is measurably cheaper
+    # (sf0.1 fixture best-of-3: cadence-1 3.25 s, cadence-3 2.78 s,
+    # cadence-10 worse again —
+    # SCALE_NOTES.md "r10: PageRank", at commit faebac6).  Lanes that
+    # run a per-iteration ACTION on pr (tol delta,
     # dangling-mass scalar) stay at cadence 1: an un-cut pr would
     # recompute its whole stacked chain inside every such action.
     cut_every = (

@@ -3,9 +3,9 @@
 The reference only ever passes media transiently as base64 data-URLs to
 its LLM endpoint (app/main.py:88, 702-707, cap of 5 images at
 main.py:703). Here media is a first-class ``binary`` column with typed
-metadata (schemas.MEDIA) and the processing stages a training-data
-pipeline needs: decode, feature-extract, resize, frame-sample — all as
-Arrow-batched Pandas UDFs over ``mapInPandas``.
+metadata and the processing stages a training-data pipeline needs:
+decode, feature-extract, resize, frame-sample — all as Arrow-batched
+Pandas UDFs over ``mapInPandas``.
 
 Decode kernels come in two lanes behind one switch (``fake``):
 

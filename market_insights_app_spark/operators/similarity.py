@@ -865,7 +865,8 @@ def hard_negatives(
 
 # in-kernel anchor panel width: keeps the per-batch score block
 # (arrow_batch × block) cache-sized — measured optimum ~512-1024 at
-# dim 64 / 10k-row Arrow batches (SCALE_NOTES r9)
+# dim 64 / 10k-row Arrow batches
+# (SCALE_NOTES.md "r9: hard_negatives", at commit faebac6)
 _HN_PANEL_BLOCK = 1_024
 
 
@@ -929,9 +930,10 @@ def _hard_negative_candidates(p: DataFrame, a_rows: list, k: int):
             # anchor panels are BLOCKED inside the one pool scan: a
             # (batch × m) score matrix at m = thousands thrashes cache
             # (measured 2.4× slower than 1 024-wide panels at m = 4 096,
-            # SCALE_NOTES r9).  Blocking keeps the working set
-            # cache-sized WITHOUT extra pool scans — the chunked-anchor
-            # path (anchor_chunk) remains only the broadcast-size bound.
+            # SCALE_NOTES.md "r9: hard_negatives", at commit faebac6).
+            # Blocking keeps the working set cache-sized WITHOUT extra
+            # pool scans — the chunked-anchor path (anchor_chunk)
+            # remains only the broadcast-size bound.
             for blo in range(0, m, block):
                 bhi = min(blo + block, m)
                 acc = np.zeros((len(X), bhi - blo))
@@ -958,10 +960,11 @@ def _hard_negative_candidates(p: DataFrame, a_rows: list, k: int):
                     # asc).  O(b) threshold partition first, exact
                     # lexsort only on the survivors: a full per-anchor
                     # lexsort of the batch was the other measured panel
-                    # bottleneck (~2×, SCALE_NOTES r9).  The >=
-                    # threshold keeps EVERY boundary tie, so the exact
-                    # sort sees all potential winners — bit-identical
-                    # selection.
+                    # bottleneck (~2×,
+                    # SCALE_NOTES.md "r9: hard_negatives", at commit faebac6).
+                    # The >= threshold keeps EVERY boundary tie, so the
+                    # exact sort sees all potential winners —
+                    # bit-identical selection.
                     rj = raw[idx, jb]
                     if len(idx) > k:
                         thresh = np.partition(rj, len(rj) - k)[len(rj) - k]

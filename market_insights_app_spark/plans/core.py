@@ -26,7 +26,7 @@ from market_insights_app_spark.functions.scalars import pnl, r_multiple, ts_us
 from market_insights_app_spark.operators import windows as W
 from market_insights_app_spark.operators.joins import asof_join, latest_join, union_merge
 from market_insights_app_spark.operators.journal import histogram
-from market_insights_app_spark.operators.pagination import page, recent_n, top_k_per_group
+from market_insights_app_spark.operators.pagination import page, top_k_per_group
 from market_insights_app_spark.operators.windows import latest_per_key
 from market_insights_app_spark.sources.tables import load_table
 
@@ -1627,7 +1627,8 @@ def q_interval_join_stream_replay(spark: SparkSession, sf: str) -> DataFrame:
     # state stores per partition, so halving the near-empty stores
     # halves their fixed cost.  The applyInPandasWithState replays
     # measured the OTHER way (Python-worker parallelism wants width),
-    # so only this JVM-stateful drain narrows.  SCALE_NOTES.md r11 A/B.
+    # so only this JVM-stateful drain narrows.
+    # SCALE_NOTES.md "r11 addendum: replay drain-width", at commit faebac6.
     run_available_now_to_memory(joined, name, "append", shuffle_partitions=4)
     return spark.table(name).select(
         "purchase_id",

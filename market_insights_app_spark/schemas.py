@@ -7,31 +7,13 @@ explicit StructType per table; Spark reads always pass an explicit
 schema so ingest never depends on inference (the reference only ever
 infers at the JSON wire edge, alpha_vantage.py:29-47).
 
-Two families:
-- the multimodal media table (``MEDIA``);
-- the driver testdata tables (TESTDATA.md / FIXTURES.md §B), used by
-  the oracle-checked query registry.
+The tables are the testdata tables (TESTDATA.md / FIXTURES.md §B) that
+the oracle-checked query registry reads.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import types as T
-
-# Multimodal extension: opaque media payload + typed metadata
-# (reference passes base64 data-URLs transiently, main.py:88,702-707;
-#  here media is a first-class binary column).
-MEDIA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType(), False),
-        T.StructField("doc_id", T.LongType(), True),
-        T.StructField("kind", T.StringType(), False),  # image|audio|video
-        T.StructField("mime", T.StringType(), False),
-        T.StructField("payload", T.BinaryType(), True),
-        T.StructField("width", T.IntegerType(), True),
-        T.StructField("height", T.IntegerType(), True),
-        T.StructField("duration_ms", T.LongType(), True),
-    ]
-)
 
 # ---------------------------------------------------------------------------
 # Driver testdata schemas (FIXTURES.md §B — verified from parquet footers)

@@ -130,9 +130,9 @@ def session_agg(
     )
 
 
-# Most recently drained StreamingQuery — explain tooling reads its
-# executed micro-batch plan (scripts/generate_explain.py); queries
-# keep their DataFrame-only return contract.
+# Most recently drained StreamingQuery — plan tests read its progress
+# (test_plan_quality.test_interval_join_stream_state_store_shape);
+# queries keep their DataFrame-only return contract.
 LAST_REPLAY_QUERY = None
 
 
@@ -170,7 +170,8 @@ def run_available_now_to_memory(
     builds one state store per shuffle partition per stateful operator,
     and at replay-fixture scale 32 near-empty stores are pure overhead
     — measured 5.4 s → 2.2 s on the stream-stream interval join at 8
-    (SCALE_NOTES r9).  Results are partition-invariant (every replay is
+    (SCALE_NOTES.md "r9: streaming-replay", at commit faebac6).
+    Results are partition-invariant (every replay is
     hash-gated); production streams size state partitions to key
     cardinality/throughput instead, so only this bounded-fixture drain
     path narrows.  Replays run sequentially (driver sweep, bench,

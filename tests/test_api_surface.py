@@ -6,7 +6,6 @@ from __future__ import annotations
 
 import datetime as dt
 
-import pytest
 from pyspark.sql import functions as F
 
 
@@ -168,3 +167,49 @@ def test_norm_tokens_identical_to_normalized_tokens(spark):
     ).collect()
     for r in got:
         assert r["fast"] == r["ref"], (r["fast"], r["ref"])
+
+
+def test_no_unused_module_imports():
+    """Every module-level import in the package, ``tests/`` and
+    ``scripts/`` is named somewhere in its module.  A name that only a
+    string annotation mentions counts as used; ``__init__.py`` files are
+    exempt, since their imports are re-exports.  A helper that retires
+    otherwise leaves its import behind, which no other check notices."""
+    import ast
+    import glob
+    import os
+
+    repo = __file__.rsplit("/tests/", 1)[0]
+    paths = sorted(
+        p
+        for pattern in ("market_insights_app_spark/**/*.py", "tests/**/*.py", "scripts/*.py")
+        for p in glob.glob(f"{repo}/{pattern}", recursive=True)
+        if os.path.basename(p) != "__init__.py"
+    )
+    assert paths, "no modules found"
+    bad = []
+    for path in paths:
+        rel = os.path.relpath(path, repo)
+        tree = ast.parse(open(path, encoding="utf-8").read(), rel)
+        imported, stack = {}, list(tree.body)
+        while stack:  # the module body, including its if/try blocks
+            node = stack.pop()
+            if isinstance(node, (ast.If, ast.Try)):
+                stack += node.body + node.orelse + getattr(node, "finalbody", [])
+                stack += [s for h in getattr(node, "handlers", []) for s in h.body]
+            elif isinstance(node, (ast.Import, ast.ImportFrom)):
+                if getattr(node, "module", None) == "__future__":
+                    continue
+                for a in node.names:
+                    if a.name != "*":
+                        imported[a.asname or a.name.split(".")[0]] = node.lineno
+        used = {n.id for n in ast.walk(tree) if isinstance(n, ast.Name)}
+        for node in ast.walk(tree):
+            ann = getattr(node, "annotation", None) or getattr(node, "returns", None)
+            for c in ast.walk(ann) if ann else ():
+                if isinstance(c, ast.Constant) and isinstance(c.value, str):
+                    used |= {n.id for n in ast.walk(ast.parse(c.value, mode="eval"))
+                             if isinstance(n, ast.Name)}
+        bad += [f"{rel}:{line} {name}" for name, line in sorted(imported.items())
+                if name not in used]
+    assert not bad, f"module-level imports never used: {bad}"

@@ -8,8 +8,6 @@ from __future__ import annotations
 import random
 import re
 
-import pytest
-
 from market_insights_app_spark.operators.bpe import (
     _segment_word,
     apply_bpe,

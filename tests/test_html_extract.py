@@ -3,7 +3,6 @@ boilerplate extraction."""
 
 from __future__ import annotations
 
-import pytest
 from pyspark.sql import functions as F
 
 from market_insights_app_spark.functions.html import (

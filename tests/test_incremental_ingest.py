@@ -5,7 +5,6 @@ recompute at every version (including across a schema evolution)."""
 
 from __future__ import annotations
 
-import pytest
 from pyspark.sql import functions as F
 
 from market_insights_app_spark.pipelines.incremental_ingest import (

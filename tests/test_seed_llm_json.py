@@ -3,7 +3,6 @@ pipeline (deterministic fallback parity with main.py:685-687)."""
 
 from __future__ import annotations
 
-import pytest
 from pyspark.sql import functions as F
 
 

@@ -11,14 +11,14 @@ Two KNOWN engine divergences are pinned (not papered over) in
 SpecialCasing (context-sensitive Greek final sigma; Turkish capital
 dotted I lowers to ``i`` + COMBINING DOT ABOVE) while DuckDB's
 utf8proc maps per-codepoint (``σ``; plain ``i``).  The corpus contract
-recorded in SCALE_NOTES.md therefore excludes word-final ``Σ`` and
+(SCALE_NOTES.md "Round-5 continuation", at commit faebac6, "Unicode
+robustness axis") therefore excludes word-final ``Σ`` and
 ``İ`` from hash-gated corpora; everything else verified here rides
 ``lower()`` safely.
 """
 
 from __future__ import annotations
 
-import math
 import os
 import re
 

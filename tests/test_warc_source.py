@@ -6,8 +6,6 @@ from __future__ import annotations
 
 import gzip
 
-import pytest
-
 from market_insights_app_spark.sources.warc import parse_warc_bytes, read_warc
 
 _HTML = (b"<html><body><p>A real paragraph of article text that is "
